@@ -33,7 +33,8 @@ package graft
   * run's alphabetical name order (names recoverable from the sorted
   * registry / bench_last.json's full dict), restoring per-query
   * driver visibility inside the byte window a full NAMED dict
-  * outgrew at ~96 queries; shed first if the line overflows. */
+  * outgrew at ~96 queries; if the line overflows, the recheck pass's
+  * under-bar rows are shed first and "qv" second. */
 /** The pure burst-adjudication rules Bench applies — factored out so
   * BenchSpec can drive the scenarios a live run can't stage on demand
   * (a mid-run box burst, a fully-throttled run, a clean run). */
@@ -631,8 +632,9 @@ object Bench {
       // bytes, and the names are recoverable: qv[i] belongs to
       // sorted(registry names)[i], the exact order bench_last.json's
       // full-fidelity dict records. Additions-only (the breach dict
-      // and every envelope field are unchanged); shed first if the
-      // line ever outgrows the window.
+      // and every envelope field are unchanged); if the line ever
+      // outgrows the window it is shed second, after the recheck
+      // pass's under-bar rows (the ladder in `breachLine` below).
       val qvField =
         if (!withQv) ""
         else s""""qv":[${results.map(r => f(r._2)).mkString(",")}],"""

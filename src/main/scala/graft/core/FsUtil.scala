@@ -2,8 +2,8 @@ package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Filesystem helpers shared by the persistable-index writers
-  * (`Similarity.IvfIndex.write`, `Dedup.writeMinhashIndex`).
+/** Filesystem helpers behind the store protocol (`graft.store.Store`):
+  * the crash-safe directory swap and the atomic record write.
   * Reference analog for the durability discipline: the
   * changelog-backed store that must never be observable half-written
   * (samza-kv/src/main/scala/org/apache/samza/storage/kv/LoggedStore.scala:1). */
@@ -172,16 +172,16 @@ object FsUtil {
     try body finally fs.delete(lock, false)
   }
 
-  /** Write a small text sidecar (e.g. a params manifest) ATOMICALLY
+  /** Write a small text sidecar (the store record) ATOMICALLY
     * where the filesystem allows: the content lands in a hidden temp
     * file first, then renames over the target with overwrite
     * semantics (POSIX rename(2) / HDFS overwrite-rename — atomic on
     * both). A reader concurrent with the write sees the OLD content
     * or the NEW content, never a truncated prefix — the plain
     * create-truncate-write shape left a window where a crash (or a
-    * concurrent [[readSidecar]]) produced a torn manifest that
-    * poisoned every later read: for the streaming ingest log that
-    * meant a replay could throw forever instead of converging. A
+    * concurrent [[readSidecar]]) produced a torn record that
+    * poisoned every later read, so a replay could throw forever
+    * instead of converging. A
     * crash before the rename leaves the target untouched plus one
     * FIXED-NAME hidden temp (`.{name}.tmp`), truncated and reused by
     * the next attempt — a crash-looping writer leaves one orphan,
@@ -192,11 +192,8 @@ object FsUtil {
     * for file:// the context delegates to
     * `AbstractFileSystem.renameInternal`'s default overwrite path —
     * DELETE dest, then rename — which leaves a window where the
-    * target is ABSENT. For the tagged-append manifest that window is
-    * not torn-content but torn-EXISTENCE: a concurrent
-    * `Sinks.readTagged` catching it falls back to the plain
-    * directory read and can open a stranded attempt's files mid-
-    * purge (the exact FAILED_READ IngestSpec's concurrent serve test
+    * target is ABSENT: a concurrent reader catching it would find no
+    * store at all (the FAILED_READ IngestSpec's concurrent serve test
     * caught under suite load). Local targets swap through NIO
     * `Files.move(ATOMIC_MOVE | REPLACE_EXISTING)` instead — POSIX
     * rename(2), atomic replace, no absence window.
@@ -254,42 +251,17 @@ object FsUtil {
     }
   }
 
-  /** One integer field of a JSON sidecar — the shared parse every
-    * persistence unit's params/stamp read uses (`"key":<digits>`).
-    * None if the sidecar is absent or lacks the key. */
-  def sidecarLong(fs: FileSystem, file: Path, key: String): Option[Long] =
-    readSidecar(fs, file).flatMap(sidecarLong(_, key))
-
-  /** The parse-from-string form, for callers that already hold the
-    * sidecar content (one filesystem read, several fields). */
-  def sidecarLong(content: String, key: String): Option[Long] =
-    ("\"" + java.util.regex.Pattern.quote(key) + "\":(\\d+)").r
-      .findFirstMatchIn(content)
-      .map(_.group(1).toLong)
-
-  /** Whether a table's stamped sorted-write file count still matches
-    * its on-disk parquet file count — the shared sort-drift rule
-    * (stamp absent or stale ⇒ drifted; a sorted-write re-pack
-    * restamps). Used by every unit whose probe-side pruning depends
-    * on a sorted sized layout. */
-  def stampMatchesFileCount(fs: FileSystem, sidecar: Path,
-      key: String, tableDir: Path): Boolean = {
-    val files =
-      if (!fs.exists(tableDir)) 0
-      else fs.listStatus(tableDir)
-        .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    sidecarLong(fs, sidecar, key).contains(files.toLong)
-  }
-
   /** Read a sidecar written by [[writeSidecar]]; None if absent. */
-  def readSidecar(fs: FileSystem, file: Path): Option[String] =
-    if (!fs.exists(file)) None
-    else {
-      val in = fs.open(file)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
+  def readSidecar(fs: FileSystem, file: Path): Option[String] = {
+    // open-or-absent in one call: a store record is probed once per
+    // serve batch, and an exists() first would double that
+    val in =
+      try fs.open(file)
+      catch { case _: java.io.FileNotFoundException => return None }
+    try Some(new String(in.readAllBytes(),
+      java.nio.charset.StandardCharsets.UTF_8))
+    finally in.close()
+  }
 
   private val exitDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()

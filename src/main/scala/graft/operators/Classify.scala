@@ -305,22 +305,21 @@ object Classify {
   // files prune), classes.parquet ((label, d) partials),
   // vocabulary.parquet (training tokens, duplicate-tolerant — vocab is
   // count_distinct at read, the only merge rule that stays exact under
-  // appends: vocab sizes do NOT add) + params.json
-  // ({"sortedFiles":…,"vocab":…}). Appends land O(batch) count
-  // partials; read-time aggregation collapses them exactly
-  // (CorpusProfile's partials discipline), so a stored-model score is
-  // bit-identical to a fresh train at every moment.
+  // appends: vocab sizes do NOT add) + the exact vocab as a record
+  // param on a compacted store. Appends land O(batch) count partials;
+  // read-time aggregation collapses them exactly (CorpusProfile's
+  // partials discipline), so a stored-model score is bit-identical to
+  // a fresh train at every moment.
+
+  val NbKind = "nb-model"
 
   /** Train on `docs` and persist the model at `dir` (staged +
     * atomically swapped). The compacted layout materializes the exact
-    * vocab in the sidecar, so [[readNbModel]] on a compacted store is
-    * plain reads with ZERO re-aggregation — the per-batch fast path
-    * `StreamJobs.nbLookupStream` takes. */
+    * vocab in the record, so [[readNbModel]] on a compacted store is
+    * plain reads with ZERO re-aggregation — the fast path
+    * `StreamJobs.nbLookupStream` takes on a reload. */
   def writeNbModel(docs: DataFrame, labelCol: String, textCol: String,
       dir: String, targetFileBytes: Long = 128L << 20): Unit = {
-    val spark = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     val counts = tokensOf(docs, Seq(labelCol), textCol)
       .groupBy(col(labelCol).as("label"), col("token"))
       .agg(count(lit(1)).as("c"))
@@ -328,196 +327,96 @@ object Classify {
       .agg(count(lit(1)).as("d"))
     val vocabulary = docs
       .select(explode(tokens(col(textCol))).as("token")).distinct()
-    writeCompacted(spark, fs, dir, counts, classes, vocabulary,
+    writeCompacted(docs.sparkSession, dir, counts, classes, vocabulary,
       targetFileBytes)
   }
 
   /** Shared by [[writeNbModel]] and [[nbCompact]]: stage the three
     * tables (counts already one-row-per-group, class doc counts,
-    * distinct vocabulary), stamp sortedFiles + the exact vocab,
+    * distinct vocabulary) with the exact vocab as a record param,
     * swap. */
   private def writeCompacted(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      counts: DataFrame, classes: DataFrame, vocabulary: DataFrame,
-      targetFileBytes: Long): Unit = {
-    graft.core.FsUtil.swapInto(fs,
-        new org.apache.hadoop.fs.Path(dir)) { staging =>
-      val files = graft.sources.Sinks.writeSizedParquet(counts,
-        new org.apache.hadoop.fs.Path(staging, "counts.parquet").toString,
-        targetFileBytes = targetFileBytes,
-        sortCols = Seq("token", "label"),
-        minFiles = spark.sparkContext.defaultParallelism)
-      graft.sources.Sinks.writeSizedParquet(classes,
-        new org.apache.hadoop.fs.Path(staging, "classes.parquet").toString,
-        targetFileBytes = targetFileBytes,
-        sortCols = Seq("label"),
+      dir: String, counts: DataFrame, classes: DataFrame,
+      vocabulary: DataFrame, targetFileBytes: Long): Unit =
+    graft.store.Store.write(spark, dir, NbKind, Map.empty) { st =>
+      st.sized("counts.parquet", counts, Seq("token", "label"),
+        targetFileBytes)
+      st.sized("classes.parquet", classes, Seq("label"), targetFileBytes,
         minFiles = 1)
-      graft.sources.Sinks.writeSizedParquet(vocabulary,
-        new org.apache.hadoop.fs.Path(staging,
-          "vocabulary.parquet").toString,
-        targetFileBytes = targetFileBytes,
-        sortCols = Seq("token"),
-        minFiles = spark.sparkContext.defaultParallelism)
+      st.sized("vocabulary.parquet", vocabulary, Seq("token"),
+        targetFileBytes)
       // vocab derives from the STAGED table, not the input plan:
       // re-evaluating the lazy plan would re-scan the training set
-      val vocab = spark.read.parquet(
-        new org.apache.hadoop.fs.Path(staging, "vocabulary.parquet")
-          .toString).count()
-      graft.core.FsUtil.writeSidecar(fs,
-        new org.apache.hadoop.fs.Path(staging, "params.json"),
-        s"""{"sortedFiles":$files,"vocab":$vocab}""")
+      st.param("vocab", st.staged("vocabulary.parquet").count())
     }
-  }
 
-  /** The stored model. On a COMPACTED store (stamp present — the
-    * steady state between appends) this is plain table reads with the
-    * vocab from the sidecar: zero re-aggregation. After appends the
-    * stamp is gone and the read falls back to collapsing partials
-    * exactly (counts re-summed per (label, token), class doc counts
-    * re-summed, vocab as count_distinct — all model-bounded work).
-    * Either way the result is bit-identical to [[trainNb]] over the
-    * union of everything written + appended; the training corpus
-    * itself is never re-read. Fast-path validity is decided AFTER the
-    * frames snapshot their file listing — [[LmScore.readModel]]'s
-    * stamp re-check, closing the same list-then-drop race. */
+  /** The stored model, from one record snapshot. On a COMPACTED store
+    * (no append since the last sorted write) this is plain table reads
+    * with the vocab from the record: zero re-aggregation. After
+    * appends the read collapses partials exactly (counts re-summed per
+    * (label, token), class doc counts re-summed, vocab as
+    * count_distinct — all model-bounded work). Either way the result
+    * is bit-identical to [[trainNb]] over the union of everything
+    * written + appended; the training corpus itself is never re-read. */
   def readNbModel(spark: org.apache.spark.sql.SparkSession,
       dir: String): NbModel = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val params = graft.core.FsUtil.readSidecar(fs,
-        new org.apache.hadoop.fs.Path(dir, "params.json"))
-      .getOrElse(throw new java.io.IOException(
-        s"readNbModel: $dir has no params.json — not a stored NB model"))
-    val stampedVocab = graft.core.FsUtil.sidecarLong(params, "vocab")
-    stampedVocab match {
-      case Some(v) =>
-        val fast = NbModel(
-          graft.sources.Sinks.readTagged(spark, s"$dir/counts.parquet"),
-          graft.sources.Sinks.readTagged(spark, s"$dir/classes.parquet"),
-          v)
-        val stampStillThere = graft.core.FsUtil.readSidecar(fs,
-            new org.apache.hadoop.fs.Path(dir, "params.json"))
-          .flatMap(graft.core.FsUtil.sidecarLong(_, "vocab"))
-          .contains(v)
-        if (stampStillThere) fast else collapseRead(spark, dir)
-      case _ => collapseRead(spark, dir)
-    }
-  }
-
-  /** The append-tolerant read arm of [[readNbModel]]: collapse count
-    * partials exactly, re-sum class doc counts, count the vocab — all
-    * model-bounded work. */
-  private def collapseRead(spark: org.apache.spark.sql.SparkSession,
-      dir: String): NbModel = {
-    val counts = graft.sources.Sinks
-      .readTagged(spark, s"$dir/counts.parquet")
-      .groupBy(col("label"), col("token")).agg(sum(col("c")).as("c"))
-    val classes = graft.sources.Sinks
-      .readTagged(spark, s"$dir/classes.parquet")
-      .groupBy(col("label")).agg(sum(col("d")).as("d"))
-    val vocab = graft.sources.Sinks
-      .readTagged(spark, s"$dir/vocabulary.parquet")
-      .agg(count_distinct(col("token"))).head().getLong(0)
-    NbModel(counts, classes, vocab)
+    val rec = graft.store.Store.require(spark, dir, NbKind)
+    def t(name: String) = graft.store.Store.table(spark, dir, rec, name)
+    if (rec.compacted)
+      NbModel(t("counts.parquet"), t("classes.parquet"), rec.long("vocab"))
+    else NbModel(
+      t("counts.parquet")
+        .groupBy(col("label"), col("token")).agg(sum(col("c")).as("c")),
+      t("classes.parquet")
+        .groupBy(col("label")).agg(sum(col("d")).as("d")),
+      t("vocabulary.parquet").agg(count_distinct(col("token")))
+        .head().getLong(0))
   }
 
   /** O(batch) EXACTLY-ONCE append of a new labeled batch under a
     * caller-stable `tag` (runId-batchId for a stream): its
-    * (label, token) counts and (label, d) doc counts land as tagged
-    * partial rows, its tokens as tagged (possibly duplicate)
-    * vocabulary rows — all collapsed exactly at read
-    * ([[LmScore.appendModel]]'s protocol). Ordering is the safety
-    * story:
-    *
-    *  1. The fast-path stamp drops FIRST (sidecar → `{}`), so a
-    *     concurrent [[readNbModel]] falls back to the collapse path
-    *     before any partial lands (the fast path over duplicated
-    *     (label, token) keys would double-count); readNbModel's
-    *     post-snapshot stamp re-check closes the list-then-drop race
-    *     on its side.
-    *  2. Appends are TAGGED ([[graft.sources.Sinks.appendTagged]]):
-    *     each table's batch COMMITS via its manifest update, replays
-    *     of committed tags are no-ops, uncommitted crash residue is
-    *     invisible to readers until purged — at-least-once converges
-    *     to exactly-once from any crash point.
-    *  3. Vocabulary commits before counts, counts before classes. At
-    *     every crash point the VISIBLE store is well-defined: vocab
-    *     growth alone is a uniform smoothing shift; token mass whose
-    *     class prior has not yet incremented scores through the
-    *     existing prior (converges at the final commit); and a batch
-    *     introducing a NEW class exposes it only at the classes
-    *     commit — the last step — never a class with mass but no
-    *     prior row (classDims builds from `classes`, so counts-only
-    *     residue of an unseen label is simply invisible).
-    *
+    * (label, token) counts and (label, d) doc counts land as partial
+    * rows, its tokens as (possibly duplicate) vocabulary rows — all
+    * collapsed exactly at read — and the three tables commit in ONE
+    * record write ([[LmScore.appendModel]]'s protocol): a committed
+    * tag replays as a no-op, a crashed attempt's files stay invisible
+    * until the replay purges them, and a reader sees the model before
+    * or after the batch, never a class with mass but no prior row.
     * Single-writer-per-dir is the caller's contract. */
   def appendNbModel(docs: DataFrame, labelCol: String, textCol: String,
       dir: String, tag: String): Unit = {
     val spark = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (graft.core.FsUtil.readSidecar(fs,
-        new org.apache.hadoop.fs.Path(dir, "params.json")).isEmpty)
-      throw new java.io.IOException(
-        s"appendNbModel: $dir has no params.json — not a stored NB model")
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "params.json"), "{}")
-    graft.sources.Sinks.appendTagged(
-      docs.select(explode(tokens(col(textCol))).as("token")).distinct(),
-      s"$dir/vocabulary.parquet", tag)
-    graft.sources.Sinks.appendTagged(
-      tokensOf(docs, Seq(labelCol), textCol)
-        .groupBy(col(labelCol).as("label"), col("token"))
-        .agg(count(lit(1)).as("c")),
-      s"$dir/counts.parquet", tag)
-    graft.sources.Sinks.appendTagged(
-      docs.groupBy(col(labelCol).as("label"))
-        .agg(count(lit(1)).as("d")),
-      s"$dir/classes.parquet", tag)
+    graft.store.Store.append(spark, dir,
+      graft.store.Store.require(spark, dir, NbKind), tag,
+      Seq("vocabulary.parquet" ->
+          docs.select(explode(tokens(col(textCol))).as("token")).distinct(),
+        "counts.parquet" -> tokensOf(docs, Seq(labelCol), textCol)
+          .groupBy(col(labelCol).as("label"), col("token"))
+          .agg(count(lit(1)).as("c")),
+        "classes.parquet" -> docs.groupBy(col(labelCol).as("label"))
+          .agg(count(lit(1)).as("d"))))
   }
 
-  /** Whether the stored model drifted from compacted form: count
-    * partials, class partials, duplicate vocabulary rows, or a
-    * missing/stale sortedFiles stamp. */
+  /** Whether the stored model drifted from compacted form: an append
+    * landed since the last sorted write (the record's sorted flags). */
   def nbDrifted(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!graft.core.FsUtil.stampMatchesFileCount(fs,
-        new org.apache.hadoop.fs.Path(dir, "params.json"), "sortedFiles",
-        new org.apache.hadoop.fs.Path(s"$dir/counts.parquet")))
-      return true
-    val c = graft.sources.Sinks.readTagged(spark, s"$dir/counts.parquet")
-      .agg(count(lit(1)),
-        count_distinct(struct(col("label"), col("token")))).head()
-    if (c.getLong(0) > c.getLong(1)) return true
-    val d = graft.sources.Sinks.readTagged(spark, s"$dir/classes.parquet")
-      .agg(count(lit(1)), count_distinct(col("label"))).head()
-    if (d.getLong(0) > d.getLong(1)) return true
-    val u = graft.sources.Sinks
-      .readTagged(spark, s"$dir/vocabulary.parquet")
-      .agg(count(lit(1)), count_distinct(col("token"))).head()
-    u.getLong(0) > u.getLong(1)
-  }
+      dir: String): Boolean =
+    !graft.store.Store.require(spark, dir, NbKind).compacted
 
-  /** Collapse partials/duplicates, re-sort, re-pack, restamp
-    * sortedFiles + vocab — the maintenance pass
+  /** Collapse partials/duplicates, re-sort, re-pack, re-derive the
+    * vocab — the maintenance pass
     * ([[graft.operators.Maintenance.compactAll]] dispatches here),
     * which also restores [[readNbModel]]'s zero-aggregation fast
     * path. */
   def nbCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String, targetFileBytes: Long = 128L << 20): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val counts = graft.sources.Sinks
-      .readTagged(spark, s"$dir/counts.parquet")
-      .groupBy(col("label"), col("token")).agg(sum(col("c")).as("c"))
-    val classes = graft.sources.Sinks
-      .readTagged(spark, s"$dir/classes.parquet")
-      .groupBy(col("label")).agg(sum(col("d")).as("d"))
-    val vocabulary = graft.sources.Sinks
-      .readTagged(spark, s"$dir/vocabulary.parquet").distinct()
-    writeCompacted(spark, fs, dir, counts, classes, vocabulary,
-      targetFileBytes)
+    val rec = graft.store.Store.require(spark, dir, NbKind)
+    def t(name: String) = graft.store.Store.table(spark, dir, rec, name)
+    writeCompacted(spark, dir,
+      t("counts.parquet")
+        .groupBy(col("label"), col("token")).agg(sum(col("c")).as("c")),
+      t("classes.parquet")
+        .groupBy(col("label")).agg(sum(col("d")).as("d")),
+      t("vocabulary.parquet").distinct(), targetFileBytes)
   }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,166 +60,97 @@ object CorpusProfile {
     Profile(strata, tok, strataCol, textCol)
   }
 
-  val ParamsSidecar = "params.json"
+  val Kind = "corpus-profile"
 
-  private def paramsJson(p: Profile): String =
-    s"""{"version":1,"strataCol":"${p.strataCol}",""" +
-      s""""textCol":"${p.textCol}"}"""
-
-  private def readParams(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Option[(String, String)] =
-    graft.core.FsUtil.readSidecar(fs, new Path(dir, ParamsSidecar))
-      .map { s =>
-        def f(k: String): String = {
-          val m = s""""$k":"([^"]*)"""".r.findFirstMatchIn(s)
-          m.getOrElse(throw new java.io.IOException(
-            s"corpus profile $dir: malformed $ParamsSidecar: $s"))
-            .group(1)
-        }
-        (f("strataCol"), f("textCol"))
-      }
-
-  private def requireParamsMatch(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, strataCol: String, textCol: String): Unit =
-    readParams(fs, dir).foreach { stored =>
-      require(stored == ((strataCol, textCol)),
-        s"corpus profile $dir was built over (strataCol,textCol)=" +
-          s"$stored but the caller supplied ($strataCol,$textCol) — " +
-          "merging stats over different columns would silently " +
-          "corrupt every count")
-    }
-
-  private def fsFor(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // the record's (strataCol, textCol): merging stats over different
+  // columns would silently corrupt every count, so appends and reads
+  // validate the caller's columns against it
+  private def requireParamsMatch(rec: graft.store.Store.Record,
+      dir: String, strataCol: String, textCol: String): Unit = {
+    val stored = (rec.str("strataCol"), rec.str("textCol"))
+    require(stored == ((strataCol, textCol)),
+      s"corpus profile $dir was built over (strataCol,textCol)=" +
+        s"$stored but the caller supplied ($strataCol,$textCol) — " +
+        "merging stats over different columns would silently " +
+        "corrupt every count")
+  }
 
   /** Replace the stored profile at `dir` wholesale (stage-then-swap,
-    * crash-safe). For ingest batches use [[append]].
-    *
-    * The [[AppliedSidecar]] replay watermark, when present at `dir`,
-    * is COPIED into the staged content before the swap: a [[compact]]
-    * of a streaming-maintained store must not reset the last-applied
-    * batch id, or a foreachBatch replay after the compact (e.g. a
-    * restart re-running its in-flight batch) would pass the
-    * [[appendOnce]] guard and double-count every stat — the exact
-    * failure the sidecar exists to prevent. This is what makes
-    * periodic compaction safe to run against a store owned by a live
-    * streaming query (between that query's batches — single writer
-    * per dir still assumed). */
+    * crash-safe). For ingest batches use [[append]] / [[ingestBatch]].
+    * Applied tags carry over (`graft.store.Store.write`), so a
+    * [[compact]] of a streaming-maintained store keeps a replay of an
+    * already-applied batch a no-op. */
   def write(profile: Profile, dir: String,
-      targetFileBytes: Long = 128L << 20): Unit = {
-    val spark = profile.strata.sparkSession
-    val fs = fsFor(spark, dir)
-    // read BEFORE the swap: the staging write below may take long
-    // enough that appendOnce advanced the watermark meanwhile, but
-    // single-writer-per-dir (class contract) rules that out
-    val applied = graft.core.FsUtil.readSidecar(fs,
-      new Path(dir, AppliedSidecar))
-    graft.core.FsUtil.swapInto(fs, new Path(dir)) { staging =>
-      profile.strata.write.mode("overwrite")
-        .parquet(new Path(staging, "strata.parquet").toString)
+      targetFileBytes: Long = 128L << 20): Unit =
+    writeApplied(profile, dir, targetFileBytes, Map.empty)
+
+  private def writeApplied(profile: Profile, dir: String,
+      targetFileBytes: Long,
+      applied: Map[String, Map[String, Long]]): Unit =
+    graft.store.Store.write(profile.strata.sparkSession, dir, Kind,
+        Map("strataCol" -> profile.strataCol,
+          "textCol" -> profile.textCol), applied) { st =>
+      st.plain("strata.parquet", profile.strata)
       // tokens = the vocabulary-sized half (df per term per stratum):
       // sized + floored so profile-fed scoring scans it in parallel
-      graft.sources.Sinks.writeSizedParquet(profile.tokens,
-        new Path(staging, "tokens.parquet").toString,
-        targetFileBytes = targetFileBytes,
-        minFiles = profile.tokens.sparkSession.sparkContext
-          .defaultParallelism)
-      graft.core.FsUtil.writeSidecar(fs,
-        new Path(staging, ParamsSidecar), paramsJson(profile))
-      applied.foreach(graft.core.FsUtil.writeSidecar(fs,
-        new Path(staging, AppliedSidecar), _))
+      st.sized("tokens.parquet", profile.tokens,
+        targetFileBytes = targetFileBytes)
     }
-  }
 
-  /** Append an ingest batch's profile partials to a stored dir:
-    * O(batch) parquet appends, the corpus-sized file set is never
-    * rewritten. The batch's columns are validated against the stored
-    * params sidecar — a mismatch FAILS FAST instead of corrupting
-    * every downstream count. The batch must be doc-disjoint from what
-    * the store already covers (see the class contract).
-    *
-    * Crash atomicity: the two parquet appends are NOT one
-    * transaction. Tokens append first, strata second, so strata acts
-    * as the commit marker: a crash between the two leaves tokens
-    * applied without their strata partial, and the inconsistency is
-    * DETECTABLE (per-stratum token mass from the tokens table exceeds
-    * the strata table's `tokens` column) rather than a silent
-    * half-double-count; a retry via [[appendOnce]] then re-applies
-    * the batch, double-counting its tokens once — the same
-    * one-batch window [[appendOnce]] already documents for the
-    * sidecar write. */
-  def append(batch: Profile, dir: String): Unit = {
-    val spark = batch.strata.sparkSession
-    requireParamsMatch(fsFor(spark, dir), dir, batch.strataCol,
-      batch.textCol)
-    batch.tokens.write.mode("append").parquet(s"$dir/tokens.parquet")
-    batch.strata.write.mode("append").parquet(s"$dir/strata.parquet")
-  }
+  /** Append an ingest batch's profile partials to a stored dir under a
+    * fresh tag: O(batch), the corpus-sized file set is never
+    * rewritten, and tokens and strata commit together in one record
+    * write. The batch's columns are validated against the record — a
+    * mismatch FAILS FAST instead of corrupting every downstream count.
+    * The batch must be doc-disjoint from what the store already covers
+    * (see the class contract). */
+  def append(batch: Profile, dir: String): Unit =
+    ingestBatch(batch, dir, graft.store.Store.freshTag())
 
-  /** Replay-idempotent streaming append — closes [[appendOnce]]'s
-    * documented one-batch window: the batch's token/strata partials
-    * land as `tag`-named files ([[graft.sources.Sinks.appendTagged]]),
-    * so a replayed foreachBatch micro-batch purges whatever its
-    * crashed attempt left — including the torn tokens-without-strata
-    * state [[append]]'s write order makes detectable — and re-appends,
-    * converging to exactly-once from ANY crash point. No totals
-    * sidecar to reconcile here: the profile is fully described by its
-    * two tables. The store must exist (seed it batch-side with
-    * [[write]]); `tag` = runId+batchId, unique across stream runs
-    * (appendTagged's purge-collision note); single writer per dir,
+  /** Replay-idempotent streaming append: the batch's token/strata
+    * partials commit under `tag` in one record write, so a committed
+    * tag replays as a no-op and a crashed attempt's files are purged
+    * before the re-append — exactly-once from ANY crash point. The
+    * store must exist (seed it batch-side with [[write]]); `tag` =
+    * runId+batchId, unique across stream runs; single writer per dir,
     * quiesce before [[compact]]/Maintenance. */
   def ingestBatch(batch: Profile, dir: String, tag: String): Unit = {
     val spark = batch.strata.sparkSession
-    requireParamsMatch(fsFor(spark, dir), dir, batch.strataCol,
-      batch.textCol)
-    graft.sources.Sinks.appendTagged(batch.tokens,
-      s"$dir/tokens.parquet", tag)
-    graft.sources.Sinks.appendTagged(batch.strata,
-      s"$dir/strata.parquet", tag)
+    val rec = graft.store.Store.require(spark, dir, Kind)
+    requireParamsMatch(rec, dir, batch.strataCol, batch.textCol)
+    graft.store.Store.append(spark, dir, rec, tag,
+      Seq("tokens.parquet" -> batch.tokens,
+        "strata.parquet" -> batch.strata))
   }
-
-  /** Sidecar recording the last streaming micro-batch applied by
-    * [[appendOnce]]. */
-  val AppliedSidecar = "applied.json"
 
   /** Append a micro-batch's profile AT MOST ONCE per `batchId` — the
     * guard that makes [[append]] safe under Structured Streaming's
     * at-least-once foreachBatch retries (a replayed batch would
     * silently double every count). Returns false (no-op) when
-    * `batchId` is <= the last applied id; otherwise appends (or
-    * creates the store on first application) and records the id.
-    * Honest failure window: a crash BETWEEN the parquet append and
-    * the sidecar write re-applies that one batch on retry — closing
-    * it needs a transactional store; the window is one batch and the
-    * sidecar makes it detectable (reference analog: checkpointed
-    * changelog offsets, samza-kv/.../LoggedStore.scala:1). Single
-    * writer per dir assumed (one streaming query owns a store). */
+    * `batchId` is already applied; otherwise appends (or creates the
+    * store on first application) under the tag `batch-<batchId>`.
+    * Single writer per dir assumed (one streaming query owns a
+    * store). */
   def appendOnce(batch: Profile, dir: String, batchId: Long): Boolean = {
-    val spark = batch.strata.sparkSession
-    val fs = fsFor(spark, dir)
-    val applied = graft.core.FsUtil
-      .readSidecar(fs, new Path(dir, AppliedSidecar))
-      .flatMap(s => """"batchId":(-?\d+)""".r.findFirstMatchIn(s)
-        .map(_.group(1).toLong))
-    if (applied.exists(_ >= batchId)) false
-    else {
-      if (fs.exists(new Path(dir, "strata.parquet"))) append(batch, dir)
-      else write(batch, dir)
-      graft.core.FsUtil.writeSidecar(fs, new Path(dir, AppliedSidecar),
-        s"""{"batchId":$batchId}""")
-      true
+    val tag = s"batch-$batchId"
+    graft.store.Store.read(batch.strata.sparkSession, dir) match {
+      case Some(rec) if rec.applied.contains(tag) => false
+      case Some(_) => ingestBatch(batch, dir, tag); true
+      case None =>
+        writeApplied(batch, dir, 128L << 20, Map(tag -> Map.empty)); true
     }
   }
 
   /** Reload a stored profile (partials as stored — aggregate via
-    * [[stats]]/[[compact]]). Column names are validated against the
-    * stored sidecar. */
+    * [[stats]]/[[compact]]) from one record snapshot. Column names are
+    * validated against the record. */
   def read(spark: SparkSession, dir: String, strataCol: String,
       textCol: String): Profile = {
-    requireParamsMatch(fsFor(spark, dir), dir, strataCol, textCol)
+    val rec = graft.store.Store.require(spark, dir, Kind)
+    requireParamsMatch(rec, dir, strataCol, textCol)
     Profile(
-      graft.sources.Sinks.readTagged(spark, s"$dir/strata.parquet"),
-      graft.sources.Sinks.readTagged(spark, s"$dir/tokens.parquet"),
+      graft.store.Store.table(spark, dir, rec, "strata.parquet"),
+      graft.store.Store.table(spark, dir, rec, "tokens.parquet"),
       strataCol, textCol)
   }
 
@@ -237,18 +167,14 @@ object CorpusProfile {
       textCol: String): Unit =
     compact(spark, dir, strataCol, textCol, 128L << 20)
 
-  /** [[compact]] with (strataCol, textCol) recovered from the stored
-    * params sidecar — the form a maintenance pass that only knows the
-    * DIRECTORY can call ([[Maintenance.compactAll]]). Fails fast on a
-    * store without a sidecar (pre-sidecar stores need the explicit
-    * form: the caller's columns are the contract there). */
+  /** [[compact]] with (strataCol, textCol) recovered from the store
+    * record — the form a maintenance pass that only knows the
+    * DIRECTORY can call ([[Maintenance.compactAll]]). */
   def compact(spark: SparkSession, dir: String,
       targetFileBytes: Long): Unit = {
-    val (sc, tc) = readParams(fsFor(spark, dir), dir).getOrElse(
-      throw new java.io.IOException(
-        s"corpus profile $dir has no $ParamsSidecar — use " +
-          "compact(spark, dir, strataCol, textCol)"))
-    compact(spark, dir, sc, tc, targetFileBytes)
+    val rec = graft.store.Store.require(spark, dir, Kind)
+    compact(spark, dir, rec.str("strataCol"), rec.str("textCol"),
+      targetFileBytes)
   }
 
   def compact(spark: SparkSession, dir: String): Unit =
@@ -284,9 +210,10 @@ object CorpusProfile {
     * hapax in two batches is not hapax in their union), which is the
     * point of storing the table and deriving the scalars at read. */
   def stats(p: Profile): DataFrame = {
-    // half-applied-append detection (the window [[append]]'s scaladoc
-    // documents): token mass present without its strata commit
-    // marker. This check is its OWN plan — a map-side-combined
+    // torn-profile detection: token mass present without its strata
+    // rows. The store commits both tables together, so only a profile
+    // assembled outside it (tables appended by hand, frames unioned
+    // by a caller) can be torn. This check is its OWN plan — a map-side-combined
     // token-mass aggregate full-joined against the strata sums, one
     // bounded action over |strata| rows (same class as the mixture
     // rate table) — rather than a persisted fork of the returned
@@ -294,9 +221,9 @@ object CorpusProfile {
     // per call for library callers outside the harness's
     // clear-cache-per-query convention, and would hide the summary's
     // real aggregation plan behind an InMemoryTableScan, blinding
-    // ScaleLint/PLANS.md to it. The FULL join matters: a crash on a
-    // NEW stratum's first batch leaves token rows with no strata row
-    // at all, which a strata-driven join could never see.
+    // ScaleLint/PLANS.md to it. The FULL join matters: a torn batch of
+    // a NEW stratum leaves token rows with no strata row at all, which
+    // a strata-driven join could never see.
     val tokMass = p.tokens.groupBy(col("stratum"))
       .agg(sum(col("tf")).as("__tokmass"))
     val committed = p.strata.groupBy(col("stratum"))
@@ -308,10 +235,9 @@ object CorpusProfile {
       System.err.println(
         s"[graft] corpus profile INCONSISTENT for strata " +
           s"${torn.mkString("[", ", ", "]")}: per-stratum token mass " +
-          "exceeds the strata table's committed token count — the " +
-          "signature of a crash between append()'s tokens write and " +
-          "its strata commit marker. Repair: re-apply the interrupted " +
-          "batch's STRATA partial only (batch.strata append), or " +
+          "exceeds the strata table's token count — token partials " +
+          "landed without their strata partials. Repair: add the " +
+          "missing batch's STRATA partial, or " +
           "rebuild the store from the corpus with write(build(...)); " +
           "until then token-derived stats (vocab/hapax/tf) " +
           "over-count those strata by the torn batch.")

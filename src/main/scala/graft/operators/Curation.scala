@@ -44,44 +44,36 @@ object Curation {
     * streaming ingest (`StreamJobs.decontaminateStream`) loads the
     * bloom at job start instead of rebuilding it from the benchmark
     * corpus every run. Same durability discipline as the dedup/ANN
-    * indexes: crash-safe stage-then-swap, params sidecar validated on
+    * indexes: crash-safe stage-then-swap, store record validated on
     * read (a bloom built over a different gram width would silently
     * probe disjoint hashes — that must fail fast, not filter
     * nothing). */
   def writeBenchBloom(spark: org.apache.spark.sql.SparkSession,
       dir: String, bloomBytes: Array[Byte], n: Int,
-      fpp: Double): Unit = {
-    val target = new org.apache.hadoop.fs.Path(dir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsUtil.swapInto(fs, target) { staging =>
-      fs.mkdirs(staging)
+      fpp: Double): Unit =
+    graft.store.Store.write(spark, dir, BenchBloomKind,
+        Map("n" -> n, "fpp" -> fpp)) { st =>
+      val fs = st.root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(st.root)
       val out = fs.create(
-        new org.apache.hadoop.fs.Path(staging, "bloom.bin"), true)
+        new org.apache.hadoop.fs.Path(st.root, "bloom.bin"), true)
       try out.write(bloomBytes) finally out.close()
-      graft.core.FsUtil.writeSidecar(fs,
-        new org.apache.hadoop.fs.Path(staging, "params.json"),
-        s"""{"version":1,"n":$n,"fpp":$fpp}""")
     }
-  }
+
+  val BenchBloomKind = "bench-bloom"
 
   /** Reload a stored benchmark bloom. The caller's gram width must
-    * match the stored one — validated against the sidecar. */
+    * match the stored one — validated against the store record. */
   def readBenchBloom(spark: org.apache.spark.sql.SparkSession,
       dir: String, n: Int): Array[Byte] = {
+    val stored = graft.store.Store.require(spark, dir, BenchBloomKind)
+      .int("n")
+    require(stored == n,
+      s"bench bloom $dir was built over $stored-grams but the " +
+        s"caller supplied n=$n — probing with a different gram " +
+        "width would silently match nothing")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsUtil.readSidecar(fs,
-        new org.apache.hadoop.fs.Path(dir, "params.json"))
-      .foreach { json =>
-        val stored = """"n":(\d+)""".r.findFirstMatchIn(json)
-          .map(_.group(1).toInt)
-          .getOrElse(throw new java.io.IOException(
-            s"bench bloom $dir: malformed params.json: $json"))
-        require(stored == n,
-          s"bench bloom $dir was built over $stored-grams but the " +
-            s"caller supplied n=$n — probing with a different gram " +
-            "width would silently match nothing")
-      }
     val in = fs.open(new org.apache.hadoop.fs.Path(dir, "bloom.bin"))
     try in.readAllBytes() finally in.close()
   }
@@ -228,103 +220,60 @@ object Curation {
   // benchmark should be paid once at write time, not once per batch.
   // Layout: grams.parquet (distinct word n-grams, gram-sorted sized
   // files so the probe's semi join gets file-level min/max pruning)
-  // + params.json ({"n":…,"sortedFiles":…} — the bm25-style stamp
-  // maintenance reads). Unlike the stats-bearing units this store
-  // needs NO exactly-once ingest machinery: the probe is a semi
-  // join, so duplicate grams from an at-least-once replayed append
-  // are semantically invisible — idempotence by construction.
+  // with the gram width n as a store record param. Appends commit
+  // under a fresh tag like every store's; the probe is a semi join,
+  // so duplicate grams from appends are semantically invisible.
+
+  val DeconSetKind = "decon-set"
 
   /** Write a benchmark's distinct word n-grams as a persisted
     * decontamination set at `dir` (staged + atomically swapped). */
   def writeDeconSet(bench: DataFrame, idCol: String, textCol: String,
       n: Int, dir: String, targetFileBytes: Long = 128L << 20): Unit = {
     require(n >= 1, "writeDeconSet: n must be >= 1")
-    val spark = bench.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val grams = gramsOf(bench, idCol, textCol, n).select("gram").distinct()
-    graft.core.FsUtil.swapInto(fs, new org.apache.hadoop.fs.Path(dir)) {
-      staging =>
-        val files = graft.sources.Sinks.writeSizedParquet(grams,
-          new org.apache.hadoop.fs.Path(staging, "grams.parquet").toString,
-          targetFileBytes = targetFileBytes,
-          sortCols = Seq("gram"),
-          minFiles = spark.sparkContext.defaultParallelism)
-        graft.core.FsUtil.writeSidecar(fs,
-          new org.apache.hadoop.fs.Path(staging, "params.json"),
-          s"""{"n":$n,"sortedFiles":$files}""")
-    }
+    writeGrams(gramsOf(bench, idCol, textCol, n).select("gram").distinct(),
+      n, dir, targetFileBytes)
   }
 
-  /** The stored set's (grams frame, gram width n). Fails fast on a
-    * directory without the params sidecar. */
-  def readDeconSet(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, Int) =
-    (spark.read.parquet(s"$dir/grams.parquet"), deconSetN(spark, dir))
+  private def writeGrams(grams: DataFrame, n: Int, dir: String,
+      targetFileBytes: Long): Unit =
+    graft.store.Store.write(grams.sparkSession, dir, DeconSetKind,
+        Map("n" -> n)) { st =>
+      st.sized("grams.parquet", grams, Seq("gram"), targetFileBytes)
+    }
 
-  private def deconSetN(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    graft.core.FsUtil.sidecarLong(fs,
-        new org.apache.hadoop.fs.Path(dir, "params.json"), "n")
-      .map(_.toInt)
-      .getOrElse(throw new java.io.IOException(
-        s"readDeconSet: $dir has no params.json with n — not a decon set"))
+  /** The stored set's (grams frame, gram width n). Fails fast on a
+    * directory that is not a decon set store. */
+  def readDeconSet(spark: org.apache.spark.sql.SparkSession,
+      dir: String): (DataFrame, Int) = {
+    val rec = graft.store.Store.require(spark, dir, DeconSetKind)
+    (graft.store.Store.table(spark, dir, rec, "grams.parquet"),
+      rec.int("n"))
   }
 
   /** O(batch) append of a new benchmark's grams to a stored set. The
-    * batch's grams land as unsorted extra files (term-sort drift —
-    * the sidecar is re-written WITHOUT the sortedFiles stamp so
-    * [[deconSetSortDrifted]] flags it for maintenance); probe
-    * results are correct immediately, because the semi-join probe is
-    * duplicate- and order-insensitive. Single-writer-per-dir is the
-    * caller's contract, as for every persistence unit. */
+    * batch's grams land as unsorted extra files (the record marks the
+    * table unsorted until [[deconSetCompact]]); probe results are
+    * correct immediately, because the semi-join probe is duplicate-
+    * and order-insensitive. Single-writer-per-dir is the caller's
+    * contract, as for every store. */
   def deconSetAppend(bench: DataFrame, idCol: String, textCol: String,
       dir: String): Unit = {
     val spark = bench.sparkSession
-    val n = deconSetN(spark, dir)
-    gramsOf(bench, idCol, textCol, n).select("gram").distinct()
-      .write.mode("append").parquet(s"$dir/grams.parquet")
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "params.json"), s"""{"n":$n}""")
+    val rec = graft.store.Store.require(spark, dir, DeconSetKind)
+    graft.store.Store.append(spark, dir, rec, graft.store.Store.freshTag(),
+      Seq("grams.parquet" ->
+        gramsOf(bench, idCol, textCol, rec.int("n")).select("gram")
+          .distinct()))
   }
 
-  /** Whether appends broke the stored set's gram-sorted layout: the
-    * sortedFiles stamp is missing or disagrees with the current file
-    * count. One listing + one sidecar read ([[graft.operators
-    * .TextProfile.bm25SortDrifted]]'s rule on this unit). */
-  def deconSetSortDrifted(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    !graft.core.FsUtil.stampMatchesFileCount(fs,
-      new org.apache.hadoop.fs.Path(dir, "params.json"), "sortedFiles",
-      new org.apache.hadoop.fs.Path(s"$dir/grams.parquet"))
-  }
-
-  /** Re-distinct + re-sort + re-pack the stored set and restore the
-    * stamp — the maintenance pass appends accumulate toward
+  /** Re-distinct + re-sort + re-pack the stored set — the maintenance
+    * pass appends accumulate toward
     * ([[graft.operators.Maintenance.compactAll]] dispatches here). */
   def deconSetCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String, targetFileBytes: Long = 128L << 20): Unit = {
-    val n = deconSetN(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val grams = spark.read.parquet(s"$dir/grams.parquet").distinct()
-    graft.core.FsUtil.swapInto(fs, new org.apache.hadoop.fs.Path(dir)) {
-      staging =>
-        val files = graft.sources.Sinks.writeSizedParquet(grams,
-          new org.apache.hadoop.fs.Path(staging, "grams.parquet").toString,
-          targetFileBytes = targetFileBytes,
-          sortCols = Seq("gram"),
-          minFiles = spark.sparkContext.defaultParallelism)
-        graft.core.FsUtil.writeSidecar(fs,
-          new org.apache.hadoop.fs.Path(staging, "params.json"),
-          s"""{"n":$n,"sortedFiles":$files}""")
-    }
+    val (grams, n) = readDeconSet(spark, dir)
+    writeGrams(grams.distinct(), n, dir, targetFileBytes)
   }
 
   /** [[decontaminate]] against a STORED set: count each document's

@@ -378,103 +378,68 @@ object Dedup {
     * append an ingest batch use [[appendToMinhashIndex]] (O(batch)
     * parquet append, no corpus rewrite) — THIS function always
     * replaces the stored corpus wholesale. */
-  def writeMinhashIndex(index: MinhashIndex, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val hconf =
-      index.signed.sparkSession.sparkContext.hadoopConfiguration
-    val target = new Path(dir)
-    val fs = target.getFileSystem(hconf)
-    graft.core.FsUtil.swapInto(fs, target) { staging =>
+  def writeMinhashIndex(index: MinhashIndex, dir: String): Unit =
+    graft.store.Store.write(index.signed.sparkSession, dir, MinhashKind,
+        Map("n" -> index.n, "numHashes" -> index.numHashes,
+          "rowsPerBand" -> index.rowsPerBand)) { st =>
       // sized + parallelism-floored like the BM25 posting store: the
       // signed table is what every later near-dup batch scans, and a
       // size-accurate-but-single file serializes that scan (measured
       // 914 s vs 147 s on the posting-table analog)
-      graft.sources.Sinks.writeSizedParquet(index.signed,
-        new Path(staging, "signed.parquet").toString,
-        minFiles = index.signed.sparkSession.sparkContext
-          .defaultParallelism)
-      graft.core.FsUtil.writeSidecar(fs,
-        new Path(staging, ParamsSidecar), paramsJson(index))
+      st.sized("signed.parquet", index.signed)
     }
+
+  val MinhashKind = "minhash-index"
+
+  // the record's (n, numHashes, rowsPerBand): a mismatch would
+  // silently produce disjoint band keys, so every append and read
+  // validates the caller's scheme against it
+  private def requireParamsMatch(rec: graft.store.Store.Record,
+      dir: String, n: Int, numHashes: Int, rowsPerBand: Int): Unit = {
+    val stored =
+      (rec.int("n"), rec.int("numHashes"), rec.int("rowsPerBand"))
+    val given = (n, numHashes, rowsPerBand)
+    require(stored == given,
+      s"minhash index $dir was built with (n,numHashes,rowsPerBand)=" +
+        s"$stored but the caller supplied $given — a mismatch would " +
+        "silently produce disjoint band keys")
   }
 
-  /** Params manifest filename stored next to `signed.parquet` — lets
-    * [[appendToMinhashIndex]]/[[readMinhashIndex]] fail fast on a
-    * banding-scheme mismatch instead of silently producing disjoint
-    * band keys. */
-  val ParamsSidecar = "params.json"
-
-  private def paramsJson(i: MinhashIndex): String =
-    s"""{"n":${i.n},"numHashes":${i.numHashes},""" +
-      s""""rowsPerBand":${i.rowsPerBand}}"""
-
-  // Returns the stored (n, numHashes, rowsPerBand) if the sidecar
-  // exists; indexes written before the sidecar shipped have none and
-  // are accepted as-is (the caller's params remain the contract).
-  private def readParams(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Option[(Int, Int, Int)] =
-    graft.core.FsUtil.readSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, ParamsSidecar)).map { s =>
-      def f(k: String): Int = {
-        val m = s""""$k":(\\d+)""".r.findFirstMatchIn(s)
-        m.getOrElse(throw new java.io.IOException(
-          s"minhash index $dir: malformed $ParamsSidecar: $s"))
-          .group(1).toInt
-      }
-      (f("n"), f("numHashes"), f("rowsPerBand"))
-    }
-
-  private def requireParamsMatch(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, n: Int, numHashes: Int, rowsPerBand: Int): Unit =
-    readParams(fs, dir).foreach { case stored =>
-      val given = (n, numHashes, rowsPerBand)
-      require(stored == given,
-        s"minhash index $dir was built with (n,numHashes,rowsPerBand)=" +
-          s"$stored but the caller supplied $given — a mismatch would " +
-          "silently produce disjoint band keys")
-    }
-
-  /** Append an ingest batch's signatures to a STORED index dir: one
-    * narrow signature pass over the batch, parquet-append of just
-    * those rows — the daily-ingest path whose cost is O(batch) while
-    * the corpus-sized file set is never rewritten. The batch's
-    * (n, numHashes, rowsPerBand) are validated against the stored
-    * index's params sidecar and a mismatch FAILS FAST — appending
+  /** Append an ingest batch's signatures to a STORED index dir under a
+    * fresh tag: one narrow signature pass over the batch, an O(batch)
+    * append of just those rows — the corpus-sized file set is never
+    * rewritten. The batch's (n, numHashes, rowsPerBand) are validated
+    * against the store record and a mismatch FAILS FAST — appending
     * under a different banding scheme would silently corrupt the
     * store with disjoint band keys. Typical loop: pair the batch
     * first via [[minhashLshPairsAgainstIndex]], then append its
     * survivors. */
   def appendToMinhashIndex(batch: MinhashIndex, dir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      batch.signed.sparkSession.sparkContext.hadoopConfiguration)
-    requireParamsMatch(fs, dir, batch.n, batch.numHashes,
+    val spark = batch.signed.sparkSession
+    val rec = graft.store.Store.require(spark, dir, MinhashKind)
+    requireParamsMatch(rec, dir, batch.n, batch.numHashes,
       batch.rowsPerBand)
-    batch.signed.write.mode("append").parquet(s"$dir/signed.parquet")
+    graft.store.Store.append(spark, dir, rec,
+      graft.store.Store.freshTag(), Seq("signed.parquet" -> batch.signed))
   }
 
   /** Replay-idempotent streaming append to a stored [[MinhashIndex]]
     * — [[appendToMinhashIndex]] under foreachBatch's at-least-once
     * contract: the batch is signed under the STORED banding scheme
-    * (read from the params sidecar — a store without one cannot take
-    * streaming ingest) and its signature rows land as `tag`-named
-    * files, so a replayed micro-batch purges its crashed leftovers
-    * before re-appending. The store is fully described by the signed
-    * table; purge+re-append is the whole exactly-once argument. Same
-    * tag/runId, id-disjointness, and single-writer contracts as the
-    * other ingest paths. */
+    * (the record's params) and its signature rows commit under `tag`,
+    * so a committed tag replays as a no-op and a crashed attempt's
+    * leftovers are purged before re-appending. Same tag/runId,
+    * id-disjointness, and single-writer contracts as the other ingest
+    * paths. */
   def minhashIngestBatch(batch: DataFrame, dir: String, idCol: String,
       textCol: String, tag: String): Unit = {
     if (batch.isEmpty) return
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    val (n, numHashes, rowsPerBand) = readParams(fs, dir).getOrElse(
-      throw new java.io.IOException(
-        s"minhash index $dir has no $ParamsSidecar — streaming " +
-          "ingest takes the banding scheme from the stored sidecar"))
-    val b = minhashIndex(batch, idCol, textCol, n, numHashes,
-      rowsPerBand)
-    graft.sources.Sinks.appendTagged(b.signed, s"$dir/signed.parquet",
-      tag)
+    val spark = batch.sparkSession
+    val rec = graft.store.Store.require(spark, dir, MinhashKind)
+    val b = minhashIndex(batch, idCol, textCol, rec.int("n"),
+      rec.int("numHashes"), rec.int("rowsPerBand"))
+    graft.store.Store.append(spark, dir, rec, tag,
+      Seq("signed.parquet" -> b.signed))
   }
 
   /** Full-corpus MinHash-LSH near-dup pairs from a stored index —
@@ -490,19 +455,18 @@ object Dedup {
       index.docs, index.idCol, threshold)
 
   /** Reload a stored [[MinhashIndex]]. The params must match the ones
-    * the index was built with — validated against the stored params
-    * sidecar (when present), and the constructor re-validates band
+    * the index was built with — validated against the store record,
+    * and the constructor re-validates band
     * tiling; a mismatched `n`/`numHashes` would silently produce
     * disjoint band keys, which is why they ride along in the case
     * class in the first place. */
   def readMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, idCol: String, textCol: String, n: Int,
       numHashes: Int, rowsPerBand: Int): MinhashIndex = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    requireParamsMatch(fs, dir, n, numHashes, rowsPerBand)
+    val rec = graft.store.Store.require(spark, dir, MinhashKind)
+    requireParamsMatch(rec, dir, n, numHashes, rowsPerBand)
     MinhashIndex(
-      graft.sources.Sinks.readTagged(spark, s"$dir/signed.parquet"), idCol,
+      graft.store.Store.table(spark, dir, rec, "signed.parquet"), idCol,
       textCol, n, numHashes, rowsPerBand)
   }
 

@@ -431,77 +431,60 @@ object LmScore {
   // (w1, w2)-sorted sized files) + unigrams.parquet (reference
   // tokens, duplicate-tolerant — vocab is count_distinct at read, the
   // only merge rule that stays exact under appends: vocab sizes do
-  // NOT add) + params.json ({"sortedFiles":…}). Appends land O(batch)
-  // count partials; read-time aggregation collapses them exactly
-  // (CorpusProfile's partials discipline), so a stored-model score is
-  // bit-identical to a fresh train at every moment.
+  // NOT add) + firsts.parquet and the exact vocab (record param) on
+  // a compacted store. Appends land O(batch) count partials;
+  // read-time aggregation collapses them exactly (CorpusProfile's
+  // partials discipline), so a stored-model score is bit-identical
+  // to a fresh train at every moment.
+
+  val Kind = "lm-model"
 
   /** Train on `reference` and persist the model at `dir` (staged +
     * atomically swapped). The compacted layout also materializes what
     * a serve would otherwise recompute per probe: the derived firsts
     * table lands as `firsts.parquet` and the exact vocab count rides
-    * the sidecar — so [[readModel]] on a compacted store is three
-    * plain reads with ZERO re-aggregation (the per-batch cost
-    * `StreamJobs.lmLookupStream` pays per micro-batch). */
+    * the record — so [[readModel]] on a compacted store is two plain
+    * reads with ZERO re-aggregation (the per-batch cost
+    * `StreamJobs.lmLookupStream` pays on a reload). */
   def writeModel(reference: DataFrame, textCol: String, dir: String,
       targetFileBytes: Long = 128L << 20): Unit = {
-    val spark = reference.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     val bigrams = bigramsOf(reference, Nil, textCol)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
     val unigrams = reference
       .select(explode(tokens(col(textCol))).as("token")).distinct()
-    writeCompacted(spark, fs, dir, bigrams, unigrams, targetFileBytes)
+    writeCompacted(reference.sparkSession, dir, bigrams, unigrams,
+      targetFileBytes)
   }
 
   /** Shared by [[writeModel]] and [[modelCompact]]: stage the three
     * tables (bigram counts already one-row-per-group, derived firsts,
-    * distinct unigrams), stamp sortedFiles + the exact vocab, swap. */
+    * distinct unigrams) with the exact vocab as a record param, swap. */
   private def writeCompacted(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      bigrams: DataFrame, unigrams: DataFrame,
+      dir: String, bigrams: DataFrame, unigrams: DataFrame,
       targetFileBytes: Long): Unit = {
-    graft.core.FsUtil.swapInto(fs,
-        new org.apache.hadoop.fs.Path(dir)) { staging =>
-      val files = graft.sources.Sinks.writeSizedParquet(bigrams,
-        new org.apache.hadoop.fs.Path(staging, "bigrams.parquet").toString,
-        targetFileBytes = targetFileBytes,
-        sortCols = Seq("w1", "w2"),
-        minFiles = spark.sparkContext.defaultParallelism)
-      // firsts and vocab derive from the STAGED tables, not the input
-      // plans: re-evaluating the lazy bigram plan would re-run the
-      // whole reference scan + explode + aggregation a second time —
-      // at 100 TB that doubles the dominant model-build cost for a
+    graft.store.Store.write(spark, dir, Kind, Map.empty) { st =>
+      st.sized("bigrams.parquet", bigrams, Seq("w1", "w2"),
+        targetFileBytes)
+      // firsts derive from the STAGED bigrams, not the input plans:
+      // re-evaluating the lazy bigram plan would re-run the whole
+      // reference scan + explode + aggregation a second time — at
+      // 100 TB that doubles the dominant model-build cost for a
       // vocab-bounded result the staged parquet already holds
-      val stagedBigrams = spark.read.parquet(
-        new org.apache.hadoop.fs.Path(staging, "bigrams.parquet")
-          .toString)
-      graft.sources.Sinks.writeSizedParquet(
-        stagedBigrams.groupBy(col("w1")).agg(sum(col("c12")).as("c1")),
-        new org.apache.hadoop.fs.Path(staging, "firsts.parquet").toString,
-        targetFileBytes = targetFileBytes,
-        sortCols = Seq("w1"),
-        minFiles = spark.sparkContext.defaultParallelism)
-      graft.sources.Sinks.writeSizedParquet(unigrams,
-        new org.apache.hadoop.fs.Path(staging, "unigrams.parquet").toString,
-        targetFileBytes = targetFileBytes,
-        sortCols = Seq("token"),
-        minFiles = spark.sparkContext.defaultParallelism)
-      val vocab = spark.read.parquet(
-        new org.apache.hadoop.fs.Path(staging, "unigrams.parquet")
-          .toString).count()
-      graft.core.FsUtil.writeSidecar(fs,
-        new org.apache.hadoop.fs.Path(staging, "params.json"),
-        s"""{"sortedFiles":$files,"vocab":$vocab}""")
+      st.sized("firsts.parquet", st.staged("bigrams.parquet")
+          .groupBy(col("w1")).agg(sum(col("c12")).as("c1")),
+        Seq("w1"), targetFileBytes)
+      st.sized("unigrams.parquet", unigrams, Seq("token"),
+        targetFileBytes)
+      // vocab derives from the STAGED table, not the input plan
+      // (re-evaluating the lazy plan would re-scan the reference)
+      st.param("vocab", st.staged("unigrams.parquet").count())
     }
   }
 
-  /** The stored model. On a COMPACTED store (stamp present — the
-    * steady state between appends) this is three plain table reads
-    * with the vocab from the sidecar: zero re-aggregation, the fast
-    * path every `lmLookupStream` micro-batch takes. After appends the
-    * stamp is gone and the read falls back to collapsing partials
+  /** The stored model, from one record snapshot. On a COMPACTED store
+    * (no append since the last sorted write — the steady state) this
+    * is two plain table reads with the vocab from the record: zero
+    * re-aggregation. After appends the read collapses partials
     * exactly (counts re-summed per (w1, w2), firsts re-derived, vocab
     * as count_distinct over the token table — vocab-bounded work).
     * Either way the result is bit-identical to [[train]] over the
@@ -509,142 +492,58 @@ object LmScore {
     * itself is never re-read. */
   def readModel(spark: org.apache.spark.sql.SparkSession,
       dir: String): Model = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val params = graft.core.FsUtil.readSidecar(fs,
-        new org.apache.hadoop.fs.Path(dir, "params.json"))
-      .getOrElse(throw new java.io.IOException(
-        s"readModel: $dir has no params.json — not a stored LM model"))
-    val stampedVocab = graft.core.FsUtil.sidecarLong(params, "vocab")
-    val fsExists = fs.exists(
-      new org.apache.hadoop.fs.Path(s"$dir/firsts.parquet"))
-    // fast-path validity is decided AFTER the frames list their
-    // files, not before: appendModel drops the stamp FIRST, then
-    // lands partials, so a reader that fetched the sidecar just
-    // before the drop but listed bigrams.parquet after partials
-    // landed would double-count c12 on the fast path. spark.read
-    // snapshots the file listing at the read call; if the stamp is
-    // STILL present after that snapshot, the listing provably
-    // predates any concurrent append's stamp drop — otherwise fall
-    // back to the collapse path, which is append-safe by design.
-    stampedVocab match {
-      case Some(v) if fsExists =>
-        val fast = Model(
-          graft.sources.Sinks.readTagged(spark, s"$dir/bigrams.parquet"),
-          spark.read.parquet(s"$dir/firsts.parquet"), v)
-        val stampStillThere = graft.core.FsUtil.readSidecar(fs,
-            new org.apache.hadoop.fs.Path(dir, "params.json"))
-          .flatMap(graft.core.FsUtil.sidecarLong(_, "vocab"))
-          .contains(v)
-        if (stampStillThere) fast else collapseRead(spark, dir)
-      case _ => collapseRead(spark, dir)
+    val rec = graft.store.Store.require(spark, dir, Kind)
+    def t(name: String) = graft.store.Store.table(spark, dir, rec, name)
+    if (rec.compacted)
+      Model(t("bigrams.parquet"), t("firsts.parquet"), rec.long("vocab"))
+    else {
+      val counts = t("bigrams.parquet")
+        .groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12"))
+      Model(counts,
+        counts.groupBy(col("w1")).agg(sum(col("c12")).as("c1")),
+        t("unigrams.parquet").agg(count_distinct(col("token")))
+          .head().getLong(0))
     }
-  }
-
-  /** The append-tolerant read arm of [[readModel]]: collapse count
-    * partials exactly, re-derive firsts, count the vocab — all
-    * vocab-bounded work. */
-  private def collapseRead(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Model = {
-    val counts = graft.sources.Sinks
-      .readTagged(spark, s"$dir/bigrams.parquet")
-      .groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12"))
-    val firsts = counts.groupBy(col("w1"))
-      .agg(sum(col("c12")).as("c1"))
-    val vocab = graft.sources.Sinks
-      .readTagged(spark, s"$dir/unigrams.parquet")
-      .agg(count_distinct(col("token"))).head().getLong(0)
-    Model(counts, firsts, vocab)
   }
 
   /** O(batch) EXACTLY-ONCE append of a new reference batch under a
     * caller-stable `tag` (runId-batchId for a stream): its bigram
-    * counts land as tagged partial rows, its tokens as tagged
-    * (possibly duplicate) unigram rows — both collapsed exactly at
-    * read. Ordering is the whole safety story:
-    *
-    *  1. The fast-path stamp is dropped FIRST (sidecar → `{}`), so a
-    *     concurrent [[readModel]] falls back to the collapse path
-    *     before any partial lands — the fast path over duplicated
-    *     (w1, w2) keys would double-count. readModel closes the
-    *     remaining list-then-drop race on its side by re-checking the
-    *     stamp AFTER its frames snapshot their file listing, so a
-    *     reader mid-append sees a between-states model, which
-    *     converges; never a structurally wrong one.
-    *  2. The appends are TAGGED ([[graft.sources.Sinks.appendTagged]]):
-    *     each table's batch is COMMITTED by its manifest update, a
-    *     replayed tag is a no-op once committed, and a crashed
-    *     attempt's uncommitted files are invisible to every reader
-    *     ([[graft.sources.Sinks.readTagged]]) until the replay purges
-    *     them — so foreachBatch's at-least-once converges to
-    *     exactly-once from any crash point, and a serve concurrent
-    *     with crash recovery never observes a missing file. Counts
-    *     ADD here, so the decon set's duplicate-insensitivity
-    *     argument does not apply.
-    *  3. Unigrams append (and commit) before bigrams. So at EVERY
-    *     crash point — first attempt or replay, including an
-    *     ABANDONED one (no further replay) — the VISIBLE store holds
-    *     at worst vocab-without-counts, a uniform smoothing shift;
-    *     never bigram mass whose tokens V never saw. An abandoned
-    *     attempt's residual is now just invisible orphan files, which
-    *     the next compaction discards.
-    *
-    * Single-writer-per-dir is the caller's contract. */
+    * counts land as partial rows, its tokens as (possibly duplicate)
+    * unigram rows — both collapsed exactly at read — and both tables
+    * commit in ONE record write (`graft.store.Store.append`): a
+    * committed tag replays as a no-op, a crashed attempt's files are
+    * invisible to every reader until the replay purges them, and a
+    * serve concurrent with the append reads the model before or after
+    * it, never between. Single-writer-per-dir is the caller's
+    * contract. */
   def appendModel(reference: DataFrame, textCol: String,
       dir: String, tag: String): Unit = {
     val spark = reference.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (graft.core.FsUtil.readSidecar(fs,
-        new org.apache.hadoop.fs.Path(dir, "params.json")).isEmpty)
-      throw new java.io.IOException(
-        s"appendModel: $dir has no params.json — not a stored LM model")
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "params.json"), "{}")
-    graft.sources.Sinks.appendTagged(
-      reference.select(explode(tokens(col(textCol))).as("token"))
-        .distinct(),
-      s"$dir/unigrams.parquet", tag)
-    graft.sources.Sinks.appendTagged(
-      bigramsOf(reference, Nil, textCol)
-        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")),
-      s"$dir/bigrams.parquet", tag)
+    graft.store.Store.append(spark, dir,
+      graft.store.Store.require(spark, dir, Kind), tag,
+      Seq("unigrams.parquet" ->
+          reference.select(explode(tokens(col(textCol))).as("token"))
+            .distinct(),
+        "bigrams.parquet" -> bigramsOf(reference, Nil, textCol)
+          .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))))
   }
 
-  /** Whether the stored model drifted from compacted form: bigram
-    * count partials (one vocab-bounded aggregation), duplicate
-    * unigrams, or a missing/stale sortedFiles stamp. */
+  /** Whether the stored model drifted from compacted form: an append
+    * landed since the last sorted write (the record's sorted flags). */
   def modelDrifted(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!graft.core.FsUtil.stampMatchesFileCount(fs,
-        new org.apache.hadoop.fs.Path(dir, "params.json"), "sortedFiles",
-        new org.apache.hadoop.fs.Path(s"$dir/bigrams.parquet")))
-      return true
-    val b = graft.sources.Sinks.readTagged(spark, s"$dir/bigrams.parquet")
-      .agg(count(lit(1)),
-        count_distinct(struct(col("w1"), col("w2")))).head()
-    if (b.getLong(0) > b.getLong(1)) return true
-    val u = graft.sources.Sinks.readTagged(spark, s"$dir/unigrams.parquet")
-      .agg(count(lit(1)), count_distinct(col("token"))).head()
-    u.getLong(0) > u.getLong(1)
-  }
+      dir: String): Boolean =
+    !graft.store.Store.require(spark, dir, Kind).compacted
 
   /** Collapse partials/duplicates, re-sort, re-pack, re-materialize
-    * the firsts table, restamp sortedFiles + vocab — the maintenance
-    * pass ([[graft.operators.Maintenance.compactAll]] dispatches
-    * here), which also restores [[readModel]]'s zero-aggregation fast
-    * path. */
+    * the firsts table and the vocab — the maintenance pass
+    * ([[graft.operators.Maintenance.compactAll]] dispatches here),
+    * which also restores [[readModel]]'s zero-aggregation fast path. */
   def modelCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String, targetFileBytes: Long = 128L << 20): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val bigrams = graft.sources.Sinks
-      .readTagged(spark, s"$dir/bigrams.parquet")
-      .groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12"))
-    val unigrams = graft.sources.Sinks
-      .readTagged(spark, s"$dir/unigrams.parquet").distinct()
-    writeCompacted(spark, fs, dir, bigrams, unigrams, targetFileBytes)
+    val rec = graft.store.Store.require(spark, dir, Kind)
+    def t(name: String) = graft.store.Store.table(spark, dir, rec, name)
+    writeCompacted(spark, dir, t("bigrams.parquet")
+        .groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12")),
+      t("unigrams.parquet").distinct(), targetFileBytes)
   }
 }

@@ -4,51 +4,38 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** ONE maintenance entry point for every append-mode store this
-  * library persists. All nine persistence units (MinhashIndex,
-  * IvfIndex, PqIndex, IvfPqIndex, CorpusProfile, Bm25Index, the
-  * decontamination gram set, the LM bigram model, and the NB
-  * classifier model) plus the
-  * generic parquet layouts accumulate files and/or layout drift BY
+  * library persists. Stores accumulate files and layout drift BY
   * DESIGN — O(batch) appends never rewrite the corpus-sized table —
-  * and each has its own restoring pass (`Layout.compact`'s bin-pack,
-  * `TextProfile.bm25IndexCompact`'s term-sorted re-pack,
-  * `CorpusProfile.compact`'s partial collapse). Before this object
-  * the operator had to know which store was which; [[compactAll]]
-  * instead DETECTS each unit from its directory contents (the
-  * table-name + sidecar layout every writer stamps), decides whether
-  * it drifted (small-file growth past the bin-pack slack, or stored
-  * partials for the stats-bearing units), and dispatches the right
-  * pass. Crash safety comes from the per-unit compactors themselves
-  * (every one stages + swaps under `FsUtil.swapInto`'s lock);
-  * single-writer-per-dir remains the caller's contract — quiesce
-  * appenders for the stores being compacted, as everywhere.
+  * and [[compactAll]] restores them: a directory holding a store
+  * record (`graft.store.Store`) dispatches on the record's `kind`,
+  * compacts when an append left a table unsorted or a table's files
+  * outgrew the bin-pack slack, and re-packs every table sorted on its
+  * DECLARED columns (so IVF/IVF-PQ cell ranges survive compaction).
+  * Stores whose partials collapse (BM25 df, profile, LM, NB) or whose
+  * rows re-distinct (decon set) run their own pass; every other kind
+  * takes the generic `Store.compact`. Directories without a record
+  * keep the generic-flat and generic-partitioned passes. Crash safety
+  * comes from the staged swap under `FsUtil.swapInto`'s lock;
+  * compaction must run quiesced — no writer beside it, as everywhere.
   *
   * At 100 TB this is the nightly housekeeping job: point it at the
-  * index/profile roots, and only the units whose drift crossed the
-  * threshold pay a rewrite — an idle store costs one file listing
-  * plus (for stats units) one vocab-bounded aggregation. */
+  * index/profile roots, and only the stores that drifted pay a
+  * rewrite — an idle store costs one record read and one listing per
+  * table. */
 object Maintenance {
 
-  /** What [[compactAll]] did to one directory: the detected unit
-    * kind, and per inspected table its (filesBefore, filesAfter) —
-    * equal when the table did not need compaction. */
+  /** What [[compactAll]] did to one directory: the detected kind, per
+    * inspected table its (filesBefore, filesAfter), and whether a
+    * rewrite ran. */
   final case class UnitReport(kind: String,
-      tables: Map[String, (Int, Int)]) {
-    def compacted: Boolean = tables.exists { case (_, (b, a)) => a < b }
-  }
+      tables: Map[String, (Int, Int)], compacted: Boolean)
 
-  /** Inspect each directory, detect its unit kind, compact what
-    * drifted. `slack` bounds tolerated small-file growth: a table
-    * whose file count exceeds `slack` × its bin-packed ideal (size
-    * target + scan-parallelism floor — `Layout.compact`'s own
-    * formula) is re-packed; stats-bearing units (profile, BM25) also
-    * compact when their stored partials have drifted, whatever the
-    * file counts (partial drift is what unbounds their read-time
-    * aggregation), and BM25 additionally when its sortedFiles stamp
-    * disagrees with the posting file count ([[TextProfile
-    * .bm25SortDrifted]] — the signal that catches vocab-disjoint
-    * appends, which break term-sorted file pruning without leaving
-    * df partials). */
+  /** Inspect each directory, compact what drifted. `slack` bounds
+    * tolerated small-file growth: a table whose file count exceeds
+    * `slack` × its bin-packed ideal (size target + scan-parallelism
+    * floor — `Layout.compact`'s own formula) is re-packed; a store
+    * table an append left unsorted is re-packed whatever its file
+    * count (its sort layout is what probe-side pruning relies on). */
   def compactAll(spark: SparkSession, dirs: Seq[String],
       targetFileBytes: Long = 128L << 20,
       slack: Double = 2.0): Map[String, UnitReport] = {
@@ -63,140 +50,58 @@ object Maintenance {
       spark.sparkContext.hadoopConfiguration)
     val root = new Path(dir)
     require(fs.exists(root), s"compactAll: $dir does not exist")
-    def has(name: String): Boolean = fs.exists(new Path(root, name))
-
-    if (has("postings.parquet") && has("df.parquet"))
-      bm25Unit(spark, fs, dir, target, slack)
-    else if (has("strata.parquet") && has("tokens.parquet"))
-      profileUnit(spark, fs, dir, target, slack)
-    else if (has("signed.parquet"))
-      tablesUnit(spark, fs, dir, "minhash-index", Seq("signed.parquet"),
-        target, slack)
-    else if (has("pqcodebooks.parquet") && has("codes.parquet"))
-      tablesUnit(spark, fs, dir, "ivfpq-index", Seq("codes.parquet"),
-        target, slack)
-    else if (has("codebooks.parquet") && has("codes.parquet"))
-      tablesUnit(spark, fs, dir, "pq-index", Seq("codes.parquet"),
-        target, slack)
-    else if (has("codebook.parquet") && has("assigned.parquet"))
-      tablesUnit(spark, fs, dir, "ivf-index", Seq("assigned.parquet"),
-        target, slack)
-    else if (has("grams.parquet"))
-      deconUnit(spark, fs, dir, target, slack)
-    else if (has("bigrams.parquet") && has("unigrams.parquet"))
-      lmUnit(spark, fs, dir, target, slack)
-    else if (has("counts.parquet") && has("classes.parquet"))
-      nbUnit(spark, fs, dir, target, slack)
-    else {
-      val entries = fs.listStatus(root).toSeq
-      val flatParquet = entries.exists(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet"))
-      val partitioned = entries.exists(f =>
-        f.isDirectory && f.getPath.getName.contains("="))
-      if (flatParquet) genericFlat(spark, fs, dir, target, slack)
-      else if (partitioned) genericPartitioned(spark, dir, target, slack)
-      else throw new IllegalArgumentException(
-        s"compactAll: $dir matches no known store layout (not an " +
-          "index/profile unit, no flat parquet files, no name=value " +
-          "partition dirs)")
+    graft.store.Store.read(fs, root) match {
+      case Some(rec) => storeUnit(spark, fs, dir, rec, target, slack)
+      case None =>
+        val entries = fs.listStatus(root).toSeq
+        val flatParquet = entries.exists(f =>
+          f.isFile && f.getPath.getName.endsWith(".parquet"))
+        val partitioned = entries.exists(f =>
+          f.isDirectory && f.getPath.getName.contains("="))
+        if (flatParquet) genericFlat(spark, fs, dir, target, slack)
+        else if (partitioned) genericPartitioned(spark, dir, target, slack)
+        else throw new IllegalArgumentException(
+          s"compactAll: $dir is neither a store (no " +
+            s"${graft.store.Store.RecordFile}) nor flat parquet files " +
+            "nor name=value partition dirs")
     }
   }
 
-  // ── per-kind passes ────────────────────────────────────────────────
-
-  private def bm25Unit(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, target: Long,
+  private def storeUnit(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      rec: graft.store.Store.Record, target: Long,
       slack: Double): UnitReport = {
-    val before = fileCount(fs, s"$dir/postings.parquet")
-    // three independent drift signals: df partials (overlapping-vocab
-    // appends), the sortedFiles stamp (ANY append — a vocab-disjoint
-    // batch leaves df 1-per-term yet still breaks term-sorted file
-    // pruning), and raw small-file growth
-    val need = TextProfile.bm25SortDrifted(spark, dir) ||
-      TextProfile.bm25HasPartials(spark, dir) ||
-      overPacked(fs, s"$dir/postings.parquet", target,
-        spark.sparkContext.defaultParallelism, slack)
-    if (need) TextProfile.bm25IndexCompact(spark, dir, target)
-    UnitReport("bm25-index", Map("postings.parquet" ->
-      (before, fileCount(fs, s"$dir/postings.parquet"))))
-  }
-
-  private def profileUnit(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, target: Long,
-      slack: Double): UnitReport = {
-    val before = fileCount(fs, s"$dir/tokens.parquet")
-    val need = CorpusProfile.hasPartials(spark, dir) ||
-      overPacked(fs, s"$dir/tokens.parquet", target,
-        spark.sparkContext.defaultParallelism, slack)
-    if (need) CorpusProfile.compact(spark, dir, target)
-    UnitReport("corpus-profile", Map("tokens.parquet" ->
-      (before, fileCount(fs, s"$dir/tokens.parquet"))))
-  }
-
-  private def deconUnit(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, target: Long,
-      slack: Double): UnitReport = {
-    val before = fileCount(fs, s"$dir/grams.parquet")
-    // two drift signals: the sortedFiles stamp (ANY append breaks the
-    // gram-sorted pruning layout) and raw small-file growth; the
-    // dedicated pass also re-distincts what appends duplicated
-    val need = Curation.deconSetSortDrifted(spark, dir) ||
-      overPacked(fs, s"$dir/grams.parquet", target,
-        spark.sparkContext.defaultParallelism, slack)
-    if (need) Curation.deconSetCompact(spark, dir, target)
-    UnitReport("decon-set", Map("grams.parquet" ->
-      (before, fileCount(fs, s"$dir/grams.parquet"))))
-  }
-
-  private def lmUnit(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, target: Long,
-      slack: Double): UnitReport = {
-    val before = fileCount(fs, s"$dir/bigrams.parquet")
-    // modelDrifted covers the stamp AND the stored partials/duplicate
-    // unigrams; overPacked adds the raw small-file growth arm
-    val need = LmScore.modelDrifted(spark, dir) ||
-      overPacked(fs, s"$dir/bigrams.parquet", target,
-        spark.sparkContext.defaultParallelism, slack)
-    if (need) LmScore.modelCompact(spark, dir, target)
-    UnitReport("lm-model", Map("bigrams.parquet" ->
-      (before, fileCount(fs, s"$dir/bigrams.parquet"))))
-  }
-
-  private def nbUnit(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, target: Long,
-      slack: Double): UnitReport = {
-    val before = fileCount(fs, s"$dir/counts.parquet")
-    // nbDrifted covers the stamp AND stored partials/duplicate
-    // vocabulary; overPacked adds the raw small-file growth arm
-    val need = Classify.nbDrifted(spark, dir) ||
-      overPacked(fs, s"$dir/counts.parquet", target,
-        spark.sparkContext.defaultParallelism, slack)
-    if (need) Classify.nbCompact(spark, dir, target)
-    UnitReport("nb-model", Map("counts.parquet" ->
-      (before, fileCount(fs, s"$dir/counts.parquet"))))
-  }
-
-  private def tablesUnit(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, kind: String,
-      tables: Seq[String], target: Long, slack: Double): UnitReport = {
     val p = spark.sparkContext.defaultParallelism
-    UnitReport(kind, tables.map { t =>
-      val path = s"$dir/$t"
-      val before = fileCount(fs, path)
-      if (overPacked(fs, path, target, p, slack))
-        Layout.compact(spark, path, target)
-      t -> (before, fileCount(fs, path))
-    }.toMap)
+    val need = rec.tables.exists { case (name, t) =>
+      !t.sorted || {
+        val sizes = fs.listStatus(new Path(dir, name)).toSeq
+          .filter(f => t.files.contains(f.getPath.getName)).map(_.getLen)
+        overPacked(sizes, target, p, slack)
+      }
+    }
+    if (need) rec.kind match {
+      case TextProfile.Bm25Kind => TextProfile.bm25IndexCompact(spark, dir, target)
+      case CorpusProfile.Kind => CorpusProfile.compact(spark, dir, target)
+      case LmScore.Kind => LmScore.modelCompact(spark, dir, target)
+      case Classify.NbKind => Classify.nbCompact(spark, dir, target)
+      case Curation.DeconSetKind => Curation.deconSetCompact(spark, dir, target)
+      case _ => graft.store.Store.compact(spark, dir, target)
+    }
+    val after = if (need) graft.store.Store.require(spark, dir) else rec
+    UnitReport(rec.kind, rec.tables.map { case (name, t) =>
+      name -> (t.files.size, after.files(name).size)
+    }, need)
   }
 
   private def genericFlat(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, dir: String, target: Long,
       slack: Double): UnitReport = {
-    val before = fileCount(fs, dir)
-    if (overPacked(fs, dir, target,
-        spark.sparkContext.defaultParallelism, slack))
-      Layout.compact(spark, dir, target)
-    UnitReport("generic-flat", Map("." -> (before, fileCount(fs, dir))))
+    val need = overPacked(parquetFiles(fs, dir).map(_.getLen), target,
+      spark.sparkContext.defaultParallelism, slack)
+    val (before, after) =
+      if (need) Layout.compact(spark, dir, target)
+      else { val n = fileCount(fs, dir); (n, n) }
+    UnitReport("generic-flat", Map("." -> (before, after)), need)
   }
 
   private def genericPartitioned(spark: SparkSession, dir: String,
@@ -209,12 +114,13 @@ object Maintenance {
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val rep = Layout.partitionLeaves(spark, dir).map { case (rel, p) =>
-      val before = fileCount(fs, p.toString)
-      if (overPacked(fs, p.toString, target, parallelism = 1, slack))
+      val files = parquetFiles(fs, p.toString)
+      if (overPacked(files.map(_.getLen), target, parallelism = 1, slack))
         rel -> Layout.compact(spark, p.toString, target, minFiles = 1)
-      else rel -> (before, before)
+      else rel -> (files.size, files.size)
     }.toMap
-    UnitReport("generic-partitioned", rep)
+    UnitReport("generic-partitioned", rep,
+      rep.values.exists { case (b, a) => a < b })
   }
 
   // ── drift rules ────────────────────────────────────────────────────
@@ -231,14 +137,11 @@ object Maintenance {
     * `Layout.compact` would produce for these bytes (size target,
     * floored at scan parallelism but never above the current count).
     */
-  private def overPacked(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, target: Long, parallelism: Int,
-      slack: Double): Boolean = {
-    val fls = parquetFiles(fs, path)
-    if (fls.isEmpty) return false
-    val bytes = fls.map(_.getLen).sum
-    val ideal = math.max(math.min(fls.size, parallelism),
-      math.ceil(bytes.toDouble / target).toInt)
-    fls.size > slack * ideal
-  }
+  private def overPacked(sizes: Seq[Long], target: Long,
+      parallelism: Int, slack: Double): Boolean =
+    sizes.nonEmpty && {
+      val ideal = math.max(math.min(sizes.size, parallelism),
+        math.ceil(sizes.sum.toDouble / target).toInt)
+      sizes.size > slack * ideal
+    }
 }

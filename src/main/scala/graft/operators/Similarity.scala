@@ -234,45 +234,32 @@ object Similarity {
   final case class IvfIndex(codebook: DataFrame, assigned: DataFrame,
       idCol: String, vecCol: String) {
     /** Persist both frames as parquet under `dir` (the reload side is
-      * [[readIvfIndex]]). Stage-then-swap via
-      * [[graft.core.FsUtil.swapInto]]: both frames are fully written
-      * to a hidden sibling dir BEFORE the target is replaced, so
-      * writing an index back to the dir its own frames lazily read
-      * from (the natural [[ivfIndexAppend]] round-trip) is safe — a
-      * plain overwrite-mode write would delete the target before the
-      * write job scans it — and a crash mid-swap restores the OLD
+      * [[readIvfIndex]]) through the store protocol's staged swap
+      * (`graft.store.Store.write`): writing an index back to the dir
+      * its own frames lazily read from (the natural [[ivfIndexAppend]]
+      * round-trip) is safe, and a crash mid-swap restores the OLD
       * index instead of leaving none. Concurrent READERS of `dir`
       * still race the final swap; cross-process sharing should write
       * to a fresh dir and repoint, or append via
       * [[ivfAppendToStored]]. */
-    def write(dir: String): Unit = {
-      import org.apache.hadoop.fs.Path
-      val hconf =
-        codebook.sparkSession.sparkContext.hadoopConfiguration
-      val target = new Path(dir)
-      val fs = target.getFileSystem(hconf)
-      graft.core.FsUtil.swapInto(fs, target) { staging =>
-        codebook.write.mode("overwrite")
-          .parquet(new Path(staging, "codebook.parquet").toString)
+    def write(dir: String): Unit =
+      graft.store.Store.write(codebook.sparkSession, dir, IvfKind,
+          Map.empty) { st =>
+        st.plain("codebook.parquet", codebook)
         // the corpus-sized half: sized + floored at scan parallelism
         // so a stored probe never serializes onto one file's task.
         // CELL-RANGE-SORTED (round 20, guide §6 sort-order-on-write):
         // each file covers a tight cell range, so the probe's pushed
-        // In(cell) predicate (cellPruned) skips every file outside
-        // the nprobe cells via parquet min/max stats — without the
-        // sort a probe reads the whole stored corpus per batch.
-        // Distinct cells can undercut the planned file count (empty
-        // range partitions write no file); files stay splittable, so
-        // scan parallelism is unharmed. Ingest appends land unsorted
-        // tag files (correct, unpruned) until compaction.
-        graft.sources.Sinks.writeSizedParquet(assigned,
-          new Path(staging, "assigned.parquet").toString,
-          sortCols = if (cellLayoutOn) Seq("cell") else Nil,
-          minFiles = assigned.sparkSession.sparkContext
-            .defaultParallelism)
+        // In(cell) predicate (cellPruned) skips every row group
+        // outside the nprobe cells via parquet min/max stats — without
+        // the sort a probe reads the whole stored corpus per batch.
+        // The sort column is declared in the record, so compaction
+        // restores the layout after ingest appends land unsorted.
+        st.sized("assigned.parquet", assigned, Seq("cell"))
       }
-    }
   }
+
+  val IvfKind = "ivf-index"
 
   /** Persist an ingest batch in place: assign `newCorpus` to `index`'s
     * EXISTING cells and parquet-APPEND only those rows to the stored
@@ -293,7 +280,7 @@ object Similarity {
       if (cents.isEmpty) emptyAssigned(c)
       else assignCells(requireDim(c, cents.head._2.length,
         "ivfAppendToStored"), centArrOf(cents))
-    extra.write.mode("append").parquet(s"$dir/assigned.parquet")
+    appendAssigned(extra, dir, graft.store.Store.freshTag())
     index.copy(assigned = index.assigned.unionByName(extra))
   }
 
@@ -303,12 +290,10 @@ object Similarity {
     * batch's rows are assigned to the STORED codebook's cells (the
     * standard IVF append: codebook unchanged, periodic re-train is a
     * rebuild) and land as `tag`-named files via
-    * [[graft.sources.Sinks.appendTagged]] — a replay purges whatever
-    * a crashed attempt left before re-appending, so the stored
-    * `assigned` table converges to exactly-once. No sidecar totals
-    * here (unlike BM25's N/T): the IVF store is fully described by
-    * its two tables, so purge+re-append alone is the whole contract.
-    * `tag` must be unique per logical batch across stream runs
+    * `graft.store.Store.append` — a committed tag replays as a no-op
+    * and a crashed attempt's files stay invisible until the replay
+    * purges them, so the stored `assigned` table converges to
+    * exactly-once. `tag` must be unique per logical batch across stream runs
     * (runId+batchId); same id-disjointness and single-writer-per-dir
     * contracts as [[ivfAppendToStored]]. */
   def ivfIngestBatch(batch: DataFrame, dir: String, idCol: String,
@@ -321,7 +306,7 @@ object Similarity {
 
   /** [[ivfIngestBatch]] with the codebook ALREADY collected
     * ([[IvfReady]]) — the form a streaming ingest calls per
-    * micro-batch with a stamp-cached handle (round 19): ingest never
+    * micro-batch with a cached handle (round 19): ingest never
     * mutates the codebook, so re-reading and re-collecting it per
     * batch was a pure fixed cost. Identical behavior to the one-shot
     * form, which delegates here. */
@@ -339,8 +324,15 @@ object Similarity {
     val c = ivfPrep(batch, ready.index.idCol, ready.index.vecCol)
     val extra = assignCells(requireDim(c, cents.head._2.length,
       "ivfIngestBatch"), centArrOf(cents))
-    graft.sources.Sinks.appendTagged(extra, s"$dir/assigned.parquet",
-      tag)
+    appendAssigned(extra, dir, tag)
+  }
+
+  private def appendAssigned(extra: DataFrame, dir: String,
+      tag: String): Unit = {
+    val spark = extra.sparkSession
+    graft.store.Store.append(spark, dir,
+      graft.store.Store.require(spark, dir, IvfKind), tag,
+      Seq("assigned.parquet" -> extra))
   }
 
   /** Fail fast when a batch row's vector dimension differs from the
@@ -360,10 +352,12 @@ object Similarity {
     * ones the index was built with — same contract as constructing a
     * MinhashIndex directly over a stored signed frame. */
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      idCol: String, vecCol: String): IvfIndex =
-    IvfIndex(spark.read.parquet(s"$dir/codebook.parquet"),
-      graft.sources.Sinks.readTagged(spark, s"$dir/assigned.parquet"),
+      idCol: String, vecCol: String): IvfIndex = {
+    val rec = graft.store.Store.require(spark, dir, IvfKind)
+    IvfIndex(graft.store.Store.table(spark, dir, rec, "codebook.parquet"),
+      graft.store.Store.table(spark, dir, rec, "assigned.parquet"),
       idCol, vecCol)
+  }
 
   /** Build an [[IvfIndex]]: deterministic md5-rank centroid seeds,
     * `refine` Lloyd iterations, one narrow argmax assignment pass.
@@ -496,7 +490,7 @@ object Similarity {
     ivfTopKWithReady(queries, ivfReady(index), k, nprobe, scale)
 
   /** A stored [[IvfIndex]] plus its codebook COLLECTED once — the
-    * unit a serve stream caches per store stamp
+    * unit a serve stream caches per store generation
     * ([[graft.streaming.ModelCache]]): probing through a ready
     * handle pays neither the codebook parquet read nor the nlist-row
     * collect per micro-batch, only the probe itself. Build with
@@ -543,16 +537,6 @@ object Similarity {
     * queries × nprobe) while a production-sized batch falls back. */
   private[graft] val CellIsinThreshold = 64
 
-  /** Measurement toggle (AbInterleaved's contract — the
-    * ModelCache.enabled discipline): `-Dgraft.ann.celllayout=off`
-    * restores the round-19 shape on BOTH halves of the cell-layout
-    * optimization — unsorted assigned/codes writes and a plain
-    * (unfiltered) probe join — so the A/B runs interleaved in one
-    * JVM instead of across drift-prone JVM pairs. Results are
-    * identical either way; only the plan/layout differs. */
-  private[operators] def cellLayoutOn: Boolean =
-    !sys.props.get("graft.ann.celllayout").contains("off")
-
   /** Bounded-collect cell pruning for the stored-table probes —
     * `TextProfile.bm25TopKWithIndex`'s In-pushdown rule applied to
     * the IVF cell key (round 20, guide §6): collect at most
@@ -568,7 +552,6 @@ object Similarity {
     * Unsorted ingest-tag files span the key space and stay unpruned
     * (correct, just unskippable) until compaction re-sorts. */
   private def cellPruned(table: DataFrame, probes: DataFrame): DataFrame = {
-    if (!cellLayoutOn) return table
     val cells = probes.select(col("cell")).distinct()
       .limit(CellIsinThreshold + 1).collect().map(_.get(0))
     if (cells.length <= CellIsinThreshold)
@@ -859,10 +842,10 @@ object Similarity {
   /** The probe arm of [[decontaminateSemantic]] over an
     * already-bucketed benchmark frame — (bucket, bv, bnrm) rows, as
     * stored by [[writeSemanticDeconSet]] or built inline. `planes`
-    * MUST be the count the set was bucketed with (the stored sidecar
+    * MUST be the count the set was bucketed with (the store record
     * carries it); a mismatched pack compares disjoint bucket ids and
     * silently finds nothing, which is why the stored path fails fast
-    * on a dir without the params sidecar. Bit-identical to the fresh
+    * on a dir that is not a single-band set. Bit-identical to the fresh
     * form at equal planes. */
   def decontaminateSemanticWithSet(corpus: DataFrame, set: DataFrame,
       idCol: String, vecCol: String, threshold: Double,
@@ -888,9 +871,8 @@ object Similarity {
   /** Persist the benchmark side of [[decontaminateSemantic]] —
     * [[graft.operators.Curation.writeDeconSet]]'s embedding-space
     * twin: the bucketed benchmark frame (bucket, bv, bnrm) lands as
-    * bucket-sorted sized parquet + a params sidecar
-    * `{"dim":…,"planes":…,"sortedFiles":…}`, staged and atomically
-    * swapped. Benchmarks are tiny and change rarely, so the SRP pack
+    * bucket-sorted sized parquet, with dim/planes as store record
+    * params, staged and atomically swapped. Benchmarks are tiny and change rarely, so the SRP pack
     * is paid once at write time and every ingest batch probes the
     * stored state. `planes` is FIXED here because the probe must pack
     * the identical bits — size it for the CORPUS the deployment will
@@ -901,46 +883,30 @@ object Similarity {
       targetFileBytes: Long = 128L << 20): Unit = {
     require(planes >= 1, "writeSemanticDeconSet: planes must be >= 1")
     val spark = bench.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     val bb = bench
       .select(col(vecCol).as("bv"))
       .withColumn("bnrm", norm(col("bv")))
       .filter(col("bnrm") > 0)
       .withColumn("bucket", srpBucket(col("bv"), dim, planes))
       .select("bucket", "bv", "bnrm")
-    graft.core.FsUtil.swapInto(fs,
-        new org.apache.hadoop.fs.Path(dir)) { staging =>
-      val files = graft.sources.Sinks.writeSizedParquet(bb,
-        new org.apache.hadoop.fs.Path(staging, "bench.parquet").toString,
-        targetFileBytes = targetFileBytes,
-        sortCols = Seq("bucket"),
-        minFiles = spark.sparkContext.defaultParallelism)
-      graft.core.FsUtil.writeSidecar(fs,
-        new org.apache.hadoop.fs.Path(staging, "params.json"),
-        s"""{"dim":$dim,"planes":$planes,"sortedFiles":$files}""")
+    graft.store.Store.write(spark, dir, SemanticDeconKind,
+        Map("dim" -> dim, "planes" -> planes)) { st =>
+      st.sized("bench.parquet", bb, Seq("bucket"), targetFileBytes)
     }
   }
 
+  val SemanticDeconKind = "semantic-decon-set"
+  val BandedDeconKind = "banded-decon-set"
+
   /** The stored set's (bucketed bench frame, dim, planes). Fails fast
-    * on a directory without the params sidecar — probing with guessed
-    * planes would compare disjoint bucket ids and silently drop
-    * nothing. */
+    * on a directory that is not a single-band semantic decon store —
+    * probing with guessed planes would compare disjoint bucket ids
+    * and silently drop nothing. */
   def readSemanticDeconSet(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, Int, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val params = graft.core.FsUtil.readSidecar(fs,
-        new org.apache.hadoop.fs.Path(dir, "params.json"))
-      .getOrElse(throw new java.io.IOException(
-        s"readSemanticDeconSet: $dir has no params.json — not a " +
-          "stored semantic decon set"))
-    def longOf(k: String): Long =
-      graft.core.FsUtil.sidecarLong(params, k).getOrElse(
-        throw new java.io.IOException(
-          s"readSemanticDeconSet: $dir params.json lacks $k: $params"))
-    (spark.read.parquet(s"$dir/bench.parquet"),
-      longOf("dim").toInt, longOf("planes").toInt)
+    val rec = graft.store.Store.require(spark, dir, SemanticDeconKind)
+    (graft.store.Store.table(spark, dir, rec, "bench.parquet"),
+      rec.int("dim"), rec.int("planes"))
   }
 
   // ────────────────── Banded semantic decontamination ──────────────────
@@ -1203,9 +1169,9 @@ object Similarity {
     * already-banded benchmark frame — (band, bkey, bv, bnrm) rows as
     * stored by [[writeSemanticDeconSetBanded]] or built inline.
     * (bands, rowsPerBand) MUST be the shape the set was packed with
-    * (the stored sidecar carries both); a mismatched pack compares
+    * (the store record carries both); a mismatched pack compares
     * disjoint keys and silently finds nothing — why the stored path
-    * fails fast on a dir without the sidecar. Bit-identical to the
+    * fails fast on a dir that is not a banded set. Bit-identical to the
     * fresh form at equal (bands, rowsPerBand). */
   def decontaminateSemanticBandedWithSet(corpus: DataFrame,
       set: DataFrame, idCol: String, vecCol: String,
@@ -1230,54 +1196,31 @@ object Similarity {
   /** Persist the bench side of the banded probe —
     * [[writeSemanticDeconSet]]'s banded twin: the exploded
     * (band, bkey, bv, bnrm) frame lands as (band, bkey)-sorted sized
-    * parquet + a params sidecar
-    * `{"dim":…,"bands":…,"rowsPerBand":…,"sortedFiles":…}`, staged
-    * and atomically swapped. The SRP pack is paid once at write time;
+    * parquet, with dim/bands/rowsPerBand as store record params,
+    * staged and atomically swapped. The SRP pack is paid once at write time;
     * every probe reads the stored state with the shape pinned. */
   def writeSemanticDeconSetBanded(bench: DataFrame, vecCol: String,
       dir: String, dim: Int, bands: Int, rowsPerBand: Int,
       targetFileBytes: Long = 128L << 20): Unit = {
     requireBandShape(bands, rowsPerBand)
-    val spark = bench.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     val bb = bandedBenchSet(bench, vecCol, dim, bands, rowsPerBand)
-    graft.core.FsUtil.swapInto(fs,
-        new org.apache.hadoop.fs.Path(dir)) { staging =>
-      val files = graft.sources.Sinks.writeSizedParquet(bb,
-        new org.apache.hadoop.fs.Path(staging, "bench.parquet").toString,
-        targetFileBytes = targetFileBytes,
-        sortCols = Seq("band", "bkey"),
-        minFiles = spark.sparkContext.defaultParallelism)
-      graft.core.FsUtil.writeSidecar(fs,
-        new org.apache.hadoop.fs.Path(staging, "params.json"),
-        s"""{"dim":$dim,"bands":$bands,"rowsPerBand":$rowsPerBand,""" +
-          s""""sortedFiles":$files}""")
+    graft.store.Store.write(bench.sparkSession, dir, BandedDeconKind,
+        Map("dim" -> dim, "bands" -> bands,
+          "rowsPerBand" -> rowsPerBand)) { st =>
+      st.sized("bench.parquet", bb, Seq("band", "bkey"), targetFileBytes)
     }
   }
 
   /** The stored banded set's (frame, dim, bands, rowsPerBand). Fails
-    * fast on a dir without the sidecar OR on a SINGLE-BAND set
-    * ([[writeSemanticDeconSet]]'s layout — its sidecar carries
-    * "planes", not "bands"): probing a mismatched layout would
-    * compare disjoint keys and silently drop nothing. */
+    * fast on a dir that is not a banded semantic decon store — e.g. a
+    * SINGLE-BAND set ([[writeSemanticDeconSet]]'s layout): probing a
+    * mismatched layout would compare disjoint keys and silently drop
+    * nothing. */
   def readSemanticDeconSetBanded(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, Int, Int, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val params = graft.core.FsUtil.readSidecar(fs,
-        new org.apache.hadoop.fs.Path(dir, "params.json"))
-      .getOrElse(throw new java.io.IOException(
-        s"readSemanticDeconSetBanded: $dir has no params.json — not " +
-          "a stored semantic decon set"))
-    def longOf(k: String): Long =
-      graft.core.FsUtil.sidecarLong(params, k).getOrElse(
-        throw new java.io.IOException(
-          s"readSemanticDeconSetBanded: $dir params.json lacks $k " +
-            s"(a single-band set? probe it with " +
-            s"decontaminateSemanticWithSet): $params"))
-    (spark.read.parquet(s"$dir/bench.parquet"), longOf("dim").toInt,
-      longOf("bands").toInt, longOf("rowsPerBand").toInt)
+    val rec = graft.store.Store.require(spark, dir, BandedDeconKind)
+    (graft.store.Store.table(spark, dir, rec, "bench.parquet"),
+      rec.int("dim"), rec.int("bands"), rec.int("rowsPerBand"))
   }
 
   // ───────────────────────── Product quantization ──────────────────────
@@ -1395,7 +1338,7 @@ object Similarity {
   /** Encode the corpus to its PQ codes: (id, codes array<int>,
     * length m) — the storable compression artifact (m bytes-ish per
     * vector vs 4·dim; persist next to the codebook frames with the
-    * same FsUtil.swapInto discipline as [[IvfIndex.write]]). Codes
+    * same store protocol as [[IvfIndex.write]]). Codes
     * are per-subspace argmax ordinals under the same deterministic
     * training as [[pqTopK]]. */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
@@ -1440,27 +1383,19 @@ object Similarity {
     * against reconstructions WITHOUT the original floats. */
   final case class PqIndex(codebooks: DataFrame, codes: DataFrame,
       idCol: String, dim: Int, m: Int, ksub: Int) {
-    /** Persist both frames + a params sidecar under `dir`, with the
-      * same crash-safe staged swap as the other index writers. */
-    def write(dir: String): Unit = {
-      import org.apache.hadoop.fs.Path
-      val fs = new Path(dir).getFileSystem(
-        codebooks.sparkSession.sparkContext.hadoopConfiguration)
-      graft.core.FsUtil.swapInto(fs, new Path(dir)) { staging =>
-        codebooks.write.mode("overwrite")
-          .parquet(new Path(staging, "codebooks.parquet").toString)
+    /** Persist both frames under `dir`, params in the store record,
+      * with the same crash-safe staged swap as the other stores. */
+    def write(dir: String): Unit =
+      graft.store.Store.write(codebooks.sparkSession, dir, PqKind,
+          Map("dim" -> dim, "m" -> m, "ksub" -> ksub)) { st =>
+        st.plain("codebooks.parquet", codebooks)
         // codes = the compressed corpus (one row per vector): sized +
         // floored so the ADC scan parallelizes over the stored files
-        graft.sources.Sinks.writeSizedParquet(codes,
-          new Path(staging, "codes.parquet").toString,
-          minFiles = codes.sparkSession.sparkContext
-            .defaultParallelism)
-        graft.core.FsUtil.writeSidecar(fs,
-          new Path(staging, "params.json"),
-          s"""{"dim":$dim,"m":$m,"ksub":$ksub}""")
+        st.sized("codes.parquet", codes)
       }
-    }
   }
+
+  val PqKind = "pq-index"
 
   /** Train a [[PqIndex]]: deterministic codebooks ([[pqTrain]]
     * discipline) + the corpus encoded to codes. */
@@ -1488,22 +1423,13 @@ object Similarity {
     PqIndex(cbFrame, codes, idCol, dim, m, ksub)
   }
 
-  /** Reload a stored [[PqIndex]]; params come from the sidecar. */
+  /** Reload a stored [[PqIndex]]; params come from the record. */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       idCol: String): PqIndex = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val params = graft.core.FsUtil.readSidecar(fs,
-      new Path(dir, "params.json")).getOrElse(throw new java.io.IOException(
-      s"PqIndex at $dir has no params.json — not a PQ index dir"))
-    def p(k: String): Int =
-      s""""$k":(\\d+)""".r.findFirstMatchIn(params)
-        .getOrElse(throw new java.io.IOException(
-          s"PqIndex $dir: malformed params.json: $params")).group(1).toInt
-    PqIndex(spark.read.parquet(s"$dir/codebooks.parquet"),
-      graft.sources.Sinks.readTagged(spark, s"$dir/codes.parquet"),
-      idCol, p("dim"), p("m"), p("ksub"))
+    val rec = graft.store.Store.require(spark, dir, PqKind)
+    PqIndex(graft.store.Store.table(spark, dir, rec, "codebooks.parquet"),
+      graft.store.Store.table(spark, dir, rec, "codes.parquet"),
+      idCol, rec.int("dim"), rec.int("m"), rec.int("ksub"))
   }
 
   /** Rank `queries` against a stored/trained [[PqIndex]]: the m·ksub
@@ -1642,7 +1568,7 @@ object Similarity {
     * builds once, stores, and every query batch pays only nlist
     * centroid scores + a probe-capped scan of stored codes. Same
     * durability discipline as the other four index families
-    * (crash-safe swap, params sidecar validated on read). */
+    * (crash-safe swap, store record validated on read). */
   final case class IvfPqIndex(codebook: DataFrame,
       pqCodebooks: DataFrame, codes: DataFrame, idCol: String,
       vecCol: String, dim: Int, m: Int, ksub: Int, residual: Boolean,
@@ -1656,32 +1582,22 @@ object Similarity {
       * query, which is the same contract. */
     def release(): Unit = backing.foreach(_.unpersist())
 
-    def write(dir: String): Unit = {
-      import org.apache.hadoop.fs.Path
-      val fs = new Path(dir).getFileSystem(
-        codebook.sparkSession.sparkContext.hadoopConfiguration)
-      graft.core.FsUtil.swapInto(fs, new Path(dir)) { staging =>
-        codebook.write.mode("overwrite")
-          .parquet(new Path(staging, "codebook.parquet").toString)
-        pqCodebooks.write.mode("overwrite")
-          .parquet(new Path(staging, "pqcodebooks.parquet").toString)
+    def write(dir: String): Unit =
+      graft.store.Store.write(codebook.sparkSession, dir, IvfPqKind,
+          Map("dim" -> dim, "m" -> m, "ksub" -> ksub,
+            "residual" -> residual)) { st =>
+        st.plain("codebook.parquet", codebook)
+        st.plain("pqcodebooks.parquet", pqCodebooks)
         // codes = the compressed corpus: sized + floored at scan
         // parallelism (the probe's cell join reads this table).
         // cell-range-sorted exactly as IvfIndex.write's assigned
         // table — the probe's pushed In(cell) prunes to the nprobe
-        // cells' files/row-groups (round 20, guide §6)
-        graft.sources.Sinks.writeSizedParquet(codes,
-          new Path(staging, "codes.parquet").toString,
-          sortCols = if (cellLayoutOn) Seq("cell") else Nil,
-          minFiles = codes.sparkSession.sparkContext
-            .defaultParallelism)
-        graft.core.FsUtil.writeSidecar(fs,
-          new Path(staging, "params.json"),
-          s"""{"dim":$dim,"m":$m,"ksub":$ksub,""" +
-            s""""residual":$residual}""")
+        // cells' row groups (round 20, guide §6)
+        st.sized("codes.parquet", codes, Seq("cell"))
       }
-    }
   }
+
+  val IvfPqKind = "ivfpq-index"
 
   /** Build an [[IvfPqIndex]]: the coarse quantizer trains exactly as
     * [[ivfIndex]], PQ trains exactly as [[ivfPqTopK]] (raw or
@@ -1755,7 +1671,7 @@ object Similarity {
       dir: String): IvfPqIndex = {
     val extra = encodeWithStoredCodebooks(index, newCorpus,
       "ivfPqAppendToStored")
-    extra.write.mode("append").parquet(s"$dir/codes.parquet")
+    appendCodes(extra, dir, graft.store.Store.freshTag())
     index.copy(codes = index.codes.unionByName(extra))
   }
 
@@ -1763,10 +1679,9 @@ object Similarity {
     * [[ivfIngestBatch]]'s contract on the PQ-coded unit: assign to
     * the stored coarse cells, encode with the stored PQ codebooks
     * (residual-aware — nothing retrains), and land the batch's code
-    * rows as `tag`-named files so a replayed foreachBatch micro-batch
-    * purges its own crashed leftovers before re-appending. The store
-    * is fully described by its tables (no totals sidecar), so
-    * purge+re-append is the whole exactly-once argument. Same
+    * rows under `tag` in one record commit, so a replayed foreachBatch
+    * micro-batch is a no-op once committed and purges its own crashed
+    * leftovers otherwise. Same
     * tag-uniqueness (runId+batchId), id-disjointness, and
     * single-writer contracts as the other ingest paths. */
   def ivfPqIngestBatch(batch: DataFrame, dir: String, idCol: String,
@@ -1788,7 +1703,7 @@ object Similarity {
 
   /** [[IvfReady]]'s INGEST twin for the PQ-coded unit: both stored
     * codebooks collected once, in the encoder's half-squared-norm
-    * form — the unit a streaming ingest caches per codebook stamp
+    * form — the unit a streaming ingest caches per codebook
     * (round 19; ingest never mutates codebooks, so per-batch
     * re-collects were pure fixed cost). */
   final case class IvfPqEncoder private[operators] (index: IvfPqIndex,
@@ -1812,9 +1727,15 @@ object Similarity {
   def ivfPqIngestBatchWith(enc: IvfPqEncoder, batch: DataFrame,
       dir: String, tag: String): Unit = {
     if (batch.isEmpty) return
-    graft.sources.Sinks.appendTagged(
-      encodeWith(enc, batch, "ivfPqIngestBatch"),
-      s"$dir/codes.parquet", tag)
+    appendCodes(encodeWith(enc, batch, "ivfPqIngestBatch"), dir, tag)
+  }
+
+  private def appendCodes(extra: DataFrame, dir: String,
+      tag: String): Unit = {
+    val spark = extra.sparkSession
+    graft.store.Store.append(spark, dir,
+      graft.store.Store.require(spark, dir, IvfPqKind), tag,
+      Seq("codes.parquet" -> extra))
   }
 
   private def encodeWith(enc: IvfPqEncoder,
@@ -1847,30 +1768,14 @@ object Similarity {
   }
 
   /** Reload a stored [[IvfPqIndex]]; params (incl. the raw/residual
-    * mode, which changes reconstruction) come from the sidecar. */
+    * mode, which changes reconstruction) come from the record. */
   def readIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, idCol: String, vecCol: String): IvfPqIndex = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val params = graft.core.FsUtil.readSidecar(fs,
-      new Path(dir, "params.json")).getOrElse(
-      throw new java.io.IOException(
-        s"IvfPqIndex at $dir has no params.json — not an index dir"))
-    def p(k: String): Int =
-      s""""$k":(\\d+)""".r.findFirstMatchIn(params)
-        .getOrElse(throw new java.io.IOException(
-          s"IvfPqIndex $dir: malformed params.json: $params"))
-        .group(1).toInt
-    val residual = """"residual":(true|false)""".r
-      .findFirstMatchIn(params)
-      .getOrElse(throw new java.io.IOException(
-        s"IvfPqIndex $dir: malformed params.json: $params"))
-      .group(1).toBoolean
-    IvfPqIndex(spark.read.parquet(s"$dir/codebook.parquet"),
-      spark.read.parquet(s"$dir/pqcodebooks.parquet"),
-      graft.sources.Sinks.readTagged(spark, s"$dir/codes.parquet"),
-      idCol, vecCol, p("dim"), p("m"), p("ksub"), residual)
+    val rec = graft.store.Store.require(spark, dir, IvfPqKind)
+    def t(name: String) = graft.store.Store.table(spark, dir, rec, name)
+    IvfPqIndex(t("codebook.parquet"), t("pqcodebooks.parquet"),
+      t("codes.parquet"), idCol, vecCol, rec.int("dim"), rec.int("m"),
+      rec.int("ksub"), rec.bool("residual"))
   }
 
   /** Probe a prebuilt [[IvfPqIndex]]: both codebooks collect to the
@@ -1887,8 +1792,8 @@ object Similarity {
     ivfPqTopKWithReady(queries, ivfPqReady(index), k, nprobe, scale)
 
   /** [[IvfReady]]'s IVF-PQ twin: the stored index plus BOTH
-    * codebooks collected once (nlist + m·ksub rows), so a stamp-
-    * cached serve pays only the probe per micro-batch. */
+    * codebooks collected once (nlist + m·ksub rows), so a
+    * generation-cached serve pays only the probe per micro-batch. */
   final case class IvfPqReady private[operators] (index: IvfPqIndex,
       private[operators] cents: Seq[(Any, Seq[Double], Double)],
       private[operators] cb: Seq[Seq[Seq[Double]]])

@@ -353,44 +353,33 @@ object TextProfile {
     * [[bm25IndexAppend]] O(batch).
     *
     * `postings` = (idCol, __len, term, __tf); `dfreq` partials =
-    * (term, __df); `nDocs`/`totTokens` from the params sidecar. */
+    * (term, __df); `nDocs`/`totTokens`/`idCol` are record params
+    * (`graft.store.Store`). */
   final case class Bm25Index(postings: DataFrame, dfreq: DataFrame,
       idCol: String, nDocs: Long, totTokens: Long) {
-    def write(dir: String): Unit = {
-      import org.apache.hadoop.fs.Path
-      val fs = new Path(dir).getFileSystem(
-        postings.sparkSession.sparkContext.hadoopConfiguration)
-      graft.core.FsUtil.swapInto(fs, new Path(dir)) { staging =>
-        // COMPOSITE range key (term, id), not term alone: a skewed
-        // term (every corpus has stopword-class terms whose posting
-        // list is a large fraction of N) would otherwise land
-        // entirely in one range partition — measured 1,129 s vs
-        // 147 s fresh at 500k docs on the degenerate vocabulary,
-        // one task sorting/writing the hot term's millions of rows.
-        // The id tiebreak splits heavy terms across sized files;
-        // every file still carries a TIGHT term min/max (a term may
-        // span adjacent files), so In-pushdown pruning is unharmed.
-        val n = graft.sources.Sinks.writeSizedParquet(postings,
-          new Path(staging, "postings.parquet").toString,
-          sortCols = Seq("term", idCol),
-          minFiles = postings.sparkSession.sparkContext
-            .defaultParallelism)
-        dfreq.write.mode("overwrite")
-          .parquet(new Path(staging, "df.parquet").toString)
-        // sortedFiles = the posting file count AT SORTED-WRITE time:
-        // appends add files but rewrite the sidecar WITHOUT the
-        // stamp, so stamp-absent-or-count-mismatch is the sort-drift
-        // signal [[bm25SortDrifted]] reads — df-partial drift alone
-        // cannot see a vocabulary-disjoint append (its df rows stay
-        // 1-per-term) even though that append still breaks the
-        // posting table's term-sorted file pruning
-        graft.core.FsUtil.writeSidecar(fs,
-          new Path(staging, "params.json"),
-          s"""{"version":1,"docs":$nDocs,"tokens":$totTokens,""" +
-            s""""sortedFiles":$n}""")
-      }
-    }
+    def write(dir: String): Unit = writeBm25(this, dir, 128L << 20)
   }
+
+  private def writeBm25(index: Bm25Index, dir: String,
+      targetFileBytes: Long): Unit =
+    graft.store.Store.write(index.postings.sparkSession, dir, Bm25Kind,
+        Map("docs" -> index.nDocs, "tokens" -> index.totTokens,
+          "idCol" -> index.idCol)) { st =>
+      // COMPOSITE range key (term, id), not term alone: a skewed
+      // term (every corpus has stopword-class terms whose posting
+      // list is a large fraction of N) would otherwise land
+      // entirely in one range partition — measured 1,129 s vs
+      // 147 s fresh at 500k docs on the degenerate vocabulary,
+      // one task sorting/writing the hot term's millions of rows.
+      // The id tiebreak splits heavy terms across sized files;
+      // every file still carries a TIGHT term min/max (a term may
+      // span adjacent files), so In-pushdown pruning is unharmed.
+      st.sized("postings.parquet", index.postings,
+        Seq("term", index.idCol), targetFileBytes)
+      st.plain("df.parquet", index.dfreq)
+    }
+
+  val Bm25Kind = "bm25-index"
 
   /** Build a [[Bm25Index]] over a corpus — one tokenize + per-doc tf
     * pass, the df reduction, and the N/T totals pass; everything the
@@ -412,304 +401,93 @@ object TextProfile {
       idCol, totals.getLong(0), totals.getLong(1))
   }
 
-  /** Reload a stored [[Bm25Index]]; df partials are aggregated at
-    * read (bounded by |vocab|, exact). */
+  /** Reload a stored [[Bm25Index]] from one record snapshot, so
+    * postings, df partials and the N/T totals are all of one
+    * generation even while an ingest commits beside the read; df
+    * partials are aggregated at read (bounded by |vocab|, exact). */
   def readBm25Index(spark: org.apache.spark.sql.SparkSession,
       dir: String, idCol: String): Bm25Index = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val params = graft.core.FsUtil.readSidecar(fs,
-      new Path(dir, "params.json")).getOrElse(
-      throw new java.io.IOException(
-        s"Bm25Index at $dir has no params.json — not an index dir"))
-    def p(k: String): Long =
-      s""""$k":(\\d+)""".r.findFirstMatchIn(params)
-        .getOrElse(throw new java.io.IOException(
-          s"Bm25Index $dir: malformed params.json: $params"))
-        .group(1).toLong
+    val rec = graft.store.Store.require(spark, dir, Bm25Kind)
     Bm25Index(
-      graft.sources.Sinks.readTagged(spark, s"$dir/postings.parquet"),
-      graft.sources.Sinks.readTagged(spark, s"$dir/df.parquet")
+      graft.store.Store.table(spark, dir, rec, "postings.parquet"),
+      graft.store.Store.table(spark, dir, rec, "df.parquet")
         .groupBy(col("term")).agg(sum(col("__df")).as("__df")),
-      idCol, p("docs"), p("tokens"))
+      idCol, rec.long("docs"), rec.long("tokens"))
   }
 
-  /** Append an ingest batch to a stored [[Bm25Index]]: the batch's
-    * df PARTIAL and posting rows append in O(batch); the
-    * corpus-sized posting table is never rewritten (appended files
-    * are not term-sorted with the original set — run
-    * [[bm25IndexCompact]] periodically to restore the file-level
+  /** Append a batch to a stored [[Bm25Index]] under a fresh tag: the
+    * batch's df PARTIAL and posting rows append in O(batch) and commit
+    * together with the raised N/T totals in one record write; the
+    * corpus-sized posting table is never rewritten (appended files are
+    * not term-sorted with the original set — the record marks the
+    * table unsorted until [[bm25IndexCompact]] restores the file-level
     * pruning the In-pushdown arm relies on). The batch must be
     * DOC-DISJOINT from the index (CorpusProfile's contract — a
-    * re-appended doc double-counts df/tf, not upserts).
-    *
-    * Crash windows, in write order — df partial FIRST, postings
-    * second, the params sidecar (N/T totals) LAST:
-    *  - die after df, before postings: the batch's docs are simply
-    *    absent (their postings never landed); shared terms carry a
-    *    slightly inflated df, so OLD docs score marginally deflated
-    *    idf — stats drift, no torn scoring. (The reverse order would
-    *    leave LIVE postings whose batch-only terms are missing from
-    *    df — those docs unfindable and shared-term idf inflated,
-    *    while the store looks consistent: materially wrong, which is
-    *    why df goes first.)
-    *  - die after postings, before the sidecar: rows and df agree;
-    *    only the N/T norms are stale until the append retries.
-    * Returns the extended in-memory index. */
+    * re-appended doc double-counts df/tf, not upserts). Returns the
+    * extended in-memory index. */
   def bm25IndexAppend(index: Bm25Index, batch: DataFrame,
       textCol: String, dir: String): Bm25Index = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // the two append modes are mutually exclusive per store epoch: a
-    // live ingest log recomputes params as base + Σ(logged entries),
-    // which would WIPE this unlogged batch's contribution from the
-    // totals on the next streamed batch — and compaction's log fold
-    // would do the same. Compact (which folds and drops the log)
-    // before switching a streamed store back to batch appends.
-    require(!fs.exists(new Path(dir, "ingest.json")),
-      s"bm25IndexAppend: $dir has a streaming ingest log — batch " +
-        "appends on a mid-stream store would be dropped from the " +
-        "N/T totals; run bm25IndexCompact (or Maintenance.compactAll) " +
-        "first")
     val b = bm25Index(batch, index.idCol, textCol)
-    b.dfreq.write.mode("append").parquet(s"$dir/df.parquet")
-    b.postings.write.mode("append").parquet(s"$dir/postings.parquet")
-    val nDocs = index.nDocs + b.nDocs
-    val totTokens = index.totTokens + b.totTokens
-    graft.core.FsUtil.writeSidecar(fs, new Path(dir, "params.json"),
-      s"""{"version":1,"docs":$nDocs,"tokens":$totTokens}""")
+    appendBatch(spark, dir, graft.store.Store.require(spark, dir, Bm25Kind),
+      b, graft.store.Store.freshTag())
     Bm25Index(index.postings.unionByName(b.postings),
       index.dfreq.unionByName(b.dfreq)
         .groupBy(col("term")).agg(sum(col("__df")).as("__df")),
-      index.idCol, nDocs, totTokens)
+      index.idCol, index.nDocs + b.nDocs, index.totTokens + b.totTokens)
   }
 
+  private def appendBatch(spark: org.apache.spark.sql.SparkSession,
+      dir: String, rec: graft.store.Store.Record, b: Bm25Index,
+      tag: String): Unit =
+    graft.store.Store.append(spark, dir, rec, tag,
+      Seq("df.parquet" -> b.dfreq, "postings.parquet" -> b.postings),
+      contrib = Map("docs" -> b.nDocs, "tokens" -> b.totTokens))
+
   /** Replay-idempotent streaming append to a stored [[Bm25Index]] —
-    * the foreachBatch form of [[bm25IndexAppend]], whose plain
-    * append-mode writes double-count a replayed micro-batch (the
-    * streaming engine's at-least-once contract). Exactly-once comes
-    * from three pieces, each idempotent under re-execution with the
-    * same `tag`:
-    *  1. the batch's posting/df rows land as `tag`-named files
-    *     ([[graft.sources.Sinks.appendTagged]]) — each table's batch
-    *     commits via its manifest, a committed tag replays as a
-    *     no-op, and a crashed attempt's uncommitted files are
-    *     invisible to readers until the replay purges them;
-    *  2. the per-tag doc/token contribution is recorded in an
-    *     `ingest.json` sidecar (base totals captured from params.json
-    *     when the log is created, one entry per applied tag — an
-    *     entry re-written on replay carries the same deterministic
-    *     values);
-    *  3. params.json's N/T totals are recomputed as base + Σlog —
-    *     never read-modify-written, so replay cannot double-add.
-    * Write order inside a batch is df → postings → log → params
-    * ([[bm25IndexAppend]]'s stats-drift-over-torn-scoring rationale
-    * for an ABANDONED stream; a resumed stream repairs any prefix).
-    *
-    * `tag` must be unique per logical batch across stream runs —
-    * pass runId+batchId (see appendTagged's purge-collision note).
-    * Single-writer-per-dir as everywhere: quiesce this stream before
-    * [[bm25IndexCompact]]/Maintenance runs (compaction folds the
-    * tagged files into sorted parts and the ingest-log totals into
-    * params, then drops the log, so a batch replayed AFTER a
-    * mid-stream compaction would re-append rows the compacted store
-    * already holds).
-    *
-    * Cost envelope: each batch re-parses and rewrites the full log —
-    * O(entries since last compact) per batch — and appends O(tasks)
-    * tagged files; BOTH are bounded by the same compaction cadence
-    * (the log entry count equals the tagged-batch count). At a
-    * nightly compact with minutes-scale triggers that is hundreds of
-    * entries; a store taking sub-minute triggers has a small-file
-    * problem before it has a log problem and belongs behind a
-    * message-bus accumulation tier. */
+    * the foreachBatch form of [[bm25IndexAppend]] under a caller-stable
+    * `tag` (runId+batchId): the batch's df partial, postings and its
+    * N/T contribution commit in ONE record write, so a committed tag
+    * replays as a no-op, a crashed attempt's files stay invisible
+    * until the replay purges them, and a serve beside the ingest reads
+    * either the whole batch or none of it. The id column comes from the
+    * record. Single-writer-per-dir as everywhere: quiesce this stream
+    * before [[bm25IndexCompact]]/Maintenance runs. */
   def bm25IngestBatch(batch: DataFrame, textCol: String, dir: String,
       tag: String): Unit = {
-    import org.apache.hadoop.fs.Path
     // an empty micro-batch (timer trigger with no data) contributes
     // nothing; skipping entirely is the idempotent no-op
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val params = graft.core.FsUtil.readSidecar(fs,
-      new Path(dir, "params.json")).getOrElse(
-      throw new java.io.IOException(
-        s"bm25IngestBatch: $dir has no params.json — not an index dir"))
-    // recover the id column structurally, as bm25IndexCompact does
-    val idCol = graft.sources.Sinks
-      .readTagged(spark, s"$dir/postings.parquet").columns
-      .filterNot(c => c == "term" || c.startsWith("__")).head
-    def pLong(src: String, k: String): Long =
-      s""""$k":(\\d+)""".r.findFirstMatchIn(src).getOrElse(
-        throw new java.io.IOException(
-          s"bm25IngestBatch: $dir: malformed sidecar: $src"))
-        .group(1).toLong
-    val logPath = new Path(dir, "ingest.json")
-    val entryRe = """\["([A-Za-z0-9_.-]+)",(\d+),(\d+)\]""".r
-    // (baseDocs, baseTokens, applied tag -> (docs, tokens)); the log
-    // is created lazily so a store that never streams never has one
-    val (baseD, baseT, applied) =
-      graft.core.FsUtil.readSidecar(fs, logPath) match {
-        case Some(log) =>
-          (pLong(log, "baseDocs"), pLong(log, "baseTokens"),
-            entryRe.findAllMatchIn(log).map(m =>
-              m.group(1) -> (m.group(2).toLong, m.group(3).toLong))
-              .toMap)
-        case None =>
-          (pLong(params, "docs"), pLong(params, "tokens"),
-            Map.empty[String, (Long, Long)])
-      }
-    val b = bm25Index(batch, idCol, textCol)
-    graft.sources.Sinks.appendTagged(b.dfreq, s"$dir/df.parquet", tag)
-    graft.sources.Sinks.appendTagged(b.postings,
-      s"$dir/postings.parquet", tag)
-    val entries = (applied + (tag -> (b.nDocs, b.totTokens))).toSeq
-      .sortBy(_._1)
-    graft.core.FsUtil.writeSidecar(fs, logPath,
-      s"""{"version":1,"baseDocs":$baseD,"baseTokens":$baseT,""" +
-        s""""applied":[${entries.map { case (t, (d, tk)) =>
-          s"""["$t",$d,$tk]""" }.mkString(",")}]}""")
-    val nDocs = baseD + entries.map(_._2._1).sum
-    val totTokens = baseT + entries.map(_._2._2).sum
-    // no sortedFiles stamp — the tagged files are unsorted, and the
-    // absent stamp is exactly bm25SortDrifted's maintenance signal
-    graft.core.FsUtil.writeSidecar(fs, new Path(dir, "params.json"),
-      s"""{"version":1,"docs":$nDocs,"tokens":$totTokens}""")
+    val rec = graft.store.Store.require(spark, dir, Bm25Kind)
+    if (rec.applied.contains(tag)) return
+    appendBatch(spark, dir, rec, bm25Index(batch, rec.str("idCol"), textCol),
+      tag)
   }
 
   /** Restore a stored [[Bm25Index]] after appends: rewrites the
     * posting table TERM-SORTED into sized files (the property the
-    * In-pushdown probe's file pruning needs — `Layout.compact`'s
-    * generic modes cannot provide it for a string key: coalesce
-    * preserves whatever order exists and zorder hash-ranks strings,
-    * so neither tightens lexicographic min/max) and collapses the df
-    * partials to one row per term. Runs under the same crash-safe
-    * stage+swap as [[Bm25Index.write]]; quiesce appenders while
+    * In-pushdown probe's file pruning needs) and collapses the df
+    * partials to one row per term — a full write of the collapsed
+    * snapshot (applied tags carry over). Quiesce appenders while
     * compacting (single-writer-per-dir, as everywhere). */
   def bm25IndexCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String, targetFileBytes: Long = 128L << 20): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val postings = graft.sources.Sinks
-      .readTagged(spark, s"$dir/postings.parquet")
-    val dfAgg = graft.sources.Sinks
-      .readTagged(spark, s"$dir/df.parquet")
-      .groupBy(col("term")).agg(sum(col("__df")).as("__df"))
-    val params0 = graft.core.FsUtil.readSidecar(fs,
-      new Path(dir, "params.json")).getOrElse(
-      throw new java.io.IOException(
-        s"bm25IndexCompact: $dir has no params.json — not an index dir"))
-    // If a streaming ingest left its log, the log is AUTHORITATIVE
-    // for the N/T totals: an abandoned stream that crashed between
-    // its log write and its params write leaves params excluding the
-    // last batch's counts while the batch's data files are live —
-    // compacting from the stale params would bake the undercount in
-    // permanently (and drop the log that held the repair). Fold
-    // base + Σ entries over the stale values before restamping. The
-    // remaining abandoned-crash window (died MID-append: torn files,
-    // no log entry) still needs a replay, as bm25IngestBatch's
-    // scaladoc documents — no sidecar can describe files that never
-    // fully landed.
-    val params = graft.core.FsUtil.readSidecar(fs,
-      new Path(dir, "ingest.json")) match {
-      case Some(log) =>
-        def p(k: String): Option[Long] =
-          s""""$k":(\\d+)""".r.findFirstMatchIn(log).map(_.group(1).toLong)
-        (p("baseDocs"), p("baseTokens")) match {
-          case (Some(bd), Some(bt)) =>
-            val entries =
-              """\["[A-Za-z0-9_.-]+",(\d+),(\d+)\]""".r
-                .findAllMatchIn(log)
-                .map(m => (m.group(1).toLong, m.group(2).toLong)).toSeq
-            def cur(k: String): Long =
-              s""""$k":(\\d+)""".r.findFirstMatchIn(params0)
-                .map(_.group(1).toLong).getOrElse(0L)
-            // max() as a belt: with batch/stream appends mutually
-            // exclusive (bm25IndexAppend fail-fasts on a live log)
-            // the log sum is >= the possibly-stale params, but a
-            // store written before that guard could hold the reverse
-            val d = math.max(bd + entries.map(_._1).sum, cur("docs"))
-            val t = math.max(bt + entries.map(_._2).sum, cur("tokens"))
-            params0.replaceAll(""""docs":\d+""", s""""docs":$d""")
-              .replaceAll(""""tokens":\d+""", s""""tokens":$t""")
-          case _ =>
-            // a log torn by a pre-atomic-sidecar crash: best effort is
-            // the stored params (the old behavior); warn, and the
-            // compact drops the unparseable log — self-healing rather
-            // than failing every future maintenance run
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"bm25IndexCompact: $dir: unparseable ingest.json " +
-                s"(pre-atomic-write crash?); folding skipped, totals " +
-                s"from params.json. Log was: $log")
-            params0
-        }
-      case None => params0
-    }
-    // readBm25Index hands postings back without a declared idCol on
-    // the frame, so recover the id column name structurally: it is
-    // the one column that is neither term nor the internal __ pair
-    val idCol = postings.columns
-      .filterNot(c => c == "term" || c.startsWith("__")).head
-    graft.core.FsUtil.swapInto(fs, new Path(dir)) { staging =>
-      // composite (term, id) range key — see Bm25Index.write's skew note
-      val n = graft.sources.Sinks.writeSizedParquet(postings,
-        new Path(staging, "postings.parquet").toString,
-        targetFileBytes = targetFileBytes,
-        sortCols = Seq("term", idCol),
-        minFiles = spark.sparkContext.defaultParallelism)
-      dfAgg.write.mode("overwrite")
-        .parquet(new Path(staging, "df.parquet").toString)
-      // re-stamp sortedFiles at the NEW count (docs/tokens preserved
-      // from the stored params): the store is sorted again
-      val restamped =
-        params.replaceAll(""",\s*"sortedFiles":\d+""", "")
-          .replaceFirst("\\}\\s*$", s""","sortedFiles":$n}""")
-      graft.core.FsUtil.writeSidecar(fs,
-        new Path(staging, "params.json"), restamped)
-    }
+    val rec = graft.store.Store.require(spark, dir, Bm25Kind)
+    writeBm25(readBm25Index(spark, dir, rec.str("idCol")), dir,
+      targetFileBytes)
   }
 
   /** Whether a stored [[Bm25Index]]'s df partials have drifted from
     * fully-compacted form: more partial rows than distinct terms —
-    * i.e. at least one [[bm25IndexAppend]] of overlapping vocabulary
-    * landed since the last [[bm25IndexCompact]]. One vocab-bounded
-    * aggregation, no posting scan. NOT a sort-drift check: an append
-    * whose batch vocabulary is DISJOINT from the store keeps df at
-    * one row per term while still breaking the posting table's
-    * term-sorted file pruning — that case is [[bm25SortDrifted]]'s
-    * (the stamp check), and maintenance consults both. */
+    * i.e. at least one append of overlapping vocabulary landed since
+    * the last [[bm25IndexCompact]]. One vocab-bounded aggregation. */
   def bm25HasPartials(spark: org.apache.spark.sql.SparkSession,
       dir: String): Boolean = {
     val r = graft.sources.Sinks.readTagged(spark, s"$dir/df.parquet")
       .agg(count(lit(1)).as("rows"),
         count_distinct(col("term")).as("terms")).head()
     r.getLong(0) > r.getLong(1)
-  }
-
-  /** Whether the stored posting table's term-sorted layout has
-    * drifted since the last sorted write: [[Bm25Index.write]] and
-    * [[bm25IndexCompact]] stamp `sortedFiles` (the posting file
-    * count at sorted-write time) into params.json, while
-    * [[bm25IndexAppend]] rewrites the sidecar WITHOUT the stamp — so
-    * a missing stamp, or a stamp that disagrees with the current
-    * file count, means unsorted files landed and the In-pushdown
-    * arm's file-level min/max pruning is degraded until the next
-    * term-sorted re-pack. Costs one listing + one sidecar read.
-    * Pre-stamp stores read as drifted (conservative: one extra
-    * compact, which stamps them). */
-  def bm25SortDrifted(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    !graft.core.FsUtil.stampMatchesFileCount(fs,
-      new Path(dir, "params.json"), "sortedFiles",
-      new Path(dir, "postings.parquet"))
   }
 
   /** Probe a prebuilt [[Bm25Index]]: identical output to

@@ -590,7 +590,7 @@ object CurationQueries extends QueryPack {
         LmScore.writeModel(docs.filter(col("lang") === "en"), "text",
           modelDir)
         // serve-state certification: both writers land COMPACTED
-        // stores by construction (sorted sized files + stamps), and
+        // stores by construction (sorted sized files + a store record), and
         // this maintenance pass verifies it — inspect, find no
         // drift, re-pack nothing — so the chain reads its stores
         // through the same post-compaction gate a deployment's serve

@@ -785,7 +785,7 @@ object SimilarityQueries extends QueryPack {
     // semantic decon from a PERSISTED benchmark set — the serving
     // shape: the benchmark's SRP pack is paid once at set-write time
     // (bucket-sorted sized parquet, plane count pinned in the
-    // sidecar), every probe reads the stored state. Full lifecycle
+    // store record), every probe reads the stored state. Full lifecycle
     // in-row (write → read → probe, the q_ann_ivf_index discipline);
     // must hash-match q_embed_decontaminate — the store round-trip
     // may not change a bit, so it shares the oracle verbatim.
@@ -848,7 +848,7 @@ object SimilarityQueries extends QueryPack {
 
     // the BANDED set actually SERVING — the measured-recall scale
     // path through the same layout-adaptive serve: corpus vectors
-    // stream against a stored banded set (sidecar carries
+    // stream against a stored banded set (store record carries
     // bands/rowsPerBand; embedDeconLookupStream dispatches on it),
     // hits row-local so the cross-batch union equals the batch
     // probe. Shape (4, 3): 4 < 2^3, so the crossover dispatch KEEPS
@@ -892,7 +892,7 @@ object SimilarityQueries extends QueryPack {
     // the stored set carries the (6, 2) gate shape — 6 ≥ 2^2, at or
     // past the cost crossover, so the banded OR-construction would
     // verify 1.5× the exact arm's cosines at recall < 1. The serve
-    // detects the dominated sidecar shape and probes the SAME store's
+    // detects the dominated store record shape and probes the SAME store's
     // (bv, bnrm) columns through the exact arm instead: recall 1.0
     // at strictly less work, no set rewrite. Oracle = the exact arm
     // composed verbatim — the row is green only if the dispatch fired
@@ -999,7 +999,7 @@ object SimilarityQueries extends QueryPack {
 
     // banded decon from a PERSISTED set — the serving shape: the
     // bench's 12-plane pack lands once as (band, bkey)-sorted sized
-    // parquet with (bands, rowsPerBand) pinned in the sidecar; every
+    // parquet with (bands, rowsPerBand) pinned in the store record; every
     // probe reads the stored state. Must hash-match
     // q_embed_decon_banded — the store round-trip may not change a
     // bit, so it shares the oracle verbatim.
@@ -1067,8 +1067,8 @@ object SimilarityQueries extends QueryPack {
     // canary (round-18 task #6): q_embed_decon_recall measures the
     // FRESH banded arm; this row measures the arm a deployment
     // actually serves — write the set, read it back through the
-    // sidecar, probe through the same WithSet call the serve
-    // dispatches to — so a set-rotation regression (wrong sidecar
+    // store record, probe through the same WithSet call the serve
+    // dispatches to — so a set-rotation regression (wrong store record
     // shape, stale pack, mangled (bv, bnrm) columns) surfaces as a
     // red row, not a silent recall collapse. Shape (4, 3) — the
     // banded serve shape (4 < 2^3 keeps the banded arm; a dominated

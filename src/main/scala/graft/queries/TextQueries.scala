@@ -542,9 +542,8 @@ object TextQueries extends QueryPack {
             input.addData(b); q.processAllAvailable()
           }
         } finally q.stop()
-        // quiesced maintenance: the drift signals (absent sortedFiles
-        // stamp, df partials) route the bm25 unit to its term-sorted
-        // re-pack
+        // quiesced maintenance: the record's unsorted postings route
+        // the bm25 store to its term-sorted re-pack
         graft.operators.Maintenance.compactAll(s, Seq(idxDir))
         val idx = graft.operators.TextProfile.readBm25Index(s, idxDir,
           "doc_id")

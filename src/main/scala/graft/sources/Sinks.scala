@@ -89,21 +89,23 @@ object Sinks {
     * forensics scale that motivated the floor (500k docs, a
     * multi-hundred-MB posting table) the estimate clears
     * minFiles × FloorBytesPerFile and the full floor still applies —
-    * PersistenceFilesSpec pins both regimes. Returns the ACTUAL
-    * data-file count on disk
-    * after the write (one listStatus), not the planned partition
-    * count: repartitionByRange over skewed/few-distinct sort keys
-    * can leave planned partitions empty, and empty partitions write
-    * no file — a planned-count stamp would then permanently disagree
-    * with the directory, so every `stampMatchesFileCount` drift check
-    * reads stale forever and maintenance re-compacts an already-clean
-    * store on every pass. */
+    * PersistenceFilesSpec pins both regimes. `scaleFloor = false`
+    * applies `minFiles` in full (a compaction's re-pack, which never
+    * drops a table below its file count or the scan parallelism,
+    * whichever is less). Returns the ACTUAL
+    * data-file count on disk after the write (one listStatus), not
+    * the planned partition count: repartitionByRange over
+    * skewed/few-distinct sort keys can leave planned partitions
+    * empty, and empty partitions write no file. */
   def writeSizedParquet(df: DataFrame, path: String,
       targetFileBytes: Long = 128L << 20,
-      sortCols: Seq[String] = Nil, minFiles: Int = 1): Int = {
+      sortCols: Seq[String] = Nil, minFiles: Int = 1,
+      scaleFloor: Boolean = true): Int = {
     val est = estimatedBytes(df)
-    val sizedFloor = ((est + FloorBytesPerFile - 1) / FloorBytesPerFile)
-      .min(BigInt(math.max(1, minFiles))).toInt
+    val sizedFloor =
+      if (!scaleFloor) math.max(1, minFiles)
+      else ((est + FloorBytesPerFile - 1) / FloorBytesPerFile)
+        .min(BigInt(math.max(1, minFiles))).toInt
     val n = math.max(plannedCountOf(est, targetFileBytes),
       math.max(1, sizedFloor))
     val shaped =
@@ -118,223 +120,16 @@ object Sinks {
       .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
   }
 
-  /** Replay-idempotent parquet append for streaming ingest: stage
-    * `df` beside `tableDir`, rename each data file in under a
-    * `tag`-prefixed name (`ingest-<tag>-part-…`), then COMMIT the
-    * batch by adding those names to the table's `_manifest.json`
-    * (atomic sidecar swap — the manifest update IS the commit point).
-    * [[readTagged]] shows a tagged file only once its tag is in the
-    * manifest, so:
-    *
-    *  - a replayed foreachBatch micro-batch (the engine's
-    *    at-least-once contract) converges to exactly-once from any
-    *    crash point: a tag already in the manifest is a committed
-    *    batch and the replay is a no-op (returns 0); a tag absent
-    *    from the manifest first deletes the crashed attempt's ORPHAN
-    *    files — which no reader can be holding, because they were
-    *    never committed — and redoes the append;
-    *  - a serve stream CONCURRENT with crash-recovery never observes
-    *    a mid-purge directory: committed files are never deleted
-    *    outside quiesced compaction, and uncommitted files are never
-    *    visible. (Before the manifest, a replay's purge could fail
-    *    one concurrent serve batch with a missing-file error — an
-    *    operational page at always-on-serving scale.)
-    *
-    * This is the append-mode analog of the serve jobs'
-    * batch_id-subdir overwrite, for stores whose readers need ONE
-    * flat parquet table (an index's posting/assigned table, where a
-    * partition subdir per batch would change the schema and defeat
-    * sized-file compaction). The manifest tracks ONLY `ingest-*`
-    * files: compacted base files and plain (non-tagged) appends stay
-    * visible by directory listing, so compaction never has to
-    * maintain it — a fresh compacted dir simply has no manifest. The
-    * name is `_`-prefixed so Spark's own file index ignores it.
-    *
-    * COMPACTION ERASES COMMIT HISTORY: the compacted dir has no
-    * manifest, so a tag committed BEFORE compaction that replays
-    * AFTER it (a stream restarted from an old checkpoint) finds no
-    * commit record and re-appends rows already folded into the base —
-    * a silent double-count. Quiesced compaction therefore requires
-    * not just "no concurrent writer" but "no tag that could still
-    * replay": run it only once every stream writing this store is
-    * past the checkpoint of its last committed batch (stopped after a
-    * clean commit, or its checkpoint advanced beyond every tag in the
-    * manifest). The pre-manifest purge protocol had the same
-    * residual; the manifest makes it precise rather than fixing it.
-    *
-    * The tag must be unique per logical batch ACROSS stream runs —
-    * pass runId+batchId, never batchId alone: a later run's fresh
-    * checkpoint restarts batch ids at 0, and its batch-0 replay would
-    * silently adopt the first run's batch-0 rows as its own. Tags are
-    * restricted to [A-Za-z0-9_.-] so the tag-anchored match can never
-    * be confused by separator characters. Returns the data file count
-    * renamed in (0 for an already-committed tag). */
-  def appendTagged(df: DataFrame, tableDir: String, tag: String): Int = {
-    import org.apache.hadoop.fs.Path
-    requireTag(tag)
-    val table = new Path(tableDir)
-    val fs = table.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    fs.mkdirs(table)
-    val tagPat = tagPattern(tag)
-    // adopt-or-init: a store whose tagged files predate the manifest
-    // (or a fresh store) gets one listing the current ingest files as
-    // committed — EXCEPT the current tag's. A pre-manifest store can
-    // only be mid-append of exactly this tag (the old protocol purged
-    // a replayed tag before rewriting it), so adopting its files as
-    // committed would turn a torn crashed attempt into a permanent
-    // half-applied batch via the already-committed no-op below;
-    // excluding them makes the upgrade-path replay purge-and-redo,
-    // the old semantics. The manifest is written BEFORE any file of
-    // THIS batch exists, so every later crash point is covered by the
-    // commit protocol.
-    val committed = readManifest(fs, table).getOrElse {
-      val existing = listIngestFiles(fs, table)
-        .filterNot(n => tagPat.matcher(n).matches())
-      writeManifestNames(fs, table, existing)
-      existing.toSet
-    }
-    if (committed.exists(n => tagPat.matcher(n).matches()))
-      return 0 // already committed
-    // purge this tag's ORPHANS (a crashed attempt's uncommitted
-    // files; invisible to every reader, so deletion is race-free)
-    listIngestFiles(fs, table)
-      .filter(n => tagPat.matcher(n).matches() && !committed.contains(n))
-      .foreach(n => fs.delete(new Path(table, n), false))
-    val staging = new Path(Option(table.getParent)
-      .getOrElse(new Path(".")),
-      s".${table.getName}-ingest-$tag-staging")
-    fs.delete(staging, true)
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val parts = fs.listStatus(staging).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") &&
-        p.getName.endsWith(".parquet")).sortBy(_.getName)
-    val names = parts.map(p => s"ingest-$tag-${p.getName}")
-    parts.zip(names).foreach { case (p, n) =>
-      val dest = new Path(table, n)
-      if (!fs.rename(p, dest)) throw new java.io.IOException(
-        s"appendTagged: rename $p -> $dest failed")
-    }
-    fs.delete(staging, true)
-    writeManifestNames(fs, table, (committed ++ names).toSeq) // commit
-    parts.length
-  }
-
-  /** Read a parquet table that may receive [[appendTagged]] batches,
-    * honoring the commit manifest: every non-ingest file (compacted
-    * base parts, plain appends) plus only the COMMITTED ingest files.
-    * A table with no manifest (never tagged-appended, or freshly
-    * compacted) is a plain directory read. Every reader of an
-    * append-receiving store — serve probes AND compaction — must come
-    * through here: a directory read would see a crashed attempt's
-    * orphans (double-count on replay) and could race their purge. */
+  /** Read table `tableDir` of a store as its record commits it (the
+    * record lives in the parent directory — `graft.store.Store`): the
+    * committed files only, never a crashed append's orphans. */
   def readTagged(spark: org.apache.spark.sql.SparkSession,
       tableDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val table = new Path(tableDir)
-    val fs = table.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    readManifest(fs, table) match {
-      case None => spark.read.parquet(tableDir)
-      case Some(m) =>
-        val all = fs.listStatus(table).map(_.getPath.getName)
-          .filter(_.endsWith(".parquet")).sorted
-        val names = all.filter(n => !n.startsWith("ingest-") ||
-          m.contains(n))
-        if (names.nonEmpty)
-          spark.read.parquet(names.map(n => s"$tableDir/$n"): _*)
-        else if (all.isEmpty) spark.read.parquet(tableDir) // schema err
-        else
-          // ZERO committed rows but orphans on disk (first batch
-          // crashed pre-commit): the committed state is EMPTY — a
-          // plain directory read here would expose the orphans and
-          // race their replay purge, the exact failures the protocol
-          // removes. Borrow the orphans' schema (same table), return
-          // no rows (constant-false folds to an empty relation — no
-          // file is opened at execution).
-          spark.read.parquet(tableDir).where(lit(false))
-    }
+    val table = new org.apache.hadoop.fs.Path(tableDir)
+    val dir = Option(table.getParent).map(_.toString).getOrElse(".")
+    graft.store.Store.table(spark, dir, graft.store.Store.require(spark, dir),
+      table.getName)
   }
-
-  /** Un-commit and remove every data file [[appendTagged]] landed
-    * under `tag` in `tableDir` (no-op when none exist). Order is
-    * manifest-first: the names leave `_manifest.json` (atomic swap)
-    * before any file is deleted, so a reader either has a manifest
-    * that still lists the files (which then still exist — deletion
-    * has not started) or one that no longer does (and never opens
-    * them). The match is anchored on Spark's `part-NNNNN-` data-file
-    * stem, not a bare prefix: tags may contain '-', so tag `r0` must
-    * not purge tag `r0-b`'s files (`ingest-r0-b-part-…` fails the
-    * anchored pattern, `ingest-r0-part-…` matches it).
-    *
-    * NOTE a reader holding a PRE-purge manifest snapshot can still
-    * race the file deletes — use this only quiesced or for files that
-    * were never committed; [[appendTagged]]'s crash recovery purges
-    * only uncommitted orphans and so is fully race-free. */
-  def purgeTagged(fs: org.apache.hadoop.fs.FileSystem,
-      tableDir: org.apache.hadoop.fs.Path, tag: String): Unit = {
-    requireTag(tag)
-    val pat = tagPattern(tag)
-    readManifest(fs, tableDir).foreach { m =>
-      val keep = m.filterNot(n => pat.matcher(n).matches())
-      if (keep.size != m.size) writeManifestNames(fs, tableDir, keep.toSeq)
-    }
-    if (fs.exists(tableDir))
-      fs.listStatus(tableDir)
-        .filter(f => pat.matcher(f.getPath.getName).matches())
-        .foreach(f => fs.delete(f.getPath, false))
-  }
-
-  /** The tagged-append commit manifest's file name — `_`-prefixed so
-    * Spark's file index (and every `*.parquet` file-count stamp)
-    * ignores it. */
-  val ManifestFile = "_manifest.json"
-
-  // \d{5,}, not \d{5}: Spark zero-pads task indices to five digits
-  // but keeps counting past part-99999 — a fixed-width anchor would
-  // stop matching exactly at the scale the contract exists for.
-  // Compiled ONCE per call site: append/purge filter thousands of
-  // file names through it between compactions, and a per-name compile
-  // was pure waste on the streaming hot path.
-  private def tagPattern(tag: String): java.util.regex.Pattern =
-    java.util.regex.Pattern.compile(
-      "ingest-" + java.util.regex.Pattern.quote(tag) +
-        "-part-\\d{5,}-.*")
-
-  private def listIngestFiles(fs: org.apache.hadoop.fs.FileSystem,
-      table: org.apache.hadoop.fs.Path): Seq[String] =
-    if (!fs.exists(table)) Nil
-    else fs.listStatus(table).map(_.getPath.getName)
-      .filter(n => n.startsWith("ingest-") && n.endsWith(".parquet"))
-      .toSeq
-
-  /** The committed ingest-file names, or None when the table has no
-    * manifest (never tagged-appended / freshly compacted). */
-  private[graft] def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      table: org.apache.hadoop.fs.Path): Option[Set[String]] =
-    graft.core.FsUtil.readSidecar(fs,
-        new org.apache.hadoop.fs.Path(table, ManifestFile))
-      .map(json => "\"([^\"]+\\.parquet)\"".r
-        .findAllMatchIn(json).map(_.group(1)).toSet)
-
-  // private[graft]: specs doctor manifests to simulate crash states
-  private[graft] def writeManifestNames(
-      fs: org.apache.hadoop.fs.FileSystem,
-      table: org.apache.hadoop.fs.Path, names: Seq[String]): Unit =
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(table, ManifestFile),
-      names.sorted.map(n => "\"" + n + "\"")
-        .mkString("{\"files\":[", ",", "]}"))
-
-  // ASCII-only, matching the ingest-log entry regex exactly: Unicode
-  // isLetterOrDigit would admit tags (e.g. a runId with an accent)
-  // whose log entries the [A-Za-z0-9_.-] parser then silently drops —
-  // totals would exclude those batches forever while their files live
-  private def requireTag(tag: String): Unit =
-    require(tag.nonEmpty && tag.forall(c =>
-      (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-        (c >= '0' && c <= '9') || c == '_' || c == '.' || c == '-'),
-      s"ingest tag must be [A-Za-z0-9_.-]+, got '$tag'")
 
   /** The output file count a sized write should use for `df` at
     * `targetFileBytes` per file — the estimation half of

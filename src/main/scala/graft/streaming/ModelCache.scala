@@ -1,175 +1,79 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Sidecar-stamped model cache for the serve streams (round-17
-  * finding #3): `lmLookupStream` re-read its bigram store every
-  * micro-batch, the DSIR serve read TWO stores (four parquet reads
-  * per batch), the NB serve one — a per-batch FIXED cost whose only
+/** Generation-keyed model cache for the serve streams (round-17
+  * finding #3): a serve stream would otherwise re-read its store
+  * every micro-batch — a per-batch FIXED cost whose only
   * justification was freshness (appends take effect next batch).
-  * This cache keeps that freshness contract at a fraction of the
-  * price: the loaded model is cached per store dir under a STAMP of
-  * the store's tiny control files — `params.json` plus each table's
-  * `_manifest.json` (path, length, mtime, content) — and re-read only
-  * when the stamp moves.
-  *
-  * Why the stamp is sufficient: every mutation of a model store moves
-  * it. An append drops the params fast-path stamp FIRST
-  * (`LmScore.appendModel` ordering rule), then commits each table
-  * through its manifest — so whichever side of the append a batch's
-  * stamp probe lands on, the batch after a completed append always
-  * sees a moved stamp and reloads (mid-append loads are the same
-  * converging between-states reads `readModel` already documents).
-  * A compaction or rewrite swaps the dir atomically and rewrites
-  * params.json (fresh mtime even on identical content). Nothing
-  * mutates data files without touching a stamped control file.
+  * This cache keeps that freshness contract at the price of one small
+  * read per batch: the loaded model is cached per key under the
+  * store's `generation` (`graft.store.Store` — its record raises the
+  * generation on every write, append and compaction) and re-loaded
+  * only when the generation moves. Nothing mutates a store without
+  * raising it, so a batch after a committed append always reloads.
   *
   * Lifecycle: replacing or invalidating an entry runs its release
   * hook (the per-model unpersist the serve streams used to run per
   * batch — `releaseNbCache`/`releaseDsirCache` discipline), so
-  * executor storage holds at most one pinned cache per store dir
-  * instead of accumulating. A long-lived JVM serving MANY distinct
-  * store dirs bounds the map by calling [[invalidate]] when it
-  * retires a store. Driver-side only; entries hold plans, not data —
+  * executor storage holds at most one pinned cache per key instead
+  * of accumulating. A long-lived JVM serving MANY distinct store dirs
+  * bounds the map by calling [[invalidate]] when it retires a store.
+  * Driver-side only; entries hold plans, not data —
   * `spark.catalog.clearCache()` (the Verify/Bench hygiene) unpersists
   * the frames underneath, which is safe: the next action simply
-  * re-persists.
-  *
-  * [[enabled]] exists for A/B measurement (ProfileDsir's serve-loop
-  * arm): `false` restores the per-batch read+release behavior. */
+  * re-persists. */
 object ModelCache {
 
-  private case class Entry(stamp: String, model: Any,
+  private case class Entry(generation: Long, model: Any,
       release: () => Unit)
   private val entries =
     scala.collection.mutable.HashMap.empty[String, Entry]
 
-  /** Test/profiling switch — `false` = every call is a forced miss
-    * (unique stamp), so each call loads fresh and the PREVIOUS entry
-    * releases — the pre-cache read-and-release-per-batch behavior,
-    * one batch deferred (the current batch's model can't release
-    * while its scores are still being consumed; storage stays
-    * bounded at one model per store dir either way). */
-  @volatile private[graft] var enabled = true
-
-  // spec observability: loads since JVM start (a hit leaves it
-  // alone). Atomic, not a @volatile var: the disabled path derives
-  // its forced-miss stamp from this counter, and two concurrent
-  // disabled calls reading the same value would mint COLLIDING
-  // "disabled-N" stamps — turning a forced miss into a cache hit in
-  // the mode whose contract is load-fresh-every-call.
+  // spec observability: loads since JVM start (a hit leaves it alone)
   private val loadCount = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] def loads: Long = loadCount.get()
 
-  /** The store's control-file stamp: for params.json and each
-    * table's manifest — path, length, mtime, and content. Tiny
-    * driver-side reads (the files are sidecar-sized); any mutation
-    * of the store moves at least one of them. A missing file stamps
-    * as its path alone — so appearing/disappearing control files
-    * move the stamp too. `extraFiles` (relative to `dir`) cover
-    * stores whose rewrite path touches NO sidecar or manifest — the
-    * IVF index writes no params.json, so its serves stamp each
-    * table's `_SUCCESS` marker (every Spark write job, overwrite or
-    * append, rewrites it with a fresh mtime). */
-  private def stampOf(spark: SparkSession, dir: String,
-      tables: Seq[String], extraFiles: Seq[String]): String = {
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val files = (new Path(dir, "params.json") +:
-      tables.map(t => new Path(dir,
-        s"$t/${graft.sources.Sinks.ManifestFile}"))) ++
-      extraFiles.map(f => new Path(dir, f))
-    // extraFiles are _SUCCESS-class markers: ZERO-length, EMPTY
-    // content, so their stamp line would ride on mtime ALONE — and
-    // mtime granularity is platform-coarse (File.lastModified is
-    // second-granular on some filesystems), so two plain appends
-    // landing in the same tick would leave a serve cache silently
-    // stale until the next mutation (round-19 ADVICE). Fold the
-    // marker's PARENT-DIR data-file listing (count + total bytes +
-    // max mtime) into those lines: every append adds files, every
-    // rewrite replaces them, so same-tick mutations still move the
-    // stamp. One listStatus per marker per probe — the tables these
-    // markers guard are re-listed by the reader on reload anyway,
-    // and the probe stays orders cheaper than the per-batch re-read
-    // it replaced. Markers can also be DISABLED on object stores
-    // (mapreduce.fileoutputcommitter.marksuccessfuljobs=false): the
-    // listing summary keeps such a store's stamp content-bearing
-    // instead of a constant "absent".
-    val extraSet = extraFiles.map(f => new Path(dir, f)).toSet
-    files.map { p =>
-      val meta =
-        try {
-          val st = fs.getFileStatus(p)
-          s"${st.getLen}:${st.getModificationTime}"
-        } catch { case _: java.io.IOException => "absent" }
-      val content = graft.core.FsUtil.readSidecar(fs, p).getOrElse("")
-      val listing =
-        if (!extraSet.contains(p)) ""
-        else try {
-          val parts = fs.listStatus(p.getParent)
-            .filter(f => f.isFile &&
-              f.getPath.getName.endsWith(".parquet"))
-          val maxM =
-            if (parts.isEmpty) 0L else parts.map(_.getModificationTime).max
-          s"|n=${parts.length}:b=${parts.map(_.getLen).sum}:m=$maxM"
-        } catch { case _: java.io.IOException => "|dir-absent" }
-      s"$p|$meta|$content$listing"
-    }.mkString("\n")
-  }
-
-  /** The cached model for `dir` if its stamp still matches, else
-    * `load`ed fresh (releasing any stale entry first). `tables` are
-    * the store's manifest-committed table subdirs — the control files
-    * that, with params.json, pin the store's state. `key` (defaults
-    * to `dir`) is the cache IDENTITY: a caller whose loaded value
-    * bakes in more than the store's state — per-stream parameters, a
-    * probe closure — must fold those into the key, or two streams on
-    * one store would silently share the first caller's parameters.
-    * Composite keys must use the `dir#...` form so [[invalidate]]'s
-    * prefix match can release them when the store is retired.
+  /** The cached model for `key` if the store at `dir` is still at the
+    * generation it was loaded at, else `load`ed fresh (releasing any
+    * stale entry first). `key` (defaults to `dir`) is the cache
+    * IDENTITY: a caller whose loaded value bakes in more than the
+    * store's state — per-stream parameters, a probe closure — must
+    * fold those into the key, or two streams on one store would
+    * silently share the first caller's parameters. Composite keys
+    * must use the `dir#...` form so [[invalidate]]'s prefix match can
+    * release them when the store is retired.
     *
     * `load` runs OUTSIDE the map's monitor (it can be a multi-second
     * Spark read; holding the lock would stall every other stream's
-    * stamp probe on unrelated dirs). A concurrent same-key load can
-    * therefore race — the loser releases its copy and adopts the
-    * winner's. */
-  def getOrLoad[T](spark: SparkSession, dir: String,
-      tables: Seq[String], key: String = "",
-      extraFiles: Seq[String] = Nil)(load: => T)(
-      release: T => Unit): T = {
+    * probe on unrelated dirs). A concurrent same-key load can
+    * therefore race — the loser adopts the winner's model. */
+  def getOrLoad[T](spark: SparkSession, dir: String, key: String = "")(
+      load: => T)(release: T => Unit): T = {
     val k = if (key.isEmpty) dir else key
-    val stamp =
-      if (enabled) stampOf(spark, dir, tables, extraFiles)
-      else // forced miss: unique stamp → load fresh, release the
-        // previous entry (the pre-cache per-batch behavior); the
-        // atomic increment both counts the forced load and keeps
-        // concurrent disabled stamps collision-free
-        s"disabled-${loadCount.incrementAndGet()}"
+    val gen = graft.store.Store.generation(spark, dir)
     entries.synchronized(entries.get(k)) match {
-      case Some(e) if e.stamp == stamp => e.model.asInstanceOf[T]
+      case Some(e) if e.generation == gen => e.model.asInstanceOf[T]
       case _ =>
         val m = load
-        if (enabled) loadCount.incrementAndGet()
+        loadCount.incrementAndGet()
         entries.synchronized {
           entries.get(k) match {
-            case Some(e) if e.stamp == stamp =>
+            case Some(e) if e.generation == gen =>
               // Lost a same-key race: adopt the winner's model. Do
               // NOT release(m) here — Spark's CacheManager keys
               // cached plans by canonicalized plan, so two loads of
               // the same store SHARE cache entries, and unpersisting
               // the loser's frames would unpersist the winner's
-              // pinned plans too (per-batch recompute until the
-              // stamp next moves). Defer the loser's release to the
-              // entry's eventual turnover instead, where the winner
-              // releases anyway (unpersist is idempotent on shared
-              // entries).
-              entries.put(k, Entry(e.stamp, e.model,
+              // pinned plans too. Defer the loser's release to the
+              // entry's eventual turnover instead (unpersist is
+              // idempotent on shared entries).
+              entries.put(k, Entry(e.generation, e.model,
                 () => { e.release(); release(m) }))
               e.model.asInstanceOf[T]
             case stale =>
               stale.foreach(_.release())
-              entries.put(k, Entry(stamp, m, () => release(m)))
+              entries.put(k, Entry(gen, m, () => release(m)))
               m
           }
         }

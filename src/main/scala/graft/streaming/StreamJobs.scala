@@ -124,13 +124,10 @@ object StreamJobs {
     * probe only — nlist centroid scores per query + a probe-capped
     * scan of the code table; no training, and the float corpus is
     * never read. The index read and both codebook collects are
-    * STAMP-CACHED ([[ModelCache]] on params.json + the codes table's
-    * manifest and _SUCCESS marker — round 19, the lm/nb/dsir serve
-    * discipline applied to the index serves): a quiet store pays a
-    * sidecar probe per batch, while code rows appended by a
-    * concurrent ingest (tagged append moves the manifest; plain
-    * append rewrites _SUCCESS) still become visible to the next
-    * micro-batch.
+    * cached per store generation ([[ModelCache]]): a quiet store pays
+    * one record read per batch, while code rows appended by a
+    * concurrent ingest (every append raises the generation) still
+    * become visible to the next micro-batch.
     *
     * Replay idempotence: foreachBatch is at-least-once, so each
     * batch OVERWRITES its own batch_id-scoped subdir — a replayed
@@ -147,9 +144,7 @@ object StreamJobs {
       (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         val ready = ModelCache.getOrLoad(s, indexDir,
-            Seq("codes.parquet"),
-            key = s"$indexDir#ivfpq#$idCol#$vecCol",
-            extraFiles = Seq("codes.parquet/_SUCCESS")) {
+            key = s"$indexDir#ivfpq#$idCol#$vecCol") {
           graft.operators.Similarity.ivfPqReady(
             graft.operators.Similarity.readIvfPqIndex(s, indexDir,
               idCol, vecCol))
@@ -166,12 +161,10 @@ object StreamJobs {
     * (id, embedding) queries ranks against the persisted
     * `Similarity.IvfIndex` — nlist centroid scores per query + a
     * probe-capped scan of the assigned table; no training, no
-    * re-clustering. Index read + codebook collect are stamp-cached
-    * ([[ModelCache]]; the IVF store writes no params.json, so the
-    * stamp rides each table's _SUCCESS marker plus the assigned
-    * manifest), so rows appended by a concurrent [[annIngestStream]]
-    * (manifest moves) or by a plain append (_SUCCESS rewritten)
-    * still become visible to the next micro-batch; same
+    * re-clustering. Index read + codebook collect are cached per
+    * store generation ([[ModelCache]]), so rows appended by a
+    * concurrent [[annIngestStream]] or by a plain append still become
+    * visible to the next micro-batch; same
     * batch_id-subdir overwrite idempotence as every serve here. */
   def ivfLookupStream(queries: DataFrame, indexDir: String,
       outDir: String, idCol: String, vecCol: String, k: Int,
@@ -189,16 +182,13 @@ object StreamJobs {
         ()
     }
 
-  /** The stamp-cached [[graft.operators.Similarity.IvfReady]] handle
+  /** The generation-cached [[graft.operators.Similarity.IvfReady]] handle
     * shared by [[ivfLookupStream]] and [[hybridLookupStream]]. */
   private def ivfReadyCached(s: SparkSession, indexDir: String,
       idCol: String, vecCol: String)
       : graft.operators.Similarity.IvfReady =
     ModelCache.getOrLoad(s, indexDir,
-        Seq("assigned.parquet"),
-        key = s"$indexDir#ivf#$idCol#$vecCol",
-        extraFiles = Seq("assigned.parquet/_SUCCESS",
-          "codebook.parquet/_SUCCESS")) {
+        key = s"$indexDir#ivf#$idCol#$vecCol") {
       graft.operators.Similarity.ivfReady(
         graft.operators.Similarity.readIvfIndex(s, indexDir, idCol,
           vecCol))
@@ -214,16 +204,13 @@ object StreamJobs {
     * the posting lookup only — no tokenize of the corpus, no tf/df
     * recompute; the query batch broadcasts against the term-sorted
     * posting table (file-level min/max pruning on the few-term
-    * In-pushdown arm). The index read is STAMP-CACHED
-    * ([[ModelCache]] on params.json + both tables' manifests —
-    * round 19, the lm/nb/dsir discipline) with the vocab-bounded df
-    * aggregation PERSISTED for the entry's lifetime, so a quiet
-    * store pays a sidecar probe per batch instead of the
-    * params/manifest reads plus a df re-aggregation; postings
-    * appended by a concurrent ingest still become visible to the
-    * next micro-batch, because every bm25 mutation path rewrites
-    * params.json (ingest batches do so last, appends re-stamp,
-    * compaction swaps the dir).
+    * In-pushdown arm). The index read is cached per store generation
+    * ([[ModelCache]]) with the vocab-bounded df aggregation PERSISTED
+    * for the entry's lifetime, so a quiet store pays one record read
+    * per batch instead of a store read plus a df re-aggregation;
+    * postings appended by a concurrent ingest become visible to the
+    * next micro-batch, and because the read takes one record snapshot
+    * a batch sees postings, df and the N/T totals of one commit.
     *
     * Replay idempotence: foreachBatch is at-least-once, so each
     * batch OVERWRITES its own batch_id-scoped subdir — the same
@@ -245,15 +232,13 @@ object StreamJobs {
         ()
     }
 
-  /** The stamp-cached stored [[graft.operators.TextProfile.Bm25Index]]
+  /** The generation-cached stored [[graft.operators.TextProfile.Bm25Index]]
     * shared by [[bm25LookupStream]] and [[hybridLookupStream]]: the
     * df partial aggregation (vocab-bounded) persists for the cache
-    * entry's lifetime and releases when the store's stamp moves. */
+    * entry's lifetime and releases when the store's generation moves. */
   private def bm25IndexCached(s: SparkSession, indexDir: String,
       idCol: String): graft.operators.TextProfile.Bm25Index =
-    ModelCache.getOrLoad(s, indexDir,
-        Seq("postings.parquet", "df.parquet"),
-        key = s"$indexDir#bm25#$idCol") {
+    ModelCache.getOrLoad(s, indexDir, key = s"$indexDir#bm25#$idCol") {
       val i = graft.operators.TextProfile.readBm25Index(s, indexDir,
         idCol)
       i.copy(dfreq = i.dfreq.persist())
@@ -268,14 +253,12 @@ object StreamJobs {
     * actually runs: benchmarks are tiny and change rarely (gram
     * extraction paid once, at set-write time), corpora arrive
     * forever, and each batch pays one batch-gram explode + one
-    * broadcast-sized semi join. The set read is stamp-cached
-    * ([[ModelCache]] on params.json — round 19) with the
-    * benchmark-bounded gram frame PERSISTED for the entry's
-    * lifetime, so a quiet store pays a sidecar probe per batch
-    * instead of a set re-scan; `deconSetAppend`ed benchmarks still
-    * take effect from the next micro-batch, because every decon-set
-    * mutation rewrites params.json (append re-stamps, writeDeconSet
-    * swaps the dir). Replay safety is DOUBLE here: batch_id-scoped
+    * broadcast-sized semi join. The set read is cached per store
+    * generation ([[ModelCache]]) with the benchmark-bounded gram frame
+    * PERSISTED for the entry's lifetime, so a quiet store pays one
+    * record read per batch instead of a set re-scan;
+    * `deconSetAppend`ed benchmarks still take effect from the next
+    * micro-batch. Replay safety is DOUBLE here: batch_id-scoped
     * overwrite (the serve convention) AND semi-join semantics (a
     * duplicate-holding set probes identically). Returns the writer —
     * caller picks trigger/checkpoint and starts it. */
@@ -286,9 +269,7 @@ object StreamJobs {
     docs.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val (set, n) = ModelCache.getOrLoad(batch.sparkSession,
-            setDir, Seq("grams.parquet"),
-            key = s"$setDir#deconset",
-            extraFiles = Seq("grams.parquet/_SUCCESS")) {
+            setDir, key = s"$setDir#deconset") {
           val (g, nn) = graft.operators.Curation.readDeconSet(
             batch.sparkSession, setDir)
           (g.persist(), nn)
@@ -308,11 +289,11 @@ object StreamJobs {
     * see, at the same serve shape: the benchmark pack is paid once
     * at set-write time, each batch pays one narrow key pass + the
     * occupancy-bounded bucket join(s). LAYOUT-ADAPTIVE (round 18):
-    * the stored sidecar names the pack — a banded set
+    * the store record's kind names the pack — a banded set
     * ([[graft.operators.Similarity.writeSemanticDeconSetBanded]],
-    * sidecar carries bands/rowsPerBand; the measured-recall scale
-    * path) probes through the banded OR-construction, a single-band
-    * set (`writeSemanticDeconSet`, sidecar carries planes) through
+    * params bands/rowsPerBand; the measured-recall scale path) probes
+    * through the banded OR-construction, a single-band set
+    * (`writeSemanticDeconSet`, param planes) through
     * the single-pack probe — so rotating a deployment to banded sets
     * needs no serve change, just a set rewrite. A banded set whose
     * stored shape sits at or past the cost crossover
@@ -321,10 +302,9 @@ object StreamJobs {
     * EXACT arm over the same store's (bv, bnrm) columns instead:
     * strictly cheaper than the dominated banded probe AND recall 1.0
     * (round-18 finding #1). The read is
-    * stamp-cached ([[ModelCache]] on params.json — a swap rewrites
-    * it, fresh mtime even on identical content), so a re-written set
-    * takes effect from the next micro-batch and a quiet stream pays
-    * a sidecar probe, not a set re-read. Hits are row-local given
+    * cached per store generation ([[ModelCache]]), so a re-written
+    * set takes effect from the next micro-batch and a quiet stream
+    * pays a record read, not a set re-read. Hits are row-local given
     * the stored set, so the cross-batch union equals the batch probe
     * exactly; batch_id-scoped overwrite = replay idempotent. Returns
     * the writer — caller picks trigger/checkpoint and starts it. */
@@ -340,16 +320,12 @@ object StreamJobs {
         // stream's parameters — so the cache key must carry them too,
         // or two streams probing one set at different thresholds (or
         // column names) would silently share the first stream's probe
-        val probe = ModelCache.getOrLoad(s, setDir, Seq.empty,
+        val probe = ModelCache.getOrLoad(s, setDir,
             key = s"$setDir#$idCol#$vecCol#$threshold") {
-          val fs = new org.apache.hadoop.fs.Path(setDir).getFileSystem(
-            s.sparkContext.hadoopConfiguration)
-          val params = graft.core.FsUtil.readSidecar(fs,
-              new org.apache.hadoop.fs.Path(setDir, "params.json"))
-            .getOrElse(throw new java.io.IOException(
-              s"embedDeconLookupStream: $setDir has no params.json — " +
-                "not a stored semantic decon set"))
-          if (graft.core.FsUtil.sidecarLong(params, "bands").isDefined) {
+          if (graft.store.Store.require(s, setDir,
+              graft.operators.Similarity.BandedDeconKind,
+              graft.operators.Similarity.SemanticDeconKind).kind ==
+              graft.operators.Similarity.BandedDeconKind) {
             val (set, dim, bands, rpb) = graft.operators.Similarity
               .readSemanticDeconSetBanded(s, setDir)
             if (graft.operators.Similarity
@@ -394,9 +370,9 @@ object StreamJobs {
     * filtering shape a 100 TB ingest runs: the reference model
     * changes rarely (appendModel takes new reference batches in
     * O(batch); they take effect from the next micro-batch, because
-    * each batch probes the store's sidecar/manifest STAMP and
-    * re-reads the model only when it moved — [[ModelCache]], closing
-    * the per-batch fixed read cost), corpora arrive forever, and
+    * each batch probes the store's generation and re-reads the model
+    * only when it moved — [[ModelCache]], closing the per-batch fixed
+    * read cost), corpora arrive forever, and
     * scores are doc-local, so the cross-batch union equals the batch
     * scorer exactly. Batch_id-scoped overwrite = replay idempotent.
     * Returns the writer — caller picks trigger/checkpoint and starts
@@ -445,22 +421,17 @@ object StreamJobs {
     else batch.repartition(p)
   }
 
-  /** The bigram-store control tables [[ModelCache]] stamps for the
-    * LM/DSIR serves. */
-  private val LmModelTables = Seq("bigrams.parquet", "unigrams.parquet")
-
   def lmLookupStream(docs: DataFrame, modelDir: String,
       outDir: String, idCol: String, textCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        // stamp-cached (round-17 finding #3): the store is re-read —
-        // and the previous model's pinned cache released — only when
-        // the sidecar/manifest stamp moves; an append still takes
-        // effect next batch because appendModel's stamp drop moves it
-        val model = ModelCache.getOrLoad(batch.sparkSession, modelDir,
-            LmModelTables) {
+        // generation-cached (round-17 finding #3): the store is
+        // re-read — and the previous model's pinned cache released —
+        // only when an append, write or compaction raised the
+        // generation
+        val model = ModelCache.getOrLoad(batch.sparkSession, modelDir) {
           graft.operators.LmScore.readModel(batch.sparkSession, modelDir)
         } (graft.operators.LmScore.releaseBackoffCache)
         graft.operators.LmScore.score(model, widen(batch), idCol,
@@ -472,17 +443,15 @@ object StreamJobs {
 
   /** [[lmLookupStream]]'s WRITE-path twin: each micro-batch of
     * REFERENCE documents appends to the persisted bigram model in
-    * O(batch) via `LmScore.appendModel` — tagged `runId-batchId`
-    * files, so foreachBatch's at-least-once replay converges to
-    * exactly-once (see appendModel's ordering scaladoc for the full
-    * argument: stamp drop first, vocab before counts,
-    * manifest-committed batches). A concurrent lookup stream on the
-    * same dir scores against the growing reference from its next
-    * micro-batch on, and is SAFE against crash recovery: batches
-    * commit via the table manifest (`Sinks.appendTagged` /
-    * `readTagged`), committed files are never deleted, and a replay
-    * purges only uncommitted orphans no reader can see — a serve
-    * never observes a missing file. Quiesced
+    * O(batch) via `LmScore.appendModel` — the `runId-batchId` tag
+    * commits in one store record write, so foreachBatch's
+    * at-least-once replay converges to exactly-once. A concurrent
+    * lookup stream on the same dir scores against the growing
+    * reference from its next micro-batch on, and is SAFE against
+    * crash recovery: committed files are never deleted outside
+    * quiesced compaction, and a replay purges only uncommitted
+    * orphans no reader can see — a serve never observes a missing
+    * file. Quiesced
     * `Maintenance.compactAll` restores the sorted/sized layout and
     * the zero-aggregation serve path. Same runId discipline as every
     * ingest stream: fresh per (checkpoint, stream) pair. */
@@ -507,13 +476,13 @@ object StreamJobs {
     * under `outDir/batch_id=<id>/`. The classifier-routing shape a
     * 100 TB ingest runs: the model changes rarely (appendNbModel takes
     * new labeled batches in O(batch); they take effect from the next
-    * micro-batch, because each batch probes the store's stamp and
-    * re-reads only when it moved — [[ModelCache]]), corpora
+    * micro-batch, because each batch probes the store's generation
+    * and re-reads only when it moved — [[ModelCache]]), corpora
     * arrive forever, and class decisions are doc-local, so the
     * cross-batch union equals the batch classifier exactly.
     * Batch_id-scoped overwrite = replay idempotent. The caches
     * [[graft.operators.Classify.classifyNb]] pins release when the
-    * stamp moves (the cache entry's lifecycle carries the
+    * generation moves (the cache entry's lifecycle carries the
     * releaseNbCache discipline) — the serve session holds one
     * model's pinned storage per store dir, never an accumulation. Returns the writer — caller picks trigger/checkpoint
     * and starts it. */
@@ -523,13 +492,11 @@ object StreamJobs {
         org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        // stamp-cached; the release-per-batch discipline moved into
-        // the cache's entry lifecycle (released when the stamp moves,
+        // generation-cached; the release-per-batch discipline moved
+        // into the cache's entry lifecycle (released on a reload,
         // so the serve session still never ACCUMULATES pinned storage
         // — it holds exactly one model's worth per store dir)
-        val model = ModelCache.getOrLoad(batch.sparkSession, modelDir,
-            Seq("counts.parquet", "classes.parquet",
-              "vocabulary.parquet")) {
+        val model = ModelCache.getOrLoad(batch.sparkSession, modelDir) {
           graft.operators.Classify.readNbModel(batch.sparkSession,
             modelDir)
         } (graft.operators.Classify.releaseNbCache)
@@ -550,9 +517,10 @@ object StreamJobs {
     * `LmScore.importanceBits` documents: both models train once per
     * pool/domain lifetime; the recurring per-batch cost is one batch
     * explode + the stored vocab-bounded dim joins, with BOTH stores
-    * stamp-cached independently ([[ModelCache]], round-17 finding #3
-    * — the four-parquet-read fixed cost is paid only when a store's
-    * stamp moves, and appends still take effect next batch). Weights
+    * cached independently per generation ([[ModelCache]], round-17
+    * finding #3 — the four-parquet-read fixed cost is paid only when a
+    * store's generation moves, and appends still take effect next
+    * batch). Weights
     * are doc-local, so the cross-batch union equals the batch
     * weigher exactly; batch_id-scoped overwrite = replay idempotent.
     * Each model's pinned vocab-bounded caches release when its cache
@@ -567,16 +535,16 @@ object StreamJobs {
         org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        // both stores stamp-cached INDEPENDENTLY (they append on
+        // both stores cached INDEPENDENTLY (they append on
         // independent schedules); each model's pinned cache releases
-        // when its own stamp moves — the releaseDsirCache discipline
-        // carried by the two entries' lifecycles
-        def stamped(dir: String) =
-          ModelCache.getOrLoad(batch.sparkSession, dir, LmModelTables) {
+        // when its own generation moves — the releaseDsirCache
+        // discipline carried by the two entries' lifecycles
+        def cached(dir: String) =
+          ModelCache.getOrLoad(batch.sparkSession, dir) {
             graft.operators.LmScore.readModel(batch.sparkSession, dir)
           } (graft.operators.LmScore.releaseBackoffCache)
-        val target = stamped(targetDir)
-        val source = stamped(sourceDir)
+        val target = cached(targetDir)
+        val source = cached(sourceDir)
         graft.operators.LmScore
           .importanceBits(target, source, widen(batch), idCol, textCol)
           .write.mode("overwrite")
@@ -588,9 +556,8 @@ object StreamJobs {
     * LABELED documents appends to the persisted classifier model in
     * O(batch) via `Classify.appendNbModel` — tagged `runId-batchId`
     * files, so foreachBatch's at-least-once replay converges to
-    * exactly-once (see appendNbModel's ordering scaladoc: stamp drop
-    * first, vocabulary before counts before class priors,
-    * manifest-committed batches). A concurrent lookup stream on the
+    * exactly-once (the tag commits in one store record write). A
+    * concurrent lookup stream on the
     * same dir classifies against the growing model from its next
     * micro-batch on, and is safe against crash recovery exactly as
     * [[lmIngestStream]] is. Quiesced `Maintenance.compactAll`
@@ -620,7 +587,7 @@ object StreamJobs {
     * training, the float corpus only via the IVF probe's cell join.
     * Fusion is q_id-local, so per-batch fusing equals fusing the
     * union (each query lives in one batch) — what lets the streaming
-    * form share the batch oracle. Both index reads are stamp-cached
+    * form share the batch oracle. Both index reads are generation-cached
     * exactly as in the component serves ([[bm25IndexCached]] /
     * [[ivfReadyCached]] — shared cache entries, so a hybrid serve
     * and a single-modality serve on the same store pay one load);
@@ -687,23 +654,22 @@ object StreamJobs {
   /** Streaming index INGEST — the write-path twin of the lookup
     * streams: each arriving micro-batch of documents APPENDS to the
     * persisted BM25 posting index at `indexDir` in O(batch) via
-    * `TextProfile.bm25IngestBatch` (tagged files + ingest-log
-    * totals), so a corpus streaming in is searchable index-build-free
+    * `TextProfile.bm25IngestBatch` (tagged files and the N/T totals
+    * committed in one store record write), so a corpus streaming in is searchable index-build-free
     * — a concurrent [[bm25LookupStream]] on the same dir sees each
     * batch's postings from its next micro-batch on. Exactly-once
     * under foreachBatch's at-least-once replay comes from the
-    * per-batch tag `runId-batchId`: a replayed batch first purges
-    * whatever its crashed attempt landed (see bm25IngestBatch's
-    * scaladoc for the full window-by-window argument). `runId` must
+    * per-batch tag `runId-batchId`: a committed tag replays as a
+    * no-op, and a replayed uncommitted batch first purges whatever its
+    * crashed attempt landed. `runId` must
     * be fresh per (checkpoint, stream) pair — a restart from the SAME
     * checkpoint keeps the same runId (that is what makes replay
     * converge), a NEW logical run takes a new one. Appends accumulate
     * unsorted tagged files by design; `Maintenance.compactAll`
     * (quiesced) restores the term-sorted sized layout.
     *
-    * Concurrent serves are safe through crash recovery: batches
-    * commit via the table manifest (`Sinks.appendTagged` /
-    * `readTagged`), committed files are never deleted outside
+    * Concurrent serves are safe through crash recovery: a serve reads
+    * one record snapshot, committed files are never deleted outside
     * quiesced compaction, and a replay purges only uncommitted
     * orphans no reader can see — a lookup stream on the same dir
     * never observes a missing file. Returns the writer —
@@ -729,24 +695,37 @@ object StreamJobs {
   def annIngestStream(vecs: DataFrame, indexDir: String, idCol: String,
       vecCol: String, runId: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
+        org.apache.spark.sql.Row] = {
+    val codebook = new CodebookHandle(indexDir, s =>
+      graft.operators.Similarity.ivfReady(
+        graft.operators.Similarity.readIvfIndex(s, indexDir, idCol,
+          vecCol)))
     vecs.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        // the codebook never changes during ingest (the standard IVF
-        // append), so the handle is stamp-cached on the CODEBOOK
-        // table alone — the per-batch assigned appends do not evict
-        // it, while a rebuild (fresh codebook _SUCCESS) reloads
-        val ready = ModelCache.getOrLoad(batch.sparkSession, indexDir,
-            Seq.empty, key = s"$indexDir#ivfingest#$idCol#$vecCol",
-            extraFiles = Seq("codebook.parquet/_SUCCESS")) {
-          graft.operators.Similarity.ivfReady(
-            graft.operators.Similarity.readIvfIndex(batch.sparkSession,
-              indexDir, idCol, vecCol))
-        } (_ => ())
-        graft.operators.Similarity.ivfIngestBatchWith(ready,
-          widen(batch), indexDir, s"$runId-$batchId")
+        graft.operators.Similarity.ivfIngestBatchWith(
+          codebook.get(batch.sparkSession), widen(batch), indexDir,
+          s"$runId-$batchId")
         ()
     }
+  }
+
+  /** The codebook-side handle an ANN ingest stream reuses across its
+    * batches: ingest never changes a codebook (the standard IVF
+    * append), so the handle is rebuilt only when the store record lists
+    * other codebook files — a rebuild — and the stream's own appends,
+    * which raise the generation every batch, never evict it. */
+  private final class CodebookHandle[T](dir: String,
+      load: SparkSession => T) {
+    private var held: Option[(Seq[String], T)] = None
+    def get(s: SparkSession): T = synchronized {
+      val files = graft.store.Store.require(s, dir).files("codebook.parquet")
+      held.filter(_._1 == files).map(_._2).getOrElse {
+        val t = load(s)
+        held = Some(files -> t)
+        t
+      }
+    }
+  }
 
   /** [[annIngestStream]] on the PQ-coded serving unit: each
     * micro-batch is assigned to the stored coarse cells and encoded
@@ -757,23 +736,19 @@ object StreamJobs {
   def annPqIngestStream(vecs: DataFrame, indexDir: String,
       idCol: String, vecCol: String, runId: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
+        org.apache.spark.sql.Row] = {
+    val codebooks = new CodebookHandle(indexDir, s =>
+      graft.operators.Similarity.ivfPqEncoder(
+        graft.operators.Similarity.readIvfPqIndex(s, indexDir, idCol,
+          vecCol)))
     vecs.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        // both PQ codebooks are ingest-immutable — stamp-cached on
-        // the codebook tables only (annIngestStream's rationale)
-        val enc = ModelCache.getOrLoad(batch.sparkSession, indexDir,
-            Seq.empty, key = s"$indexDir#ivfpqingest#$idCol#$vecCol",
-            extraFiles = Seq("codebook.parquet/_SUCCESS",
-              "pqcodebooks.parquet/_SUCCESS")) {
-          graft.operators.Similarity.ivfPqEncoder(
-            graft.operators.Similarity.readIvfPqIndex(
-              batch.sparkSession, indexDir, idCol, vecCol))
-        } (_ => ())
-        graft.operators.Similarity.ivfPqIngestBatchWith(enc,
-          widen(batch), indexDir, s"$runId-$batchId")
+        graft.operators.Similarity.ivfPqIngestBatchWith(
+          codebooks.get(batch.sparkSession), widen(batch), indexDir,
+          s"$runId-$batchId")
         ()
     }
+  }
 
   /** The ingest-stream family on the MinHash unit: each micro-batch
     * of documents is signed under the STORED banding scheme and its
@@ -793,10 +768,9 @@ object StreamJobs {
 
   /** The ingest-stream family on the corpus-profile unit: each
     * micro-batch's profile partials (per-stratum counts + per-token
-    * df/tf) land tagged via `CorpusProfile.ingestBatch` — closing
-    * `appendOnce`'s documented one-batch double-count window, since a
-    * replayed batch now purges its own torn leftovers instead of
-    * re-appending over them. Profile-fed consumers (rarity, BM25
+    * df/tf) commit under a `runId-batchId` tag via
+    * `CorpusProfile.ingestBatch`, so a replayed batch is a no-op once
+    * committed and purges its own torn leftovers otherwise. Profile-fed consumers (rarity, BM25
     * stats) see each batch's contribution exactly once. */
   def profileIngestStream(docs: DataFrame, profileDir: String,
       idCol: String, strataCol: String, textCol: String, runId: String)

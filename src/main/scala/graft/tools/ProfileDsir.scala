@@ -44,41 +44,6 @@ object ProfileDsir {
       }
       spark.catalog.clearCache()
     }
-    // serve-loop A/B (round-17 finding #3): the STREAM serve's
-    // per-batch fixed cost — four parquet reads of the two stores —
-    // with the sidecar-stamp ModelCache off vs on. Same batches, same
-    // stores; the cache arm pays the read on batch 1 and stamp
-    // probes after.
-    locally {
-      import spark.implicits._
-      val rows = docs.select(col("doc_id"), col("text"))
-        .limit(3000).as[(Long, String)].collect().toSeq
-      def serveLoop(label: String, on: Boolean): Unit = {
-        graft.streaming.ModelCache.clear()
-        graft.streaming.ModelCache.enabled = on
-        try {
-          val run = graft.core.FsUtil.deleteOnExit(
-            s"$root/serve_${if (on) "cached" else "uncached"}")
-          implicit val sqlCtx = spark.sqlContext
-          val in = org.apache.spark.sql.execution.streaming.runtime
-            .MemoryStream[(Long, String)]
-          val q = graft.streaming.StreamJobs.dsirLookupStream(
-              in.toDS().toDF("doc_id", "text"), s"$root/target",
-              s"$root/source", s"$run/out", "doc_id", "text")
-            .option("checkpointLocation", s"$run/ckpt").start()
-          try rows.grouped(1000).zipWithIndex.foreach { case (b, i) =>
-            val t0 = System.nanoTime()
-            in.addData(b); q.processAllAvailable()
-            println(f"[profile-dsir] $label batch $i: " +
-              f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-          } finally q.stop()
-        } finally graft.streaming.ModelCache.enabled = true // a mid-arm
-        // throw must not leave the JVM-global switch off
-        spark.catalog.clearCache()
-      }
-      serveLoop("serve UNCACHED (read both stores per batch)", on = false)
-      serveLoop("serve CACHED (stamp probe per batch)", on = true)
-    }
 
     // the in-query comparison arm: fresh two-model train + weighting
     timed("in-query arm (train both models fresh + importanceBits)") {

@@ -8,8 +8,8 @@ import graft.operators.CorpusProfile
 import graft.sources.Tables
 
 /** Incremental corpus profile: the merge must be EXACT (partials +
-  * append bit-identical to a full recompute), the params sidecar must
-  * fail fast on mismatch, and read-derived scalars (vocab/hapax) must
+  * append bit-identical to a full recompute), the store record's
+  * params must fail fast on mismatch, and read-derived scalars (vocab/hapax) must
   * be correct across batch boundaries — the reason the df TABLE is
   * stored instead of the scalars. */
 class CorpusProfileSpec extends SparkSpec {
@@ -141,8 +141,8 @@ class CorpusProfileSpec extends SparkSpec {
     CorpusProfile.compact(s, dir, "lang", "text")
     // the watermark survived the compact: a foreachBatch replay of an
     // already-applied batch id (e.g. restart re-running its in-flight
-    // batch) must STILL be a no-op — before the fix, compact's swap
-    // dropped applied.json and the replay double-counted every stat
+    // batch) must STILL be a no-op — the compaction carries the
+    // record's applied tags over
     assert(!CorpusProfile.appendOnce(batch(2L, "c d"), dir, batchId = 1L))
     assert(statRows(CorpusProfile.stats(
       CorpusProfile.read(s, dir, "lang", "text"))) == before)
@@ -158,21 +158,20 @@ class CorpusProfileSpec extends SparkSpec {
       .build(Seq((id, lang, text)).toDF("doc_id", "lang", "text"),
         "doc_id", "lang", "text")
     CorpusProfile.write(batch(1L, "en", "a b c"), dir)
-    // simulate the documented crash window: append() writes tokens
-    // FIRST (strata is the commit marker) — die between the two.
-    // "de" is a NEW stratum (tokens with no strata row at all) and a
-    // second torn batch hits the existing "en" stratum (token mass
-    // over the committed count); both must surface.
-    batch(2L, "de", "x y").tokens.write.mode("append")
-      .parquet(s"$dir/tokens.parquet")
-    batch(3L, "en", "d e").tokens.write.mode("append")
-      .parquet(s"$dir/tokens.parquet")
+    // the store commits tokens and strata together, so a torn profile
+    // is one assembled outside it: token partials without their strata
+    // partials. "de" is a NEW stratum (tokens with no strata row at
+    // all) and a second torn batch hits the existing "en" stratum
+    // (token mass over the counted tokens); both must surface.
+    val stored = CorpusProfile.read(s, dir, "lang", "text")
+    val torn = stored.copy(tokens = stored.tokens
+      .unionByName(batch(2L, "de", "x y").tokens)
+      .unionByName(batch(3L, "en", "d e").tokens))
     val errBuf = new java.io.ByteArrayOutputStream()
     val origErr = System.err
     val rows = try {
       System.setErr(new java.io.PrintStream(errBuf, true))
-      statRows(CorpusProfile.stats(
-        CorpusProfile.read(s, dir, "lang", "text")))
+      statRows(CorpusProfile.stats(torn))
     } finally System.setErr(origErr)
     val warning = errBuf.toString
     assert(warning.contains("INCONSISTENT"), warning.take(200))

@@ -568,7 +568,7 @@ class CurationSpec extends SparkSpec {
       .createTempDirectory("graft-deconset").toString + "/set"
 
     Curation.writeDeconSet(bench, "doc_id", "text", n = 4, dir)
-    assert(!Curation.deconSetSortDrifted(s, dir), "fresh store drifted?")
+    assert(storeRecord(dir).compacted, "fresh store drifted?")
     val (set, n) = Curation.readDeconSet(s, dir)
     assert(n == 4)
     def probe() = Curation
@@ -579,12 +579,12 @@ class CurationSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(probe() == batch, "stored probe diverged from batch form")
 
-    // append a SECOND benchmark: hits may only grow; the sort stamp
-    // must flag the drift; a replayed (duplicate) append of the same
+    // append a SECOND benchmark: hits may only grow; the record must
+    // flag the table unsorted; a replayed (duplicate) append of the same
     // benchmark changes nothing — the semi join's idempotence claim
     val bench2 = corpus.limit(3)
     Curation.deconSetAppend(bench2, "doc_id", "text", dir)
-    assert(Curation.deconSetSortDrifted(s, dir), "append left no drift")
+    assert(!storeRecord(dir).compacted, "append left no drift")
     val afterAppend = probe()
     assert(batch.map(_._1).subsetOf(afterAppend.map(_._1)),
       "append lost previously contaminated docs")

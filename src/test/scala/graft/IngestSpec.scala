@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Maintenance, Similarity, TextProfile}
 import graft.sources.{Sinks, Tables}
+import graft.store.Store
 
 /** The replay-idempotent streaming ingest contract
-  * (`Sinks.appendTagged` + `TextProfile.bm25IngestBatch` /
+  * (`graft.store.Store.append` + `TextProfile.bm25IngestBatch` /
   * `Similarity.ivfIngestBatch`): a foreachBatch micro-batch re-run
   * with the same tag — from ANY crash point, however torn — must
   * converge the stored index to exactly the single-apply state, and
@@ -29,55 +30,61 @@ class IngestSpec extends SparkSpec {
     new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
 
+  /** An empty store of test kind at `root`, and appends of `df` to
+    * its one table under `tag`. */
+  private def emptyStore(root: String): Unit =
+    Store.write(spark, root, "test", Map.empty) { _ => () }
+  private def appendT(root: String, df: org.apache.spark.sql.DataFrame,
+      tag: String): Int =
+    Store.append(spark, root, storeRecord(root), tag, Seq("table" -> df))
+
   test("appendTagged: committed replay no-ops, uncommitted replay replaces, neighbors survive, prefix tags do not collide") {
     val s = spark
     import s.implicits._
-    val dir = tmp("tagged") + "/table"
-    val table = new org.apache.hadoop.fs.Path(dir)
-    Sinks.appendTagged(Seq(1L, 2L).toDF("v"), dir, "r0-0")
-    Sinks.appendTagged(Seq(3L).toDF("v"), dir, "r0-1")
+    val root = tmp("tagged")
+    val dir = s"$root/table"
+    emptyStore(root)
+    appendT(root, Seq(1L, 2L).toDF("v"), "r0-0")
+    val beforeR01 = recordJson(root)
+    appendT(root, Seq(3L).toDF("v"), "r0-1")
     // r0-1 is a '-'-joined prefix of r0-1x and r0-1-b: neither may be
     // disturbed by an r0-1 replay
-    Sinks.appendTagged(Seq(4L).toDF("v"), dir, "r0-1x")
-    Sinks.appendTagged(Seq(5L).toDF("v"), dir, "r0-1-b")
+    appendT(root, Seq(4L).toDF("v"), "r0-1x")
+    appendT(root, Seq(5L).toDF("v"), "r0-1-b")
     val fs = fsOf(dir)
     val before = dataFiles(dir)
-    // a COMMITTED tag replays as a no-op: the manifest is the commit
+    // a COMMITTED tag replays as a no-op: the record is the commit
     // point, so the batch's original content wins and the replay
     // returns 0 files
-    assert(Sinks.appendTagged(Seq(30L).toDF("v"), dir, "r0-1") === 0)
+    assert(appendT(root, Seq(30L).toDF("v"), "r0-1") === 0)
     assert(Sinks.readTagged(s, dir).as[Long].collect().sorted.toSeq ===
       Seq(1L, 2L, 3L, 4L, 5L))
     assert(dataFiles(dir) === before, "committed replay touched files")
 
-    // an UNCOMMITTED attempt (crashed before its manifest commit)
-    // leaves orphans that readers never see and a replay replaces
-    val committed = Sinks.readManifest(fs, table).get
-    val r01files = committed.filter(_.startsWith("ingest-r0-1-part"))
-    Sinks.writeManifestNames(fs, table,
-      (committed -- r01files).toSeq) // simulate: commit never happened
-    assert(Sinks.readTagged(s, dir).as[Long].collect().sorted.toSeq ===
-      Seq(1L, 2L, 4L, 5L), "orphans visible to readTagged")
-    Sinks.appendTagged(Seq(30L).toDF("v"), dir, "r0-1")
-    assert(Sinks.readTagged(s, dir).as[Long].collect().sorted.toSeq ===
-      Seq(1L, 2L, 4L, 5L, 30L), "uncommitted replay did not replace")
-    assert(!r01files.exists(dataFiles(dir).contains(_)),
-      "replay left the crashed attempt's orphan files")
-    // other tags' files untouched through both replays
-    assert(before.filterNot(_.contains("ingest-r0-1-part")).toSet
-      .subsetOf(dataFiles(dir).toSet))
-
+    // an UNCOMMITTED attempt (crashed before its record commit) leaves
+    // orphans that readers never see and a replay replaces: take the
+    // record back to before r0-1 and re-append its later neighbors
+    val r01files = before.filter(_.startsWith("ingest-r0-1-part"))
+    uncommit(root, beforeR01, "r0-1")
+    val orphan = new org.apache.hadoop.fs.Path(dir, r01files.head)
+    appendT(root, Seq(4L).toDF("v"), "r0-1x")
+    appendT(root, Seq(5L).toDF("v"), "r0-1-b")
     // the purge anchor is \d{5,}: Spark zero-pads to five digits but
     // counts past part-99999 at high task counts — a six-digit part
-    // file must still purge; purgeTagged also un-commits the tag
+    // file must still purge
     val six = new org.apache.hadoop.fs.Path(dir,
       "ingest-r0-1-part-123456-deadbeef.snappy.parquet")
     fs.create(six, true).close()
-    Sinks.purgeTagged(fs, table, "r0-1")
-    assert(!fs.exists(six), "six-digit part index escaped the purge")
-    assert(!Sinks.readManifest(fs, table).get
-      .exists(_.startsWith("ingest-r0-1-part")),
-      "purgeTagged left the tag committed")
+    assert(Sinks.readTagged(s, dir).as[Long].collect().sorted.toSeq ===
+      Seq(1L, 2L, 4L, 5L), "orphans visible to readTagged")
+    appendT(root, Seq(30L).toDF("v"), "r0-1")
+    assert(Sinks.readTagged(s, dir).as[Long].collect().sorted.toSeq ===
+      Seq(1L, 2L, 4L, 5L, 30L), "uncommitted replay did not replace")
+    assert(!fs.exists(orphan) && !fs.exists(six),
+      "replay left the crashed attempt's orphan files")
+    // other tags' files untouched through both replays
+    assert(before.filter(_.startsWith("ingest-r0-0-")).toSet
+      .subsetOf(dataFiles(dir).toSet))
   }
 
   test("manifest protocol property: readTagged ≡ union of committed batches, exactly once, under 100+ generated crash interleavings") {
@@ -85,25 +92,21 @@ class IngestSpec extends SparkSpec {
     import s.implicits._
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    import org.apache.hadoop.fs.Path
 
     // Abstract op stream interpreted against BOTH the real store and
-    // a trivially-correct model (base rows + committed-batch map).
+    // a trivially-correct model (the committed-batch map).
     // Crash(keep) lands a torn attempt: keep ∈ {0,1,2} data files
-    // renamed in, manifest never updated — exactly the states a kill
-    // between appendTagged's rename loop and its commit produces.
-    // Replay/Purge pick from live tags; Compact folds the committed
-    // rows into a plain base table (manifest gone — the documented
-    // quiesced-compaction shape; no retired tag is ever replayed
-    // afterwards, per the scaladoc precondition). The invariant at
-    // every Read and at sequence end: readTagged sees base rows plus
-    // every committed batch EXACTLY once and nothing else — the
-    // class-level claim the enumerated crash-point tests instantiate.
+    // renamed in, record never committed — exactly the states a kill
+    // between the append's rename loop and its commit produces.
+    // Replay picks from live tags; Compact re-packs the store (applied
+    // tags survive it, so a committed tag still replays as a no-op
+    // afterwards, and a crashed one still redoes). The invariant at
+    // every Read and at sequence end: the table holds every committed
+    // batch EXACTLY once and nothing else.
     sealed trait Op
     case object Append extends Op
     final case class Crash(keep: Int) extends Op
     final case class Replay(pick: Int) extends Op
-    final case class PurgeOp(pick: Int) extends Op
     case object Read extends Op
     case object Compact extends Op
 
@@ -111,7 +114,6 @@ class IngestSpec extends SparkSpec {
       4 -> Gen.const(Append),
       3 -> Gen.choose(0, 2).map(Crash(_)),
       3 -> Gen.choose(0, 99).map(Replay(_)),
-      1 -> Gen.choose(0, 99).map(PurgeOp(_)),
       2 -> Gen.const(Read),
       1 -> Gen.const(Compact))
     val seqGen = Gen.listOfN(7, opGen)
@@ -122,71 +124,48 @@ class IngestSpec extends SparkSpec {
     (0 until 110).foreach { caseIdx =>
       val ops = seqGen(Gen.Parameters.default, Seed(4242L + caseIdx))
         .getOrElse(fail(s"case $caseIdx: generator produced nothing"))
-      val dir = tmp(s"prop$caseIdx") + "/table"
-      val table = new Path(dir)
-      val fs = fsOf(dir)
+      val root = tmp(s"prop$caseIdx")
+      val dir = s"$root/table"
+      emptyStore(root)
       var nextTag = 0
-      var base = Vector.empty[Long]
       val committed = scala.collection.mutable.LinkedHashMap.empty[Int, Seq[Long]]
       val crashed = scala.collection.mutable.LinkedHashMap.empty[Int, Seq[Long]]
-      def expect: Seq[Long] = (base ++ committed.values.flatten).sorted
+      def expect: Seq[Long] = committed.values.flatten.toSeq.sorted
       def check(where: String): Unit =
-        if (fs.exists(table)) {
-          // a store with ZERO parquet files (every attempt crashed at
-          // keep=0 / everything purged) has no schema to read — the
-          // model must agree it holds nothing
-          if (dataFiles(dir).isEmpty)
-            assert(expect.isEmpty,
-              s"case $caseIdx ($where): model expects rows, store has no files")
-          else
-            assert(Sinks.readTagged(s, dir).as[Long].collect().sorted.toSeq
-              === expect, s"case $caseIdx ($where): store diverged from model")
-        }
+        // a table with no committed file has no rows (and, when every
+        // attempt crashed at keep=0, no schema to read)
+        if (storeRecord(root).files("table").isEmpty)
+          assert(expect.isEmpty,
+            s"case $caseIdx ($where): model expects rows, store has none")
+        else
+          assert(Sinks.readTagged(s, dir).as[Long].collect().sorted.toSeq
+            === expect, s"case $caseIdx ($where): store diverged from model")
       ops.foreach {
         case Append =>
           val tag = nextTag; nextTag += 1
-          Sinks.appendTagged(valuesOf(tag).toDF("v").coalesce(1), dir,
-            s"t$tag")
+          appendT(root, valuesOf(tag).toDF("v").coalesce(1), s"t$tag")
           committed(tag) = valuesOf(tag)
         case Crash(keep) =>
           val tag = nextTag; nextTag += 1
-          Sinks.appendTagged(valuesOf(tag).toDF("v").repartition(2), dir,
-            s"t$tag")
-          // doctor to the torn state: strip the commit, keep only the
-          // first `keep` renamed files (deterministic by name sort)
-          val m = Sinks.readManifest(fs, table).get
-          val mine = m.filter(_.startsWith(s"ingest-t$tag-part"))
-          Sinks.writeManifestNames(fs, table, (m -- mine).toSeq)
-          mine.toSeq.sorted.drop(keep)
-            .foreach(n => fs.delete(new Path(table, n), false))
+          val before = recordJson(root)
+          appendT(root, valuesOf(tag).toDF("v").repartition(2), s"t$tag")
+          uncommit(root, before, s"t$tag", keep)
           crashed(tag) = valuesOf(tag)
         case Replay(p) =>
           val pool = (crashed.keys ++ committed.keys).toVector.sorted
           if (pool.nonEmpty) {
             val tag = pool(p % pool.size)
-            val ret = Sinks.appendTagged(
-              valuesOf(tag).toDF("v").coalesce(1), dir, s"t$tag")
+            val ret = appendT(root, valuesOf(tag).toDF("v").coalesce(1),
+              s"t$tag")
             if (committed.contains(tag))
               assert(ret === 0,
                 s"case $caseIdx: committed replay of t$tag not a no-op")
             else { committed(tag) = valuesOf(tag); crashed.remove(tag) }
           }
-        case PurgeOp(p) =>
-          val pool = (crashed.keys ++ committed.keys).toVector.sorted
-          if (pool.nonEmpty) {
-            val tag = pool(p % pool.size)
-            Sinks.purgeTagged(fs, table, s"t$tag")
-            committed.remove(tag); crashed.remove(tag)
-          }
         case Read => check("mid-sequence")
         case Compact =>
-          if (fs.exists(table)) {
-            val rows = expect
-            rows.toDF("v").coalesce(1).write
-              .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
-            base = rows.toVector
-            committed.clear(); crashed.clear()
-          }
+          if (storeRecord(root).files("table").nonEmpty)
+            Store.compact(s, root, 128L << 20)
       }
       check("final")
       interleavings += 1
@@ -194,50 +173,22 @@ class IngestSpec extends SparkSpec {
     assert(interleavings >= 100)
   }
 
-  test("pre-manifest upgrade path: a torn legacy append purges-and-redoes; other legacy tags adopt as committed") {
-    val s = spark
-    import s.implicits._
-    val dir = tmp("legacy") + "/table"
-    val table = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(dir)
-    // build a legacy store: two committed tags, then strip the
-    // manifest entirely (the pre-manifest on-disk state) and tear
-    // half of r0-1's files — the mid-append crash the OLD protocol
-    // repaired by unconditional purge-then-redo
-    Sinks.appendTagged(Seq(1L, 2L).toDF("v"), dir, "r0-0")
-    Sinks.appendTagged((10L until 20L).toDF("v").repartition(4), dir,
-      "r0-1")
-    fs.delete(new org.apache.hadoop.fs.Path(table, Sinks.ManifestFile),
-      false)
-    val r01 = dataFiles(dir).filter(_.startsWith("ingest-r0-1-part"))
-    assert(r01.size >= 2, s"need >= 2 files to tear: $r01")
-    fs.delete(new org.apache.hadoop.fs.Path(table, r01.head), false)
-    // the replay must NOT adopt the torn subset as committed (that
-    // would no-op and lose the deleted file's rows forever) — it
-    // purges the leftovers and redoes the batch; r0-0 adopts
-    Sinks.appendTagged((10L until 20L).toDF("v").repartition(4), dir,
-      "r0-1")
-    assert(Sinks.readTagged(s, dir).as[Long].collect().sorted.toSeq ===
-      (Seq(1L, 2L) ++ (10L until 20L)), "torn legacy replay lost rows")
-    assert(Sinks.readManifest(fs, table).get
-      .exists(_.startsWith("ingest-r0-0-part")),
-      "legacy committed tag not adopted")
-  }
-
   test("readTagged on a store whose only files are uncommitted orphans returns zero rows, never the orphans") {
     val s = spark
     import s.implicits._
-    val dir = tmp("orphans") + "/table"
-    val table = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(dir)
-    // first-ever batch crashed before its manifest commit: manifest
-    // holds an empty committed set, orphan files sit on disk
-    Sinks.appendTagged(Seq(1L, 2L, 3L).toDF("v"), dir, "r0-0")
-    Sinks.writeManifestNames(fs, table, Nil)
+    val root = tmp("orphans")
+    val dir = s"$root/table"
+    emptyStore(root)
+    // first-ever batch crashed before its record commit: the record
+    // holds no file for the table, orphan files sit on disk
+    val before = recordJson(root)
+    appendT(root, Seq(1L, 2L, 3L).toDF("v"), "r0-0")
+    uncommit(root, before, "r0-0")
+    assert(dataFiles(dir).nonEmpty)
     assert(Sinks.readTagged(s, dir).count() === 0L,
       "uncommitted orphans leaked through readTagged")
     // the replay then commits them and they become visible
-    Sinks.appendTagged(Seq(1L, 2L, 3L).toDF("v"), dir, "r0-0")
+    appendT(root, Seq(1L, 2L, 3L).toDF("v"), "r0-0")
     assert(Sinks.readTagged(s, dir).as[Long].collect().sorted.toSeq ===
       Seq(1L, 2L, 3L))
   }
@@ -245,24 +196,24 @@ class IngestSpec extends SparkSpec {
   test("a serve loop concurrent with crash-replayed appends observes zero failed reads and only committed states") {
     val s = spark
     import s.implicits._
-    val dir = tmp("concurrent") + "/table"
-    val table = new org.apache.hadoop.fs.Path(dir)
+    val root = tmp("concurrent")
+    val dir = s"$root/table"
     // base store + one committed batch, then FIVE stranded attempts:
-    // files renamed in but the manifest commit "crashed" (stripped) —
+    // files renamed in but the record commit "crashed" (put back) —
     // the only torn state the commit protocol can reach. Readers must
     // never see the stranded files, and the concurrent replays below
     // purge + redo them while the serve loop hammers the table.
-    Sinks.writeSizedParquet((0L until 1000L).toDF("v"), dir)
-    Sinks.appendTagged((1000L until 1100L).toDF("v"), dir, "r0-0")
-    val fs = fsOf(dir)
+    Store.write(s, root, "test", Map.empty) { st =>
+      st.sized("table", (0L until 1000L).toDF("v"))
+    }
+    appendT(root, (1000L until 1100L).toDF("v"), "r0-0")
+    val before = recordJson(root)
     val tags = (1 to 5).map(i => s"r0-$i")
     tags.zipWithIndex.foreach { case (tag, i) =>
       val lo = 1100L + i * 100L
-      Sinks.appendTagged((lo until lo + 100L).toDF("v"), dir, tag)
+      appendT(root, (lo until lo + 100L).toDF("v"), tag)
     }
-    val m = Sinks.readManifest(fs, table).get
-    Sinks.writeManifestNames(fs, table, m.filter(n =>
-      !tags.exists(t => n.startsWith(s"ingest-$t-part"))).toSeq)
+    tags.foreach(t => uncommit(root, before, t))
     assert(Sinks.readTagged(s, dir).count() === 1100L,
       "stranded attempts visible before replay")
 
@@ -281,7 +232,7 @@ class IngestSpec extends SparkSpec {
     serve.start()
     try tags.zipWithIndex.foreach { case (tag, i) =>
       val lo = 1100L + i * 100L
-      Sinks.appendTagged((lo until lo + 100L).toDF("v"), dir, tag)
+      appendT(root, (lo until lo + 100L).toDF("v"), tag)
     } finally { stop.set(true); serve.join() }
     assert(failures.isEmpty,
       s"concurrent serve failed: ${failures.peek()}")
@@ -306,17 +257,12 @@ class IngestSpec extends SparkSpec {
       "text").write(dir)
     val b1 = docs.filter($"doc_id" % 3 === 1)
     val b2 = docs.filter($"doc_id" % 3 === 2)
-    val fs = fsOf(dir)
-    def sidecar(n: String) = graft.core.FsUtil.readSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, n)).get
     TextProfile.bm25IngestBatch(b1, "text", dir, "r0-0")
-    // snapshot the pre-r0-1 sidecars: the state a crash between
-    // r0-1's data-file renames and its log/params rewrite leaves
-    val midParams = sidecar("params.json")
-    val midLog = sidecar("ingest.json")
+    // the record before r0-1: the state a crash anywhere inside
+    // r0-1's append (before its one commit) leaves
+    val mid = recordJson(dir)
     TextProfile.bm25IngestBatch(b2, "text", dir, "r0-1")
-    val cleanParams = sidecar("params.json")
-    val cleanLog = sidecar("ingest.json")
+    val clean = recordJson(dir)
     val queries = docs.filter($"doc_id" % 100 === 0)
       .select($"doc_id".as("q_id"),
         concat_ws(" ", slice(graft.functions.TextFunctions
@@ -332,83 +278,46 @@ class IngestSpec extends SparkSpec {
       "qtext", TextProfile.readBm25Index(s, freshDir, "doc_id"), k = 5,
       stopwordCut = false).orderBy("q_id", "rank").collect().toSeq)
 
-    // clean replay: full batch re-run with the same tag
+    // clean replay: full batch re-run with the same tag — a no-op
     TextProfile.bm25IngestBatch(b2, "text", dir, "r0-1")
-    assert(sidecar("params.json") === cleanParams)
-    assert(sidecar("ingest.json") === cleanLog)
+    assert(recordJson(dir) === clean)
     assert(probe() === want)
 
-    // torn prefixes of batch r0-1, in the write order df -> postings
-    // -> log -> params. Simulate each crash point by damaging the
-    // store accordingly, then assert the replay repairs it exactly.
-    val post = new org.apache.hadoop.fs.Path(s"$dir/postings.parquet")
-    val dfp = new org.apache.hadoop.fs.Path(s"$dir/df.parquet")
-    // (a) died after df landed, before postings (sidecars still
-    // pre-batch — the log/params rewrite comes after both tables)
-    Sinks.purgeTagged(fs, post, "r0-1")
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "ingest.json"), midLog)
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "params.json"), midParams)
-    TextProfile.bm25IngestBatch(b2, "text", dir, "r0-1")
-    assert(probe() === want, "repair after postings-missing failed")
-    assert(sidecar("params.json") === cleanParams)
-    assert(sidecar("ingest.json") === cleanLog)
-    // (b) died mid-append: the tag never committed (manifest without
-    // its names — the only reachable torn state under the manifest
-    // protocol; committed files cannot vanish), half its renamed
-    // files stranded as orphans, sidecars pre-batch
-    Seq(post, dfp).foreach { t =>
-      val m = Sinks.readManifest(fs, t).get
-      Sinks.writeManifestNames(fs, t,
-        m.filterNot(_.startsWith("ingest-r0-1-part")).toSeq)
-      val tagged = fs.listStatus(t)
-        .filter(_.getPath.getName.startsWith("ingest-r0-1-"))
-      tagged.take(math.max(1, tagged.length / 2))
-        .foreach(f => fs.delete(f.getPath, false))
-    }
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "ingest.json"), midLog)
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "params.json"), midParams)
-    TextProfile.bm25IngestBatch(b2, "text", dir, "r0-1")
-    assert(probe() === want, "repair after half-append failed")
-    // (c) died after both tables landed, before the log/params
-    // rewrite: data complete, sidecars stale
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "ingest.json"), midLog)
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "params.json"), midParams)
-    TextProfile.bm25IngestBatch(b2, "text", dir, "r0-1")
-    assert(sidecar("params.json") === cleanParams)
-    assert(probe() === want, "repair after sidecar-stale failed")
-
-    // batch appends are rejected on a mid-stream store: a live ingest
-    // log recomputes totals as base + Σ(logged entries), which would
-    // silently wipe an unlogged batch's contribution
-    intercept[IllegalArgumentException] {
-      TextProfile.bm25IndexAppend(
-        TextProfile.readBm25Index(s, dir, "doc_id"), b1, "text", dir)
+    // torn attempts of batch r0-1: every file renamed in but the
+    // record never committed, then half of them; the replay must
+    // purge the leftovers and commit exactly once
+    Seq(Int.MaxValue, 1, 0).foreach { keep =>
+      uncommit(dir, mid, "r0-1", keep)
+      val stale = TextProfile.readBm25Index(s, dir, "doc_id")
+      assert(stale.postings.filter($"doc_id" % 3 === 2).count() === 0L,
+        s"uncommitted postings visible (keep=$keep)")
+      TextProfile.bm25IngestBatch(b2, "text", dir, "r0-1")
+      assert(probe() === want, s"repair after torn append failed (keep=$keep)")
+      val r = storeRecord(dir)
+      assert((r.long("docs"), r.long("tokens")) ===
+        ((storeRecord(freshDir).long("docs"),
+          storeRecord(freshDir).long("tokens"))))
     }
 
-    // the ABANDONED-stream crash (died between its log write and its
-    // params write, never replayed): params stale, log authoritative.
-    // Compaction must fold the log's totals instead of baking the
-    // stale undercount in permanently.
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "params.json"), midParams)
-    assert(TextProfile.bm25SortDrifted(s, dir), "ingest left no drift?")
+    // an ABANDONED attempt (crashed before its commit, never
+    // replayed): quiesced compaction keeps only committed state, and
+    // the applied tags survive it — a committed tag still replays as
+    // a no-op afterwards, the abandoned one still redoes
+    val beforeR02 = recordJson(dir)
+    TextProfile.bm25IngestBatch(
+      Seq((-1L, "zz abandoned")).toDF("doc_id", "text"), "text", dir,
+      "r0-2")
+    uncommit(dir, beforeR02, "r0-2")
+    assert(!storeRecord(dir).tables("postings.parquet").sorted,
+      "ingest left the postings sorted?")
     val rep = Maintenance.compactAll(s, Seq(dir))
-    assert(rep(dir).kind === "bm25-index")
+    assert(rep(dir).kind === "bm25-index" && rep(dir).compacted)
     assert(probe() === want, "probe moved across compaction")
-    val cleanIdx = TextProfile.readBm25Index(s, dir, "doc_id")
-    val freshIdx = TextProfile.readBm25Index(s, freshDir, "doc_id")
-    assert((cleanIdx.nDocs, cleanIdx.totTokens) ===
-      ((freshIdx.nDocs, freshIdx.totTokens)),
-      "compaction kept the stale params instead of folding the log")
-    assert(!graft.core.FsUtil.readSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "ingest.json")).isDefined,
-      "compaction must drop the ingest log (fresh-run baseline)")
+    val gen = storeRecord(dir).generation
+    TextProfile.bm25IngestBatch(b2, "text", dir, "r0-1")
+    assert(storeRecord(dir).generation === gen,
+      "a committed tag re-applied after compaction")
+    assert(storeRecord(dir).compacted)
   }
 
   test("ingest and serve streams compose on one store: a doc ingested in batch N is retrievable in the serve's batch N+1") {
@@ -453,6 +362,83 @@ class IngestSpec extends SparkSpec {
       assert(hits() === 1L,
         "ingested doc not retrievable by the serve's next batch")
     } finally { ingest.stop(); serve.stop() }
+  }
+
+  test("serve beside ingest on one BM25 store: every serve batch equals a fresh index over a committed prefix; every read is one generation") {
+    val s = spark
+    import s.implicits._
+    val all = Tables.load(s, sf0001, "documents").select("doc_id", "text")
+      .orderBy("doc_id").limit(420).as[(Long, String)].collect().toSeq
+    val (seed, rest) = all.splitAt(200)
+    val batches = rest.grouped(20).toSeq // 11 ingest batches
+    val root = tmp("beside")
+    val dir = s"$root/idx"
+    TextProfile.bm25Index(seed.toDF("doc_id", "text"), "doc_id", "text")
+      .write(dir)
+    val queries = Seq(all(3), all(210), all(260), all(330), all(410))
+      .zipWithIndex.map { case ((_, text), i) =>
+        (i.toLong, text.split("\\s+").take(4).mkString(" "))
+      }
+    val qdf = queries.toDF("q_id", "qtext")
+    // the serve's possible answers: a fresh index over each committed
+    // prefix of the ingest batches
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.select("q_id", "doc_id", "rank").collect().map(_.toSeq).toSet
+    val prefixes = (0 to batches.size).map { j =>
+      rows(TextProfile.bm25TopKWithIndex(qdf, "q_id", "qtext",
+        TextProfile.bm25Index((seed ++ batches.take(j).flatten)
+          .toDF("doc_id", "text"), "doc_id", "text"), k = 5,
+        stopwordCut = false))
+    }
+    implicit val sqlCtx = s.sqlContext
+    val docsIn = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val qIn = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val outDir = s"$root/out"
+    val ingest = graft.streaming.StreamJobs.bm25IngestStream(
+        docsIn.toDS().toDF("doc_id", "text"), dir, "text", "beside")
+      .option("checkpointLocation", s"$root/ckpt_i").start()
+    val serve = graft.streaming.StreamJobs.bm25LookupStream(
+        qIn.toDS().toDF("q_id", "qtext"), dir, outDir, "q_id", "qtext",
+        "doc_id", k = 5, stopwordCut = false)
+      .option("checkpointLocation", s"$root/ckpt_s").start()
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val writer = new Thread(() => {
+      try batches.foreach { b =>
+        docsIn.addData(b); ingest.processAllAvailable()
+      } catch { case e: Throwable => failure.set(e) }
+    }, "graft-ingest-beside")
+    var reads = 0
+    try {
+      writer.start()
+      while (writer.isAlive || reads < 2) {
+        qIn.addData(queries); serve.processAllAvailable()
+        // a read taken mid-ingest is one generation: its df partials
+        // count exactly its postings' (term, doc) pairs, and N its docs
+        val idx = TextProfile.readBm25Index(s, dir, "doc_id")
+        val pairs = idx.postings.select("term", "doc_id").distinct().count()
+        val sumDf = idx.dfreq.agg(sum("__df")).head().getLong(0)
+        val docs = idx.postings.select("doc_id").distinct().count()
+        assert(sumDf === pairs, s"read $reads: Σdf $sumDf != pairs $pairs")
+        assert(idx.nDocs === docs, s"read $reads: N ${idx.nDocs} != docs $docs")
+        reads += 1
+      }
+      writer.join()
+      qIn.addData(queries); serve.processAllAvailable()
+    } finally { ingest.stop(); serve.stop() }
+    assert(failure.get() === null, s"ingest failed: ${failure.get()}")
+    assert(storeRecord(dir).applied.size === batches.size)
+    val served = s.read.parquet(outDir)
+    val ids = served.select("batch_id").distinct().as[Long].collect().sorted
+    assert(ids.length >= 2)
+    ids.foreach { id =>
+      val got = rows(served.filter($"batch_id" === id))
+      assert(prefixes.contains(got),
+        s"serve batch $id matches no committed prefix: $got")
+    }
+    // the serve after the last commit sees everything
+    assert(rows(served.filter($"batch_id" === ids.last)) === prefixes.last)
   }
 
   test("ivfPqIngestBatch: replay converges; streamed encode matches full-build codes") {
@@ -517,10 +503,10 @@ class IngestSpec extends SparkSpec {
       "text", "r0-0")
     assert(s.read.parquet(s"$dir/signed.parquet").count() === rows)
     assert(pairs() === want)
-    // an index without a params sidecar cannot take streaming ingest
+    // a directory without a store record cannot take streaming ingest
     val fs = fsOf(dir)
-    fs.delete(new org.apache.hadoop.fs.Path(dir,
-      graft.operators.Dedup.ParamsSidecar), false)
+    fs.delete(new org.apache.hadoop.fs.Path(dir, Store.RecordFile),
+      false)
     intercept[java.io.IOException] {
       graft.operators.Dedup.minhashIngestBatch(b1, dir, "doc_id",
         "text", "r0-1")
@@ -538,10 +524,23 @@ class IngestSpec extends SparkSpec {
       dir)
     val b1 = graft.operators.CorpusProfile.build(
       docs.filter($"doc_id" % 2 === 1), "doc_id", "lang", "text")
-    graft.operators.CorpusProfile.ingestBatch(b1, dir, "r0-0")
     def stats() = graft.operators.CorpusProfile.stats(
       graft.operators.CorpusProfile.read(s, dir, "lang", "text"))
       .orderBy("lang").collect().toSeq
+    val seeded = stats()
+    // the torn state a crash between the tokens and strata files
+    // leaves — tokens renamed in, strata not, record not committed —
+    // is invisible: readers see the pre-batch profile
+    val before = recordJson(dir)
+    graft.operators.CorpusProfile.ingestBatch(b1, dir, "r0-0")
+    val fs = fsOf(dir)
+    uncommit(dir, before, "r0-0")
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/strata.parquet"))
+      .filter(_.getPath.getName.startsWith("ingest-r0-0-"))
+      .foreach(f => fs.delete(f.getPath, false))
+    assert(stats() === seeded, "torn attempt visible to readers")
+    // the replay purges the torn leftovers and converges
+    graft.operators.CorpusProfile.ingestBatch(b1, dir, "r0-0")
     val want = stats()
     assert(want === graft.operators.CorpusProfile.stats(
       graft.operators.CorpusProfile.build(docs, "doc_id", "lang",
@@ -550,15 +549,6 @@ class IngestSpec extends SparkSpec {
     // clean replay
     graft.operators.CorpusProfile.ingestBatch(b1, dir, "r0-0")
     assert(stats() === want)
-    // the torn state append()'s write order makes detectable — tokens
-    // landed, strata did not (crash between the two appends): with
-    // plain append a retry double-counts (appendOnce's documented
-    // window); the tagged replay purges and converges instead
-    val fs = fsOf(dir)
-    graft.sources.Sinks.purgeTagged(fs,
-      new org.apache.hadoop.fs.Path(s"$dir/strata.parquet"), "r0-0")
-    graft.operators.CorpusProfile.ingestBatch(b1, dir, "r0-0")
-    assert(stats() === want, "torn-state replay did not converge")
   }
 
   test("ivfIngestBatch: replay converges; ingested store probes identically to full build") {

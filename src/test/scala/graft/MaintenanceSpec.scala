@@ -52,9 +52,9 @@ class MaintenanceSpec extends SparkSpec {
     assert(!rep2.compacted, rep2.toString)
 
     // vocab-DISJOINT append: df stays one row per term (no partials)
-    // yet the posting term-sort is broken — only the sortedFiles
-    // stamp sees it; a partials-only gate would report the store
-    // idle while file pruning stays degraded indefinitely
+    // yet the posting term-sort is broken — only the record's sorted
+    // flag sees it; a partials-only gate would report the store idle
+    // while file pruning stays degraded indefinitely
     val disjoint = Seq((900001L, "zzqxa zzqxb zzqxc"),
       (900002L, "zzqxd zzqxe")).toDF("doc_id", "text")
     TextProfile.bm25IndexAppend(
@@ -62,11 +62,11 @@ class MaintenanceSpec extends SparkSpec {
       dir)
     assert(!TextProfile.bm25HasPartials(s, dir),
       "disjoint append should leave no df partials")
-    assert(TextProfile.bm25SortDrifted(s, dir),
-      "stamp failed to flag the unsorted append")
+    assert(!storeRecord(dir).tables("postings.parquet").sorted,
+      "record failed to flag the unsorted append")
     val rep3 = Maintenance.compactAll(s, Seq(dir))(dir)
     assert(rep3.compacted, rep3.toString)
-    assert(!TextProfile.bm25SortDrifted(s, dir), "compact did not re-stamp")
+    assert(storeRecord(dir).compacted, "compact did not re-sort")
   }
 
   test("append-drifted corpus profile: partials collapsed, stats identical") {
@@ -146,6 +146,69 @@ class MaintenanceSpec extends SparkSpec {
     assert(probe() == before, "probe changed across compaction")
   }
 
+  test("IVF and IVF-PQ compaction re-sorts the declared cell column: disjoint per-file cell ranges, a 1-probe scan skips the other cells' rows") {
+    val s = spark
+    import s.implicits._
+    val emb = Tables.load(s, sf001, "embeddings")
+    val ivf = tmp("ivfsort")
+    val pq = tmp("ivfpqsort")
+    Similarity.ivfIndex(emb.filter($"vec_id" % 4 === 0), "vec_id",
+      "embedding", nlist = 16).write(ivf)
+    val built = Similarity.ivfPqIndex(emb.filter($"vec_id" % 4 === 0),
+      "vec_id", "embedding", dim = 64, nlist = 16)
+    built.write(pq)
+    built.release()
+    (1 to 3).foreach { r =>
+      val b = emb.filter($"vec_id" % 4 === r).select("vec_id", "embedding")
+      Similarity.ivfIngestBatch(b, ivf, "vec_id", "embedding", s"r$r")
+      Similarity.ivfPqIngestBatch(b, pq, "vec_id", "embedding", s"r$r")
+    }
+    val helper =
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    Seq((ivf, "assigned.parquet"), (pq, "codes.parquet")).foreach {
+      case (dir, table) =>
+        val bytes = new java.io.File(s"$dir/$table").listFiles()
+          .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+        // a small target so the re-pack spreads over several files
+        val rep = Maintenance.compactAll(s, Seq(dir),
+          targetFileBytes = math.max(1L, bytes / 6))(dir)
+        assert(rep.compacted, rep.toString)
+        assert(storeRecord(dir).tables(table).sorted)
+        val ranges = s.read.parquet(s"$dir/$table")
+          .groupBy(input_file_name())
+          .agg(min("cell"), max("cell")).collect()
+          .map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+        assert(ranges.size >= 2, s"$table: one file, nothing to prune")
+        ranges.sliding(2).foreach { case Seq(a, b) =>
+          assert(a._2 < b._1, s"$table: overlapping cell ranges $ranges")
+        }
+        val rows = s.read.parquet(s"$dir/$table").count()
+        val q = emb.filter($"vec_id" === 7L)
+        val probe =
+          if (table == "assigned.parquet")
+            Similarity.ivfTopKWithIndex(q,
+              Similarity.readIvfIndex(s, dir, "vec_id", "embedding"),
+              k = 5, nprobe = 1)
+          else Similarity.ivfPqTopKWithIndex(q,
+            Similarity.readIvfPqIndex(s, dir, "vec_id", "embedding"),
+            k = 5, nprobe = 1)
+        probe.collect()
+        // Spark's parquet source lists every file of the scan (its
+        // numFiles metric is the table's file count); the pruning is
+        // the pushed In(cell) skipping every row group outside the
+        // probed cell, so the scan emits only that cell's file rows
+        val scanned = helper.collectWithSubqueries(
+            probe.queryExecution.executedPlan) {
+          case p: org.apache.spark.sql.execution.FileSourceScanExec
+              if p.relation.location.rootPaths
+                .exists(_.toString.contains(table)) =>
+            p.metrics("numOutputRows").value
+        }
+        assert(scanned.nonEmpty && scanned.forall(_ < rows),
+          s"$table: 1-probe scan read $scanned of $rows rows")
+    }
+  }
+
   test("append-drifted decon set: detected, re-distinct + re-sort + restamp, probe identical") {
     val s = spark
     val docs = Tables.load(s, sf0001, "documents")
@@ -157,7 +220,7 @@ class MaintenanceSpec extends SparkSpec {
     // append the SAME benchmark: pure duplicates — the probe must not
     // move, but layout drift must be detected and compacted away
     graft.operators.Curation.deconSetAppend(bench, "doc_id", "text", dir)
-    assert(graft.operators.Curation.deconSetSortDrifted(s, dir))
+    assert(!storeRecord(dir).compacted)
     def probe() = graft.operators.Curation.decontaminateWithSet(corpus,
         graft.operators.Curation.readDeconSet(s, dir)._1,
         "doc_id", "text", 4)
@@ -166,8 +229,7 @@ class MaintenanceSpec extends SparkSpec {
     val grown = files(s"$dir/grams.parquet")
     val rep = Maintenance.compactAll(s, Seq(dir))(dir)
     assert(rep.kind == "decon-set", rep.kind)
-    assert(!graft.operators.Curation.deconSetSortDrifted(s, dir),
-      "compact did not restamp")
+    assert(storeRecord(dir).compacted, "compact did not re-sort")
     assert(files(s"$dir/grams.parquet") < grown,
       s"duplicates not collapsed: $grown -> ${files(s"$dir/grams.parquet")}")
     assert(probe() == before, "probe changed across compaction")

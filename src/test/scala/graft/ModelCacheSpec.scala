@@ -4,11 +4,11 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.ModelCache
 
-/** The sidecar-stamp model cache behind the serve streams (round-17
-  * finding #3): per-batch store reads must collapse to stamp probes,
-  * WITHOUT weakening the freshness contract — a mid-stream append
-  * still takes effect from the next micro-batch, because the append
-  * moves the stamp. */
+/** The generation-keyed model cache behind the serve streams
+  * (round-17 finding #3): per-batch store reads must collapse to one
+  * record read, WITHOUT weakening the freshness contract — a
+  * mid-stream append still takes effect from the next micro-batch,
+  * because the append raises the store's generation. */
 class ModelCacheSpec extends SparkSpec {
 
   private def tmp(name: String): String =
@@ -18,29 +18,23 @@ class ModelCacheSpec extends SparkSpec {
     ModelCache.clear()
     val s = spark
     val dir = tmp("mech") + "/store"
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "params.json"), """{"v":1}""")
+    graft.store.Store.write(s, dir, "test", Map("v" -> 1L)) { _ => () }
     var loads = 0
     var releases = 0
-    def get(): String = ModelCache.getOrLoad(s, dir, Seq("t.parquet")) {
+    def get(): String = ModelCache.getOrLoad(s, dir) {
       loads += 1; s"model-$loads"
     } { _ => releases += 1 }
     assert(get() === "model-1" && get() === "model-1")
     assert(loads === 1 && releases === 0)
-    // the stamp includes mtime+content of params.json AND each
-    // table's manifest: moving either forces a reload that first
-    // releases the stale entry
-    graft.core.FsUtil.writeSidecar(fs,
-      new org.apache.hadoop.fs.Path(dir, "params.json"), """{"v":2}""")
+    // the key is the store's generation: a rewrite raises it and
+    // forces a reload that first releases the stale entry
+    graft.store.Store.write(s, dir, "test", Map("v" -> 2L)) { _ => () }
     assert(get() === "model-2")
     assert(loads === 2 && releases === 1)
-    val mdir = new org.apache.hadoop.fs.Path(dir, "t.parquet")
-    fs.mkdirs(mdir)
-    graft.core.FsUtil.writeSidecar(fs, new org.apache.hadoop.fs.Path(
-      mdir, graft.sources.Sinks.ManifestFile), """{"names":["a"]}""")
+    // and so does an append's commit
+    import s.implicits._
+    graft.store.Store.append(s, dir, storeRecord(dir), "t0",
+      Seq("t.parquet" -> Seq(1L).toDF("v")))
     assert(get() === "model-3")
     assert(loads === 3 && releases === 2)
     // a caller whose loaded value bakes in per-stream parameters
@@ -51,7 +45,7 @@ class ModelCacheSpec extends SparkSpec {
     var l2 = 0
     var rel2 = 0
     def getKeyed(k: String): String =
-      ModelCache.getOrLoad(s, dir, Seq("t.parquet"), key = k) {
+      ModelCache.getOrLoad(s, dir, key = k) {
         l2 += 1; s"$k-model-$l2"
       } { _ => rel2 += 1 }
     assert(getKeyed(s"$dir#0.3") === s"$dir#0.3-model-1")
@@ -69,14 +63,6 @@ class ModelCacheSpec extends SparkSpec {
       "a retired key should reload fresh")
     ModelCache.invalidate(dir)
     assert(rel2 === 3)
-    // disabled = the pre-cache behavior, one batch deferred: every
-    // call is a forced miss that loads fresh and releases the
-    // PREVIOUS entry — storage stays bounded at one model per key
-    ModelCache.enabled = false
-    try {
-      get(); assert(loads === 4 && releases === 3) // entry was gone
-      get(); assert(loads === 5 && releases === 4) // prior forced miss released
-    } finally ModelCache.enabled = true
   }
 
   test("retiring a decon-set dir via invalidate(dir) releases the serve's composite-keyed probe entry") {
@@ -139,13 +125,13 @@ class ModelCacheSpec extends SparkSpec {
       val loads0 = ModelCache.loads
       in.addData(Seq((10L, "alpha beta gamma"))); q.processAllAvailable()
       assert(ModelCache.loads === loads0 + 1)
-      // same store, next batch: stamp unchanged → NO reload, and the
+      // same store, next batch: generation unchanged → NO reload, and the
       // identical text scores identically (same model)
       in.addData(Seq((11L, "alpha beta gamma"))); q.processAllAvailable()
       assert(ModelCache.loads === loads0 + 1,
         "unchanged store re-read — the fixed cost the cache exists to drop")
       assert(bitsOf(11L) === bitsOf(10L))
-      // mid-stream append: new reference mass moves the stamp; the
+      // mid-stream append: new reference mass raises the generation; the
       // NEXT batch must score against the grown model
       // enough repeated (alpha, beta) mass that the integer
       // bit-length cost of the scored bigram itself moves — the
@@ -157,7 +143,7 @@ class ModelCacheSpec extends SparkSpec {
         "text", modelDir, tag = "mc-append")
       in.addData(Seq((12L, "alpha beta gamma"))); q.processAllAvailable()
       assert(ModelCache.loads === loads0 + 2,
-        "append did not move the stamp")
+        "append did not raise the generation")
       assert(bitsOf(12L) !== bitsOf(10L),
         "post-append batch scored against the stale model")
       // and the post-append score equals a FRESH read's score — the
@@ -181,32 +167,29 @@ class ModelCacheSpec extends SparkSpec {
       .ivfIndex(emb, "vec_id", "embedding", nlist = 4).write(dir)
     var loads = 0
     def handle(): graft.operators.Similarity.IvfReady =
-      ModelCache.getOrLoad(s, dir, Seq("assigned.parquet"),
-          key = s"$dir#ivf",
-          extraFiles = Seq("assigned.parquet/_SUCCESS",
-            "codebook.parquet/_SUCCESS")) {
+      ModelCache.getOrLoad(s, dir, key = s"$dir#ivf") {
         loads += 1
         graft.operators.Similarity.ivfReady(
           graft.operators.Similarity.readIvfIndex(s, dir, "vec_id",
             "embedding"))
       } (_ => ())
     handle(); handle()
-    assert(loads === 1, "quiet store must stamp-hit, not reload")
-    // the IVF store writes no params.json — freshness rides the
-    // assigned manifest (tagged ingest) and _SUCCESS (plain append)
+    assert(loads === 1, "quiet store must hit, not reload")
+    // both append forms commit through the store record, raising its
+    // generation
     val batch1 = emb.limit(3)
       .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
     graft.operators.Similarity.ivfIngestBatch(batch1, dir, "vec_id",
       "embedding", tag = "mc-ivf-0")
     handle()
-    assert(loads === 2, "tagged ingest did not move the stamp")
+    assert(loads === 2, "tagged ingest did not raise the generation")
     val batch2 = emb.limit(3)
       .select(($"vec_id" + 2000000L).as("vec_id"), $"embedding")
     graft.operators.Similarity.ivfAppendToStored(
       graft.operators.Similarity.readIvfIndex(s, dir, "vec_id",
         "embedding"), batch2, dir)
     handle()
-    assert(loads === 3, "plain append did not move the _SUCCESS stamp")
+    assert(loads === 3, "plain append did not raise the generation")
     // and the reloaded handle actually SEES the appended rows
     assert(handle().index.assigned
       .filter($"nn_id" >= 1000000L).count() === 6)

@@ -495,7 +495,7 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Double)].collect().sortBy(_._1).toSeq
     assert(stored === fresh, s"stored=$stored fresh=$fresh")
     assert(stored.nonEmpty, "fixture produced no hits — weak test")
-    // no sidecar → fail fast (guessed planes would silently miss)
+    // no store record → fail fast (guessed planes would silently miss)
     intercept[java.io.IOException] {
       Similarity.readSemanticDeconSet(s,
         java.nio.file.Files.createTempDirectory("graft-edecon-none")
@@ -580,7 +580,7 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Double)].collect().sortBy(_._1).toSeq
     assert(stored === fresh, s"stored=$stored fresh=$fresh")
     assert(stored.nonEmpty, "fixture produced no hits — weak test")
-    // a SINGLE-BAND set (sidecar carries "planes", not "bands") must
+    // a SINGLE-BAND set (a store of another kind) must
     // fail fast — probing it with guessed band shape would compare
     // disjoint keys and silently drop nothing
     val sdir = java.nio.file.Files
