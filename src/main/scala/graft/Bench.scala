@@ -284,13 +284,20 @@ object Bench {
     def midProbe(): Double = {
       val a = calOnce(); Thread.sleep(150); math.min(a, calOnce())
     }
+    // the primary timed run of every row is profiled (bench_last.json's
+    // "profile"); retries and rechecks run untagged, and the profile's
+    // bus drain and snapshot happen after each row's t1
+    val prof = graft.obs.QueryProfile.install(spark)
     ordered.zipWithIndex.foreach { case ((name, fn), i) =>
       if (i > 0 && i % calEvery == 0) { midCals += midProbe(); ioCals += ioOnce() }
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      raw += name -> ((System.nanoTime() - t0) / 1e9)
+      prof.row(name) {
+        val t0 = System.nanoTime()
+        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        raw += name -> ((System.nanoTime() - t0) / 1e9)
+      }
       spark.catalog.clearCache()
     }
+    prof.close()
     // The driver's capture window is 2,000 bytes and the round-7 line
     // (3-decimal, with "unit") measured ~2,010 — decapitated, third
     // parsed:null round. Precision is now ADAPTIVE: level 0 is
@@ -684,10 +691,14 @@ object Bench {
         else s""""rcal":${f(recheckCal)},""" +
           recheck.map { case (n, v) => "\"" + n + "\":" + f(v) }
             .mkString(""""recheck":{""", ",", "},")
+      // where each row's seconds went (graft.obs.QueryProfile.Row)
+      val profile = ordered.map { case (n, _) =>
+        graft.core.Json.quote(n) + ":" + prof.json(n)
+      }.mkString("{", ",", "}")
       s"""{"metric":"total","value":${f(total)},"cal":${f(cal)},""" +
         s""""cal2":${f(cal2)},$cal3Field$mcal$retryField$recheckField""" +
         s""""queries":$qs,"sf":"$sfName",""" +
-        s""""rps":${throughput.toLong}}"""
+        s""""rps":${throughput.toLong},"profile":$profile}"""
     }
 
     // persist BEFORE stop(): a hung (not just throwing) shutdown hook

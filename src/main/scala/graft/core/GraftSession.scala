@@ -29,6 +29,13 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.files.maxPartitionBytes", (128L << 20).toString)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      // v2 moves each task's output into the destination as the task
+      // commits, so a failed job leaves its committed tasks' files
+      // visible. The writes that rely on it tolerate that: store tables
+      // (graft.store.Store) are written under a staging dir and stay
+      // unlisted until the store record commits, and serve outputs
+      // (StreamJobs' lookup streams) overwrite their batch_id=<id> dir
+      // when the checkpoint replays the batch.
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     master.orElse(sys.env.get("SPARK_GRAFT_MASTER")).foreach(b.master)
     val spark = b.getOrCreate()

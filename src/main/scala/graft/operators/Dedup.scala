@@ -64,14 +64,6 @@ object Dedup {
       .filter(size(col("sh_set")) > 0)
       .withColumn("sz", size(col("sh_set")).cast("long"))
 
-  /** Distinct (id, shingle) pairs — the classic inverted-index shape,
-    * now a narrow explode of [[shingleSets]] (distinctness is
-    * per-document, so no shuffle is needed to deduplicate). */
-  def shingleIndex(df: DataFrame, idCol: String, textCol: String,
-      n: Int): DataFrame =
-    shingleSets(df, idCol, textCol, n)
-      .select(col(idCol), explode(col("sh_set")).as("shingle"))
-
   /** All-pairs n-gram Jaccard: pairs of documents with
     * round(jaccard, 4) >= threshold. Returns (id_a, id_b, jaccard)
     * with id_a < id_b.
@@ -234,18 +226,6 @@ object Dedup {
   def minhashSigCol(shSet: Column, numHashes: Int): Column =
     graft.plans.GraftCall(graft.plans.TextExpressions.MinHashName, shSet,
       lit(numHashes), lit(7), lit(20))
-
-  /** MinHash signatures from raw text (one row per id, numHashes
-    * mh_<k> columns). Documents with no shingles are dropped (nothing
-    * to sign). Kept as the column-per-hash public shape; the array
-    * form ([[minhashSigCol]]) is the internal hot path. */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      n: Int, numHashes: Int): DataFrame = {
-    val sig = shingleSets(df, idCol, textCol, n)
-      .withColumn("__sig", minhashSigCol(col("sh_set"), numHashes))
-    sig.select(col(idCol) +: (0 until numHashes).map(k =>
-      element_at(col("__sig"), k + 1).as(s"mh_$k")): _*)
-  }
 
   /** MinHash + LSH banding: candidate pairs from band-signature buckets,
     * then verified with true n-gram Jaccard. rowsPerBand minhashes are

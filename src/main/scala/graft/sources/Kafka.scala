@@ -54,16 +54,6 @@ object Kafka {
   def read(spark: SparkSession, c: SourceConfig): DataFrame =
     spark.read.format("kafka").options(sourceOptions(c)).load()
 
-  /** The serde projection: Kafka's byte envelope → typed (key, value)
-    * strings plus provenance columns — the string-serde default of the
-    * reference's KVSerde. Callers layer Avro/JSON on top exactly as
-    * Samza serdes compose. */
-  def kvStrings(df: DataFrame): DataFrame =
-    df.selectExpr(
-      "CAST(key AS STRING) AS key",
-      "CAST(value AS STRING) AS value",
-      "topic", "partition", "offset", "timestamp")
-
   /** KafkaOutputDescriptor analog → options for
     * `writeStream.format("kafka")`. The frame must carry `key`/`value`
     * columns (binary or string), matching the connector's contract. */

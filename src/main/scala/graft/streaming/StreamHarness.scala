@@ -30,35 +30,22 @@ object StreamHarness {
 
   private val nameCounter = new AtomicInteger(0)
 
-  /** Dev-profiling hook: when set, receives every finished harness
-    * query's recentProgress just before stop — the per-batch
-    * durationMs breakdown behind BASELINE.md's micro-batch-floor
-    * analysis (tools/ProfileStreamFloor). Never set in production or
-    * test paths. */
-  @volatile private[graft] var progressProbe:
-    Array[org.apache.spark.sql.streaming.StreamingQueryProgress] => Unit =
-    null
-
   /** Live-query observer: when set, receives each harness query
     * while it is STILL RUNNING (after its final micro-batch, just
     * before stop) — tools.LintReport lints the IncrementalExecution
     * (state-store operators, stream-side exchanges) through it,
-    * which the collected batch-result frame can never show. Same
-    * contract as [[progressProbe]]: dev-tool only, JVM-global like
-    * the rest of the harness state, never set in production or gate
-    * paths. */
+    * which the collected batch-result frame can never show. Dev-tool
+    * only, JVM-global like the rest of the harness state, never set
+    * in production or gate paths. */
   @volatile private[graft] var liveQueryProbe:
     org.apache.spark.sql.streaming.StreamingQuery => Unit = null
 
-  /** Invoke the probes (if set) without letting a probe failure skip
-    * the query stop / checkpoint cleanup that follows in the caller's
-    * finally, or mask the body's own exception. Reads each volatile
-    * once — a concurrent clear can't NPE between check and call. */
-  private def probeProgress(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val probe = progressProbe
-    if (probe != null)
-      try probe(q.recentProgress)
-      catch { case scala.util.control.NonFatal(_) => () }
+  /** Invoke the live-query probe (if set) without letting a probe
+    * failure skip the query stop / checkpoint cleanup that follows in
+    * the caller's finally, or mask the body's own exception. Reads the
+    * volatile once — a concurrent clear can't NPE between check and
+    * call. */
+  private def probeLive(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val live = liveQueryProbe
     if (live != null)
       try live(q)
@@ -207,7 +194,7 @@ object StreamHarness {
           q.processAllAvailable()
         }
       } finally {
-        probeProgress(q)
+        probeLive(q)
         q.stop(); CheckpointScratch.delete(ckpt)
       }
       spark.table(name)
@@ -270,7 +257,7 @@ object StreamHarness {
           q.processAllAvailable()
         }
       } finally {
-        probeProgress(q)
+        probeLive(q)
         q.stop(); CheckpointScratch.delete(ckpt)
       }
       spark.table(name)

@@ -3,6 +3,8 @@ package graft.tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.store.Store
+
 /** Table write-side operators: upsert, delete-on-null (tombstones) and
   * partial update with default-on-missing — the sendTo(table) family
   * (SendToTableOperatorImpl.java, SendToTableWithUpdateOperatorImpl.java,
@@ -60,18 +62,45 @@ object TableOps {
       }: _*)
   }
 
+  /** Store kind of an [[upsertSink]] table. */
+  val UpsertKind = "upsert-table"
+
   /** Streaming sink: maintain a parquet-backed upsert table from a
-    * streaming DataFrame via foreachBatch — the sendTo(table) terminal. */
+    * streaming DataFrame via foreachBatch — the sendTo(table) terminal.
+    *
+    * The table is a [[graft.store.Store]] whose one table,
+    * `rows.parquet`, is replaced by every batch: the merge of the
+    * committed rows and the batch is staged and swapped in with the
+    * record, so a crash leaves the previous table whole, and a
+    * committed file that cannot be read fails the batch rather than
+    * passing for "no table yet". No record means the first batch; a
+    * non-empty `path` without one is refused. The batch's tag (the
+    * streaming query id, which the checkpoint keeps across restarts,
+    * plus the batch id) enters the record's applied tags, so a
+    * replayed batch is a no-op. */
   def upsertSink(spark: SparkSession, path: String, keyCols: Seq[String],
       seqCol: String)(batch: DataFrame, batchId: Long): Unit = {
-    val merged =
-      try {
-        val base = spark.read.parquet(path)
-        upsert(base, batch, keyCols, seqCol)
-      } catch { case _: Exception => batch } // first batch: no table yet
-    // two-phase write: parquet can't overwrite its own input in place
-    val tmp = path + "_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
+    val query = Option(spark.sparkContext.getLocalProperty(
+      "sql.streaming.queryId"))
+    val tag = query.fold("")(_ + "-") + s"batch-$batchId"
+    val rec = Store.read(spark, path)
+    if (rec.isEmpty) {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p) && fs.listStatus(p).nonEmpty)
+        throw new java.io.IOException(
+          s"$path is not empty but holds no upsert table record")
+    }
+    if (!rec.exists(_.applied.contains(tag))) {
+      val merged = rec.fold(batch)(r => upsert(
+        Store.table(spark, path, r, "rows.parquet"), batch, keyCols, seqCol))
+      Store.write(spark, path, UpsertKind, Map.empty,
+        Map(tag -> Map.empty)) { st => st.plain("rows.parquet", merged) }
+    }
   }
+
+  /** The committed rows of an [[upsertSink]] table. */
+  def readUpsertTable(spark: SparkSession, path: String): DataFrame =
+    Store.table(spark, path, Store.require(spark, path, UpsertKind),
+      "rows.parquet")
 }

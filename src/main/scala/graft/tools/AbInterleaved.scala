@@ -5,7 +5,8 @@ package graft.tools
   * several reps, all in one JVM, and prints per-(query, value) min and
   * median. Cross-JVM pairs on this box swing ±30% with its burst
   * behavior; interleaving inside one JVM pins both arms to the same
-  * drift. Usage:
+  * drift. Each `[ab]` line carries that run's
+  * [[graft.obs.QueryProfile]] breakdown. Usage:
   * {{{ runMain graft.tools.AbInterleaved <sfDir> <reps> <prop> \
   *     <valueA> <valueB> <name> [name...] }}}  */
 object AbInterleaved {
@@ -33,16 +34,19 @@ object AbInterleaved {
 
     val t = scala.collection.mutable.Map
       .empty[(String, String), Vector[Double]].withDefaultValue(Vector())
+    val prof = graft.obs.QueryProfile.install(spark)
     for (r <- 1 to reps; v <- values; n <- names) {
       sys.props(prop) = v
-      val t0 = System.nanoTime()
-      try graft.SparkEntry.queries(n)(spark, sfDir).count()
-      catch { case e: Throwable => System.err.println(s"[run] $n: $e") }
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = prof.row(n) {
+        val t0 = System.nanoTime()
+        try graft.SparkEntry.queries(n)(spark, sfDir).count()
+        catch { case e: Throwable => System.err.println(s"[run] $n: $e") }
+        (System.nanoTime() - t0) / 1e9
+      }
       t((n, v)) = t((n, v)) :+ sec
       spark.catalog.clearCache()
       graft.streaming.ModelCache.clear()
-      println(f"[ab] rep=$r $prop=$v $n ${sec}%.2f s")
+      println(f"[ab] rep=$r $prop=$v $n ${sec}%.2f s " + prof.json(n))
     }
     names.foreach { n =>
       values.foreach { v =>

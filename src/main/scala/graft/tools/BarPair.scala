@@ -7,8 +7,10 @@ package graft.tools
   * scale-claim rows, where a full sweep would take an hour the box's
   * burst behavior would corrupt anyway. Usage:
   * {{{ runMain graft.tools.BarPair <sfDir> <name> [name...] }}}
-  * Prints one line per pass: `pass=A {"q":sec,...} cal=<s>`, then a
-  * `bars` line with the per-query max of the pair. */
+  * Prints one line per pass: `pass=A {"q":sec,...} cal=<s>`, followed
+  * by one `profile pass=A "q" {...}` line per query (the
+  * [[graft.obs.QueryProfile]] breakdown of that timing), then a `bars`
+  * line with the per-query max of the pair. */
 object BarPair {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: BarPair <sfDir> <name> [name...]")
@@ -45,23 +47,29 @@ object BarPair {
     // "0.50") poisons BenchBars — every later run reads 2x+ the bogus
     // bar, the ratio-ordered retry arm ranks it first, and the breach
     // line parades a phantom regression
+    val prof = graft.obs.QueryProfile.install(spark)
     def pass(label: String): Map[String, Double] = {
       val cal = calOnce()
       val times = names.map { n =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { graft.SparkEntry.queries(n)(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[barpair] $n FAILED: $e"); false }
-        val s = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        val s = prof.row(n) {
+          val t0 = System.nanoTime()
+          val ok =
+            try { graft.SparkEntry.queries(n)(spark, sfDir).count(); true }
+            catch { case e: Throwable =>
+              System.err.println(s"[barpair] $n FAILED: $e"); false }
+          if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        }
         spark.catalog.clearCache()
-        n -> s
+        n -> (s, prof.json(n))
       }.toMap
       val cal2 = calOnce()
       println(s"pass=$label " + times.toSeq.sortBy(_._1)
-        .map { case (n, s) => f""""$n":$s%.2f""" }
+        .map { case (n, (s, _)) => f""""$n":$s%.2f""" }
         .mkString("{", ",", "}") + f" cal=$cal%.2f cal2=$cal2%.2f")
-      times
+      times.toSeq.sortBy(_._1).foreach { case (n, (_, p)) =>
+        println(s"profile pass=$label ${graft.core.Json.quote(n)} $p")
+      }
+      times.map { case (n, (s, _)) => n -> s }
     }
     val a = pass("A")
     val b = pass("B")

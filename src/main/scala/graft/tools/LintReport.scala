@@ -117,7 +117,9 @@ object LintReport {
             (_, fs) => all.synchronized { all ++= fs })
           try {
             q.run(spark, sfDir).count()
-            Thread.sleep(2000) // listener bus delivers asynchronously
+            // the listener bus delivers asynchronously
+            org.apache.spark.sql.graftbridge.PlanBridge
+              .drainListeners(spark.sparkContext)
           } finally graft.plans.ScaleLint.detach(spark, l)
           val fs = all.synchronized(all.toSeq)
           val shuffles = fs.filter(_.code == "SHUFFLES")

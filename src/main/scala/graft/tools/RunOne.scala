@@ -6,7 +6,8 @@ import java.nio.file.{Files, Paths}
   * registry entry without paying the full 100-query dump: runs the
   * named queries, writes each result parquet plus an oracle_sql.json
   * restricted to those names, so `scripts/check.py` compares exactly
-  * the slice. Usage:
+  * the slice. Each query's [[graft.obs.QueryProfile]] breakdown goes
+  * to stderr as one JSON line `{"query":..,"profile":{..}}`. Usage:
   * {{{ runMain graft.tools.RunOne <sfDir> <outDir> <name> [name...] }}}
   */
 object RunOne {
@@ -27,12 +28,16 @@ object RunOne {
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     graft.sources.Tables.registerAll(spark, sfDir)
+    val prof = graft.obs.QueryProfile.install(spark)
     names.foreach { name =>
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      prof.row(name) {
+        graft.SparkEntry.queries(name)(spark, sfDir)
+          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }
       System.err.println(
         f"[runone] $name ok (${(System.nanoTime() - t0) / 1e9}%.1f s)")
+      System.err.println(s"""{"query":${q(name)},"profile":${prof.json(name)}}""")
     }
     spark.stop()
   }

@@ -36,4 +36,11 @@ object PlanBridge {
       : Option[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.execution.datasources.DataSourceStrategy
       .translateFilter(e, supportNestedPredicatePushdown = true)
+
+  /** Block until every event posted to the listener bus so far has
+    * reached every listener (`SparkContext.listenerBus` is
+    * private[spark]); how a listener's reader waits for the
+    * asynchronous bus instead of sleeping. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

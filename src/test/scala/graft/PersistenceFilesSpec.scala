@@ -138,43 +138,53 @@ class PersistenceFilesSpec extends SparkSpec {
       "minhash signed lost the big-table parallelism floor")
   }
 
-  test("all six persistence units write gate-scale stores in FEW files (small-file hygiene)") {
+  test("every sized-table store kind writes gate-scale stores in FEW files (small-file hygiene)") {
+    import graft.operators._
     val s = spark
     val docs = Tables.load(s, sf0001, "documents")
     val emb = Tables.load(s, sf0001, "embeddings")
-
-    val mhDir = tmp("minhash")
-    graft.operators.Dedup.writeMinhashIndex(
-      graft.operators.Dedup.minhashIndex(docs, "doc_id", "text",
-        n = 5, numHashes = 16, rowsPerBand = 4), mhDir)
-    assert(parts(mhDir, "signed.parquet") <= 4, "minhash signed")
-
-    val ivfDir = tmp("ivf")
-    graft.operators.Similarity.ivfIndex(emb, "vec_id", "embedding",
-      nlist = 16).write(ivfDir)
-    assert(parts(ivfDir, "assigned.parquet") <= 4, "ivf assigned")
-
-    val pqDir = tmp("pq")
-    graft.operators.Similarity.pqIndex(emb, "vec_id", "embedding",
-      dim = 64).write(pqDir)
-    assert(parts(pqDir, "codes.parquet") <= 4, "pq codes")
-
-    val ivfpqDir = tmp("ivfpq")
-    val ivfpq = graft.operators.Similarity.ivfPqIndex(emb, "vec_id",
-      "embedding", dim = 64, nlist = 16)
-    ivfpq.write(ivfpqDir)
-    ivfpq.release()
-    assert(parts(ivfpqDir, "codes.parquet") <= 4, "ivfpq codes")
-
-    val cpDir = tmp("profile")
-    graft.operators.CorpusProfile.write(
-      graft.operators.CorpusProfile.build(docs, "doc_id", "lang",
-        "text"), cpDir)
-    assert(parts(cpDir, "tokens.parquet") <= 4, "profile tokens")
-
-    val bmDir = tmp("bm25small")
-    graft.operators.TextProfile.bm25Index(docs, "doc_id", "text")
-      .write(bmDir)
-    assert(parts(bmDir, "postings.parquet") <= 4, "bm25 postings")
+    // each store writer with the tables it writes through
+    // Sinks.writeSizedParquet (its other tables are driver-small)
+    val stores: Seq[(String => Unit, Seq[String])] = Seq(
+      (d => Dedup.writeMinhashIndex(Dedup.minhashIndex(docs, "doc_id",
+        "text", n = 5, numHashes = 16, rowsPerBand = 4), d),
+        Seq("signed.parquet")),
+      (d => Similarity.ivfIndex(emb, "vec_id", "embedding", nlist = 16)
+        .write(d), Seq("assigned.parquet")),
+      (d => Similarity.pqIndex(emb, "vec_id", "embedding", dim = 64)
+        .write(d), Seq("codes.parquet")),
+      (d => {
+        val i = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
+          dim = 64, nlist = 16)
+        try i.write(d) finally i.release()
+      }, Seq("codes.parquet")),
+      (d => CorpusProfile.write(
+        CorpusProfile.build(docs, "doc_id", "lang", "text"), d),
+        Seq("tokens.parquet")),
+      (d => TextProfile.bm25Index(docs, "doc_id", "text").write(d),
+        Seq("postings.parquet")),
+      (d => LmScore.writeModel(docs, "text", d),
+        Seq("bigrams.parquet", "firsts.parquet", "unigrams.parquet")),
+      (d => Classify.writeNbModel(docs, "lang", "text", d),
+        Seq("counts.parquet", "classes.parquet", "vocabulary.parquet")),
+      (d => Curation.writeDeconSet(docs, "doc_id", "text", n = 4, d),
+        Seq("grams.parquet")),
+      (d => Similarity.writeSemanticDeconSet(emb, "embedding", d,
+        dim = 64, planes = 3), Seq("bench.parquet")),
+      (d => Similarity.writeSemanticDeconSetBanded(emb, "embedding", d,
+        dim = 64, bands = 4, rowsPerBand = 4), Seq("bench.parquet")))
+    val kinds = stores.zipWithIndex.map { case ((write, tables), i) =>
+      val dir = tmp(s"kind$i")
+      write(dir)
+      val kind = storeRecord(dir).kind
+      tables.foreach(t => assert(parts(dir, t) <= 4, s"$kind $t"))
+      kind
+    }
+    // every store kind but the bench bloom, which is one binary file
+    assert(kinds.toSet == Set(Dedup.MinhashKind, Similarity.IvfKind,
+      Similarity.PqKind, Similarity.IvfPqKind, CorpusProfile.Kind,
+      TextProfile.Bm25Kind, LmScore.Kind, Classify.NbKind,
+      Curation.DeconSetKind, Similarity.SemanticDeconKind,
+      Similarity.BandedDeconKind))
   }
 }

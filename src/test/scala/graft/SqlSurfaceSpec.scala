@@ -304,6 +304,28 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(r.getInt(3) == 1)
   }
 
+  test("each Udfs Column twin equals its SQL-registered form on the same rows") {
+    import org.apache.spark.sql.functions.{col, expr}
+    import graft.functions.Udfs
+    val s = spark
+    import s.implicits._
+    Udfs.register(s)
+    val rows = Seq(("^a.*", "abc", 1), ("b+", "xyz", 22), ("z$", "quiz", 333))
+      .toDF("re", "str", "n")
+      .withColumn("rec", expr("named_struct('a', named_struct('b', n))"))
+    val pairs = Seq(
+      Udfs.regexMatch(col("re"), col("str")) -> "RegexMatch(re, str)",
+      Udfs.getNestedField(col("rec"), "a.b") -> "GetNestedField(rec, 'a.b')",
+      Udfs.buildOutputRecord("x" -> col("n"), "y" -> col("str")) ->
+        "BuildOutputRecord('x', n, 'y', str)",
+      Udfs.convertToString(col("n")) -> "ConvertToString(n)")
+    pairs.foreach { case (twin, sql) =>
+      val out = rows.select(twin.as("twin"), expr(sql).as("sql"))
+      assert(out.schema("twin").dataType == out.schema("sql").dataType, sql)
+      out.collect().foreach(r => assert(r.get(0) == r.get(1), sql))
+    }
+  }
+
   test("GROUP BY window knob: tumbling rewrite, inner GROUP BY untouched") {
     // rewrite shape: window key prepended to GROUP BY, window_start
     // surfaced in the projection

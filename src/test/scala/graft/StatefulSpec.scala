@@ -52,6 +52,14 @@ class StatefulSpec extends SparkSpec {
     val u1 = panes.filter(_.key == "u1").map(p => (p.value, p.firing)).toSet
     assert(u1 == Set((3, "EARLY"), (7, "EARLY")))
     assert(panes.count(_.key == "u2") == 0)
+    // the collect form's panes are the fold-to-list panes
+    val listed = StreamWindows.keyedTumblingFold[(String, Int), String,
+      Seq[(String, Int)]](ds, _._1, Seq.empty, (a, t) => a :+ t, cfg,
+      fixed).collect()
+    val collected = StreamWindows.keyedTumblingCollect[(String, Int),
+      String](ds, _._1, cfg, fixed).collect()
+    assert(listed.map(_.value.size).sorted.toSeq == Seq(2, 2))
+    assert(collected.toSet == listed.toSet)
   }
 
   test("tumbling fold ACCUMULATING keeps folding across firings") {

@@ -18,6 +18,8 @@ class StreamHarnessSpec extends SparkSpec {
   private lazy val s0 = spark
   import s0.implicits._
 
+  private type Ev = StreamHarness.Ticked[(String, Int)]
+
   private def fold(
       ds: org.apache.spark.sql.Dataset[StreamHarness.Ticked[(String, Int)]],
       interval: Long) =
@@ -82,6 +84,26 @@ class StreamHarnessSpec extends SparkSpec {
       .map(p => (p.key, p.windowStartMs, p.value)).toSet
     assert(panes == Set(
       ("a", 100L, 3), ("a", 800L, 10), ("b", 100L, 5)))
+
+    // the collect form's panes are the fold-to-list panes
+    def listPanes(out: org.apache.spark.sql.DataFrame) =
+      out.as[StreamWindows.Pane[String, Seq[Ev]]].collect()
+        .map(p => (p.key, p.windowStartMs, p.value.map(_._1), p.firing))
+        .toSet
+    val listed = listPanes(StreamHarness.runWithTicks(s, steps,
+        sentinel = ("x", 0)) { ds =>
+      StreamWindows.keyedSessionFold[Ev, String, Seq[Ev]](ds, _._1._1,
+        Seq.empty[Ev], (a, e) => a :+ e, gapMs = 500L, StreamHarness.clock,
+        timeout = GroupStateTimeout.EventTimeTimeout)
+    })
+    val collected = listPanes(StreamHarness.runWithTicks(s, steps,
+        sentinel = ("x", 0)) { ds =>
+      StreamWindows.keyedSessionCollect[Ev, String](ds, _._1._1,
+        gapMs = 500L, StreamHarness.clock,
+        timeout = GroupStateTimeout.EventTimeTimeout)
+    })
+    assert(listed.map(p => (p._1, p._2, p._3.map(_._2).sum)) == panes)
+    assert(collected == listed)
   }
 
   test("WindowableTask window() ticks for an idle task on a clock-only step") {

@@ -1,10 +1,59 @@
 package graft
 
 import scala.concurrent.{ExecutionContext, Future}
+import scala.jdk.CollectionConverters._
 
 import graft.tables.{RemoteTable, TableOps}
 
 class TablesSpec extends SparkSpec {
+
+  private def upsertBatches(dir: String, from: Long, to: Long): Unit = {
+    val s = spark
+    import s.implicits._
+    (from until to).foreach { b =>
+      TableOps.upsertSink(s, dir, Seq("k"), "seq")(
+        Seq((b % 3, s"v$b", b), (10 + b, s"w$b", b)).toDF("k", "v", "seq"), b)
+    }
+  }
+
+  private def upsertRows(dir: String): Set[(Long, String, Long)] = {
+    val s = spark
+    import s.implicits._
+    TableOps.readUpsertTable(s, dir).as[(Long, String, Long)].collect().toSet
+  }
+
+  test("upsertSink fails on an unreadable committed file instead of replacing the table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert")
+      .toString + "/t"
+    upsertBatches(dir, 0, 2)
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .filter(java.nio.file.Files.isRegularFile(_)).toSeq
+    assert(files.nonEmpty)
+    java.nio.file.Files.write(files.head, "not parquet".getBytes("UTF-8"))
+    intercept[Exception](upsertBatches(dir, 2, 3))
+  }
+
+  test("upsertSink: a replayed batch id leaves the table unchanged") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert")
+      .toString + "/t"
+    upsertBatches(dir, 0, 3)
+    val before = upsertRows(dir)
+    assert(before == Set((0L, "v0", 0L), (1L, "v1", 1L), (2L, "v2", 2L),
+      (10L, "w0", 0L), (11L, "w1", 1L), (12L, "w2", 2L)))
+    val gen = storeRecord(dir).generation
+    // the replay of batch 1 carries other rows (a nondeterministic
+    // source): it must not be applied a second time
+    TableOps.upsertSink(s, dir, Seq("k"), "seq")(
+      Seq((1L, "replayed", 9L)).toDF("k", "v", "seq"), 1L)
+    assert(upsertRows(dir) == before)
+    assert(storeRecord(dir).generation == gen)
+    upsertBatches(dir, 3, 4)
+    assert(upsertRows(dir) == (before -- before.filter(_._1 == 0L)) +
+      ((0L, "v3", 3L)) + ((13L, "w3", 3L)))
+  }
 
   test("remote lookup join enriches rows and handles misses") {
     val s = spark
