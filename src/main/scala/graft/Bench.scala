@@ -703,9 +703,11 @@ object Bench {
 
     // persist BEFORE stop(): a hung (not just throwing) shutdown hook
     // must not cost the completed run its result line — the file is the
-    // recovery copy; stdout stays the driver's channel.
+    // recovery copy; stdout stays the driver's channel. Relative to the
+    // working directory: `sbt runMain` runs from the checkout root, so
+    // each checkout writes its own copy.
     try java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/bench_last.json"),
+      java.nio.file.Paths.get("bench_last.json"),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch {
       case scala.util.control.NonFatal(e) =>

@@ -67,8 +67,16 @@ final case class MessageStream[T](ds: Dataset[T]) {
   /** SINK (:121): arbitrary side-effecting terminal. */
   def sink(f: T => Unit): Unit = ds.foreach(r => f(r))
 
-  /** SEND_TO stream (:136): write to a named output (parquet dir). */
-  def sendTo(path: String): Unit = ds.write.mode("overwrite").parquet(path)
+  /** SEND_TO stream (:136): write to a named output (parquet dir),
+    * staged beside it and swapped in (`FsUtil.swapInto`), so a job that
+    * fails mid-write leaves the previous output in place, unchanged. */
+  def sendTo(path: String): Unit = {
+    val target = new org.apache.hadoop.fs.Path(path)
+    graft.core.FsUtil.swapInto(target.getFileSystem(
+      ds.sparkSession.sessionState.newHadoopConf()), target) { staging =>
+      ds.write.parquet(staging.toString)
+    }
+  }
 }
 
 /** Keyed stream — carrier of WINDOW and JOIN, which Samza only defines

@@ -185,6 +185,11 @@ object Similarity {
         ivfToDouble(r.get(2)))
     }
 
+  // a stored coarse codebook on the driver, ordered by cent_id
+  private def collectCents(codebook: DataFrame)
+      : Seq[(Any, Seq[Double], Double)] =
+    ivfCents(codebook.orderBy(col("cent_id")).collect().toSeq)
+
   private def centArrOf(cs: Seq[(Any, Seq[Double], Double)]): Column =
     array(cs.map { case (id, v, nrm) =>
       struct(lit(id).as("cent_id"), typedLit(v).as("cent_vec"),
@@ -249,10 +254,9 @@ object Similarity {
         // the corpus-sized half: sized + floored at scan parallelism
         // so a stored probe never serializes onto one file's task.
         // CELL-RANGE-SORTED (round 20, guide §6 sort-order-on-write):
-        // each file covers a tight cell range, so the probe's pushed
-        // In(cell) predicate (cellPruned) skips every row group
-        // outside the nprobe cells via parquet min/max stats — without
-        // the sort a probe reads the whole stored corpus per batch.
+        // each file covers a tight cell range, so a driver-local probe's
+        // pushed In(cell) predicate (ivfTopKWithReady) skips every row
+        // group outside the nprobe cells via parquet min/max stats.
         // The sort column is declared in the record, so compaction
         // restores the layout after ingest appends land unsorted.
         st.sized("assigned.parquet", assigned, Seq("cell"))
@@ -273,8 +277,7 @@ object Similarity {
     * duplicates its assigned row, not an upsert). */
   def ivfAppendToStored(index: IvfIndex, newCorpus: DataFrame,
       dir: String): IvfIndex = {
-    val cents = ivfCents(
-      index.codebook.orderBy(col("cent_id")).collect().toSeq)
+    val cents = collectCents(index.codebook)
     val c = ivfPrep(newCorpus, index.idCol, index.vecCol)
     val extra =
       if (cents.isEmpty) emptyAssigned(c)
@@ -323,7 +326,7 @@ object Similarity {
         "rebuild with ivfIndex before streaming ingest")
     val c = ivfPrep(batch, ready.index.idCol, ready.index.vecCol)
     val extra = assignCells(requireDim(c, cents.head._2.length,
-      "ivfIngestBatch"), centArrOf(cents))
+      "ivfIngestBatch"), ready.centArr)
     appendAssigned(extra, dir, tag)
   }
 
@@ -466,8 +469,7 @@ object Similarity {
     * stage-then-swap materializes the union before touching the
     * source dir — but re-writes the whole corpus-sized table. */
   def ivfIndexAppend(index: IvfIndex, newCorpus: DataFrame): IvfIndex = {
-    val cents = ivfCents(
-      index.codebook.orderBy(col("cent_id")).collect().toSeq)
+    val cents = collectCents(index.codebook)
     val c = ivfPrep(newCorpus, index.idCol, index.vecCol)
     val extra =
       if (cents.isEmpty) emptyAssigned(c)
@@ -491,17 +493,20 @@ object Similarity {
 
   /** A stored [[IvfIndex]] plus its codebook COLLECTED once — the
     * unit a serve stream caches per store generation
-    * ([[graft.streaming.ModelCache]]): probing through a ready
-    * handle pays neither the codebook parquet read nor the nlist-row
-    * collect per micro-batch, only the probe itself. Build with
-    * [[ivfReady]]; identical results to probing the index directly
-    * (the one-shot [[ivfTopKWithIndex]] delegates through it). */
+    * ([[graft.streaming.ModelCache]]) and an ingest stream per
+    * codebook: probing through a ready handle pays neither the
+    * codebook parquet read, the nlist-row collect nor the centroid
+    * literal's build per micro-batch, only the probe itself. Build
+    * with [[ivfReady]]; identical results to probing the index
+    * directly (the one-shot [[ivfTopKWithIndex]] delegates through
+    * it). */
   final case class IvfReady private[operators] (index: IvfIndex,
-      private[operators] cents: Seq[(Any, Seq[Double], Double)])
+      private[operators] cents: Seq[(Any, Seq[Double], Double)]) {
+    private[operators] lazy val centArr: Column = centArrOf(cents)
+  }
 
   def ivfReady(index: IvfIndex): IvfReady =
-    IvfReady(index, ivfCents(
-      index.codebook.orderBy(col("cent_id")).collect().toSeq))
+    IvfReady(index, collectCents(index.codebook))
 
   def ivfTopKWithReady(queries: DataFrame, ready: IvfReady, k: Int,
       nprobe: Int = 0, scale: Int = 6): DataFrame = {
@@ -517,68 +522,56 @@ object Similarity {
     }
     val np = if (nprobe > 0) nprobe else derivedNprobe(cents.length)
     // score only vectors in probed cells; bounded-heap top-k (no
-    // per-query window shuffle — see topKRank). The assigned side is
-    // cell-pruned with a pushed In predicate when the batch probes
-    // few cells (cellPruned — file/row-group skipping on the stored
-    // cell-sorted layout).
-    val probes = ivfProbes(queries, index.idCol, index.vecCol, cents, np)
+    // per-query window shuffle — see topKRank)
+    val (probes, cells) =
+      ivfProbes(queries, index.idCol, index.vecCol, ready.centArr, np)
     val scored = probes
-      .join(cellPruned(index.assigned, probes), "cell")
+      .join(inCells(index.assigned, cells).getOrElse(index.assigned),
+        "cell")
       .filter(col("q_id") =!= col("nn_id"))
       .withColumn("cos",
         dot(col("q_vec"), col("nn_vec")) / (col("q_nrm") * col("nn_nrm")))
     topKRank(scored, k, scale)
   }
 
-  /** Cell-count ceiling for [[cellPruned]]'s literal In predicate —
-    * past it a batch is probing most of the codebook anyway and the
-    * plain join is the plan (and a longer literal list only bloats
-    * the plan). 64 comfortably covers serve-lookup batches (a few
-    * queries × nprobe) while a production-sized batch falls back. */
-  private[graft] val CellIsinThreshold = 64
+  /** `table` filtered by a literal In(cell) over the probed cells when
+    * the probe frame is driver-local (`graft.plans.LocalRows`: its
+    * cells are read from the plan, no job runs) and probes at most
+    * [[InCellsMax]] cells (a lookup-sized batch; past it the literal
+    * list only weighs on the plan); against the cell-range-sorted
+    * stored layout parquet min/max stats then skip every row group
+    * outside the probed cells. `None` otherwise. Semantically a
+    * no-op: the join on cell drops every row the filter drops. */
+  private def inCells(table: DataFrame, cells: DataFrame)
+      : Option[DataFrame] =
+    graft.plans.LocalRows.distinctElems(cells, InCellsMax)
+      .map(cs => table.filter(col("cell").isin(cs: _*)))
 
-  /** Bounded-collect cell pruning for the stored-table probes —
-    * `TextProfile.bm25TopKWithIndex`'s In-pushdown rule applied to
-    * the IVF cell key (round 20, guide §6): collect at most
-    * threshold+1 distinct probed cells (a production-sized query
-    * batch never materializes past that) and, when few, filter the
-    * corpus-sized assigned/codes scan with a literal In predicate
-    * the parquet reader pushes down. Against the cell-range-sorted
-    * layout the writers produce, file/row-group min/max stats then
-    * prune the scan to the nprobe cells — the difference between
-    * reading the whole stored corpus per serve batch and reading
-    * the probed fraction. Semantically a no-op: the join on cell
-    * already drops every row the filter drops (oracle-checked).
-    * Unsorted ingest-tag files span the key space and stay unpruned
-    * (correct, just unskippable) until compaction re-sorts. */
-  private def cellPruned(table: DataFrame, probes: DataFrame): DataFrame = {
-    val cells = probes.select(col("cell")).distinct()
-      .limit(CellIsinThreshold + 1).collect().map(_.get(0))
-    if (cells.length <= CellIsinThreshold)
-      table.filter(col("cell").isin(cells.toSeq: _*))
-    else table
-  }
+  private val InCellsMax = 64
 
   /** Each query's `np` nearest cells: (q_id, q_vec, q_nrm, cell) —
     * sort the nlist scores (asc by (-score, index)) and take the
-    * first np. Shared by the float-scoring IVF probe and the
-    * PQ-scoring [[ivfPqTopK]]. */
+    * first np. Also returns the per-query cell arrays before the
+    * explode (`__cells`), the projection [[inCells]] reads from a
+    * driver-local query frame. Shared by the float-scoring IVF probe
+    * and the PQ-scoring [[ivfPqTopK]]. */
   private def ivfProbes(queries: DataFrame, idCol: String,
-      vecCol: String, cents: Seq[(Any, Seq[Double], Double)],
-      np: Int): DataFrame = {
-    val centArr = centArrOf(cents)
-    queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
+      vecCol: String, centArr: Column, np: Int)
+      : (DataFrame, DataFrame) = {
+    val withCells = queries
+      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
       .withColumn("q_nrm", norm(col("q_vec")))
       .filter(col("q_nrm") > 0)
-      .withColumn("__probe", explode(slice(array_sort(
+      .withColumn("__cells", transform(slice(array_sort(
         transform(cellScores(centArr)(col("q_vec"), col("q_nrm")),
           cs => struct(
             (-cs.getField("s")).as("negs"),
             (-cs.getField("negidx")).as("idx"),
             cs.getField("cent_id").as("cent_id")))),
-        1, np)))
-      .select(col("q_id"), col("q_vec"), col("q_nrm"),
-        col("__probe.cent_id").as("cell"))
+        1, np), p => p.getField("cent_id")))
+    (withCells.select(col("q_id"), col("q_vec"), col("q_nrm"),
+      explode(col("__cells")).as("cell")),
+      withCells.select(col("__cells")))
   }
 
   /** IVF (inverted-file) approximate top-k: the corpus is partitioned
@@ -1262,6 +1255,16 @@ object Similarity {
       c.getField("code").as("code"),
       c.getField("cvec").as("cvec"))))
 
+  // stored (sub, code, cvec) rows on the driver: per subspace, the
+  // centroid subvectors in code order (codes are dense 0-based ordinals)
+  private def collectPqCodebooks(cbs: DataFrame): Seq[Seq[Seq[Double]]] =
+    cbs.orderBy(col("sub"), col("code")).collect()
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map { case (_, rows) =>
+        rows.sortBy(_.getInt(1))
+          .map(_.getSeq[Any](2).map(ivfToDouble).toSeq).toSeq
+      }
+
   private def halfSq(v: Seq[Double]): Double = {
     var s = 0.0; v.foreach(x => s += x * x); 0.5 * s
   }
@@ -1440,13 +1443,7 @@ object Similarity {
     * ranking contract identical to [[pqTopK]]. */
   def pqTopKWithIndex(queries: DataFrame, index: PqIndex,
       vecCol: String, k: Int, scale: Int = 6): DataFrame = {
-    val cb: Seq[Seq[Seq[Double]]] =
-      index.codebooks.orderBy(col("sub"), col("code")).collect()
-        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-        .map { case (_, rows) =>
-          rows.sortBy(_.getInt(1))
-            .map(_.getSeq[Any](2).map(ivfToDouble).toSeq).toSeq
-        }
+    val cb = collectPqCodebooks(index.codebooks)
     if (cb.isEmpty)
       return queries.limit(0).select(col(index.idCol).as("q_id"),
         col(index.idCol).as("nn_id"), lit(0L).as("rank"),
@@ -1493,8 +1490,7 @@ object Similarity {
       m: Int = 4, ksub: Int = 16, refine: Int = 1,
       scale: Int = 6, residual: Boolean = false): DataFrame = {
     val index = ivfIndex(corpus, idCol, vecCol, nlist, refine)
-    val cents = ivfCents(
-      index.codebook.orderBy(col("cent_id")).collect().toSeq)
+    val cents = collectCents(index.codebook)
     if (cents.isEmpty)
       return queries.limit(0).select(col(idCol).as("q_id"),
         col(idCol).as("nn_id"), lit(0L).as("rank"),
@@ -1550,8 +1546,8 @@ object Similarity {
             (a, b) => a + b).as("nn_vec")))
       .withColumn("nn_nrm", norm(col("nn_vec")))
       .filter(col("nn_nrm") > 0)
-    val scored = ivfProbes(queries, idCol, vecCol, cents, np)
-      .join(reconAssigned, "cell")
+    val scored = ivfProbes(queries, idCol, vecCol, centArrOf(cents), np)
+      ._1.join(reconAssigned, "cell")
       .filter(col("q_id") =!= col("nn_id"))
       .withColumn("cos",
         dot(col("q_vec"), col("nn_vec")) / (col("q_nrm") * col("nn_nrm")))
@@ -1708,19 +1704,16 @@ object Similarity {
     * re-collects were pure fixed cost). */
   final case class IvfPqEncoder private[operators] (index: IvfPqIndex,
       private[operators] cents: Seq[(Any, Seq[Double], Double)],
-      private[operators] cbs: Seq[Seq[(Int, Seq[Double], Double)]])
+      private[operators] cbs: Seq[Seq[(Int, Seq[Double], Double)]]) {
+    private[operators] lazy val centArr: Column = centArrOf(cents)
+    private[operators] lazy val pqArrs: Seq[Column] = cbs.map(pqCentArr)
+  }
 
   def ivfPqEncoder(index: IvfPqIndex): IvfPqEncoder =
-    IvfPqEncoder(index,
-      ivfCents(index.codebook.orderBy(col("cent_id")).collect().toSeq),
-      index.pqCodebooks.orderBy(col("sub"), col("code")).collect()
-        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-        .map { case (_, rows) =>
-          rows.sortBy(_.getInt(1)).map { r =>
-            val v = r.getSeq[Any](2).map(ivfToDouble).toSeq
-            (r.getInt(1), v, halfSq(v))
-          }.toSeq
-        })
+    IvfPqEncoder(index, collectCents(index.codebook),
+      collectPqCodebooks(index.pqCodebooks).map(_.zipWithIndex.map {
+        case (v, code) => (code, v, halfSq(v))
+      }))
 
   /** [[ivfPqIngestBatch]] with the codebooks already collected —
     * identical behavior; the one-shot form delegates here. */
@@ -1748,7 +1741,7 @@ object Similarity {
         "ivfPqIndex instead of appending to an empty index")
     val c = requireDim(ivfPrep(newCorpus, index.idCol, index.vecCol),
       index.dim, op)
-    val assigned = assignCells(c, centArrOf(cents))
+    val assigned = assignCells(c, enc.centArr)
     val pqInput =
       if (!index.residual) assigned
         .select(col("nn_id"), col("cell"), col("nn_vec"))
@@ -1761,7 +1754,7 @@ object Similarity {
     val dsub = index.dim / index.m
     val codeCols = (0 until index.m).map { s =>
       pqBest(slice(col("nn_vec"), s * dsub + 1, dsub),
-        pqCentArr(cbs(s))).getField("code")
+        enc.pqArrs(s)).getField("code")
     }
     pqInput.select(col("nn_id").as(index.idCol),
       col("cell"), array(codeCols: _*).as("codes"))
@@ -1792,21 +1785,19 @@ object Similarity {
     ivfPqTopKWithReady(queries, ivfPqReady(index), k, nprobe, scale)
 
   /** [[IvfReady]]'s IVF-PQ twin: the stored index plus BOTH
-    * codebooks collected once (nlist + m·ksub rows), so a
-    * generation-cached serve pays only the probe per micro-batch. */
+    * codebooks collected once (nlist + m·ksub rows) and their literals
+    * built once, so a generation-cached serve pays only the probe per
+    * micro-batch. */
   final case class IvfPqReady private[operators] (index: IvfPqIndex,
       private[operators] cents: Seq[(Any, Seq[Double], Double)],
-      private[operators] cb: Seq[Seq[Seq[Double]]])
+      private[operators] cb: Seq[Seq[Seq[Double]]]) {
+    private[operators] lazy val centArr: Column = centArrOf(cents)
+    private[operators] lazy val cbLit: Column = typedLit(cb)
+  }
 
   def ivfPqReady(index: IvfPqIndex): IvfPqReady =
-    IvfPqReady(index,
-      ivfCents(index.codebook.orderBy(col("cent_id")).collect().toSeq),
-      index.pqCodebooks.orderBy(col("sub"), col("code")).collect()
-        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-        .map { case (_, rows) =>
-          rows.sortBy(_.getInt(1))
-            .map(_.getSeq[Any](2).map(ivfToDouble).toSeq).toSeq
-        })
+    IvfPqReady(index, collectCents(index.codebook),
+      collectPqCodebooks(index.pqCodebooks))
 
   def ivfPqTopKWithReady(queries: DataFrame, ready: IvfPqReady,
       k: Int, nprobe: Int = 0, scale: Int = 6): DataFrame = {
@@ -1818,14 +1809,17 @@ object Similarity {
         col(index.idCol).as("nn_id"), lit(0L).as("rank"),
         lit(0.0).as("cos"))
     val np = if (nprobe > 0) nprobe else derivedNprobe(cents.length)
-    val cbLit = typedLit(cb)
     val recon0 = flatten(transform(col("codes"), (c, s) =>
-      element_at(element_at(cbLit, s + 1), c + 1)))
-    // the codes scan is cell-pruned BEFORE reconstruction (cellPruned
-    // — pushed In over the stored cell-sorted layout), so a few-cell
-    // serve batch neither reads nor reconstructs the unprobed corpus
-    val probes = ivfProbes(queries, index.idCol, index.vecCol, cents, np)
-    val codes = cellPruned(index.codes, probes)
+      element_at(element_at(ready.cbLit, s + 1), c + 1)))
+    // the codes are cell-pruned BEFORE reconstruction, so a batch
+    // never reconstructs the unprobed corpus: a broadcast left-semi
+    // join on the probed cells, or the pushed In(cell) of [[inCells]]
+    // (row-group skipping) when the query frame is driver-local
+    val (probes, cells) =
+      ivfProbes(queries, index.idCol, index.vecCol, ready.centArr, np)
+    val codes = inCells(index.codes, cells).getOrElse(index.codes
+      .join(broadcast(probes.select(col("cell"))), Seq("cell"),
+        "left_semi"))
     val reconAssigned = (
       if (!index.residual) codes
         .select(col(index.idCol).as("nn_id"), col("cell"),

@@ -373,7 +373,7 @@ object TextProfile {
       // one task sorting/writing the hot term's millions of rows.
       // The id tiebreak splits heavy terms across sized files;
       // every file still carries a TIGHT term min/max (a term may
-      // span adjacent files), so In-pushdown pruning is unharmed.
+      // span adjacent files), so In(term) pruning is unharmed.
       st.sized("postings.parquet", index.postings,
         Seq("term", index.idCol), targetFileBytes)
       st.plain("df.parquet", index.dfreq)
@@ -420,8 +420,8 @@ object TextProfile {
     * together with the raised N/T totals in one record write; the
     * corpus-sized posting table is never rewritten (appended files are
     * not term-sorted with the original set — the record marks the
-    * table unsorted until [[bm25IndexCompact]] restores the file-level
-    * pruning the In-pushdown arm relies on). The batch must be
+    * table unsorted until [[bm25IndexCompact]] restores the row-group
+    * pruning the In(term) arm relies on). The batch must be
     * DOC-DISJOINT from the index (CorpusProfile's contract — a
     * re-appended doc double-counts df/tf, not upserts). Returns the
     * extended in-memory index. */
@@ -467,7 +467,7 @@ object TextProfile {
 
   /** Restore a stored [[Bm25Index]] after appends: rewrites the
     * posting table TERM-SORTED into sized files (the property the
-    * In-pushdown probe's file pruning needs) and collapses the df
+    * In(term) probe's row-group pruning needs) and collapses the df
     * partials to one row per term — a full write of the collapsed
     * snapshot (applied tags carry over). Quiesce appenders while
     * compacting (single-writer-per-dir, as everywhere). */
@@ -490,34 +490,33 @@ object TextProfile {
     r.getLong(0) > r.getLong(1)
   }
 
+  /** Distinct-term ceiling for [[bm25TopKWithIndex]]'s literal
+    * In(term): a lookup-sized query set. Past it the terms' posting
+    * lists cover most row groups anyway and a longer literal list only
+    * weighs on the plan. */
+  private[graft] val InTermsMax = 16
+
   /** Probe a prebuilt [[Bm25Index]]: identical output to
     * [[bm25TopK]] with the same parameters (spec-pinned), at
-    * posting-lookup cost — no tokenize, no tf/df aggregation. When
-    * the query set's distinct terms are few (≤ `isinThreshold`, the
-    * lookup-style case), the probe filters the posting scan with a
-    * literal In predicate that parquet pushes down — combined with
-    * the term-sorted layout, file/row-group min-max stats skip
-    * everything but the matching posting lists; larger query sets
-    * fall back to the broadcast term join (one full posting-table
-    * columnar pass, still no recompute). */
+    * posting-lookup cost — no tokenize, no tf/df aggregation. Building
+    * the frame runs no job. The posting scan is pruned to the query
+    * terms by a broadcast left-semi join; when `queries` is
+    * driver-local (`graft.plans.LocalRows`: a one-shot lookup, or a
+    * serve stream's small micro-batch) and has at most
+    * [[InTermsMax]] distinct terms, a literal In(term) that parquet
+    * pushes down also filters postings and df, so on the term-sorted
+    * layout row-group min/max stats skip everything but the matching
+    * posting lists. */
   def bm25TopKWithIndex(queries: DataFrame, qIdCol: String,
       qTextCol: String, index: Bm25Index, k: Int = 5,
-      stopwordCut: Boolean = true, isinThreshold: Int = 16)
-      : DataFrame = {
-    // arm choice with BOUNDED driver memory: collect at most
-    // threshold+1 distinct terms — enough to know whether the In arm
-    // applies and, when it does, these ARE the literal terms. A
-    // production-sized query batch (vocab-scale distinct terms) never
-    // materializes on the driver just to pick the join arm.
-    val qt = queries
-      .select(explode(tokens(col(qTextCol))).as("term"))
-      .distinct().limit(isinThreshold + 1)
-      .collect().map(_.getString(0))
-    val (posts, dfr) =
-      if (qt.length <= isinThreshold)
-        (index.postings.filter(col("term").isin(qt.toSeq: _*)),
-          index.dfreq.filter(col("term").isin(qt.toSeq: _*)))
-      else (index.postings, index.dfreq)
+      stopwordCut: Boolean = true): DataFrame = {
+    val (posts, dfr) = graft.plans.LocalRows.distinctElems(
+        queries.select(tokens(col(qTextCol))), InTermsMax) match {
+      case Some(qt) =>
+        (index.postings.filter(col("term").isin(qt: _*)),
+          index.dfreq.filter(col("term").isin(qt: _*)))
+      case None => (index.postings, index.dfreq)
+    }
     bm25Agg(posts, index.idCol, queries, qIdCol, qTextCol, dfr,
       index.totTokens, index.nDocs, k, stopwordCut,
       preWeight = true)
@@ -573,7 +572,8 @@ object TextProfile {
     //    re-shapes the shared subtrees against it. Stored posting
     //    files have none of that interaction.
     val scored = (if (preWeight) {
-      val qTermSet = qterms.select(col("term")).distinct()
+      // no distinct: a left-semi join ignores duplicate keys
+      val qTermSet = qterms.select(col("term"))
       // NOT widened before the fan-out (round-19 measured-and-
       // rejected): on a gate-scale store the pruned posting rows run
       // this exchange-free segment as ONE task (scan = one split),

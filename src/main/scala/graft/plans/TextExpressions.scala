@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -281,16 +282,21 @@ object LitArg {
 }
 
 /** One-stop invocation of a graft expression from Column code:
-  * ensures the active session has the function registered, then calls
-  * it. Keeps call sites free of the register-then-call boilerplate and
-  * of implicit registration-order dependencies. */
+  * registers the graft functions in the active session the first time
+  * its registry lacks `name` (a lookup per call after that, no
+  * re-registration), then calls it. Keeps call sites free of the
+  * register-then-call boilerplate and of implicit registration-order
+  * dependencies. */
 object GraftCall {
   def apply(name: String, args: org.apache.spark.sql.Column*)
       : org.apache.spark.sql.Column = {
     val spark = SparkSession.active
-    TextExpressions.ensureRegistered(spark)
-    VectorExpressions.ensureRegistered(spark)
-    SketchExpressions.ensureRegistered(spark)
+    if (!spark.sessionState.functionRegistry.functionExists(
+        FunctionIdentifier(name))) {
+      TextExpressions.ensureRegistered(spark)
+      VectorExpressions.ensureRegistered(spark)
+      SketchExpressions.ensureRegistered(spark)
+    }
     org.apache.spark.sql.functions.call_function(name, args: _*)
   }
 }

@@ -425,8 +425,8 @@ object TextQueries extends QueryPack {
     // reload → probe must hash-match q_text_bm25 — the persistence
     // loop may not change a single bit. The probe pays posting
     // lookups only (no tokenize, no tf/df recompute); this gate
-    // query's 300-term query set takes the broadcast-join arm, the
-    // few-term In-pushdown file-pruning arm is TextKernelsSpec's.
+    // query's table-backed query set takes the broadcast-join arm, the
+    // driver-local In(term) row-group-pruning arm is TextKernelsSpec's.
     "q_text_bm25_index" -> Q(
       (s, d) => {
         import s.implicits._

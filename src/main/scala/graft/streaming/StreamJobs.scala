@@ -150,7 +150,7 @@ object StreamJobs {
               idCol, vecCol))
         } (_ => ()) // nothing pinned: handle holds plans + literals
         graft.operators.Similarity
-          .ivfPqTopKWithReady(batch, ready, k, nprobe)
+          .ivfPqTopKWithReady(serveBatch(batch), ready, k, nprobe)
           .write.mode("overwrite")
           .parquet(s"$outDir/batch_id=$batchId")
         ()
@@ -175,12 +175,26 @@ object StreamJobs {
       (batch: DataFrame, batchId: Long) =>
         val ready = ivfReadyCached(batch.sparkSession, indexDir,
           idCol, vecCol)
-        graft.operators.Similarity.ivfTopKWithReady(batch, ready, k,
-          nprobe)
+        graft.operators.Similarity.ivfTopKWithReady(serveBatch(batch),
+          ready, k, nprobe)
           .write.mode("overwrite")
           .parquet(s"$outDir/batch_id=$batchId")
         ()
     }
+
+  /** Query rows up to which a serve micro-batch is collected once to
+    * the driver ([[serveBatch]]). */
+  private val ServeBatchRows = 256
+
+  /** A serve stream's micro-batch, made driver-local when it holds at
+    * most [[ServeBatchRows]] query rows (`graft.plans.LocalRows`, one
+    * bounded job). The probe then reads the batch once instead of once
+    * per use, and a batch probing few cells or terms takes the
+    * operators' pushed In(cell) / In(term) arm, so the stored scans
+    * skip the row groups it does not probe. A larger batch stays as it
+    * is and takes the join arms. */
+  private def serveBatch(batch: DataFrame): DataFrame =
+    graft.plans.LocalRows.collectSmall(batch, ServeBatchRows)
 
   /** The generation-cached [[graft.operators.Similarity.IvfReady]] handle
     * shared by [[ivfLookupStream]] and [[hybridLookupStream]]. */
@@ -202,9 +216,10 @@ object StreamJobs {
     * by `bm25IndexAppend` ingest), and the batch's results land as
     * parquet under `outDir/batch_id=<id>/`. Per batch the work is
     * the posting lookup only — no tokenize of the corpus, no tf/df
-    * recompute; the query batch broadcasts against the term-sorted
-    * posting table (file-level min/max pruning on the few-term
-    * In-pushdown arm). The index read is cached per store generation
+    * recompute; the query batch's terms broadcast-semi-join the posting
+    * table, and a small batch ([[serveBatch]]) with few terms also
+    * pushes a literal In(term) into the term-sorted posting scan. The
+    * index read is cached per store generation
     * ([[ModelCache]]) with the vocab-bounded df aggregation PERSISTED
     * for the entry's lifetime, so a quiet store pays one record read
     * per batch instead of a store read plus a df re-aggregation;
@@ -225,7 +240,7 @@ object StreamJobs {
       (batch: DataFrame, batchId: Long) =>
         val idx = bm25IndexCached(batch.sparkSession, indexDir, idCol)
         graft.operators.TextProfile
-          .bm25TopKWithIndex(batch, qIdCol, qTextCol, idx, k,
+          .bm25TopKWithIndex(serveBatch(batch), qIdCol, qTextCol, idx, k,
             stopwordCut)
           .write.mode("overwrite")
           .parquet(s"$outDir/batch_id=$batchId")
@@ -612,7 +627,8 @@ object StreamJobs {
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
     queries.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
+      (in: DataFrame, batchId: Long) =>
+        val batch = serveBatch(in)
         val spark = batch.sparkSession
         val bm = bm25IndexCached(spark, bm25Dir, docIdCol)
         val ivf = ivfReadyCached(spark, ivfDir, vecIdCol, qVecCol)

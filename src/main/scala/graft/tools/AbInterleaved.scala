@@ -24,9 +24,11 @@ object AbInterleaved {
     val spark = graft.core.GraftSession("graft-ab",
       master = Some(s"local[$cpus]"), shufflePartitions = Some(cpus.toInt))
 
+    // warm pass on SPARK_GRAFT_WARM_DIR if set, else sfDir (BarPair's
+    // rule: no machine-specific path)
+    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir)
     names.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
-        .count()
+      try graft.SparkEntry.queries(n)(spark, warmDir).count()
       catch { case e: Throwable => System.err.println(s"[warm] $n: $e") }
     }
     spark.catalog.clearCache()

@@ -109,4 +109,23 @@ class DslSpec extends SparkSpec {
       (1, (30L, Map("c" -> 3)), (20L, "r1")),
       (2, (5L, Map("x" -> 9)), (1L, "r2"))))
   }
+
+  test("sendTo: a job that fails mid-write leaves the previous table readable and unchanged") {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-sendto")
+    val out = root.resolve("out").toString
+    ms(1, 2, 3).sendTo(out)
+    // four tasks, the last of which throws after the others can commit
+    val failing = MessageStream(s.range(0, 400, 1, 4).as[Long].map { i =>
+      if (i == 399) throw new IllegalStateException("fail mid-write")
+      i.toInt
+    })
+    intercept[Exception](failing.sendTo(out))
+    assert(s.read.parquet(out).as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
+    // no staging dir is left beside the output
+    assert(root.toFile.list().toSeq == Seq("out"))
+    ms(4, 5).sendTo(out)
+    assert(s.read.parquet(out).as[Int].collect().sorted.toSeq == Seq(4, 5))
+  }
 }

@@ -183,7 +183,10 @@ class MaintenanceSpec extends SparkSpec {
           assert(a._2 < b._1, s"$table: overlapping cell ranges $ranges")
         }
         val rows = s.read.parquet(s"$dir/$table").count()
-        val q = emb.filter($"vec_id" === 7L)
+        // a driver-local probe frame: the input whose probed cells
+        // are free to read, so the operator pushes In(cell)
+        val q = s.createDataFrame(java.util.Arrays.asList(
+          emb.filter($"vec_id" === 7L).collect(): _*), emb.schema)
         val probe =
           if (table == "assigned.parquet")
             Similarity.ivfTopKWithIndex(q,

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
+import graft.operators.{Similarity, TextProfile}
 import graft.queries.Registry
+import graft.sources.Tables
 
 /** Physical-plan discipline: the properties that decide whether a plan
   * survives a 100× scale-up — predicate pushdown into the parquet scan,
@@ -126,5 +130,114 @@ class PlanSpec extends SparkSpec {
       case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
     }
     assert(hints.isEmpty, unhinted.queryExecution.analyzed.toString())
+  }
+
+  test("stored-index probes build with no job; a driver-local query frame keeps its pushed In(term) and In(cell)") {
+    val s = spark
+    import s.implicits._
+    val docs = Tables.load(s, sf0001, "documents")
+    val emb = Tables.load(s, sf0001, "embeddings")
+    val root = java.nio.file.Files.createTempDirectory("graft-lazyprobe")
+      .toString
+    TextProfile.bm25Index(docs, "doc_id", "text").write(s"$root/bm25")
+    Similarity.ivfIndex(emb, "vec_id", "embedding", nlist = 8)
+      .write(s"$root/ivf")
+    val built = Similarity.ivfPqIndex(emb, "vec_id", "embedding", dim = 64,
+      nlist = 8)
+    built.write(s"$root/ivfpq")
+    built.release()
+    // loading the handles collects their codebooks: load, not build
+    val bm = TextProfile.readBm25Index(s, s"$root/bm25", "doc_id")
+    val ivf = Similarity.ivfReady(
+      Similarity.readIvfIndex(s, s"$root/ivf", "vec_id", "embedding"))
+    val pq = Similarity.ivfPqReady(
+      Similarity.readIvfPqIndex(s, s"$root/ivfpq", "vec_id", "embedding"))
+    def build(text: DataFrame, vecs: DataFrame): Seq[DataFrame] = Seq(
+      TextProfile.bm25TopKWithIndex(text, "q_id", "qtext", bm, k = 3,
+        stopwordCut = false),
+      Similarity.ivfTopKWithReady(vecs, ivf, k = 3, nprobe = 2),
+      Similarity.ivfPqTopKWithReady(vecs, pq, k = 3, nprobe = 2))
+    val tableText = docs.filter($"doc_id" % 7 === 0)
+      .select($"doc_id".as("q_id"), $"text".as("qtext"))
+    val tableVecs = emb.filter($"vec_id" % 7 === 0)
+    val localText = Seq((1L, tableText.head().getString(1).split("\\s+")
+      .take(6).mkString(" "))).toDF("q_id", "qtext")
+    val localVecs = s.createDataFrame(
+      java.util.Arrays.asList(tableVecs.limit(1).collect(): _*), emb.schema)
+    val prof = graft.obs.QueryProfile.install(s)
+    val (lazyArm, localArm) =
+      try {
+        val t = prof.row("table")(build(tableText, tableVecs))
+        val l = prof.row("local")(build(localText, localVecs))
+        assert(prof.get("table").get.jobs == 0, prof.json("table"))
+        assert(prof.get("local").get.jobs == 0, prof.json("local"))
+        (t, l)
+      } finally prof.close()
+    def pushed(df: DataFrame, col: String) =
+      df.queryExecution.executedPlan.toString.replaceAll("\\s+", " ")
+        .matches(s".*PushedFilters: \\[[^]]*In\\($col.*")
+    assert(pushed(localArm(0), "term"), localArm(0).queryExecution.executedPlan)
+    assert(pushed(localArm(1), "cell"), localArm(1).queryExecution.executedPlan)
+    assert(pushed(localArm(2), "cell"), localArm(2).queryExecution.executedPlan)
+    assert(!lazyArm.exists(pushed(_, "term")) && !lazyArm.exists(pushed(_, "cell")))
+    // past the ceiling a driver-local frame takes the join arm too
+    val manyTerms = Seq((1L, docs.select("text").as[String].collect()
+      .flatMap(_.split("\\s+")).distinct.take(4 * TextProfile.InTermsMax)
+      .mkString(" "))).toDF("q_id", "qtext")
+    assert(!pushed(TextProfile.bm25TopKWithIndex(manyTerms, "q_id", "qtext",
+      bm, k = 3, stopwordCut = false), "term"))
+    // the two arms answer alike: the same local rows behind a scan-like
+    // (non-local) relation take the lazy arm
+    def nonLocal(df: DataFrame) =
+      s.createDataFrame(s.sparkContext.parallelize(df.collect().toSeq, 2),
+        df.schema)
+    build(nonLocal(localText), nonLocal(localVecs)).zip(localArm).foreach {
+      case (viaJoin, viaIn) =>
+        assert(viaJoin.collect().toSet == viaIn.collect().toSet)
+    }
+    val sizes = (lazyArm ++ localArm).map(_.count())
+    assert(sizes.forall(_ > 0), sizes)
+  }
+
+  test("graft functions register once per session; a new session registers its own") {
+    import graft.plans.{GraftCall, VectorExpressions}
+    import org.apache.spark.sql.functions.{col, lit, struct}
+    def topk = GraftCall(VectorExpressions.TopKName,
+      struct(col("id").cast("double").as("score"), col("id").as("tb")),
+      lit(2))
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(
+      VectorExpressions.TopKName)
+    val reg = spark.sessionState.functionRegistry
+    topk
+    val (info, builder) = (reg.lookupFunction(id).get,
+      reg.lookupFunctionBuilder(id).get)
+    topk
+    GraftCall(VectorExpressions.DotName, col("a"), col("b"))
+    assert(reg.lookupFunction(id).get eq info)
+    assert(reg.lookupFunctionBuilder(id).get eq builder)
+    val other = spark.newSession()
+    org.apache.spark.sql.SparkSession.setActiveSession(other)
+    try {
+      val top = other.range(5).agg(topk.as("t")).head().getSeq[Any](0)
+      assert(top.size == 2)
+    } finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+  }
+
+  test("a small frame is collected once into a driver-local relation; LocalRows reads at most max distinct elements") {
+    val s = spark
+    import s.implicits._
+    import graft.plans.LocalRows
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def local(df: DataFrame) =
+      df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    val src = s.range(0, 10).toDF("id")
+    assert(!local(src))
+    val small = LocalRows.collectSmall(src, 10)
+    assert(local(small) && small.as[Long].collect().sorted.toSeq == (0L until 10L))
+    assert(LocalRows.collectSmall(src, 9) eq src)
+    val arrays = Seq(Seq(1, 2, 3), Seq(3, 4)).toDF("a")
+    assert(LocalRows.distinctElems(arrays, 4).map(_.toSet) == Some(Set(1, 2, 3, 4)))
+    assert(LocalRows.distinctElems(arrays, 3).isEmpty)
+    assert(LocalRows.distinctElems(src.selectExpr("array(id)"), 100).isEmpty)
   }
 }
