@@ -178,7 +178,9 @@ object Bench {
     val spark = graft.core.GraftSession("graft-bench",
       master = Some(s"local[$cpus]"), shufflePartitions = Some(cpus.toInt))
 
-    val warmDir = "/root/testdata/sf0.001"
+    // warm pass (JIT/classload), outside t0..t1: SPARK_GRAFT_WARM_DIR
+    // if set, else the sf dir itself (BarPair's rule)
+    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir)
     SparkEntry.queries.foreach { case (_, fn) =>
       try fn(spark, warmDir).count() catch { case _: Throwable => () }
     }

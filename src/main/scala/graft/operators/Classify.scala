@@ -381,13 +381,14 @@ object Classify {
     * record write ([[LmScore.appendModel]]'s protocol): a committed
     * tag replays as a no-op, a crashed attempt's files stay invisible
     * until the replay purges them, and a reader sees the model before
-    * or after the batch, never a class with mass but no prior row.
-    * Single-writer-per-dir is the caller's contract. */
+    * or after the batch, never a class with mass but no prior row; an
+    * empty batch commits nothing. Single-writer-per-dir is the caller's
+    * contract. */
   def appendNbModel(docs: DataFrame, labelCol: String, textCol: String,
       dir: String, tag: String): Unit = {
-    val spark = docs.sparkSession
-    graft.store.Store.append(spark, dir,
-      graft.store.Store.require(spark, dir, NbKind), tag,
+    if (docs.isEmpty) return
+    graft.store.Store.append(docs.sparkSession, dir,
+      graft.store.Store.require(docs.sparkSession, dir, NbKind), tag,
       Seq("vocabulary.parquet" ->
           docs.select(explode(tokens(col(textCol))).as("token")).distinct(),
         "counts.parquet" -> tokensOf(docs, Seq(labelCol), textCol)

@@ -76,20 +76,15 @@ object CorpusProfile {
   }
 
   /** Replace the stored profile at `dir` wholesale (stage-then-swap,
-    * crash-safe). For ingest batches use [[append]] / [[ingestBatch]].
-    * Applied tags carry over (`graft.store.Store.write`), so a
-    * [[compact]] of a streaming-maintained store keeps a replay of an
-    * already-applied batch a no-op. */
+    * crash-safe). For ingest batches use [[ingestBatch]]. Applied tags
+    * carry over (`graft.store.Store.write`), so a [[compact]] of a
+    * streaming-maintained store keeps a replay of an already-applied
+    * batch a no-op. */
   def write(profile: Profile, dir: String,
       targetFileBytes: Long = 128L << 20): Unit =
-    writeApplied(profile, dir, targetFileBytes, Map.empty)
-
-  private def writeApplied(profile: Profile, dir: String,
-      targetFileBytes: Long,
-      applied: Map[String, Map[String, Long]]): Unit =
     graft.store.Store.write(profile.strata.sparkSession, dir, Kind,
         Map("strataCol" -> profile.strataCol,
-          "textCol" -> profile.textCol), applied) { st =>
+          "textCol" -> profile.textCol)) { st =>
       st.plain("strata.parquet", profile.strata)
       // tokens = the vocabulary-sized half (df per term per stratum):
       // sized + floored so profile-fed scoring scans it in parallel
@@ -97,48 +92,28 @@ object CorpusProfile {
         targetFileBytes = targetFileBytes)
     }
 
-  /** Append an ingest batch's profile partials to a stored dir under a
-    * fresh tag: O(batch), the corpus-sized file set is never
-    * rewritten, and tokens and strata commit together in one record
-    * write. The batch's columns are validated against the record — a
-    * mismatch FAILS FAST instead of corrupting every downstream count.
-    * The batch must be doc-disjoint from what the store already covers
-    * (see the class contract). */
-  def append(batch: Profile, dir: String): Unit =
-    ingestBatch(batch, dir, graft.store.Store.freshTag())
-
-  /** Replay-idempotent streaming append: the batch's token/strata
-    * partials commit under `tag` in one record write, so a committed
-    * tag replays as a no-op and a crashed attempt's files are purged
-    * before the re-append — exactly-once from ANY crash point. The
-    * store must exist (seed it batch-side with [[write]]); `tag` =
-    * runId+batchId, unique across stream runs; single writer per dir,
-    * quiesce before [[compact]]/Maintenance. */
-  def ingestBatch(batch: Profile, dir: String, tag: String): Unit = {
-    val spark = batch.strata.sparkSession
+  /** The one append to a stored profile: the [[build]] partials of
+    * `docs` commit under `tag` in one record write, in O(batch) — the
+    * corpus-sized file set is never rewritten, and tokens and strata
+    * commit together. A committed tag replays as a no-op, a crashed
+    * attempt's files are purged before the re-append, and an empty
+    * batch commits nothing. Batch callers pass
+    * `graft.store.Store.freshTag()`, streams `runId-batchId`. The store
+    * must exist (seed it with [[write]]), and the columns are validated
+    * against the record: a mismatch FAILS FAST instead of corrupting
+    * every downstream count. The batch must be doc-disjoint from what
+    * the store already covers (see the class contract); single writer
+    * per dir, quiesce before [[compact]]/Maintenance. */
+  def ingestBatch(docs: DataFrame, dir: String, idCol: String,
+      strataCol: String, textCol: String, tag: String): Unit = {
+    if (docs.isEmpty) return
+    val spark = docs.sparkSession
     val rec = graft.store.Store.require(spark, dir, Kind)
-    requireParamsMatch(rec, dir, batch.strataCol, batch.textCol)
+    requireParamsMatch(rec, dir, strataCol, textCol)
+    val batch = build(docs, idCol, strataCol, textCol)
     graft.store.Store.append(spark, dir, rec, tag,
       Seq("tokens.parquet" -> batch.tokens,
         "strata.parquet" -> batch.strata))
-  }
-
-  /** Append a micro-batch's profile AT MOST ONCE per `batchId` — the
-    * guard that makes [[append]] safe under Structured Streaming's
-    * at-least-once foreachBatch retries (a replayed batch would
-    * silently double every count). Returns false (no-op) when
-    * `batchId` is already applied; otherwise appends (or creates the
-    * store on first application) under the tag `batch-<batchId>`.
-    * Single writer per dir assumed (one streaming query owns a
-    * store). */
-  def appendOnce(batch: Profile, dir: String, batchId: Long): Boolean = {
-    val tag = s"batch-$batchId"
-    graft.store.Store.read(batch.strata.sparkSession, dir) match {
-      case Some(rec) if rec.applied.contains(tag) => false
-      case Some(_) => ingestBatch(batch, dir, tag); true
-      case None =>
-        writeApplied(batch, dir, 128L << 20, Map(tag -> Map.empty)); true
-    }
   }
 
   /** Reload a stored profile (partials as stored — aggregate via

@@ -255,10 +255,12 @@ object Curation {
     * batch's grams land as unsorted extra files (the record marks the
     * table unsorted until [[deconSetCompact]]); probe results are
     * correct immediately, because the semi-join probe is duplicate-
-    * and order-insensitive. Single-writer-per-dir is the caller's
-    * contract, as for every store. */
+    * and order-insensitive. An empty batch commits nothing, so a serve
+    * beside it keeps its cached set. Single-writer-per-dir is the
+    * caller's contract, as for every store. */
   def deconSetAppend(bench: DataFrame, idCol: String, textCol: String,
       dir: String): Unit = {
+    if (bench.isEmpty) return
     val spark = bench.sparkSession
     val rec = graft.store.Store.require(spark, dir, DeconSetKind)
     graft.store.Store.append(spark, dir, rec, graft.store.Store.freshTag(),

@@ -355,8 +355,8 @@ object Dedup {
     * pass runs once per corpus LIFETIME, not once per session.
     * Stage-then-swap like the IVF side, so writing an index whose
     * `signed` lazily reads `dir` back to the same `dir` is safe. To
-    * append an ingest batch use [[appendToMinhashIndex]] (O(batch)
-    * parquet append, no corpus rewrite) — THIS function always
+    * append an ingest batch use [[minhashIngestBatch]] (O(batch)
+    * tagged append, no corpus rewrite) — THIS function always
     * replaces the stored corpus wholesale. */
   def writeMinhashIndex(index: MinhashIndex, dir: String): Unit =
     graft.store.Store.write(index.signed.sparkSession, dir, MinhashKind,
@@ -372,8 +372,8 @@ object Dedup {
   val MinhashKind = "minhash-index"
 
   // the record's (n, numHashes, rowsPerBand): a mismatch would
-  // silently produce disjoint band keys, so every append and read
-  // validates the caller's scheme against it
+  // silently produce disjoint band keys, so every read validates the
+  // caller's scheme against it (the append signs with the record's)
   private def requireParamsMatch(rec: graft.store.Store.Record,
       dir: String, n: Int, numHashes: Int, rowsPerBand: Int): Unit = {
     val stored =
@@ -385,31 +385,17 @@ object Dedup {
         "silently produce disjoint band keys")
   }
 
-  /** Append an ingest batch's signatures to a STORED index dir under a
-    * fresh tag: one narrow signature pass over the batch, an O(batch)
-    * append of just those rows — the corpus-sized file set is never
-    * rewritten. The batch's (n, numHashes, rowsPerBand) are validated
-    * against the store record and a mismatch FAILS FAST — appending
-    * under a different banding scheme would silently corrupt the
-    * store with disjoint band keys. Typical loop: pair the batch
-    * first via [[minhashLshPairsAgainstIndex]], then append its
-    * survivors. */
-  def appendToMinhashIndex(batch: MinhashIndex, dir: String): Unit = {
-    val spark = batch.signed.sparkSession
-    val rec = graft.store.Store.require(spark, dir, MinhashKind)
-    requireParamsMatch(rec, dir, batch.n, batch.numHashes,
-      batch.rowsPerBand)
-    graft.store.Store.append(spark, dir, rec,
-      graft.store.Store.freshTag(), Seq("signed.parquet" -> batch.signed))
-  }
-
-  /** Replay-idempotent streaming append to a stored [[MinhashIndex]]
-    * — [[appendToMinhashIndex]] under foreachBatch's at-least-once
-    * contract: the batch is signed under the STORED banding scheme
-    * (the record's params) and its signature rows commit under `tag`,
-    * so a committed tag replays as a no-op and a crashed attempt's
-    * leftovers are purged before re-appending. Same tag/runId,
-    * id-disjointness, and single-writer contracts as the other ingest
+  /** The one append to a stored [[MinhashIndex]]: the batch is signed
+    * under the STORED banding scheme (the record's params, so an append
+    * can never land disjoint band keys) and only its signature rows
+    * commit under `tag`, in O(batch) — the corpus-sized file set is
+    * never rewritten. A committed tag replays as a no-op, a crashed
+    * attempt's leftovers are purged before re-appending, and an empty
+    * batch commits nothing. Batch callers pass
+    * `graft.store.Store.freshTag()`, streams `runId-batchId`. Typical
+    * batch loop: pair the batch first via
+    * [[minhashLshPairsAgainstIndex]], then append its survivors. Same
+    * id-disjointness and single-writer contracts as the other ingest
     * paths. */
   def minhashIngestBatch(batch: DataFrame, dir: String, idCol: String,
       textCol: String, tag: String): Unit = {

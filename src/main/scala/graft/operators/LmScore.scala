@@ -514,13 +514,15 @@ object LmScore {
     * committed tag replays as a no-op, a crashed attempt's files are
     * invisible to every reader until the replay purges them, and a
     * serve concurrent with the append reads the model before or after
-    * it, never between. Single-writer-per-dir is the caller's
-    * contract. */
+    * it, never between; an empty batch commits nothing, so a serve
+    * beside the ingest keeps its cached model. Batch callers pass
+    * `graft.store.Store.freshTag()`. Single-writer-per-dir is the
+    * caller's contract. */
   def appendModel(reference: DataFrame, textCol: String,
       dir: String, tag: String): Unit = {
-    val spark = reference.sparkSession
-    graft.store.Store.append(spark, dir,
-      graft.store.Store.require(spark, dir, Kind), tag,
+    if (reference.isEmpty) return
+    graft.store.Store.append(reference.sparkSession, dir,
+      graft.store.Store.require(reference.sparkSession, dir, Kind), tag,
       Seq("unigrams.parquet" ->
           reference.select(explode(tokens(col(textCol))).as("token"))
             .distinct(),

@@ -246,7 +246,7 @@ object Similarity {
       * index instead of leaving none. Concurrent READERS of `dir`
       * still race the final swap; cross-process sharing should write
       * to a fresh dir and repoint, or append via
-      * [[ivfAppendToStored]]. */
+      * [[ivfIngestBatch]]. */
     def write(dir: String): Unit =
       graft.store.Store.write(codebook.sparkSession, dir, IvfKind,
           Map.empty) { st =>
@@ -265,83 +265,39 @@ object Similarity {
 
   val IvfKind = "ivf-index"
 
-  /** Persist an ingest batch in place: assign `newCorpus` to `index`'s
-    * EXISTING cells and parquet-APPEND only those rows to the stored
-    * `assigned` table — the durable twin of [[ivfIndexAppend]]. The
-    * corpus-sized file set is never rewritten (daily ingest cost is
-    * O(batch), not O(corpus)) and nothing reads `dir` while writing,
-    * so there is no overwrite-while-read hazard at all. Returns the
-    * extended in-memory index (stored codebook unchanged — the
-    * standard IVF append; periodic re-train is a rebuild). The batch
-    * must be ID-DISJOINT from the stored corpus (a re-appended id
-    * duplicates its assigned row, not an upsert). */
-  def ivfAppendToStored(index: IvfIndex, newCorpus: DataFrame,
-      dir: String): IvfIndex = {
-    val cents = collectCents(index.codebook)
-    val c = ivfPrep(newCorpus, index.idCol, index.vecCol)
-    val extra =
-      if (cents.isEmpty) emptyAssigned(c)
-      else assignCells(requireDim(c, cents.head._2.length,
-        "ivfAppendToStored"), centArrOf(cents))
-    appendAssigned(extra, dir, graft.store.Store.freshTag())
-    index.copy(assigned = index.assigned.unionByName(extra))
-  }
-
-  /** Replay-idempotent streaming append to a stored [[IvfIndex]] —
-    * the foreachBatch form of [[ivfAppendToStored]], whose plain
-    * append-mode write double-counts a replayed micro-batch. The
-    * batch's rows are assigned to the STORED codebook's cells (the
-    * standard IVF append: codebook unchanged, periodic re-train is a
-    * rebuild) and land as `tag`-named files via
-    * `graft.store.Store.append` — a committed tag replays as a no-op
-    * and a crashed attempt's files stay invisible until the replay
-    * purges them, so the stored `assigned` table converges to
-    * exactly-once. `tag` must be unique per logical batch across stream runs
-    * (runId+batchId); same id-disjointness and single-writer-per-dir
-    * contracts as [[ivfAppendToStored]]. */
-  def ivfIngestBatch(batch: DataFrame, dir: String, idCol: String,
-      vecCol: String, tag: String): Unit = {
-    if (batch.isEmpty) return
-    ivfIngestBatchWith(
-      ivfReady(readIvfIndex(batch.sparkSession, dir, idCol, vecCol)),
-      batch, dir, tag)
-  }
-
-  /** [[ivfIngestBatch]] with the codebook ALREADY collected
-    * ([[IvfReady]]) — the form a streaming ingest calls per
-    * micro-batch with a cached handle (round 19): ingest never
-    * mutates the codebook, so re-reading and re-collecting it per
-    * batch was a pure fixed cost. Identical behavior to the one-shot
-    * form, which delegates here. */
-  def ivfIngestBatchWith(ready: IvfReady, batch: DataFrame,
+  /** The one append to a stored [[IvfIndex]]: the batch's rows are
+    * assigned to the STORED codebook's cells (`ready`, collected once;
+    * the standard IVF append — codebook unchanged, periodic re-train is
+    * a rebuild) and only those rows land in the `assigned` table under
+    * `tag` in one record commit, in O(batch). A committed tag replays
+    * as a no-op, a crashed attempt's files stay invisible until the
+    * replay purges them, and an empty batch commits nothing. Batch
+    * callers pass `graft.store.Store.freshTag()`, streams
+    * `runId-batchId`. The batch must be ID-DISJOINT from the stored
+    * corpus (a re-appended id duplicates its assigned row, not an
+    * upsert); single writer per dir. */
+  def ivfIngestBatch(ready: IvfReady, batch: DataFrame,
       dir: String, tag: String): Unit = {
     if (batch.isEmpty) return
     val cents = ready.cents
-    // fail fast, unlike ivfAppendToStored's visible-empty return: in
-    // a fire-and-forget streaming sink an empty-codebook store would
-    // otherwise drop every ingested vector while the stream runs
-    // green — unobservable data loss (ivfPqIngestBatch's discipline)
+    // fail fast: in a fire-and-forget streaming sink an empty-codebook
+    // store would otherwise drop every ingested vector while the
+    // stream runs green — unobservable data loss
     require(cents.nonEmpty,
       s"ivfIngestBatch: index at $dir has an empty codebook — " +
-        "rebuild with ivfIndex before streaming ingest")
+        "rebuild with ivfIndex before appending")
     val c = ivfPrep(batch, ready.index.idCol, ready.index.vecCol)
-    val extra = assignCells(requireDim(c, cents.head._2.length,
-      "ivfIngestBatch"), ready.centArr)
-    appendAssigned(extra, dir, tag)
-  }
-
-  private def appendAssigned(extra: DataFrame, dir: String,
-      tag: String): Unit = {
-    val spark = extra.sparkSession
+    val spark = batch.sparkSession
     graft.store.Store.append(spark, dir,
       graft.store.Store.require(spark, dir, IvfKind), tag,
-      Seq("assigned.parquet" -> extra))
+      Seq("assigned.parquet" -> assignCells(requireDim(c,
+        cents.head._2.length, "ivfIngestBatch"), ready.centArr)))
   }
 
   /** Fail fast when a batch row's vector dimension differs from the
     * index's: the dot kernel truncates to min(length), so a
     * mismatched batch would silently assign/encode garbage into a
-    * STORED index (same discipline as CorpusProfile.append's
+    * STORED index (same discipline as CorpusProfile.ingestBatch's
     * requireParamsMatch). Rides the row pipeline via assert_true —
     * every row is checked, mixed-dim batches included — and a task
     * failure aborts any parquet append uncommitted. */
@@ -463,7 +419,7 @@ object Similarity {
     * cells (codebook unchanged — the standard IVF append; periodic
     * re-train is a rebuild with [[ivfIndex]]) and extend `assigned`.
     * One narrow argmax pass over the batch — the corpus is never
-    * touched. To persist the ingest prefer [[ivfAppendToStored]]
+    * touched. To persist the ingest prefer [[ivfIngestBatch]]
     * (appends only the batch rows, no corpus rewrite); writing THIS
     * result back with [[IvfIndex.write]] also works — its
     * stage-then-swap materializes the union before touching the
@@ -1651,52 +1607,6 @@ object Similarity {
       ksub, residual, backing = Some(pqInput))
   }
 
-  /** Persist an ingest batch into a stored [[IvfPqIndex]]: assign
-    * `newCorpus` to the EXISTING coarse cells, encode with the
-    * EXISTING PQ codebooks (this is the point of storing them — an
-    * ingest batch never retrains anything), and parquet-APPEND only
-    * the batch's code rows. Daily ingest cost is O(batch); the
-    * corpus-sized codes table is never rewritten, and both codebook
-    * files are untouched (periodic retrain = rebuild with
-    * [[ivfPqIndex]], the standard IVF discipline). Returns the
-    * extended in-memory index. The batch must be ID-DISJOINT from
-    * what the index already covers (same contract as every append
-    * path here — MinhashIndex, IVF assigned, CorpusProfile): a
-    * re-appended id yields duplicate candidate rows, not an upsert. */
-  def ivfPqAppendToStored(index: IvfPqIndex, newCorpus: DataFrame,
-      dir: String): IvfPqIndex = {
-    val extra = encodeWithStoredCodebooks(index, newCorpus,
-      "ivfPqAppendToStored")
-    appendCodes(extra, dir, graft.store.Store.freshTag())
-    index.copy(codes = index.codes.unionByName(extra))
-  }
-
-  /** Replay-idempotent streaming append to a stored [[IvfPqIndex]] —
-    * [[ivfIngestBatch]]'s contract on the PQ-coded unit: assign to
-    * the stored coarse cells, encode with the stored PQ codebooks
-    * (residual-aware — nothing retrains), and land the batch's code
-    * rows under `tag` in one record commit, so a replayed foreachBatch
-    * micro-batch is a no-op once committed and purges its own crashed
-    * leftovers otherwise. Same
-    * tag-uniqueness (runId+batchId), id-disjointness, and
-    * single-writer contracts as the other ingest paths. */
-  def ivfPqIngestBatch(batch: DataFrame, dir: String, idCol: String,
-      vecCol: String, tag: String): Unit = {
-    if (batch.isEmpty) return
-    ivfPqIngestBatchWith(
-      ivfPqEncoder(readIvfPqIndex(batch.sparkSession, dir, idCol,
-        vecCol)),
-      batch, dir, tag)
-  }
-
-  /** The shared encode arm of the two IVF-PQ append paths: coarse
-    * cell assignment against the index's centroids + PQ encode with
-    * its stored per-subvector codebooks, residual-aware. Returns the
-    * batch's (idCol, cell, codes) rows. */
-  private def encodeWithStoredCodebooks(index: IvfPqIndex,
-      newCorpus: DataFrame, op: String): DataFrame =
-    encodeWith(ivfPqEncoder(index), newCorpus, op)
-
   /** [[IvfReady]]'s INGEST twin for the PQ-coded unit: both stored
     * codebooks collected once, in the encoder's half-squared-norm
     * form — the unit a streaming ingest caches per codebook
@@ -1715,20 +1625,21 @@ object Similarity {
         case (v, code) => (code, v, halfSq(v))
       }))
 
-  /** [[ivfPqIngestBatch]] with the codebooks already collected —
-    * identical behavior; the one-shot form delegates here. */
-  def ivfPqIngestBatchWith(enc: IvfPqEncoder, batch: DataFrame,
+  /** The one append to a stored [[IvfPqIndex]] — [[ivfIngestBatch]]'s
+    * contract on the PQ-coded unit: the batch is assigned to the stored
+    * coarse cells and encoded with the stored PQ codebooks (`enc`,
+    * collected once; residual-aware, nothing retrains — this is the
+    * point of storing them), and only its code rows land under `tag` in
+    * one record commit, in O(batch); both codebook files are untouched.
+    * Same tag, empty-batch, id-disjointness and single-writer contracts
+    * as [[ivfIngestBatch]]. */
+  def ivfPqIngestBatch(enc: IvfPqEncoder, batch: DataFrame,
       dir: String, tag: String): Unit = {
     if (batch.isEmpty) return
-    appendCodes(encodeWith(enc, batch, "ivfPqIngestBatch"), dir, tag)
-  }
-
-  private def appendCodes(extra: DataFrame, dir: String,
-      tag: String): Unit = {
-    val spark = extra.sparkSession
+    val spark = batch.sparkSession
     graft.store.Store.append(spark, dir,
       graft.store.Store.require(spark, dir, IvfPqKind), tag,
-      Seq("codes.parquet" -> extra))
+      Seq("codes.parquet" -> encodeWith(enc, batch, "ivfPqIngestBatch")))
   }
 
   private def encodeWith(enc: IvfPqEncoder,

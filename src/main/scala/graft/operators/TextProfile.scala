@@ -350,7 +350,7 @@ object TextProfile {
     * every query batch pays only the posting lookup. `dfreq` stores
     * as PARTIALS (one per build/append batch) summed at read —
     * CorpusProfile's exact-merge discipline, which is what makes
-    * [[bm25IndexAppend]] O(batch).
+    * [[bm25IngestBatch]] O(batch).
     *
     * `postings` = (idCol, __len, term, __tf); `dfreq` partials =
     * (term, __df); `nDocs`/`totTokens`/`idCol` are record params
@@ -415,54 +415,30 @@ object TextProfile {
       idCol, rec.long("docs"), rec.long("tokens"))
   }
 
-  /** Append a batch to a stored [[Bm25Index]] under a fresh tag: the
-    * batch's df PARTIAL and posting rows append in O(batch) and commit
-    * together with the raised N/T totals in one record write; the
-    * corpus-sized posting table is never rewritten (appended files are
-    * not term-sorted with the original set — the record marks the
-    * table unsorted until [[bm25IndexCompact]] restores the row-group
-    * pruning the In(term) arm relies on). The batch must be
-    * DOC-DISJOINT from the index (CorpusProfile's contract — a
-    * re-appended doc double-counts df/tf, not upserts). Returns the
-    * extended in-memory index. */
-  def bm25IndexAppend(index: Bm25Index, batch: DataFrame,
-      textCol: String, dir: String): Bm25Index = {
-    val spark = batch.sparkSession
-    val b = bm25Index(batch, index.idCol, textCol)
-    appendBatch(spark, dir, graft.store.Store.require(spark, dir, Bm25Kind),
-      b, graft.store.Store.freshTag())
-    Bm25Index(index.postings.unionByName(b.postings),
-      index.dfreq.unionByName(b.dfreq)
-        .groupBy(col("term")).agg(sum(col("__df")).as("__df")),
-      index.idCol, index.nDocs + b.nDocs, index.totTokens + b.totTokens)
-  }
-
-  private def appendBatch(spark: org.apache.spark.sql.SparkSession,
-      dir: String, rec: graft.store.Store.Record, b: Bm25Index,
-      tag: String): Unit =
-    graft.store.Store.append(spark, dir, rec, tag,
-      Seq("df.parquet" -> b.dfreq, "postings.parquet" -> b.postings),
-      contrib = Map("docs" -> b.nDocs, "tokens" -> b.totTokens))
-
-  /** Replay-idempotent streaming append to a stored [[Bm25Index]] —
-    * the foreachBatch form of [[bm25IndexAppend]] under a caller-stable
-    * `tag` (runId+batchId): the batch's df partial, postings and its
-    * N/T contribution commit in ONE record write, so a committed tag
-    * replays as a no-op, a crashed attempt's files stay invisible
-    * until the replay purges them, and a serve beside the ingest reads
-    * either the whole batch or none of it. The id column comes from the
-    * record. Single-writer-per-dir as everywhere: quiesce this stream
-    * before [[bm25IndexCompact]]/Maintenance runs. */
+  /** The one append to a stored [[Bm25Index]]: the batch's df PARTIAL,
+    * its postings and its N/T contribution commit under `tag` in ONE
+    * record write, in O(batch) — the corpus-sized posting table is
+    * never rewritten. A committed tag replays as a no-op, a crashed
+    * attempt's files stay invisible until the replay purges them, a
+    * serve beside the ingest reads either the whole batch or none of
+    * it, and an empty batch commits nothing. Batch callers pass
+    * `graft.store.Store.freshTag()`, streams `runId-batchId`. Appended
+    * files are not term-sorted with the original set: the record marks
+    * the table unsorted until [[bm25IndexCompact]] restores the
+    * row-group pruning the In(term) arm relies on. The batch must be
+    * DOC-DISJOINT from the index (a re-appended doc double-counts
+    * df/tf, not upserts); the id column comes from the record.
+    * Single-writer-per-dir as everywhere. */
   def bm25IngestBatch(batch: DataFrame, textCol: String, dir: String,
       tag: String): Unit = {
-    // an empty micro-batch (timer trigger with no data) contributes
-    // nothing; skipping entirely is the idempotent no-op
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     val rec = graft.store.Store.require(spark, dir, Bm25Kind)
     if (rec.applied.contains(tag)) return
-    appendBatch(spark, dir, rec, bm25Index(batch, rec.str("idCol"), textCol),
-      tag)
+    val b = bm25Index(batch, rec.str("idCol"), textCol)
+    graft.store.Store.append(spark, dir, rec, tag,
+      Seq("df.parquet" -> b.dfreq, "postings.parquet" -> b.postings),
+      contrib = Map("docs" -> b.nDocs, "tokens" -> b.totTokens))
   }
 
   /** Restore a stored [[Bm25Index]] after appends: rewrites the

@@ -793,9 +793,8 @@ object TextQueries extends QueryPack {
         CorpusProfile.write(CorpusProfile.build(
           docs.filter(col("doc_id") % 2 === 0), "doc_id", "lang",
           "text"), dir)
-        CorpusProfile.append(CorpusProfile.build(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "lang",
-          "text"), dir)
+        CorpusProfile.ingestBatch(docs.filter(col("doc_id") % 2 === 1),
+          dir, "doc_id", "lang", "text", graft.store.Store.freshTag())
         CorpusProfile.stats(
           CorpusProfile.read(s, dir, "lang", "text"))
       },
@@ -805,8 +804,7 @@ object TextQueries extends QueryPack {
     // on the corpus profile: seed a third batch-side, stream the
     // other two thirds in 3 micro-batches through
     // StreamJobs.profileIngestStream (per-batch partials landing as
-    // tagged exactly-once files — closing appendOnce's documented
-    // one-batch double-count window), quiesced maintenance (partial
+    // tagged exactly-once files), quiesced maintenance (partial
     // collapse), then the merged per-language summary. Shares
     // q_profile_incremental's direct-recompute oracle: stats fed by
     // streamed partials may not differ by a bit.

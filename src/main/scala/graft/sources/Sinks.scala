@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -19,18 +20,44 @@ object Sinks {
   val BucketCol = "bucket_date"
 
   /** Write `df` under `<outDir>/<jobName>/bucket_date=…/` partitioned
-    * by the formatted event time of `tsCol`. Append mode — successive
-    * job runs add files to existing buckets, as the reference's
-    * append-only HDFS writers do. */
+    * by the formatted event time of `tsCol`. Append semantics —
+    * successive job runs add files to existing buckets, as the
+    * reference's append-only HDFS writers do. The job writes into a
+    * staging directory beside the destination, and its files move into
+    * their buckets only once the job has succeeded: under the
+    * session's v2 committer a task's files land at commit time, so a
+    * direct append would leave a failed job's committed tasks in the
+    * destination, and a rerun would add those rows twice. */
   def writeDateTimeBucketed(df: DataFrame, tsCol: String, outDir: String,
       jobName: String, pattern: String = "yyyy-MM-dd-HH",
-      maxRecordsPerFile: Long = 0L): Unit =
-    df.withColumn(BucketCol, date_format(col(tsCol), pattern))
-      .write
-      .mode(SaveMode.Append)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(BucketCol)
-      .parquet(s"$outDir/$jobName")
+      maxRecordsPerFile: Long = 0L): Unit = {
+    val dest = new Path(outDir, jobName)
+    val fs = dest.getFileSystem(
+      df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging =
+      new Path(outDir, s".$jobName-staging-${java.util.UUID.randomUUID}")
+    try {
+      df.withColumn(BucketCol, date_format(col(tsCol), pattern))
+        .write
+        .option("maxRecordsPerFile", maxRecordsPerFile)
+        .partitionBy(BucketCol)
+        .parquet(staging.toString)
+      fs.mkdirs(dest)
+      // part-file names carry the write job's id: no two runs collide
+      fs.listStatus(staging).filter(_.isDirectory).foreach { bucket =>
+        val into = new Path(dest, bucket.getPath.getName)
+        fs.mkdirs(into)
+        fs.listStatus(bucket.getPath).map(_.getPath)
+          .filter(p => !p.getName.startsWith(".") &&
+            !p.getName.startsWith("_"))
+          .foreach { p =>
+            if (!fs.rename(p, new Path(into, p.getName)))
+              throw new java.io.IOException(
+                s"writeDateTimeBucketed: rename of $p into $into failed")
+          }
+      }
+    } finally fs.delete(staging, true)
+  }
 
   /** Write `df` as a HASH-BUCKETED catalog table: rows land in
     * `numBuckets` files per partition by `hash(keys) % numBuckets`,

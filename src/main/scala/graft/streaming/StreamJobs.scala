@@ -2,9 +2,12 @@ package graft.streaming
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+
+import graft.operators.{Classify, CorpusProfile, Curation, Dedup, LmScore,
+  Retrieval, Similarity, TextProfile}
 
 /** End-to-end Structured Streaming jobs over the engine's sources:
   * readStream → transforms → writeStream, with the reference's
@@ -94,334 +97,101 @@ object StreamJobs {
       .dropDuplicates("fp"))
   }
 
-  /** Continuous corpus-profile maintenance at ingest: each arriving
-    * micro-batch's stats are appended to the stored
-    * `operators.CorpusProfile` at `dir` in O(batch) — the stream-side
-    * of the incremental-profile discipline, so corpus statistics
-    * (token mass per language, vocabulary, df table) stay current
-    * without any corpus rescan, ever. Batch-id idempotence via
-    * `CorpusProfile.appendOnce` guards foreachBatch's at-least-once
-    * retries. Returns the writer — caller picks trigger/checkpoint
-    * and starts it. */
-  def profileStream(docs: DataFrame, dir: String, idCol: String,
-      strataCol: String, textCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.operators.CorpusProfile.appendOnce(
-          graft.operators.CorpusProfile.build(widen(batch), idCol, strataCol,
-            textCol), dir, batchId)
-        ()
-    }
-
-  /** Streaming ANN serving: each arriving micro-batch of query
-    * vectors ranks top-k against the PERSISTED composed IVF-PQ index
-    * at `indexDir` (`Similarity.IvfPqIndex` — built once by a batch
-    * job, optionally extended by `ivfPqAppendToStored` ingest), and
-    * the batch's results land as parquet under
-    * `outDir/batch_id=<id>/`. Per batch the work is the stored-index
-    * probe only — nlist centroid scores per query + a probe-capped
-    * scan of the code table; no training, and the float corpus is
-    * never read. The index read and both codebook collects are
-    * cached per store generation ([[ModelCache]]): a quiet store pays
-    * one record read per batch, while code rows appended by a
-    * concurrent ingest (every append raises the generation) still
-    * become visible to the next micro-batch.
-    *
-    * Replay idempotence: foreachBatch is at-least-once, so each
-    * batch OVERWRITES its own batch_id-scoped subdir — a replayed
-    * batch rewrites the same path instead of appending duplicate
-    * result rows; readers see exactly-once results via partition
-    * discovery over `outDir`. Returns the writer — caller picks
-    * trigger/checkpoint and starts it. */
-  def annLookupStream(queries: DataFrame, indexDir: String,
-      outDir: String, idCol: String, vecCol: String, k: Int,
-      nprobe: Int = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    queries.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val ready = ModelCache.getOrLoad(s, indexDir,
-            key = s"$indexDir#ivfpq#$idCol#$vecCol") {
-          graft.operators.Similarity.ivfPqReady(
-            graft.operators.Similarity.readIvfPqIndex(s, indexDir,
-              idCol, vecCol))
-        } (_ => ()) // nothing pinned: handle holds plans + literals
-        graft.operators.Similarity
-          .ivfPqTopKWithReady(serveBatch(batch), ready, k, nprobe)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
-        ()
-    }
-
-  /** [[annLookupStream]] on the PLAIN IVF unit (float vectors, no PQ
-    * coding — the exact-scoring serving tier): each micro-batch of
-    * (id, embedding) queries ranks against the persisted
-    * `Similarity.IvfIndex` — nlist centroid scores per query + a
-    * probe-capped scan of the assigned table; no training, no
-    * re-clustering. Index read + codebook collect are cached per
-    * store generation ([[ModelCache]]), so rows appended by a
-    * concurrent [[annIngestStream]] or by a plain append still become
-    * visible to the next micro-batch; same
-    * batch_id-subdir overwrite idempotence as every serve here. */
-  def ivfLookupStream(queries: DataFrame, indexDir: String,
-      outDir: String, idCol: String, vecCol: String, k: Int,
-      nprobe: Int = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    queries.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val ready = ivfReadyCached(batch.sparkSession, indexDir,
-          idCol, vecCol)
-        graft.operators.Similarity.ivfTopKWithReady(serveBatch(batch),
-          ready, k, nprobe)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
-        ()
-    }
-
   /** Query rows up to which a serve micro-batch is collected once to
     * the driver ([[serveBatch]]). */
   private val ServeBatchRows = 256
 
-  /** A serve stream's micro-batch, made driver-local when it holds at
-    * most [[ServeBatchRows]] query rows (`graft.plans.LocalRows`, one
-    * bounded job). The probe then reads the batch once instead of once
-    * per use, and a batch probing few cells or terms takes the
-    * operators' pushed In(cell) / In(term) arm, so the stored scans
-    * skip the row groups it does not probe. A larger batch stays as it
-    * is and takes the join arms. */
-  private def serveBatch(batch: DataFrame): DataFrame =
-    graft.plans.LocalRows.collectSmall(batch, ServeBatchRows)
-
-  /** The generation-cached [[graft.operators.Similarity.IvfReady]] handle
-    * shared by [[ivfLookupStream]] and [[hybridLookupStream]]. */
-  private def ivfReadyCached(s: SparkSession, indexDir: String,
-      idCol: String, vecCol: String)
-      : graft.operators.Similarity.IvfReady =
-    ModelCache.getOrLoad(s, indexDir,
-        key = s"$indexDir#ivf#$idCol#$vecCol") {
-      graft.operators.Similarity.ivfReady(
-        graft.operators.Similarity.readIvfIndex(s, indexDir, idCol,
-          vecCol))
-    } (_ => ()) // nothing pinned: handle holds plans + literals
-
-  /** Streaming lexical retrieval serving — [[annLookupStream]]'s
-    * pattern applied to the SIXTH persistence unit: each arriving
-    * micro-batch of text queries ranks BM25 top-k against the
-    * PERSISTED posting index at `indexDir`
-    * (`TextProfile.Bm25Index` — built once by a batch job, extended
-    * by `bm25IndexAppend` ingest), and the batch's results land as
-    * parquet under `outDir/batch_id=<id>/`. Per batch the work is
-    * the posting lookup only — no tokenize of the corpus, no tf/df
-    * recompute; the query batch's terms broadcast-semi-join the posting
-    * table, and a small batch ([[serveBatch]]) with few terms also
-    * pushes a literal In(term) into the term-sorted posting scan. The
-    * index read is cached per store generation
-    * ([[ModelCache]]) with the vocab-bounded df aggregation PERSISTED
-    * for the entry's lifetime, so a quiet store pays one record read
-    * per batch instead of a store read plus a df re-aggregation;
-    * postings appended by a concurrent ingest become visible to the
-    * next micro-batch, and because the read takes one record snapshot
-    * a batch sees postings, df and the N/T totals of one commit.
+  /** The serve template every lookup stream writes through. Each
+    * micro-batch is prepared by [[serveBatch]] and handed to the
+    * stream's `probe`, a stored-index probe or stored-model scorer that
+    * fetches its store handle through [[ModelCache]] on every batch (a
+    * quiet store costs one record read; an append, rewrite or
+    * compaction raises the store's generation and takes effect from
+    * the next batch). The result OVERWRITES `outDir/batch_id=<id>/`.
     *
-    * Replay idempotence: foreachBatch is at-least-once, so each
-    * batch OVERWRITES its own batch_id-scoped subdir — the same
-    * exactly-once-by-overwrite contract as annLookupStream. Returns
-    * the writer — caller picks trigger/checkpoint and starts it. */
-  def bm25LookupStream(queries: DataFrame, indexDir: String,
-      outDir: String, qIdCol: String, qTextCol: String, idCol: String,
-      k: Int, stopwordCut: Boolean = true)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    queries.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val idx = bm25IndexCached(batch.sparkSession, indexDir, idCol)
-        graft.operators.TextProfile
-          .bm25TopKWithIndex(serveBatch(batch), qIdCol, qTextCol, idx, k,
-            stopwordCut)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
-        ()
-    }
-
-  /** The generation-cached stored [[graft.operators.TextProfile.Bm25Index]]
-    * shared by [[bm25LookupStream]] and [[hybridLookupStream]]: the
-    * df partial aggregation (vocab-bounded) persists for the cache
-    * entry's lifetime and releases when the store's generation moves. */
-  private def bm25IndexCached(s: SparkSession, indexDir: String,
-      idCol: String): graft.operators.TextProfile.Bm25Index =
-    ModelCache.getOrLoad(s, indexDir, key = s"$indexDir#bm25#$idCol") {
-      val i = graft.operators.TextProfile.readBm25Index(s, indexDir,
-        idCol)
-      i.copy(dfreq = i.dfreq.persist())
-    } (i => { i.dfreq.unpersist(); () })
-
-  /** Streaming benchmark decontamination — the serve pattern applied
-    * to the persisted decon set (`Curation.writeDeconSet`): each
-    * arriving micro-batch of DOCUMENTS probes the stored benchmark
-    * grams with a semi join and lands (idCol, n_hits) — its
-    * contaminated members and their distinct-gram hit counts — under
-    * `outDir/batch_id=<id>/`. This is the shape a 100 TB ingest
-    * actually runs: benchmarks are tiny and change rarely (gram
-    * extraction paid once, at set-write time), corpora arrive
-    * forever, and each batch pays one batch-gram explode + one
-    * broadcast-sized semi join. The set read is cached per store
-    * generation ([[ModelCache]]) with the benchmark-bounded gram frame
-    * PERSISTED for the entry's lifetime, so a quiet store pays one
-    * record read per batch instead of a set re-scan;
-    * `deconSetAppend`ed benchmarks still take effect from the next
-    * micro-batch. Replay safety is DOUBLE here: batch_id-scoped
-    * overwrite (the serve convention) AND semi-join semantics (a
-    * duplicate-holding set probes identically). Returns the writer —
-    * caller picks trigger/checkpoint and starts it. */
-  def deconLookupStream(docs: DataFrame, setDir: String,
-      outDir: String, idCol: String, textCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val (set, n) = ModelCache.getOrLoad(batch.sparkSession,
-            setDir, key = s"$setDir#deconset") {
-          val (g, nn) = graft.operators.Curation.readDeconSet(
-            batch.sparkSession, setDir)
-          (g.persist(), nn)
-        } (e => { e._1.unpersist(); () })
-        graft.operators.Curation
-          .decontaminateWithSet(widen(batch), set, idCol, textCol, n)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
-        ()
-    }
-
-  /** [[deconLookupStream]]'s EMBEDDING-SPACE twin: each arriving
-    * micro-batch of vectors probes the stored semantic decon set and
-    * lands its contaminated members as (idCol, cos = max verified
-    * cosine) under `outDir/batch_id=<id>/`. Catches the
-    * paraphrased/translated benchmark leakage the gram probe cannot
-    * see, at the same serve shape: the benchmark pack is paid once
-    * at set-write time, each batch pays one narrow key pass + the
-    * occupancy-bounded bucket join(s). LAYOUT-ADAPTIVE (round 18):
-    * the store record's kind names the pack — a banded set
-    * ([[graft.operators.Similarity.writeSemanticDeconSetBanded]],
-    * params bands/rowsPerBand; the measured-recall scale path) probes
-    * through the banded OR-construction, a single-band set
-    * (`writeSemanticDeconSet`, param planes) through
-    * the single-pack probe — so rotating a deployment to banded sets
-    * needs no serve change, just a set rewrite. A banded set whose
-    * stored shape sits at or past the cost crossover
-    * ([[graft.operators.Similarity.bandedShapeDominated]] —
-    * bands ≥ 2^rowsPerBand, the low-τ regime) probes through the
-    * EXACT arm over the same store's (bv, bnrm) columns instead:
-    * strictly cheaper than the dominated banded probe AND recall 1.0
-    * (round-18 finding #1). The read is
-    * cached per store generation ([[ModelCache]]), so a re-written
-    * set takes effect from the next micro-batch and a quiet stream
-    * pays a record read, not a set re-read. Hits are row-local given
-    * the stored set, so the cross-batch union equals the batch probe
-    * exactly; batch_id-scoped overwrite = replay idempotent. Returns
-    * the writer — caller picks trigger/checkpoint and starts it. */
-  def embedDeconLookupStream(vecs: DataFrame, setDir: String,
-      outDir: String, idCol: String, vecCol: String,
-      threshold: Double)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // the cached value is a probe CLOSURE, which bakes in this
-        // stream's parameters — so the cache key must carry them too,
-        // or two streams probing one set at different thresholds (or
-        // column names) would silently share the first stream's probe
-        val probe = ModelCache.getOrLoad(s, setDir,
-            key = s"$setDir#$idCol#$vecCol#$threshold") {
-          if (graft.store.Store.require(s, setDir,
-              graft.operators.Similarity.BandedDeconKind,
-              graft.operators.Similarity.SemanticDeconKind).kind ==
-              graft.operators.Similarity.BandedDeconKind) {
-            val (set, dim, bands, rpb) = graft.operators.Similarity
-              .readSemanticDeconSetBanded(s, setDir)
-            if (graft.operators.Similarity
-                .bandedShapeDominated(bands, rpb)) {
-              // crossover dispatch (round-18 finding #1): a stored
-              // shape at bands ≥ 2^rowsPerBand does MORE verify work
-              // than the exact probe at recall < 1, for every
-              // threshold — strictly dominated, so probe the stored
-              // set's (bv, bnrm) through the exact arm instead. Band
-              // 0 carries every bench vector exactly once, so the
-              // slice is a narrow filter over the same store — no
-              // set rewrite needed to rotate such a deployment.
-              val bb = set.filter(col("band") === 0)
-                .select("bv", "bnrm")
-              (b: DataFrame) => graft.operators.Similarity
-                .decontaminateSemanticExactWithSet(b, bb, idCol,
-                  vecCol, threshold)
-            } else
-              (b: DataFrame) => graft.operators.Similarity
-                .decontaminateSemanticBandedWithSet(b, set, idCol,
-                  vecCol, threshold, dim, bands, rpb)
-          } else {
-            val (set, dim, planes) = graft.operators.Similarity
-              .readSemanticDeconSet(s, setDir)
-            (b: DataFrame) => graft.operators.Similarity
-              .decontaminateSemanticWithSet(b, set, idCol, vecCol,
-                threshold, dim, planes)
-          }
-        } (_ => ()) // nothing pinned: the set frames are plain reads
-        probe(widen(batch))
-          .write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
-        ()
-    }
-
-  /** Streaming LM quality scoring — the serve pattern applied to the
-    * persisted bigram model (`LmScore.writeModel`): each arriving
-    * micro-batch of documents scores against the STORED model (two
-    * vocab-bounded count reads, partials collapsed at read — the
-    * reference corpus is never touched) and lands (idCol, n_bigrams,
-    * bits, milli_bits) under `outDir/batch_id=<id>/`. The quality-
-    * filtering shape a 100 TB ingest runs: the reference model
-    * changes rarely (appendModel takes new reference batches in
-    * O(batch); they take effect from the next micro-batch, because
-    * each batch probes the store's generation and re-reads the model
-    * only when it moved — [[ModelCache]], closing the per-batch fixed
-    * read cost), corpora arrive forever, and
-    * scores are doc-local, so the cross-batch union equals the batch
-    * scorer exactly. Batch_id-scoped overwrite = replay idempotent.
-    * Returns the writer — caller picks trigger/checkpoint and starts
+    * Replay contract: foreachBatch is at-least-once, and a replayed
+    * batch rewrites its own `batch_id=` directory instead of appending
+    * duplicate rows, so readers see exactly-once results through
+    * partition discovery over `outDir`. Every probe is batch-local
+    * (each query or document lives in one batch), so the union over
+    * batches equals the batch operator over the whole input. Returns
+    * the writer — the caller picks trigger and checkpoint and starts
     * it. */
-  /** Serve-side parallelism guard for the scorer streams: a
-    * micro-batch arrives with its SOURCE's partitioning (MemoryStream:
-    * one partition; a single Kafka partition: one), while a scorer's
-    * FIRST stage multiplies rows — tokens-per-doc × matched model rows
-    * — before any exchange, so on a narrow batch the whole fan-out
-    * runs in the source's task count. Measured at sf10: the NB serve's
-    * per-batch write read 28–40 s single-partition vs ~3 s wide — the
+  private def serve(in: DataFrame, outDir: String)(
+      probe: DataFrame => DataFrame): DataStreamWriter[Row] =
+    in.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      probe(serveBatch(batch)).write.mode("overwrite")
+        .parquet(s"$outDir/batch_id=$batchId")
+      ()
+    }
+
+  /** A serve micro-batch, prepared by one rule for every serve: at most
+    * [[ServeBatchRows]] rows are collected once to the driver
+    * (`graft.plans.LocalRows`, one bounded job), so the probe reads the
+    * batch once instead of once per use, and a batch probing few cells
+    * or terms takes the index operators' pushed In(cell) / In(term)
+    * arm, skipping the stored row groups it does not probe. A larger
+    * batch goes through [[widen]]. */
+  private def serveBatch(batch: DataFrame): DataFrame = {
+    val local = graft.plans.LocalRows.collectSmall(batch, ServeBatchRows)
+    if (local eq batch) widen(batch) else local
+  }
+
+  /** The ingest template every store-appending stream writes through.
+    * Each micro-batch goes through [[widen]] and into its store kind's
+    * one append under the tag `runId-batchId`; the append skips an
+    * empty batch, so an idle trigger commits nothing and leaves the
+    * generation (and every serve's cached handle) alone.
+    *
+    * Tag contract: the append commits the batch's files together with
+    * its tag in one store record write (`graft.store.Store.append`), so
+    * a replayed committed tag is a no-op and a replayed uncommitted
+    * batch first purges what its crashed attempt landed — foreachBatch's
+    * at-least-once converges to exactly-once. `runId` must be fresh per
+    * (checkpoint, stream) pair: a restart from the same checkpoint keeps
+    * it (that is what makes a replay converge), a new run takes a new
+    * one (its batch ids restart at 0). A serve beside the ingest reads
+    * one record snapshot, so it sees a batch whole or not at all, and
+    * committed files are never deleted outside quiesced compaction, so
+    * it never observes a missing file. Appends land unsorted; quiesced
+    * `Maintenance.compactAll` restores the sorted, sized layout. Returns
+    * the writer — the caller picks trigger and checkpoint and starts
+    * it. */
+  private def ingest(in: DataFrame, runId: String)(
+      append: (DataFrame, String) => Unit): DataStreamWriter[Row] =
+    in.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      append(widen(batch), s"$runId-$batchId")
+    }
+
+  /** Parallelism guard for a micro-batch: a batch arrives with its
+    * SOURCE's partitioning (MemoryStream: one partition; a single Kafka
+    * partition: one), while a scorer's or ingest build's FIRST stage
+    * multiplies rows — tokens-per-doc × matched model rows — before any
+    * exchange, so on a narrow batch the whole fan-out runs in the
+    * source's task count. Measured at sf10: the NB serve's per-batch
+    * write read 28–40 s single-partition vs ~3 s wide — the
     * explode+probe stage was one task chewing ~80M joined rows. One
     * cheap round-robin shuffle of the RAW batch (pre-explode, so it
     * moves doc rows, not the fan-out) buys scan parallelism for that
     * stage; skipped when the source already delivers at least half the
-    * session's parallelism, and skipped when the batch is SMALL
-    * (under [[WidenRowFloor]] rows): a near-empty micro-batch gains
-    * nothing from the exchange but pays its latency, and on the
-    * non-aggregating ingest paths each widened tiny batch would land
-    * O(parallelism) near-empty files per append instead of O(source
-    * partitions), accelerating small-file layout drift between
-    * compactions. The size probe is BOUNDED, not a full count: a
-    * CollectLimit over the floor reads at most WidenRowFloor rows
-    * however large the batch is, so the probe's cost is a constant
-    * while the repartition it gates saved 2–4× at sf10
-    * (BASELINE.md round-16 serve-parallelism notes). Partition count
-    * comes from the executed plan's output partitioning when the plan
-    * KNOWS it — but FileSourceScanExec and DSv2 micro-batch scans
-    * report UnknownPartitioning(0), so 0 means UNKNOWN, not narrow:
-    * for those the count falls back to `batch.rdd.getNumPartitions`
-    * (building the RDD lineage runs no job — only reading one
-    * integer off it), otherwise an already-wide parquet-backed batch
-    * would pay the exchange it was supposed to skip (round-17
-    * ADVICE). */
+    * session's parallelism, and skipped when the batch is SMALL (under
+    * [[WidenRowFloor]] rows): a near-empty micro-batch gains nothing
+    * from the exchange but pays its latency, and on the non-aggregating
+    * ingest paths each widened tiny batch would land O(parallelism)
+    * near-empty files per append instead of O(source partitions),
+    * accelerating small-file layout drift between compactions. The
+    * size probe is BOUNDED, not a full count: a CollectLimit over the
+    * floor reads at most WidenRowFloor rows however large the batch is,
+    * so the probe's cost is a constant while the repartition it gates
+    * saved 2–4× at sf10 (BASELINE.md round-16 serve-parallelism notes).
+    * Partition count comes from the executed plan's output partitioning
+    * when the plan KNOWS it — but FileSourceScanExec and DSv2
+    * micro-batch scans report UnknownPartitioning(0), so 0 means
+    * UNKNOWN, not narrow: for those the count falls back to
+    * `batch.rdd.getNumPartitions` (building the RDD lineage runs no job
+    * — only reading one integer off it), otherwise an already-wide
+    * parquet-backed batch would pay the exchange it was supposed to
+    * skip (round-17 ADVICE). */
   private[graft] val WidenRowFloor = 4096L
 
   private[graft] def widen(batch: DataFrame): DataFrame = {
@@ -436,178 +206,263 @@ object StreamJobs {
     else batch.repartition(p)
   }
 
+  /** Streaming ANN serving ([[serve]]): each micro-batch of query
+    * vectors ranks top-k against the persisted composed IVF-PQ index
+    * at `indexDir` (`Similarity.IvfPqIndex`, built once by a batch job
+    * and extended by [[annPqIngestStream]]). Per batch the work is
+    * nlist centroid scores per query and a probe-capped scan of the
+    * code table: no training, and the float corpus is never read. The
+    * handle (index read and both codebook literals) is cached per
+    * store generation. */
+  def annLookupStream(queries: DataFrame, indexDir: String,
+      outDir: String, idCol: String, vecCol: String, k: Int,
+      nprobe: Int = 0): DataStreamWriter[Row] =
+    serve(queries, outDir) { batch =>
+      val s = batch.sparkSession
+      val ready = ModelCache.getOrLoad(s, indexDir,
+          key = s"$indexDir#ivfpq#$idCol#$vecCol") {
+        Similarity.ivfPqReady(
+          Similarity.readIvfPqIndex(s, indexDir, idCol, vecCol))
+      } (_ => ()) // nothing pinned: handle holds plans + literals
+      Similarity.ivfPqTopKWithReady(batch, ready, k, nprobe)
+    }
+
+  /** [[annLookupStream]] on the PLAIN IVF unit (float vectors, no PQ
+    * coding — the exact-scoring serving tier): each micro-batch of
+    * (id, embedding) queries ranks against the persisted
+    * `Similarity.IvfIndex` — nlist centroid scores per query and a
+    * probe-capped scan of the assigned table; no training, no
+    * re-clustering. Rows appended by [[annIngestStream]] or a batch
+    * append are visible from the next micro-batch. */
+  def ivfLookupStream(queries: DataFrame, indexDir: String,
+      outDir: String, idCol: String, vecCol: String, k: Int,
+      nprobe: Int = 0): DataStreamWriter[Row] =
+    serve(queries, outDir) { batch =>
+      Similarity.ivfTopKWithReady(batch,
+        ivfReadyCached(batch.sparkSession, indexDir, idCol, vecCol), k,
+        nprobe)
+    }
+
+  /** The generation-cached [[graft.operators.Similarity.IvfReady]] handle
+    * shared by [[ivfLookupStream]] and [[hybridLookupStream]]. */
+  private def ivfReadyCached(s: SparkSession, indexDir: String,
+      idCol: String, vecCol: String): Similarity.IvfReady =
+    ModelCache.getOrLoad(s, indexDir,
+        key = s"$indexDir#ivf#$idCol#$vecCol") {
+      Similarity.ivfReady(
+        Similarity.readIvfIndex(s, indexDir, idCol, vecCol))
+    } (_ => ()) // nothing pinned: handle holds plans + literals
+
+  /** Streaming lexical retrieval serving ([[serve]]): each micro-batch
+    * of text queries ranks BM25 top-k against the persisted posting
+    * index at `indexDir` (`TextProfile.Bm25Index`, built once by a
+    * batch job and extended by [[bm25IngestStream]]). Per batch the
+    * work is the posting lookup only — no tokenize of the corpus, no
+    * tf/df recompute; the batch's terms broadcast-semi-join the posting
+    * table, and a driver-local batch with few terms also pushes a
+    * literal In(term) into the term-sorted posting scan. Because the
+    * read takes one record snapshot, a batch sees postings, df and the
+    * N/T totals of one commit. */
+  def bm25LookupStream(queries: DataFrame, indexDir: String,
+      outDir: String, qIdCol: String, qTextCol: String, idCol: String,
+      k: Int, stopwordCut: Boolean = true): DataStreamWriter[Row] =
+    serve(queries, outDir) { batch =>
+      TextProfile.bm25TopKWithIndex(batch, qIdCol, qTextCol,
+        bm25IndexCached(batch.sparkSession, indexDir, idCol), k,
+        stopwordCut)
+    }
+
+  /** The generation-cached stored [[graft.operators.TextProfile.Bm25Index]]
+    * shared by [[bm25LookupStream]] and [[hybridLookupStream]]: the
+    * df partial aggregation (vocab-bounded) persists for the cache
+    * entry's lifetime and releases when the store's generation moves. */
+  private def bm25IndexCached(s: SparkSession, indexDir: String,
+      idCol: String): TextProfile.Bm25Index =
+    ModelCache.getOrLoad(s, indexDir, key = s"$indexDir#bm25#$idCol") {
+      val i = TextProfile.readBm25Index(s, indexDir, idCol)
+      i.copy(dfreq = i.dfreq.persist())
+    } (i => { i.dfreq.unpersist(); () })
+
+  /** Streaming benchmark decontamination ([[serve]]) against the
+    * persisted decon set (`Curation.writeDeconSet`): each micro-batch of
+    * DOCUMENTS probes the stored benchmark grams with a semi join and
+    * lands (idCol, n_hits) — its contaminated members and their
+    * distinct-gram hit counts. This is the shape a 100 TB ingest runs:
+    * benchmarks are tiny and change rarely (gram extraction paid once,
+    * at set-write time), corpora arrive forever, and each batch pays
+    * one batch-gram explode and one broadcast-sized semi join. The
+    * benchmark-bounded gram frame stays PERSISTED for the cache entry's
+    * lifetime; `deconSetAppend`ed benchmarks take effect from the next
+    * micro-batch. */
+  def deconLookupStream(docs: DataFrame, setDir: String,
+      outDir: String, idCol: String, textCol: String)
+      : DataStreamWriter[Row] =
+    serve(docs, outDir) { batch =>
+      val (set, n) = ModelCache.getOrLoad(batch.sparkSession,
+          setDir, key = s"$setDir#deconset") {
+        val (g, nn) = Curation.readDeconSet(batch.sparkSession, setDir)
+        (g.persist(), nn)
+      } (e => { e._1.unpersist(); () })
+      Curation.decontaminateWithSet(batch, set, idCol, textCol, n)
+    }
+
+  /** [[deconLookupStream]]'s EMBEDDING-SPACE twin: each micro-batch of
+    * vectors probes the stored semantic decon set and lands its
+    * contaminated members as (idCol, cos = max verified cosine). Catches
+    * the paraphrased/translated benchmark leakage the gram probe cannot
+    * see, at the same serve shape: the benchmark pack is paid once at
+    * set-write time, each batch pays one narrow key pass and the
+    * occupancy-bounded bucket join(s). LAYOUT-ADAPTIVE (round 18): the
+    * store record's kind names the pack — a banded set
+    * ([[graft.operators.Similarity.writeSemanticDeconSetBanded]], params
+    * bands/rowsPerBand; the measured-recall scale path) probes through
+    * the banded OR-construction, a single-band set
+    * (`writeSemanticDeconSet`, param planes) through the single-pack
+    * probe — so rotating a deployment to banded sets needs no serve
+    * change, just a set rewrite. A banded set whose stored shape sits
+    * at or past the cost crossover
+    * ([[graft.operators.Similarity.bandedShapeDominated]] — bands ≥
+    * 2^rowsPerBand, the low-τ regime) probes through the EXACT arm over
+    * the same store's (bv, bnrm) columns instead: strictly cheaper than
+    * the dominated banded probe AND recall 1.0 (round-18 finding #1). */
+  def embedDeconLookupStream(vecs: DataFrame, setDir: String,
+      outDir: String, idCol: String, vecCol: String,
+      threshold: Double): DataStreamWriter[Row] =
+    serve(vecs, outDir) { batch =>
+      val s = batch.sparkSession
+      // the cached value is a probe CLOSURE, which bakes in this
+      // stream's parameters — so the cache key must carry them too,
+      // or two streams probing one set at different thresholds (or
+      // column names) would silently share the first stream's probe
+      val probe = ModelCache.getOrLoad(s, setDir,
+          key = s"$setDir#$idCol#$vecCol#$threshold") {
+        if (graft.store.Store.require(s, setDir,
+            Similarity.BandedDeconKind,
+            Similarity.SemanticDeconKind).kind ==
+            Similarity.BandedDeconKind) {
+          val (set, dim, bands, rpb) =
+            Similarity.readSemanticDeconSetBanded(s, setDir)
+          if (Similarity.bandedShapeDominated(bands, rpb)) {
+            // crossover dispatch (round-18 finding #1): a stored
+            // shape at bands ≥ 2^rowsPerBand does MORE verify work
+            // than the exact probe at recall < 1, for every
+            // threshold — strictly dominated, so probe the stored
+            // set's (bv, bnrm) through the exact arm instead. Band
+            // 0 carries every bench vector exactly once, so the
+            // slice is a narrow filter over the same store — no
+            // set rewrite needed to rotate such a deployment.
+            val bb = set.filter(col("band") === 0).select("bv", "bnrm")
+            (b: DataFrame) => Similarity.decontaminateSemanticExactWithSet(
+              b, bb, idCol, vecCol, threshold)
+          } else
+            (b: DataFrame) => Similarity.decontaminateSemanticBandedWithSet(
+              b, set, idCol, vecCol, threshold, dim, bands, rpb)
+        } else {
+          val (set, dim, planes) =
+            Similarity.readSemanticDeconSet(s, setDir)
+          (b: DataFrame) => Similarity.decontaminateSemanticWithSet(b,
+            set, idCol, vecCol, threshold, dim, planes)
+        }
+      } (_ => ()) // nothing pinned: the set frames are plain reads
+      probe(batch)
+    }
+
+  /** Streaming LM quality scoring ([[serve]]) against the persisted
+    * bigram model (`LmScore.writeModel`): each micro-batch of documents
+    * scores against the STORED model (two vocab-bounded count reads,
+    * partials collapsed at read — the reference corpus is never
+    * touched) and lands (idCol, n_bigrams, bits, milli_bits). The
+    * quality-filtering shape a 100 TB ingest runs: the reference model
+    * changes rarely ([[lmIngestStream]] / `appendModel` take new
+    * reference batches in O(batch)), corpora arrive forever, and scores
+    * are doc-local. */
   def lmLookupStream(docs: DataFrame, modelDir: String,
       outDir: String, idCol: String, textCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        // generation-cached (round-17 finding #3): the store is
-        // re-read — and the previous model's pinned cache released —
-        // only when an append, write or compaction raised the
-        // generation
-        val model = ModelCache.getOrLoad(batch.sparkSession, modelDir) {
-          graft.operators.LmScore.readModel(batch.sparkSession, modelDir)
-        } (graft.operators.LmScore.releaseBackoffCache)
-        graft.operators.LmScore.score(model, widen(batch), idCol,
-            textCol)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
-        ()
+      : DataStreamWriter[Row] =
+    serve(docs, outDir) { batch =>
+      LmScore.score(lmModelCached(batch.sparkSession, modelDir), batch,
+        idCol, textCol)
     }
 
-  /** [[lmLookupStream]]'s WRITE-path twin: each micro-batch of
-    * REFERENCE documents appends to the persisted bigram model in
-    * O(batch) via `LmScore.appendModel` — the `runId-batchId` tag
-    * commits in one store record write, so foreachBatch's
-    * at-least-once replay converges to exactly-once. A concurrent
-    * lookup stream on the same dir scores against the growing
-    * reference from its next micro-batch on, and is SAFE against
-    * crash recovery: committed files are never deleted outside
-    * quiesced compaction, and a replay purges only uncommitted
-    * orphans no reader can see — a serve never observes a missing
-    * file. Quiesced
-    * `Maintenance.compactAll` restores the sorted/sized layout and
-    * the zero-aggregation serve path. Same runId discipline as every
-    * ingest stream: fresh per (checkpoint, stream) pair. */
+  /** The generation-cached stored LM model shared by [[lmLookupStream]]
+    * and [[dsirLookupStream]]: re-read, and the previous model's pinned
+    * backoff cache released, only when an append, write or compaction
+    * raised the store's generation (round-17 finding #3). */
+  private def lmModelCached(s: SparkSession, dir: String): LmScore.Model =
+    ModelCache.getOrLoad(s, dir)(LmScore.readModel(s, dir))(
+      LmScore.releaseBackoffCache)
+
+  /** [[lmLookupStream]]'s WRITE-path twin ([[ingest]]): each
+    * micro-batch of REFERENCE documents appends to the persisted bigram
+    * model in O(batch) via `LmScore.appendModel`; a lookup stream on
+    * the same dir scores against the grown reference from its next
+    * micro-batch on. */
   def lmIngestStream(reference: DataFrame, modelDir: String,
-      textCol: String, runId: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    reference.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.LmScore.appendModel(widen(batch), textCol, modelDir,
-            s"$runId-$batchId")
-        ()
-    }
+      textCol: String, runId: String): DataStreamWriter[Row] =
+    ingest(reference, runId)(LmScore.appendModel(_, textCol, modelDir, _))
 
-  /** Streaming NB classification — [[lmLookupStream]]'s serve pattern
-    * applied to the persisted classifier model
-    * (`Classify.writeNbModel`): each arriving micro-batch of documents
-    * classifies against the STORED model (model-bounded count reads,
-    * partials collapsed at read — the labeled training set is never
-    * touched) and lands (idCol, label, n_tokens, bits, milli_bits)
-    * under `outDir/batch_id=<id>/`. The classifier-routing shape a
-    * 100 TB ingest runs: the model changes rarely (appendNbModel takes
-    * new labeled batches in O(batch); they take effect from the next
-    * micro-batch, because each batch probes the store's generation
-    * and re-reads only when it moved — [[ModelCache]]), corpora
-    * arrive forever, and class decisions are doc-local, so the
-    * cross-batch union equals the batch classifier exactly.
-    * Batch_id-scoped overwrite = replay idempotent. The caches
-    * [[graft.operators.Classify.classifyNb]] pins release when the
-    * generation moves (the cache entry's lifecycle carries the
-    * releaseNbCache discipline) — the serve session holds one
-    * model's pinned storage per store dir, never an accumulation. Returns the writer — caller picks trigger/checkpoint
-    * and starts it. */
+  /** Streaming NB classification ([[serve]]) against the persisted
+    * classifier model (`Classify.writeNbModel`): each micro-batch of
+    * documents classifies against the STORED model (model-bounded count
+    * reads, partials collapsed at read — the labeled training set is
+    * never touched) and lands (idCol, label, n_tokens, bits,
+    * milli_bits). The caches `Classify.classifyNb` pins release when
+    * the generation moves, so the serve session holds one model's
+    * pinned storage per store dir, never an accumulation. */
   def nbLookupStream(docs: DataFrame, modelDir: String,
       outDir: String, idCol: String, textCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        // generation-cached; the release-per-batch discipline moved
-        // into the cache's entry lifecycle (released on a reload,
-        // so the serve session still never ACCUMULATES pinned storage
-        // — it holds exactly one model's worth per store dir)
-        val model = ModelCache.getOrLoad(batch.sparkSession, modelDir) {
-          graft.operators.Classify.readNbModel(batch.sparkSession,
-            modelDir)
-        } (graft.operators.Classify.releaseNbCache)
-        graft.operators.Classify
-          .classifyNb(model, widen(batch), idCol, textCol)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
-        ()
+      : DataStreamWriter[Row] =
+    serve(docs, outDir) { batch =>
+      val model = ModelCache.getOrLoad(batch.sparkSession, modelDir) {
+        Classify.readNbModel(batch.sparkSession, modelDir)
+      } (Classify.releaseNbCache)
+      Classify.classifyNb(model, batch, idCol, textCol)
     }
 
-  /** Streaming DSIR importance weighting — [[lmLookupStream]]'s serve
-    * pattern over TWO persisted bigram stores (`LmScore.writeModel`):
-    * each arriving micro-batch of documents weights against the
-    * stored target (clean/domain) and source (whole-pool) models and
-    * lands (idCol, n_bigrams, target_bits, source_bits, delta_bits,
-    * delta_milli_bits) under `outDir/batch_id=<id>/`. This is the
-    * deployment shape the DSIR paper describes and
-    * `LmScore.importanceBits` documents: both models train once per
-    * pool/domain lifetime; the recurring per-batch cost is one batch
-    * explode + the stored vocab-bounded dim joins, with BOTH stores
-    * cached independently per generation ([[ModelCache]], round-17
-    * finding #3 — the four-parquet-read fixed cost is paid only when a
-    * store's generation moves, and appends still take effect next
-    * batch). Weights
-    * are doc-local, so the cross-batch union equals the batch
-    * weigher exactly; batch_id-scoped overwrite = replay idempotent.
-    * Each model's pinned vocab-bounded caches release when its cache
-    * entry turns over (the releaseDsirCache discipline carried by the
-    * two entries' lifecycles) — the serve never ACCUMULATES pinned
-    * storage across an unbounded stream. Returns the writer — caller
-    * picks trigger/checkpoint and starts it. */
+  /** Streaming DSIR importance weighting ([[serve]]) over TWO persisted
+    * bigram stores (`LmScore.writeModel`): each micro-batch of documents
+    * weights against the stored target (clean/domain) and source
+    * (whole-pool) models and lands (idCol, n_bigrams, target_bits,
+    * source_bits, delta_bits, delta_milli_bits). This is the deployment
+    * shape the DSIR paper describes and `LmScore.importanceBits`
+    * documents: both models train once per pool/domain lifetime; the
+    * recurring per-batch cost is one batch explode and the stored
+    * vocab-bounded dim joins. The two stores are cached independently
+    * (they append on independent schedules), each releasing its pinned
+    * caches when its own generation moves. */
   def dsirLookupStream(docs: DataFrame, targetDir: String,
       sourceDir: String, outDir: String, idCol: String,
-      textCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        // both stores cached INDEPENDENTLY (they append on
-        // independent schedules); each model's pinned cache releases
-        // when its own generation moves — the releaseDsirCache
-        // discipline carried by the two entries' lifecycles
-        def cached(dir: String) =
-          ModelCache.getOrLoad(batch.sparkSession, dir) {
-            graft.operators.LmScore.readModel(batch.sparkSession, dir)
-          } (graft.operators.LmScore.releaseBackoffCache)
-        val target = cached(targetDir)
-        val source = cached(sourceDir)
-        graft.operators.LmScore
-          .importanceBits(target, source, widen(batch), idCol, textCol)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
-        ()
+      textCol: String): DataStreamWriter[Row] =
+    serve(docs, outDir) { batch =>
+      LmScore.importanceBits(lmModelCached(batch.sparkSession, targetDir),
+        lmModelCached(batch.sparkSession, sourceDir), batch, idCol,
+        textCol)
     }
 
-  /** [[nbLookupStream]]'s WRITE-path twin: each micro-batch of
-    * LABELED documents appends to the persisted classifier model in
-    * O(batch) via `Classify.appendNbModel` — tagged `runId-batchId`
-    * files, so foreachBatch's at-least-once replay converges to
-    * exactly-once (the tag commits in one store record write). A
-    * concurrent lookup stream on the
-    * same dir classifies against the growing model from its next
-    * micro-batch on, and is safe against crash recovery exactly as
-    * [[lmIngestStream]] is. Quiesced `Maintenance.compactAll`
-    * restores the sorted/sized layout and the zero-aggregation serve
-    * path. Same runId discipline as every ingest stream: fresh per
-    * (checkpoint, stream) pair. */
+  /** [[nbLookupStream]]'s WRITE-path twin ([[ingest]]): each micro-batch
+    * of LABELED documents appends to the persisted classifier model in
+    * O(batch) via `Classify.appendNbModel`; a lookup stream on the same
+    * dir classifies against the grown model from its next micro-batch
+    * on. */
   def nbIngestStream(labeled: DataFrame, modelDir: String,
       labelCol: String, textCol: String, runId: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    labeled.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Classify.appendNbModel(widen(batch), labelCol,
-            textCol, modelDir, s"$runId-$batchId")
-        ()
-    }
+      : DataStreamWriter[Row] =
+    ingest(labeled, runId)(
+      Classify.appendNbModel(_, labelCol, textCol, modelDir, _))
 
-  /** Streaming HYBRID retrieval serving — the composed form of
-    * [[bm25LookupStream]] + [[annLookupStream]]: each micro-batch of
+  /** Streaming HYBRID retrieval serving ([[serve]]) — the composed form
+    * of [[bm25LookupStream]] + [[ivfLookupStream]]: each micro-batch of
     * queries (carrying BOTH a text column and an embedding column)
-    * probes the stored BM25 posting index AND the stored IVF index,
-    * and the two ranked lists fuse via integer-exact RRF
-    * (`Retrieval.rrfFuse`) before landing under
-    * `outDir/batch_id=<id>/`. Per batch the work is two stored-index
+    * probes the stored BM25 posting index AND the stored IVF index, and
+    * the two ranked lists fuse via integer-exact RRF
+    * (`Retrieval.rrfFuse`). Per batch the work is two stored-index
     * probes plus a query-batch-sized fusion — no corpus tokenize, no
     * training, the float corpus only via the IVF probe's cell join.
-    * Fusion is q_id-local, so per-batch fusing equals fusing the
-    * union (each query lives in one batch) — what lets the streaming
-    * form share the batch oracle. Both index reads are generation-cached
-    * exactly as in the component serves ([[bm25IndexCached]] /
-    * [[ivfReadyCached]] — shared cache entries, so a hybrid serve
-    * and a single-modality serve on the same store pay one load);
-    * same batch_id-overwrite replay idempotence as the component
-    * serves.
+    * Fusion is q_id-local, so per-batch fusing equals fusing the union
+    * — what lets the streaming form share the batch oracle. Both index
+    * handles are the component serves' cache entries
+    * ([[bm25IndexCached]] / [[ivfReadyCached]]), so a hybrid serve and a
+    * single-modality serve on the same store pay one load.
     *
     * Self-match asymmetry: the semantic arm inherits
     * `ivfTopKWithIndex`'s ANN convention of dropping the query's own
@@ -623,105 +478,66 @@ object StreamJobs {
       ivfDir: String, outDir: String, qIdCol: String, qTextCol: String,
       qVecCol: String, docIdCol: String, vecIdCol: String, k: Int,
       stopwordCut: Boolean = true, nprobe: Int = 0, k0: Int = 60,
-      excludeSelf: Boolean = false)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    queries.writeStream.foreachBatch {
-      (in: DataFrame, batchId: Long) =>
-        val batch = serveBatch(in)
-        val spark = batch.sparkSession
-        val bm = bm25IndexCached(spark, bm25Dir, docIdCol)
-        val ivf = ivfReadyCached(spark, ivfDir, vecIdCol, qVecCol)
-        val lex =
-          if (excludeSelf) {
-            // mirror the semantic arm's PRE-ranking exclusion: fetch
-            // one extra, drop the self row, close its rank gap (at
-            // most one self-match per query), truncate back to k —
-            // ranks stay dense 1..k exactly as ivfTopKWithIndex's do
-            val raw = graft.operators.TextProfile.bm25TopKWithIndex(
-              batch, qIdCol, qTextCol, bm, k + 1, stopwordCut)
-            val selfRank = raw
-              .filter(col("q_id") === col(docIdCol))
-              .select(col("q_id"), col("rank").as("__self_rank"))
-            raw.filter(col("q_id") =!= col(docIdCol))
-              .join(selfRank, Seq("q_id"), "left")
-              .withColumn("rank",
-                when(col("__self_rank") < col("rank"),
-                  col("rank") - 1).otherwise(col("rank")))
-              .filter(col("rank") <= k)
-              .drop("__self_rank")
-          } else graft.operators.TextProfile.bm25TopKWithIndex(
-            batch, qIdCol, qTextCol, bm, k, stopwordCut)
-        val sem = graft.operators.Similarity.ivfTopKWithReady(
-          batch.select(col(qIdCol).as(vecIdCol), col(qVecCol)),
-          ivf, k, nprobe)
-        graft.operators.Retrieval.rrfFuse(
-            Seq(lex.select(col("q_id"), col(docIdCol).as("id"),
-                col("rank")),
-              sem.select(col("q_id"), col("nn_id").as("id"),
-                col("rank"))),
-            "q_id", "id", "rank", k, k0)
-          .withColumnRenamed("id", docIdCol)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
-        ()
+      excludeSelf: Boolean = false): DataStreamWriter[Row] =
+    serve(queries, outDir) { batch =>
+      val spark = batch.sparkSession
+      val bm = bm25IndexCached(spark, bm25Dir, docIdCol)
+      val ivf = ivfReadyCached(spark, ivfDir, vecIdCol, qVecCol)
+      val lex =
+        if (excludeSelf) {
+          // mirror the semantic arm's PRE-ranking exclusion: fetch
+          // one extra, drop the self row, close its rank gap (at
+          // most one self-match per query), truncate back to k —
+          // ranks stay dense 1..k exactly as ivfTopKWithIndex's do
+          val raw = TextProfile.bm25TopKWithIndex(batch, qIdCol, qTextCol,
+            bm, k + 1, stopwordCut)
+          val selfRank = raw
+            .filter(col("q_id") === col(docIdCol))
+            .select(col("q_id"), col("rank").as("__self_rank"))
+          raw.filter(col("q_id") =!= col(docIdCol))
+            .join(selfRank, Seq("q_id"), "left")
+            .withColumn("rank",
+              when(col("__self_rank") < col("rank"),
+                col("rank") - 1).otherwise(col("rank")))
+            .filter(col("rank") <= k)
+            .drop("__self_rank")
+        } else TextProfile.bm25TopKWithIndex(batch, qIdCol, qTextCol, bm,
+          k, stopwordCut)
+      val sem = Similarity.ivfTopKWithReady(
+        batch.select(col(qIdCol).as(vecIdCol), col(qVecCol)), ivf, k,
+        nprobe)
+      Retrieval.rrfFuse(
+          Seq(lex.select(col("q_id"), col(docIdCol).as("id"), col("rank")),
+            sem.select(col("q_id"), col("nn_id").as("id"), col("rank"))),
+          "q_id", "id", "rank", k, k0)
+        .withColumnRenamed("id", docIdCol)
     }
 
-  /** Streaming index INGEST — the write-path twin of the lookup
-    * streams: each arriving micro-batch of documents APPENDS to the
+  /** Streaming BM25 index ingest ([[ingest]]) — the write-path twin of
+    * the lookup streams: each micro-batch of documents appends to the
     * persisted BM25 posting index at `indexDir` in O(batch) via
-    * `TextProfile.bm25IngestBatch` (tagged files and the N/T totals
-    * committed in one store record write), so a corpus streaming in is searchable index-build-free
-    * — a concurrent [[bm25LookupStream]] on the same dir sees each
-    * batch's postings from its next micro-batch on. Exactly-once
-    * under foreachBatch's at-least-once replay comes from the
-    * per-batch tag `runId-batchId`: a committed tag replays as a
-    * no-op, and a replayed uncommitted batch first purges whatever its
-    * crashed attempt landed. `runId` must
-    * be fresh per (checkpoint, stream) pair — a restart from the SAME
-    * checkpoint keeps the same runId (that is what makes replay
-    * converge), a NEW logical run takes a new one. Appends accumulate
-    * unsorted tagged files by design; `Maintenance.compactAll`
-    * (quiesced) restores the term-sorted sized layout.
-    *
-    * Concurrent serves are safe through crash recovery: a serve reads
-    * one record snapshot, committed files are never deleted outside
-    * quiesced compaction, and a replay purges only uncommitted
-    * orphans no reader can see — a lookup stream on the same dir
-    * never observes a missing file. Returns the writer —
-    * caller picks trigger/checkpoint and starts it. */
+    * `TextProfile.bm25IngestBatch` (postings, df partial and the N/T
+    * contribution commit together), so a corpus streaming in is
+    * searchable without an index build — a [[bm25LookupStream]] on the
+    * same dir sees each batch's postings from its next micro-batch
+    * on. */
   def bm25IngestStream(docs: DataFrame, indexDir: String,
-      textCol: String, runId: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextProfile.bm25IngestBatch(widen(batch), textCol,
-          indexDir, s"$runId-$batchId")
-        ()
-    }
+      textCol: String, runId: String): DataStreamWriter[Row] =
+    ingest(docs, runId)(TextProfile.bm25IngestBatch(_, textCol, indexDir, _))
 
   /** [[bm25IngestStream]]'s vector-side twin: each micro-batch of
     * (id, embedding) rows is assigned to the stored IVF codebook's
     * cells and appended to the persisted `assigned` table in O(batch)
-    * via `Similarity.ivfIngestBatch` — same tagged-file exactly-once
-    * contract, same runId discipline, same quiesce-then-compact
-    * maintenance story. The codebook is never retrained here (the
-    * standard IVF append); re-train is a periodic rebuild. */
+    * via `Similarity.ivfIngestBatch`. The codebook is never retrained
+    * here (the standard IVF append); re-train is a periodic rebuild. */
   def annIngestStream(vecs: DataFrame, indexDir: String, idCol: String,
-      vecCol: String, runId: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
+      vecCol: String, runId: String): DataStreamWriter[Row] = {
     val codebook = new CodebookHandle(indexDir, s =>
-      graft.operators.Similarity.ivfReady(
-        graft.operators.Similarity.readIvfIndex(s, indexDir, idCol,
-          vecCol)))
-    vecs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.operators.Similarity.ivfIngestBatchWith(
-          codebook.get(batch.sparkSession), widen(batch), indexDir,
-          s"$runId-$batchId")
-        ()
+      Similarity.ivfReady(Similarity.readIvfIndex(s, indexDir, idCol,
+        vecCol)))
+    ingest(vecs, runId) { (batch, tag) =>
+      Similarity.ivfIngestBatch(codebook.get(batch.sparkSession), batch,
+        indexDir, tag)
     }
   }
 
@@ -746,69 +562,42 @@ object StreamJobs {
   /** [[annIngestStream]] on the PQ-coded serving unit: each
     * micro-batch is assigned to the stored coarse cells and encoded
     * with the stored PQ codebooks (residual-aware, nothing retrains)
-    * before its code rows land tagged — so the index
+    * via `Similarity.ivfPqIngestBatch`, so the index
     * [[annLookupStream]] serves from grows in O(batch) while it
-    * serves, under the same exactly-once tag contract. */
+    * serves. */
   def annPqIngestStream(vecs: DataFrame, indexDir: String,
       idCol: String, vecCol: String, runId: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     val codebooks = new CodebookHandle(indexDir, s =>
-      graft.operators.Similarity.ivfPqEncoder(
-        graft.operators.Similarity.readIvfPqIndex(s, indexDir, idCol,
-          vecCol)))
-    vecs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.operators.Similarity.ivfPqIngestBatchWith(
-          codebooks.get(batch.sparkSession), widen(batch), indexDir,
-          s"$runId-$batchId")
-        ()
+      Similarity.ivfPqEncoder(Similarity.readIvfPqIndex(s, indexDir,
+        idCol, vecCol)))
+    ingest(vecs, runId) { (batch, tag) =>
+      Similarity.ivfPqIngestBatch(codebooks.get(batch.sparkSession),
+        batch, indexDir, tag)
     }
   }
 
-  /** The ingest-stream family on the MinHash unit: each micro-batch
-    * of documents is signed under the STORED banding scheme and its
-    * signature rows appended tagged — the near-dup index a concurrent
-    * `minhashLshPairsAgainstIndex` dedups arriving batches against
-    * grows in O(batch) under the same exactly-once contract. */
+  /** The ingest family on the MinHash unit: each micro-batch of
+    * documents is signed under the STORED banding scheme and its
+    * signature rows appended via `Dedup.minhashIngestBatch` — the
+    * near-dup index a concurrent `minhashLshPairsAgainstIndex` dedups
+    * arriving batches against grows in O(batch). */
   def minhashIngestStream(docs: DataFrame, indexDir: String,
       idCol: String, textCol: String, runId: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dedup.minhashIngestBatch(widen(batch), indexDir,
-          idCol, textCol, s"$runId-$batchId")
-        ()
-    }
+      : DataStreamWriter[Row] =
+    ingest(docs, runId)(
+      Dedup.minhashIngestBatch(_, indexDir, idCol, textCol, _))
 
-  /** The ingest-stream family on the corpus-profile unit: each
-    * micro-batch's profile partials (per-stratum counts + per-token
-    * df/tf) commit under a `runId-batchId` tag via
-    * `CorpusProfile.ingestBatch`, so a replayed batch is a no-op once
-    * committed and purges its own torn leftovers otherwise. Profile-fed consumers (rarity, BM25
-    * stats) see each batch's contribution exactly once. */
+  /** The ingest family on the corpus-profile unit: each micro-batch's
+    * profile partials (per-stratum counts, per-token df/tf) commit via
+    * `CorpusProfile.ingestBatch`, so profile-fed consumers (rarity,
+    * BM25 stats) see each batch's contribution exactly once, and the
+    * corpus statistics stay current without a corpus rescan. */
   def profileIngestStream(docs: DataFrame, profileDir: String,
       idCol: String, strataCol: String, textCol: String, runId: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          // widen like every other ingest stream: the profile build's
-          // first stage (tokenize/explode before the groupBy exchange)
-          // otherwise runs in the SOURCE's task count — measured at
-          // sf10 (ProfileIngestWiden, 111k-doc batches arriving as one
-          // MemoryStream partition): unwidened 25.6 s vs gated 12.3 s
-          // over three batches. This path simply never had the
-          // round-16 exchange; the round-18 breach hypothesis blamed
-          // the gate's fallback, but the gate reads these batches
-          // correctly (rddParts=1) — it was never consulted here.
-          graft.operators.CorpusProfile.ingestBatch(
-            graft.operators.CorpusProfile.build(widen(batch), idCol,
-              strataCol, textCol), profileDir, s"$runId-$batchId")
-        ()
-    }
+      : DataStreamWriter[Row] =
+    ingest(docs, runId)(CorpusProfile.ingestBatch(_, profileDir, idCol,
+      strataCol, textCol, _))
 
   /** Streaming benchmark decontamination at ingest: drop every
     * arriving document that shares a word `n`-gram with the benchmark
@@ -825,7 +614,7 @@ object StreamJobs {
     * parity on the same bloom bytes. */
   def decontaminateStream(docs: DataFrame, bloomBytes: Array[Byte],
       n: Int): DataFrame =
-    docs.filter(!graft.operators.Curation.gramHit(col("text"),
+    docs.filter(!Curation.gramHit(col("text"),
       bloomBytes, n))
 
   /** The quality/language gate + projection shared by both corpus-clean

@@ -13,7 +13,9 @@ package graft.tools
 object LintReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
-    val outFile = args.lift(1).getOrElse("/root/repo/PLANS.md")
+    // relative to the working directory: the checkout root under
+    // `sbt runMain`, so a run writes its own checkout's PLANS.md
+    val outFile = args.lift(1).getOrElse("PLANS.md")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = graft.core.GraftSession("graft-lint-report",
       master = Some(s"local[$cpus]"), shufflePartitions = Some(cpus.toInt))

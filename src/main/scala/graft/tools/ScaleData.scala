@@ -57,7 +57,9 @@ object ScaleData {
 
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val dest = args.lift(1).getOrElse("/root/repo/benchdata/sf1")
+    // relative to the working directory (the checkout root under
+    // `sbt runMain`); benchdata/ is git-ignored
+    val dest = args.lift(1).getOrElse("benchdata/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val only: Option[Set[String]] =
       args.lift(3).map(_.split(',').map(_.trim).toSet)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.CorpusProfile
 import graft.sources.Tables
+import graft.store.Store
 
 /** Incremental corpus profile: the merge must be EXACT (partials +
   * append bit-identical to a full recompute), the store record's
@@ -23,10 +24,10 @@ class CorpusProfileSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_profile").toString + "/p"
     CorpusProfile.write(CorpusProfile.build(
       docs.filter(col("doc_id") % 3 === 0), "doc_id", "lang", "text"), dir)
-    CorpusProfile.append(CorpusProfile.build(
-      docs.filter(col("doc_id") % 3 === 1), "doc_id", "lang", "text"), dir)
-    CorpusProfile.append(CorpusProfile.build(
-      docs.filter(col("doc_id") % 3 === 2), "doc_id", "lang", "text"), dir)
+    Seq(1, 2).foreach { r =>
+      CorpusProfile.ingestBatch(docs.filter(col("doc_id") % 3 === r), dir,
+        "doc_id", "lang", "text", Store.freshTag())
+    }
     val merged = CorpusProfile.stats(
       CorpusProfile.read(s, dir, "lang", "text"))
     val full = CorpusProfile.stats(
@@ -45,8 +46,8 @@ class CorpusProfileSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_profile").toString + "/p"
     CorpusProfile.write(
       CorpusProfile.build(a, "doc_id", "lang", "text"), dir)
-    CorpusProfile.append(
-      CorpusProfile.build(b, "doc_id", "lang", "text"), dir)
+    CorpusProfile.ingestBatch(b, dir, "doc_id", "lang", "text",
+      Store.freshTag())
     val st = CorpusProfile.stats(CorpusProfile.read(s, dir, "lang", "text"))
       .select("lang", "docs", "tokens", "vocab", "hapax")
       .as[(String, Long, Long, Long, Long)].collect().toSet
@@ -60,9 +61,9 @@ class CorpusProfileSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_profile").toString + "/p"
     CorpusProfile.write(
       CorpusProfile.build(docs, "doc_id", "lang", "text"), dir)
-    val batch = CorpusProfile.build(docs, "doc_id", "source", "text")
     val e1 = intercept[IllegalArgumentException] {
-      CorpusProfile.append(batch, dir)
+      CorpusProfile.ingestBatch(docs, dir, "doc_id", "source", "text",
+        Store.freshTag())
     }
     assert(e1.getMessage.contains("strataCol"))
     val e2 = intercept[IllegalArgumentException] {
@@ -71,39 +72,67 @@ class CorpusProfileSpec extends SparkSpec {
     assert(e2.getMessage.contains("strataCol"))
   }
 
-  test("streaming profile: per-batch appends equal the batch build; replays are no-ops") {
+  /** Streams `batches` into the profile at `dir` through
+    * profileIngestStream, one micro-batch each, from a fresh
+    * checkpoint under `runId`. */
+  private def ingestRun(dir: String, runId: String,
+      batches: Seq[Seq[(Long, String, String)]]): Unit = {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val docs = Tables.load(s, sf001, "documents")
-      .select("doc_id", "lang", "text")
-      .as[(Long, String, String)].collect().toSeq
-    val dir = Files.createTempDirectory("graft_profile").toString + "/p"
     val ckpt = Files.createTempDirectory("graft_profile_ckpt").toString
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, String)]
-    val q = graft.streaming.StreamJobs.profileStream(
+    val q = graft.streaming.StreamJobs.profileIngestStream(
         input.toDS().toDF("doc_id", "lang", "text"), dir, "doc_id",
-        "lang", "text")
+        "lang", "text", runId)
       .option("checkpointLocation", ckpt).start()
-    try {
-      docs.grouped(200).foreach { b =>
-        input.addData(b); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val streamed = statRows(CorpusProfile.stats(
-      CorpusProfile.read(s, dir, "lang", "text")))
+    try batches.foreach { b => input.addData(b); q.processAllAvailable() }
+    finally q.stop()
+  }
+
+  test("streaming profile: per-batch appends equal the batch build; replays are no-ops") {
+    val s = spark
+    import s.implicits._
+    val all = Tables.load(s, sf001, "documents")
+    val docs = all.select("doc_id", "lang", "text")
+      .as[(Long, String, String)].collect().toSeq
+    val dir = Files.createTempDirectory("graft_profile").toString + "/p"
+    val (seed, rest) = docs.splitAt(200)
+    CorpusProfile.write(CorpusProfile.build(
+      seed.toDF("doc_id", "lang", "text"), "doc_id", "lang", "text"), dir)
+    ingestRun(dir, "r1", rest.grouped(200).toSeq)
     val full = statRows(CorpusProfile.stats(CorpusProfile.build(
-      Tables.load(s, sf001, "documents"), "doc_id", "lang", "text")))
-    assert(streamed == full)
-    // at-least-once guard: re-applying an already-applied batch id is
-    // a no-op and changes nothing
-    val replay = CorpusProfile.build(
-      Seq((999L, "en", "x y z")).toDF("doc_id", "lang", "text"),
-      "doc_id", "lang", "text")
-    assert(!CorpusProfile.appendOnce(replay, dir, batchId = 0L))
+      all, "doc_id", "lang", "text")))
     assert(statRows(CorpusProfile.stats(
       CorpusProfile.read(s, dir, "lang", "text"))) == full)
+    // at-least-once guard: re-applying a committed batch's tag is a
+    // no-op and changes nothing
+    CorpusProfile.ingestBatch(
+      Seq((999L, "en", "x y z")).toDF("doc_id", "lang", "text"), dir,
+      "doc_id", "lang", "text", "r1-0")
+    assert(statRows(CorpusProfile.stats(
+      CorpusProfile.read(s, dir, "lang", "text"))) == full)
+  }
+
+  test("two stream runs with fresh checkpoints and runIds both count batch 0") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_profile").toString + "/p"
+    val seed = Seq((1L, "en", "a b"))
+    val (runA, runB) = (Seq((2L, "en", "c d")), Seq((3L, "de", "e f g")))
+    CorpusProfile.write(CorpusProfile.build(
+      seed.toDF("doc_id", "lang", "text"), "doc_id", "lang", "text"), dir)
+    // each run restarts its batch ids at 0; its runId keeps its batch 0
+    // apart from the other run's
+    ingestRun(dir, "runA", Seq(runA))
+    ingestRun(dir, "runB", Seq(runB))
+    assert(storeRecord(dir).applied.keySet == Set("runA-0", "runB-0"))
+    assert(statRows(CorpusProfile.stats(
+        CorpusProfile.read(s, dir, "lang", "text"))) ==
+      statRows(CorpusProfile.stats(CorpusProfile.build(
+        (seed ++ runA ++ runB).toDF("doc_id", "lang", "text"), "doc_id",
+        "lang", "text"))))
   }
 
   test("compact collapses partials without changing stats") {
@@ -112,8 +141,8 @@ class CorpusProfileSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_profile").toString + "/p"
     CorpusProfile.write(CorpusProfile.build(
       docs.filter(col("doc_id") % 2 === 0), "doc_id", "lang", "text"), dir)
-    CorpusProfile.append(CorpusProfile.build(
-      docs.filter(col("doc_id") % 2 === 1), "doc_id", "lang", "text"), dir)
+    CorpusProfile.ingestBatch(docs.filter(col("doc_id") % 2 === 1), dir,
+      "doc_id", "lang", "text", Store.freshTag())
     val before = statRows(CorpusProfile.stats(
       CorpusProfile.read(s, dir, "lang", "text")))
     CorpusProfile.compact(s, dir, "lang", "text")
@@ -127,27 +156,33 @@ class CorpusProfileSpec extends SparkSpec {
     assert(statRows(CorpusProfile.stats(compacted)) == before)
   }
 
-  test("compact preserves the appendOnce replay watermark") {
+  test("compact carries the applied tags over: a replay after it is a no-op") {
     val s = spark
     import s.implicits._
     val dir = Files.createTempDirectory("graft_profile").toString + "/p"
-    def batch(id: Long, text: String) = CorpusProfile.build(
-      Seq((id, "en", text)).toDF("doc_id", "lang", "text"),
-      "doc_id", "lang", "text")
-    assert(CorpusProfile.appendOnce(batch(1L, "a b"), dir, batchId = 0L))
-    assert(CorpusProfile.appendOnce(batch(2L, "c d"), dir, batchId = 1L))
+    def rows(id: Long, text: String) =
+      Seq((id, "en", text)).toDF("doc_id", "lang", "text")
+    def ingest(id: Long, text: String, tag: String): Unit =
+      CorpusProfile.ingestBatch(rows(id, text), dir, "doc_id", "lang",
+        "text", tag)
+    CorpusProfile.write(CorpusProfile.build(rows(0L, "z"), "doc_id", "lang",
+      "text"), dir)
+    ingest(1L, "a b", "r-0")
+    ingest(2L, "c d", "r-1")
     val before = statRows(CorpusProfile.stats(
       CorpusProfile.read(s, dir, "lang", "text")))
     CorpusProfile.compact(s, dir, "lang", "text")
-    // the watermark survived the compact: a foreachBatch replay of an
-    // already-applied batch id (e.g. restart re-running its in-flight
-    // batch) must STILL be a no-op — the compaction carries the
-    // record's applied tags over
-    assert(!CorpusProfile.appendOnce(batch(2L, "c d"), dir, batchId = 1L))
+    // the tags survived the compact: a foreachBatch replay of an
+    // already-applied batch (e.g. restart re-running its in-flight
+    // batch) must STILL be a no-op
+    assert(storeRecord(dir).applied.keySet == Set("r-0", "r-1"))
+    ingest(2L, "c d", "r-1")
     assert(statRows(CorpusProfile.stats(
       CorpusProfile.read(s, dir, "lang", "text"))) == before)
     // a genuinely new batch still applies
-    assert(CorpusProfile.appendOnce(batch(3L, "e f"), dir, batchId = 2L))
+    ingest(3L, "e f", "r-2")
+    assert(statRows(CorpusProfile.stats(
+      CorpusProfile.read(s, dir, "lang", "text"))) != before)
   }
 
   test("stats detects a half-applied append and names the torn strata") {
@@ -183,7 +218,9 @@ class CorpusProfileSpec extends SparkSpec {
     // a CONSISTENT store (the normal case) warns nothing
     val dir2 = Files.createTempDirectory("graft_profile").toString + "/p"
     CorpusProfile.write(batch(1L, "en", "a b c"), dir2)
-    CorpusProfile.append(batch(2L, "de", "x y"), dir2)
+    CorpusProfile.ingestBatch(
+      Seq((2L, "de", "x y")).toDF("doc_id", "lang", "text"), dir2,
+      "doc_id", "lang", "text", Store.freshTag())
     val errBuf2 = new java.io.ByteArrayOutputStream()
     try {
       System.setErr(new java.io.PrintStream(errBuf2, true))

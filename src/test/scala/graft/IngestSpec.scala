@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Maintenance, Similarity, TextProfile}
+import graft.operators.{Classify, CorpusProfile, Curation, Dedup, LmScore,
+  Maintenance, Similarity, TextProfile}
 import graft.sources.{Sinks, Tables}
 import graft.store.Store
+import graft.streaming.{ModelCache, StreamJobs}
 
 /** The replay-idempotent streaming ingest contract
   * (`graft.store.Store.append` + `TextProfile.bm25IngestBatch` /
@@ -453,7 +455,9 @@ class IngestSpec extends SparkSpec {
     full.release()
     val b1 = emb.filter($"vec_id" % 2 === 1)
       .select($"vec_id", $"embedding")
-    Similarity.ivfPqIngestBatch(b1, dir, "vec_id", "embedding", "r0-0")
+    def enc() = Similarity.ivfPqEncoder(
+      Similarity.readIvfPqIndex(s, dir, "vec_id", "embedding"))
+    Similarity.ivfPqIngestBatch(enc(), b1, dir, "r0-0")
     def probe() = Similarity.ivfPqTopKWithIndex(
       emb.filter($"vec_id" % 100 === 0),
       Similarity.readIvfPqIndex(s, dir, "vec_id", "embedding"),
@@ -471,7 +475,7 @@ class IngestSpec extends SparkSpec {
       k = 5, nprobe = 3).orderBy("q_id", "rank").collect().toSeq,
       "ingested store diverged from the full build")
     val rows = s.read.parquet(s"$dir/codes.parquet").count()
-    Similarity.ivfPqIngestBatch(b1, dir, "vec_id", "embedding", "r0-0")
+    Similarity.ivfPqIngestBatch(enc(), b1, dir, "r0-0")
     assert(s.read.parquet(s"$dir/codes.parquet").count() === rows)
     assert(probe() === want)
   }
@@ -522,8 +526,9 @@ class IngestSpec extends SparkSpec {
       graft.operators.CorpusProfile.build(
         docs.filter($"doc_id" % 2 === 0), "doc_id", "lang", "text"),
       dir)
-    val b1 = graft.operators.CorpusProfile.build(
-      docs.filter($"doc_id" % 2 === 1), "doc_id", "lang", "text")
+    val b1 = docs.filter($"doc_id" % 2 === 1)
+    def ingest() = graft.operators.CorpusProfile.ingestBatch(b1, dir,
+      "doc_id", "lang", "text", "r0-0")
     def stats() = graft.operators.CorpusProfile.stats(
       graft.operators.CorpusProfile.read(s, dir, "lang", "text"))
       .orderBy("lang").collect().toSeq
@@ -532,7 +537,7 @@ class IngestSpec extends SparkSpec {
     // leaves — tokens renamed in, strata not, record not committed —
     // is invisible: readers see the pre-batch profile
     val before = recordJson(dir)
-    graft.operators.CorpusProfile.ingestBatch(b1, dir, "r0-0")
+    ingest()
     val fs = fsOf(dir)
     uncommit(dir, before, "r0-0")
     fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/strata.parquet"))
@@ -540,14 +545,14 @@ class IngestSpec extends SparkSpec {
       .foreach(f => fs.delete(f.getPath, false))
     assert(stats() === seeded, "torn attempt visible to readers")
     // the replay purges the torn leftovers and converges
-    graft.operators.CorpusProfile.ingestBatch(b1, dir, "r0-0")
+    ingest()
     val want = stats()
     assert(want === graft.operators.CorpusProfile.stats(
       graft.operators.CorpusProfile.build(docs, "doc_id", "lang",
         "text")).orderBy("lang").collect().toSeq,
       "streamed partials diverged from the direct build")
     // clean replay
-    graft.operators.CorpusProfile.ingestBatch(b1, dir, "r0-0")
+    ingest()
     assert(stats() === want)
   }
 
@@ -564,8 +569,10 @@ class IngestSpec extends SparkSpec {
       .select($"vec_id", $"embedding")
     val b2 = emb.filter($"vec_id" % 3 === 2)
       .select($"vec_id", $"embedding")
-    Similarity.ivfIngestBatch(b1, dir, "vec_id", "embedding", "r0-0")
-    Similarity.ivfIngestBatch(b2, dir, "vec_id", "embedding", "r0-1")
+    def ready() = Similarity.ivfReady(
+      Similarity.readIvfIndex(s, dir, "vec_id", "embedding"))
+    Similarity.ivfIngestBatch(ready(), b1, dir, "r0-0")
+    Similarity.ivfIngestBatch(ready(), b2, dir, "r0-1")
     def probe() = Similarity.ivfTopKWithIndex(
       emb.filter($"vec_id" % 100 === 0),
       Similarity.readIvfIndex(s, dir, "vec_id", "embedding"),
@@ -577,9 +584,99 @@ class IngestSpec extends SparkSpec {
       "ingested store diverged from the full build")
     val rows = s.read.parquet(s"$dir/assigned.parquet").count()
     // replay both batches; row count and probe must not move
-    Similarity.ivfIngestBatch(b1, dir, "vec_id", "embedding", "r0-0")
-    Similarity.ivfIngestBatch(b2, dir, "vec_id", "embedding", "r0-1")
+    Similarity.ivfIngestBatch(ready(), b1, dir, "r0-0")
+    Similarity.ivfIngestBatch(ready(), b2, dir, "r0-1")
     assert(s.read.parquet(s"$dir/assigned.parquet").count() === rows)
     assert(probe() === want)
+  }
+
+  test("bm25 serve: both batch bands equal the batch probe; a replay leaves one copy") {
+    val s = spark
+    import s.implicits._
+    val docs = Tables.load(s, sf0001, "documents")
+    val root = tmp("bands")
+    val dir = s"$root/idx"
+    TextProfile.bm25Index(docs, "doc_id", "text").write(dir)
+    // one query per doc, its first four tokens: a 40-query batch is
+    // collected to the driver, a 300-query batch goes through widen
+    val qs = docs.orderBy("doc_id").select("text").as[String].collect()
+      .toSeq.zipWithIndex.map { case (t, i) =>
+        (i.toLong, t.split("\\s+").take(4).mkString(" "))
+      }
+    val (small, large) = (qs.take(40), qs.slice(40, 340))
+    assert(large.size === 300)
+    val out = serveWithReplay(root, ("q_id", "qtext"), small, large) {
+      (in, o) => StreamJobs.bm25LookupStream(in, dir, o, "q_id", "qtext",
+        "doc_id", k = 5, stopwordCut = false)
+    }
+    val idx = TextProfile.readBm25Index(s, dir, "doc_id")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    Seq(0 -> small, 1 -> large).foreach { case (id, batch) =>
+      val want = TextProfile.bm25TopKWithIndex(batch.toDF("q_id", "qtext"),
+        "q_id", "qtext", idx, k = 5, stopwordCut = false)
+      val got = s.read.parquet(s"$out/batch_id=$id")
+        .select(want.columns.map(col): _*)
+      assert(rows(got) === rows(want), s"batch $id")
+    }
+    ModelCache.invalidate(dir)
+  }
+
+  test("every store kind's append skips an empty batch: no tag, no new generation") {
+    val s = spark
+    val docs = Tables.load(s, sf0001, "documents").limit(60)
+    val emb = Tables.load(s, sf0001, "embeddings").limit(60)
+      .select("vec_id", "embedding")
+    val (none, noVecs) = (docs.limit(0), emb.limit(0))
+    // (store kind, create the store, append an empty batch to it)
+    val kinds: Seq[(String, String => Unit, String => Unit)] = Seq(
+      ("bm25", d => TextProfile.bm25Index(docs, "doc_id", "text").write(d),
+        d => TextProfile.bm25IngestBatch(none, "text", d, "e-0")),
+      ("ivf", d => Similarity.ivfIndex(emb, "vec_id", "embedding",
+          nlist = 4).write(d),
+        d => Similarity.ivfIngestBatch(Similarity.ivfReady(
+          Similarity.readIvfIndex(s, d, "vec_id", "embedding")), noVecs,
+          d, "e-0")),
+      ("ivfpq", d => {
+          val i = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
+            dim = 64, nlist = 4)
+          i.write(d); i.release()
+        },
+        d => Similarity.ivfPqIngestBatch(Similarity.ivfPqEncoder(
+          Similarity.readIvfPqIndex(s, d, "vec_id", "embedding")), noVecs,
+          d, "e-0")),
+      ("minhash", d => Dedup.writeMinhashIndex(
+          Dedup.minhashIndex(docs, "doc_id", "text", 3, 16, 4), d),
+        d => Dedup.minhashIngestBatch(none, d, "doc_id", "text", "e-0")),
+      ("profile", d => CorpusProfile.write(
+          CorpusProfile.build(docs, "doc_id", "lang", "text"), d),
+        d => CorpusProfile.ingestBatch(none, d, "doc_id", "lang", "text",
+          "e-0")),
+      ("lm", d => LmScore.writeModel(docs, "text", d),
+        d => LmScore.appendModel(none, "text", d, "e-0")),
+      ("nb", d => Classify.writeNbModel(docs, "lang", "text", d),
+        d => Classify.appendNbModel(none, "lang", "text", d, "e-0")),
+      ("decon", d => Curation.writeDeconSet(docs, "doc_id", "text", 8, d),
+        d => Curation.deconSetAppend(none, "doc_id", "text", d)))
+    kinds.foreach { case (kind, create, appendEmpty) =>
+      val d = tmp(s"empty-$kind")
+      create(d)
+      val before = storeRecord(d)
+      // a serve beside the append: its cached handle reloads only when
+      // the generation moves
+      var loads = 0
+      def serveBatch(): Unit =
+        ModelCache.getOrLoad(s, d, key = s"$d#empty")(loads += 1)(_ => ())
+      serveBatch()
+      appendEmpty(d)
+      serveBatch()
+      val after = storeRecord(d)
+      assert(after.generation === before.generation,
+        s"$kind: an empty append raised the generation")
+      assert(after.applied === before.applied,
+        s"$kind: an empty append committed a tag")
+      assert(loads === 1, s"$kind: the serve reloaded")
+      ModelCache.invalidate(d)
+    }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{CorpusProfile, Maintenance, Similarity, TextProfile}
 import graft.sources.Tables
+import graft.store.Store
 
 /** The single maintenance entry point over append-drifted stores:
   * unit detection from directory contents, drift detection (partials
@@ -27,9 +28,8 @@ class MaintenanceSpec extends SparkSpec {
     val dir = tmp("bm25")
     TextProfile.bm25Index(docs.filter($"doc_id" % 2 === 0), "doc_id",
       "text").write(dir)
-    val stored = TextProfile.readBm25Index(s, dir, "doc_id")
-    TextProfile.bm25IndexAppend(stored,
-      docs.filter($"doc_id" % 2 === 1), "text", dir)
+    TextProfile.bm25IngestBatch(docs.filter($"doc_id" % 2 === 1), "text",
+      dir, Store.freshTag())
     assert(TextProfile.bm25HasPartials(s, dir), "append left no partials?")
 
     val queries = docs.filter($"doc_id" % 100 === 0)
@@ -57,9 +57,7 @@ class MaintenanceSpec extends SparkSpec {
     // while file pruning stays degraded indefinitely
     val disjoint = Seq((900001L, "zzqxa zzqxb zzqxc"),
       (900002L, "zzqxd zzqxe")).toDF("doc_id", "text")
-    TextProfile.bm25IndexAppend(
-      TextProfile.readBm25Index(s, dir, "doc_id"), disjoint, "text",
-      dir)
+    TextProfile.bm25IngestBatch(disjoint, "text", dir, Store.freshTag())
     assert(!TextProfile.bm25HasPartials(s, dir),
       "disjoint append should leave no df partials")
     assert(!storeRecord(dir).tables("postings.parquet").sorted,
@@ -76,9 +74,8 @@ class MaintenanceSpec extends SparkSpec {
     CorpusProfile.write(CorpusProfile.build(
       docs.filter(col("doc_id") % 2 === 0), "doc_id", "lang", "text"),
       dir)
-    CorpusProfile.append(CorpusProfile.build(
-      docs.filter(col("doc_id") % 2 === 1), "doc_id", "lang", "text"),
-      dir)
+    CorpusProfile.ingestBatch(docs.filter(col("doc_id") % 2 === 1), dir,
+      "doc_id", "lang", "text", Store.freshTag())
     assert(CorpusProfile.hasPartials(s, dir))
     def stats() = CorpusProfile.stats(
       CorpusProfile.read(s, dir, "lang", "text")).collect().toSet
@@ -96,9 +93,8 @@ class MaintenanceSpec extends SparkSpec {
     val dir = tmp("bm25target")
     TextProfile.bm25Index(docs.filter($"doc_id" % 2 === 0), "doc_id",
       "text").write(dir)
-    TextProfile.bm25IndexAppend(
-      TextProfile.readBm25Index(s, dir, "doc_id"),
-      docs.filter($"doc_id" % 2 === 1), "text", dir)
+    TextProfile.bm25IngestBatch(docs.filter($"doc_id" % 2 === 1), "text",
+      dir, Store.freshTag())
     val bytes = new java.io.File(s"$dir/postings.parquet").listFiles()
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(_.length).sum
@@ -122,10 +118,11 @@ class MaintenanceSpec extends SparkSpec {
     val dir = tmp("ivf")
     Similarity.ivfIndex(emb.filter($"vec_id" % 12 === 0), "vec_id",
       "embedding", nlist = 16).write(dir)
-    var idx = Similarity.readIvfIndex(s, dir, "vec_id", "embedding")
+    val ready = Similarity.ivfReady(
+      Similarity.readIvfIndex(s, dir, "vec_id", "embedding"))
     (1 to 11).foreach { r =>
-      idx = Similarity.ivfAppendToStored(idx,
-        emb.filter($"vec_id" % 12 === r), dir)
+      Similarity.ivfIngestBatch(ready, emb.filter($"vec_id" % 12 === r),
+        dir, Store.freshTag())
     }
     val p = s.sparkContext.defaultParallelism
     val grown = files(s"$dir/assigned.parquet")
@@ -158,10 +155,14 @@ class MaintenanceSpec extends SparkSpec {
       "vec_id", "embedding", dim = 64, nlist = 16)
     built.write(pq)
     built.release()
+    val ready = Similarity.ivfReady(
+      Similarity.readIvfIndex(s, ivf, "vec_id", "embedding"))
+    val enc = Similarity.ivfPqEncoder(
+      Similarity.readIvfPqIndex(s, pq, "vec_id", "embedding"))
     (1 to 3).foreach { r =>
       val b = emb.filter($"vec_id" % 4 === r).select("vec_id", "embedding")
-      Similarity.ivfIngestBatch(b, ivf, "vec_id", "embedding", s"r$r")
-      Similarity.ivfPqIngestBatch(b, pq, "vec_id", "embedding", s"r$r")
+      Similarity.ivfIngestBatch(ready, b, ivf, s"r$r")
+      Similarity.ivfPqIngestBatch(enc, b, pq, s"r$r")
     }
     val helper =
       new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}

@@ -179,20 +179,52 @@ class ModelCacheSpec extends SparkSpec {
     // generation
     val batch1 = emb.limit(3)
       .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
-    graft.operators.Similarity.ivfIngestBatch(batch1, dir, "vec_id",
-      "embedding", tag = "mc-ivf-0")
+    graft.operators.Similarity.ivfIngestBatch(handle(), batch1, dir,
+      tag = "mc-ivf-0")
     handle()
     assert(loads === 2, "tagged ingest did not raise the generation")
     val batch2 = emb.limit(3)
       .select(($"vec_id" + 2000000L).as("vec_id"), $"embedding")
-    graft.operators.Similarity.ivfAppendToStored(
-      graft.operators.Similarity.readIvfIndex(s, dir, "vec_id",
-        "embedding"), batch2, dir)
+    graft.operators.Similarity.ivfIngestBatch(handle(), batch2, dir,
+      graft.store.Store.freshTag())
     handle()
     assert(loads === 3, "plain append did not raise the generation")
     // and the reloaded handle actually SEES the appended rows
     assert(handle().index.assigned
       .filter($"nn_id" >= 1000000L).count() === 6)
     ModelCache.invalidate(dir)
+  }
+
+  test("lm serve: both batch bands equal the batch scorer; a replay leaves one copy") {
+    ModelCache.clear()
+    val s = spark
+    import s.implicits._
+    val docs = graft.sources.Tables.load(s, sf0001, "documents")
+    val root = tmp("lmbands")
+    val modelDir = s"$root/model"
+    graft.operators.LmScore.writeModel(docs.filter($"doc_id" % 2 === 0),
+      "text", modelDir)
+    // a 40-doc batch is collected to the driver, a 300-doc batch goes
+    // through widen
+    val rows = docs.orderBy("doc_id").select("doc_id", "text")
+      .as[(Long, String)].collect().toSeq
+    val (small, large) = (rows.take(40), rows.slice(40, 340))
+    assert(large.size === 300)
+    val out = serveWithReplay(root, ("doc_id", "text"), small, large) {
+      (in, o) => graft.streaming.StreamJobs.lmLookupStream(in, modelDir, o,
+        "doc_id", "text")
+    }
+    val model = graft.operators.LmScore.readModel(s, modelDir)
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    Seq(0 -> small, 1 -> large).foreach { case (id, batch) =>
+      val want = graft.operators.LmScore.score(model,
+        batch.toDF("doc_id", "text"), "doc_id", "text")
+      val got = s.read.parquet(s"$out/batch_id=$id")
+        .select(want.columns.map(col): _*)
+      assert(sorted(got) === sorted(want), s"batch $id")
+    }
+    graft.operators.LmScore.releaseBackoffCache(model)
+    ModelCache.invalidate(modelDir)
   }
 }

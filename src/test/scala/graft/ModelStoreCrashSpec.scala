@@ -103,9 +103,8 @@ class ModelStoreCrashSpec extends SparkSpec {
       CorpusProfile.write(
         CorpusProfile.build(df(tags), "doc_id", "label", "text"), dir)
     def append(dir: String, tag: Int): Unit =
-      CorpusProfile.ingestBatch(
-        CorpusProfile.build(df(Seq(tag)), "doc_id", "label", "text"),
-        dir, s"t$tag")
+      CorpusProfile.ingestBatch(df(Seq(tag)), dir, "doc_id", "label",
+        "text", s"t$tag")
     def compact(dir: String): Unit = CorpusProfile.compact(spark, dir)
     def canonical(dir: String): Seq[String] =
       canon(CorpusProfile.read(spark, dir, "label", "text"))
@@ -161,8 +160,9 @@ class ModelStoreCrashSpec extends SparkSpec {
       "embedding", nlist = 2)
     def create(dir: String, tags: Seq[Int]): Unit = seed.write(dir)
     def append(dir: String, tag: Int): Unit =
-      Similarity.ivfIngestBatch(vecs(Seq(tag)), dir, "vec_id",
-        "embedding", s"t$tag")
+      Similarity.ivfIngestBatch(Similarity.ivfReady(Similarity
+        .readIvfIndex(spark, dir, "vec_id", "embedding")), vecs(Seq(tag)),
+        dir, s"t$tag")
     def compact(dir: String): Unit = {
       Maintenance.compactAll(spark, Seq(dir)); ()
     }

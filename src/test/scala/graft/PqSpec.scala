@@ -100,16 +100,13 @@ class PqSpec extends SparkSpec {
     Similarity.ivfPqIndex(half1, "vec_id", "embedding", dim = 64,
       nlist = 16, residual = true).write(dir)
     val idx = Similarity.readIvfPqIndex(s, dir, "vec_id", "embedding")
-    val extended = Similarity.ivfPqAppendToStored(idx, half2, dir)
-    // the in-memory extension and the re-read stored state agree
+    Similarity.ivfPqIngestBatch(Similarity.ivfPqEncoder(idx), half2, dir,
+      graft.store.Store.freshTag())
     val reread = Similarity.readIvfPqIndex(s, dir, "vec_id", "embedding")
     assert(reread.codes.count() == emb.count())
     val q = emb.filter($"vec_id" % 100 === 0)
-    val viaExtended = Similarity.ivfPqTopKWithIndex(q, extended, k = 5)
-      .as[(Long, Long, Long, Double)].collect().toSet
     val viaStored = Similarity.ivfPqTopKWithIndex(q, reread, k = 5)
       .as[(Long, Long, Long, Double)].collect().toSet
-    assert(viaExtended == viaStored)
     // codebooks untouched by the append: batch rows were encoded with
     // the STORED state, not retrained
     assert(reread.pqCodebooks.collect().map(_.toSeq).toSet ==
@@ -133,12 +130,13 @@ class PqSpec extends SparkSpec {
     val wrongDim = emb.filter($"vec_id" % 2 === 1)
       .withColumn("embedding", slice($"embedding", 1, 32))
     val e = intercept[Exception] {
-      Similarity.ivfPqAppendToStored(idx, wrongDim, dir)
+      Similarity.ivfPqIngestBatch(Similarity.ivfPqEncoder(idx), wrongDim,
+        dir, graft.store.Store.freshTag())
     }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil
       else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("ivfPqAppendToStored")),
+    assert(msgs(e).exists(_.contains("ivfPqIngestBatch")),
       msgs(e).mkString(" | "))
     // the aborted write committed nothing
     val reread = Similarity.readIvfPqIndex(s, dir, "vec_id", "embedding")

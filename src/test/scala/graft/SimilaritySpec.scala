@@ -429,9 +429,9 @@ class SimilaritySpec extends SparkSpec {
     val idx2 = Similarity.ivfIndex(oldHalf, "vec_id", "embedding",
       nlist = 8)
     idx2.write(dir2)
-    Similarity.ivfAppendToStored(
-      Similarity.readIvfIndex(s, dir2, "vec_id", "embedding"),
-      newHalf, dir2)
+    Similarity.ivfIngestBatch(Similarity.ivfReady(
+        Similarity.readIvfIndex(s, dir2, "vec_id", "embedding")),
+      newHalf, dir2, graft.store.Store.freshTag())
     val grown = Similarity.readIvfIndex(s, dir2, "vec_id", "embedding")
     assert(grown.assigned.count() == emb.count())
     assert(grown.codebook.collect().toSeq ==

@@ -45,6 +45,45 @@ class SinksSpec extends SparkSpec {
     events.unpersist()
   }
 
+  test("a bucketed write that fails mid-job leaves the destination unchanged; a rerun adds rows once") {
+    val s = spark
+    import s.implicits._
+    val out = Files.createTempDirectory("graft-sinks").toString
+    val events = Tables.load(s, sf001, "events").limit(4000)
+      .select($"event_id", $"user_id", $"ts").cache()
+    Sinks.writeDateTimeBucketed(events, "ts", out, "job-a")
+    def files(): Seq[String] = {
+      val root = java.nio.file.Paths.get(out)
+      val walk = Files.walk(root)
+      try walk.filter(Files.isRegularFile(_)).toArray.toSeq
+        .map(p => root.relativize(p.asInstanceOf[java.nio.file.Path])
+          .toString).sorted
+      finally walk.close()
+    }
+    val before = files()
+    // the committer every GraftSession write runs under: task files
+    // land in the output path as each task commits
+    val hc = s.sparkContext.hadoopConfiguration
+    val key = "mapreduce.fileoutputcommitter.algorithm.version"
+    val prev = Option(hc.get(key))
+    hc.set(key, "2")
+    try {
+      // eight tasks on four cores: the last fails after earlier ones
+      // have committed
+      val failing = events.repartition(8).filter(assert_true(
+        spark_partition_id() =!= 7, lit("fail mid-write")).isNull)
+      intercept[Exception](
+        Sinks.writeDateTimeBucketed(failing, "ts", out, "job-a"))
+      assert(files() == before, "the failed job changed the destination")
+      Sinks.writeDateTimeBucketed(events, "ts", out, "job-a")
+      assert(s.read.parquet(s"$out/job-a").count() == 2 * events.count())
+      assert(files().forall(_.startsWith("job-a/")), "staging left behind")
+    } finally {
+      prev.fold(hc.unset(key))(hc.set(key, _))
+      events.unpersist()
+    }
+  }
+
   test("co-bucketed tables join with ZERO exchanges") {
     val s = spark
     import s.implicits._

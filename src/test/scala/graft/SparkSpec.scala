@@ -38,6 +38,41 @@ trait SparkSpec extends AnyFunSuite {
       .sortBy(_.getName).drop(keep)
       .foreach(p => fs.delete(p, false))
   }
+
+  /** Runs the serve stream `writer(input, outDir)` over a
+    * single-partition MemoryStream of (id, text) rows named `cols`:
+    * batch 0 carries `small`, batch 1 carries `large`. Then batch 1's
+    * commit is dropped from the checkpoint and the stream restarts on
+    * the same source, so batch 1 runs a second time. Returns `outDir`. */
+  def serveWithReplay(root: String, cols: (String, String),
+      small: Seq[(Long, String)], large: Seq[(Long, String)])(
+      writer: (org.apache.spark.sql.DataFrame, String) =>
+        org.apache.spark.sql.streaming.DataStreamWriter[
+          org.apache.spark.sql.Row]): String = {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val input = in.toDS().toDF(cols._1, cols._2)
+    val (outDir, ckpt) = (s"$root/out", s"$root/ckpt")
+    def start() = writer(input, outDir)
+      .option("checkpointLocation", ckpt).start()
+    val q = start()
+    try {
+      in.addData(small); q.processAllAvailable()
+      in.addData(large); q.processAllAvailable()
+    } finally q.stop()
+    Seq("1", ".1.crc").foreach(f =>
+      new java.io.File(s"$ckpt/commits/$f").delete())
+    val replay = start()
+    try replay.processAllAvailable() finally replay.stop()
+    // numInputRows sums every pass over the source in the batch
+    assert(replay.recentProgress.exists(p =>
+      p.batchId == 1 && p.numInputRows >= large.size),
+      "batch 1 was not replayed")
+    outDir
+  }
 }
 
 object SparkSpec {

@@ -439,9 +439,8 @@ class TextKernelsSpec extends SparkSpec {
 
     // ingest append: sign the batch with the SAME params, append only
     // its rows; the grown index pairs a later batch against old+new
-    graft.operators.Dedup.appendToMinhashIndex(
-      graft.operators.Dedup.minhashIndex(batch0, "doc_id", "text",
-        3, 16, 4), dir)
+    graft.operators.Dedup.minhashIngestBatch(batch0, dir, "doc_id",
+      "text", graft.store.Store.freshTag())
     val grown = graft.operators.Dedup.readMinhashIndex(
       s, dir, "doc_id", "text", 3, 16, 4)
     assert(grown.signed.count() == corpus.count() + batch0.count())
@@ -609,19 +608,15 @@ class TextKernelsSpec extends SparkSpec {
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(stored == fresh)
 
-    // O(batch) ingest: half1 build + half2 append == full build, both
-    // through the in-memory extension and the re-read stored state
+    // O(batch) ingest: half1 build + half2 append == full build,
+    // through the re-read stored state
     val dir2 = java.nio.file.Files.createTempDirectory("graft-bm25")
       .toString + "/idx"
     graft.operators.TextProfile.bm25Index(
       docs.filter($"doc_id" % 2 === 0), "doc_id", "text").write(dir2)
-    val half = graft.operators.TextProfile.readBm25Index(s, dir2, "doc_id")
-    val extended = graft.operators.TextProfile.bm25IndexAppend(half,
-      docs.filter($"doc_id" % 2 === 1), "text", dir2)
-    val viaExtended = graft.operators.TextProfile.bm25TopKWithIndex(
-      queries, "q_id", "qtext", extended, k = 5, stopwordCut = false)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(viaExtended == fresh)
+    graft.operators.TextProfile.bm25IngestBatch(
+      docs.filter($"doc_id" % 2 === 1), "text", dir2,
+      graft.store.Store.freshTag())
     val reread = graft.operators.TextProfile.readBm25Index(s, dir2,
       "doc_id")
     assert(reread.nDocs == docs.count() &&
