@@ -386,7 +386,7 @@ object Classify {
     * contract. */
   def appendNbModel(docs: DataFrame, labelCol: String, textCol: String,
       dir: String, tag: String): Unit = {
-    if (docs.isEmpty) return
+    if (graft.plans.LocalRows.isEmpty(docs)) return
     graft.store.Store.append(docs.sparkSession, dir,
       graft.store.Store.require(docs.sparkSession, dir, NbKind), tag,
       Seq("vocabulary.parquet" ->

@@ -106,7 +106,7 @@ object CorpusProfile {
     * per dir, quiesce before [[compact]]/Maintenance. */
   def ingestBatch(docs: DataFrame, dir: String, idCol: String,
       strataCol: String, textCol: String, tag: String): Unit = {
-    if (docs.isEmpty) return
+    if (graft.plans.LocalRows.isEmpty(docs)) return
     val spark = docs.sparkSession
     val rec = graft.store.Store.require(spark, dir, Kind)
     requireParamsMatch(rec, dir, strataCol, textCol)

@@ -399,7 +399,7 @@ object Dedup {
     * paths. */
   def minhashIngestBatch(batch: DataFrame, dir: String, idCol: String,
       textCol: String, tag: String): Unit = {
-    if (batch.isEmpty) return
+    if (graft.plans.LocalRows.isEmpty(batch)) return
     val spark = batch.sparkSession
     val rec = graft.store.Store.require(spark, dir, MinhashKind)
     val b = minhashIndex(batch, idCol, textCol, rec.int("n"),

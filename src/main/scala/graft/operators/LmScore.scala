@@ -520,7 +520,7 @@ object LmScore {
     * caller's contract. */
   def appendModel(reference: DataFrame, textCol: String,
       dir: String, tag: String): Unit = {
-    if (reference.isEmpty) return
+    if (graft.plans.LocalRows.isEmpty(reference)) return
     graft.store.Store.append(reference.sparkSession, dir,
       graft.store.Store.require(reference.sparkSession, dir, Kind), tag,
       Seq("unigrams.parquet" ->

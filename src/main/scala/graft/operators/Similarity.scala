@@ -278,7 +278,7 @@ object Similarity {
     * upsert); single writer per dir. */
   def ivfIngestBatch(ready: IvfReady, batch: DataFrame,
       dir: String, tag: String): Unit = {
-    if (batch.isEmpty) return
+    if (graft.plans.LocalRows.isEmpty(batch)) return
     val cents = ready.cents
     // fail fast: in a fire-and-forget streaming sink an empty-codebook
     // store would otherwise drop every ingested vector while the
@@ -1635,7 +1635,7 @@ object Similarity {
     * as [[ivfIngestBatch]]. */
   def ivfPqIngestBatch(enc: IvfPqEncoder, batch: DataFrame,
       dir: String, tag: String): Unit = {
-    if (batch.isEmpty) return
+    if (graft.plans.LocalRows.isEmpty(batch)) return
     val spark = batch.sparkSession
     graft.store.Store.append(spark, dir,
       graft.store.Store.require(spark, dir, IvfPqKind), tag,

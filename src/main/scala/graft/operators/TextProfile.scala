@@ -431,7 +431,7 @@ object TextProfile {
     * Single-writer-per-dir as everywhere. */
   def bm25IngestBatch(batch: DataFrame, textCol: String, dir: String,
       tag: String): Unit = {
-    if (batch.isEmpty) return
+    if (graft.plans.LocalRows.isEmpty(batch)) return
     val spark = batch.sparkSession
     val rec = graft.store.Store.require(spark, dir, Bm25Kind)
     if (rec.applied.contains(tag)) return

@@ -3,13 +3,15 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 
 /** Frames whose rows are already on the driver. A frame is driver-local
   * when its optimized plan is a `LocalRelation`: a `toDF` /
   * `createDataFrame` input, and projections or filters over one, which
   * the optimizer evaluates into the relation. Reading such a frame's
   * rows runs no job and evaluates no upstream, so an operator may turn
-  * them into a literal predicate for free. */
+  * them into a literal predicate for free. A frame can also carry what
+  * a bounded read of it already learned, whether it has rows. */
 object LocalRows {
 
   /** The distinct elements of `arrays`' first (array) column when the
@@ -27,14 +29,23 @@ object LocalRows {
       case _ => None
     }
 
-  /** `df` as a driver-local frame when it has at most `maxRows` rows:
-    * one job reads at most `maxRows + 1` of them, and every later use
-    * of the returned frame reads the driver copy instead of
-    * re-evaluating `df`. A larger `df` is returned as it is. */
-  def collectSmall(df: DataFrame, maxRows: Int): DataFrame = {
-    val rows = df.limit(maxRows + 1).collect()
-    if (rows.length > maxRows) df
-    else df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
+  /** Whether a frame has rows, as a bounded read that already ran
+    * learned it; set by [[known]], read by [[isEmpty]]. */
+  private val Empty = TreeNodeTag[Boolean]("graft.localrows.empty")
+
+  /** `df`, marked with whether it has rows, so [[isEmpty]] answers from
+    * the mark. Only the frame returned carries it, not frames derived
+    * from it. */
+  def known(df: DataFrame, empty: Boolean): DataFrame = {
+    df.queryExecution.logical.setTagValue(Empty, empty)
+    df
   }
+
+  /** Whether `df` has no rows: the [[known]] mark when it has one, else
+    * `df.isEmpty` (no job for a driver-local frame). Reading the mark
+    * matters for a widened stream batch, where `limit(1)` does not push
+    * through the round-robin exchange and `isEmpty` would shuffle the
+    * whole batch to find one row. */
+  def isEmpty(df: DataFrame): Boolean =
+    df.queryExecution.logical.getTagValue(Empty).getOrElse(df.isEmpty)
 }

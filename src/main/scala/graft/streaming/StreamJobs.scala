@@ -97,17 +97,13 @@ object StreamJobs {
       .dropDuplicates("fp"))
   }
 
-  /** Query rows up to which a serve micro-batch is collected once to
-    * the driver ([[serveBatch]]). */
-  private val ServeBatchRows = 256
-
   /** The serve template every lookup stream writes through. Each
-    * micro-batch is prepared by [[serveBatch]] and handed to the
-    * stream's `probe`, a stored-index probe or stored-model scorer that
-    * fetches its store handle through [[ModelCache]] on every batch (a
-    * quiet store costs one record read; an append, rewrite or
-    * compaction raises the store's generation and takes effect from
-    * the next batch). The result OVERWRITES `outDir/batch_id=<id>/`.
+    * micro-batch is prepared by [[prepare]] and handed to the stream's
+    * `probe`, a stored-index probe or stored-model scorer that fetches
+    * its store handle through [[ModelCache]] on every batch (a quiet
+    * store costs one record read; an append, rewrite or compaction
+    * raises the store's generation and takes effect from the next
+    * batch). The result OVERWRITES `outDir/batch_id=<id>/`.
     *
     * Replay contract: foreachBatch is at-least-once, and a replayed
     * batch rewrites its own `batch_id=` directory instead of appending
@@ -120,27 +116,15 @@ object StreamJobs {
   private def serve(in: DataFrame, outDir: String)(
       probe: DataFrame => DataFrame): DataStreamWriter[Row] =
     in.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      probe(serveBatch(batch)).write.mode("overwrite")
+      probe(prepare(batch, keepWidth = false)).write.mode("overwrite")
         .parquet(s"$outDir/batch_id=$batchId")
       ()
     }
 
-  /** A serve micro-batch, prepared by one rule for every serve: at most
-    * [[ServeBatchRows]] rows are collected once to the driver
-    * (`graft.plans.LocalRows`, one bounded job), so the probe reads the
-    * batch once instead of once per use, and a batch probing few cells
-    * or terms takes the index operators' pushed In(cell) / In(term)
-    * arm, skipping the stored row groups it does not probe. A larger
-    * batch goes through [[widen]]. */
-  private def serveBatch(batch: DataFrame): DataFrame = {
-    val local = graft.plans.LocalRows.collectSmall(batch, ServeBatchRows)
-    if (local eq batch) widen(batch) else local
-  }
-
   /** The ingest template every store-appending stream writes through.
-    * Each micro-batch goes through [[widen]] and into its store kind's
-    * one append under the tag `runId-batchId`; the append skips an
-    * empty batch, so an idle trigger commits nothing and leaves the
+    * Each micro-batch is prepared by [[prepare]] and, unless it is
+    * empty, handed to its store kind's one append under the tag
+    * `runId-batchId`, so an idle trigger commits nothing and leaves the
     * generation (and every serve's cached handle) alone.
     *
     * Tag contract: the append commits the batch's files together with
@@ -157,53 +141,53 @@ object StreamJobs {
     * `Maintenance.compactAll` restores the sorted, sized layout. Returns
     * the writer — the caller picks trigger and checkpoint and starts
     * it. */
-  private def ingest(in: DataFrame, runId: String)(
+  private[graft] def ingest(in: DataFrame, runId: String)(
       append: (DataFrame, String) => Unit): DataStreamWriter[Row] =
     in.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      append(widen(batch), s"$runId-$batchId")
+      val b = prepare(batch, keepWidth = true)
+      if (!graft.plans.LocalRows.isEmpty(b)) append(b, s"$runId-$batchId")
     }
 
-  /** Parallelism guard for a micro-batch: a batch arrives with its
-    * SOURCE's partitioning (MemoryStream: one partition; a single Kafka
-    * partition: one), while a scorer's or ingest build's FIRST stage
-    * multiplies rows — tokens-per-doc × matched model rows — before any
-    * exchange, so on a narrow batch the whole fan-out runs in the
-    * source's task count. Measured at sf10: the NB serve's per-batch
-    * write read 28–40 s single-partition vs ~3 s wide — the
-    * explode+probe stage was one task chewing ~80M joined rows. One
-    * cheap round-robin shuffle of the RAW batch (pre-explode, so it
-    * moves doc rows, not the fan-out) buys scan parallelism for that
-    * stage; skipped when the source already delivers at least half the
-    * session's parallelism, and skipped when the batch is SMALL (under
-    * [[WidenRowFloor]] rows): a near-empty micro-batch gains nothing
-    * from the exchange but pays its latency, and on the non-aggregating
-    * ingest paths each widened tiny batch would land O(parallelism)
-    * near-empty files per append instead of O(source partitions),
-    * accelerating small-file layout drift between compactions. The
-    * size probe is BOUNDED, not a full count: a CollectLimit over the
-    * floor reads at most WidenRowFloor rows however large the batch is,
-    * so the probe's cost is a constant while the repartition it gates
-    * saved 2–4× at sf10 (BASELINE.md round-16 serve-parallelism notes).
-    * Partition count comes from the executed plan's output partitioning
-    * when the plan KNOWS it — but FileSourceScanExec and DSv2
-    * micro-batch scans report UnknownPartitioning(0), so 0 means
-    * UNKNOWN, not narrow: for those the count falls back to
-    * `batch.rdd.getNumPartitions` (building the RDD lineage runs no job
-    * — only reading one integer off it), otherwise an already-wide
-    * parquet-backed batch would pay the exchange it was supposed to
-    * skip (round-17 ADVICE). */
-  private[graft] val WidenRowFloor = 4096L
+  /** Rows up to which [[prepare]] copies a micro-batch to the driver. */
+  private[graft] val BatchRows = 4096
 
-  private[graft] def widen(batch: DataFrame): DataFrame = {
-    val p = batch.sparkSession.sparkContext.defaultParallelism
-    val planParts =
+  /** The one rule for every serve and ingest micro-batch: a single
+    * bounded read, `limit(BatchRows + 1).collect()` in one task, is the
+    * only job run before the stream's own work (without the
+    * `coalesce(1)`, a batch of many small partitions, such as an
+    * open-loop stream's one per `addData`, is read in several jobs). A
+    * batch of at most [[BatchRows]] rows becomes that driver copy (a
+    * `LocalRelation` in min(rows, parallelism) slices; with
+    * `keepWidth`, coalesced to the source's width so an append lands no
+    * more files than before), so the work reads the source once and a
+    * serve probing few terms or cells keeps the index operators'
+    * literal In arms. A larger narrow batch (under half the
+    * parallelism) is round-robin widened, since a scorer's or ingest
+    * build's first stage multiplies rows before any exchange: at sf10
+    * the NB serve's per-batch write took 28–40 s on one partition
+    * against ~3 s wide. File and DSv2 micro-batch scans report
+    * `UnknownPartitioning(0)`, which means unknown, not narrow, so the
+    * width falls back to the RDD's partition count (no job) and an
+    * already-wide parquet batch pays no exchange. The result is marked
+    * with what the read learned (`LocalRows.isEmpty`), so no append
+    * probes it again. */
+  private[graft] def prepare(batch: DataFrame,
+      keepWidth: Boolean): DataFrame = {
+    val s = batch.sparkSession
+    val p = s.sparkContext.defaultParallelism
+    lazy val width =
       batch.queryExecution.executedPlan.outputPartitioning.numPartitions
-    val parts =
-      if (planParts > 0) planParts else batch.rdd.getNumPartitions
-    if (parts * 2 >= p) batch
-    else if (batch.limit(WidenRowFloor.toInt).count() < WidenRowFloor)
-      batch
-    else batch.repartition(p)
+        match { case 0 => batch.rdd.getNumPartitions; case n => n }
+    val rows = batch.coalesce(1).limit(BatchRows + 1).collect()
+    val ready =
+      if (rows.length > BatchRows)
+        if (width * 2 >= p) batch else batch.repartition(p)
+      else {
+        val local =
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), batch.schema)
+        if (keepWidth) local.coalesce(width) else local
+      }
+    graft.plans.LocalRows.known(ready, empty = rows.isEmpty)
   }
 
   /** Streaming ANN serving ([[serve]]): each micro-batch of query

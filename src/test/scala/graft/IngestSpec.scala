@@ -597,14 +597,15 @@ class IngestSpec extends SparkSpec {
     val root = tmp("bands")
     val dir = s"$root/idx"
     TextProfile.bm25Index(docs, "doc_id", "text").write(dir)
-    // one query per doc, its first four tokens: a 40-query batch is
-    // collected to the driver, a 300-query batch goes through widen
-    val qs = docs.orderBy("doc_id").select("text").as[String].collect()
-      .toSeq.zipWithIndex.map { case (t, i) =>
-        (i.toLong, t.split("\\s+").take(4).mkString(" "))
-      }
-    val (small, large) = (qs.take(40), qs.slice(40, 340))
-    assert(large.size === 300)
+    // queries are docs' first four tokens, cycling through the docs: a
+    // 40-query batch is copied to the driver, one past
+    // StreamJobs.BatchRows is widened
+    val texts = docs.orderBy("doc_id").select("text").as[String].collect()
+    val qs = (0 until StreamJobs.BatchRows + 140).map { i =>
+      (i.toLong, texts(i % texts.length).split("\\s+").take(4).mkString(" "))
+    }
+    val (small, large) = qs.splitAt(40)
+    assert(large.size > StreamJobs.BatchRows)
     val out = serveWithReplay(root, ("q_id", "qtext"), small, large) {
       (in, o) => StreamJobs.bm25LookupStream(in, dir, o, "q_id", "qtext",
         "doc_id", k = 5, stopwordCut = false)
@@ -678,5 +679,81 @@ class IngestSpec extends SparkSpec {
       assert(loads === 1, s"$kind: the serve reloaded")
       ModelCache.invalidate(d)
     }
+  }
+
+  /** `n` (vec_id, embedding) rows of dimension 8, ids from `from`. */
+  private def vecs(from: Long, n: Int): Seq[(Long, Array[Float])] = {
+    val r = new scala.util.Random(from)
+    (from until from + n).map(i => i -> Array.fill(8)(r.nextFloat()))
+  }
+
+  /** An IVF store of 200 vectors under `root`, and ingest batches of
+    * `warm` (when non-empty) and then `rows` into it through
+    * `annIngestStream` from a one-partition MemoryStream. Returns the
+    * store dir and, for the `rows` batch, its progress, its jobs and
+    * shuffle-writing stages (`sparkWork`) and the number of `assigned`
+    * files it added. */
+  private def annIngestOnce(root: String, rows: Seq[(Long, Array[Float])],
+      warm: Seq[(Long, Array[Float])] = Nil)
+      : (String, org.apache.spark.sql.streaming.StreamingQueryProgress,
+        Seq[SparkSpec.Job], Int, Int) = {
+    val s = spark
+    import s.implicits._
+    val dir = s"$root/ivf"
+    Similarity.ivfIndex(vecs(0, 200).toDF("vec_id", "embedding"), "vec_id",
+      "embedding", nlist = 4).write(dir)
+    implicit val sqlCtx = s.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Array[Float])]
+    val q = StreamJobs.annIngestStream(in.toDS().toDF("vec_id", "embedding"),
+        dir, "vec_id", "embedding", "r")
+      .option("checkpointLocation", s"$root/ckpt_i").start()
+    val (filesBefore, (_, jobs, shuffles)) =
+      try {
+        if (warm.nonEmpty) { in.addData(warm); q.processAllAvailable() }
+        (storeRecord(dir).files("assigned.parquet").size,
+          sparkWork { in.addData(rows); q.processAllAvailable() })
+      } finally q.stop()
+    val batchId = if (warm.isEmpty) 0 else 1
+    (dir, q.recentProgress.find(_.batchId == batchId).get, jobs, shuffles,
+      storeRecord(dir).files("assigned.parquet").size - filesBefore)
+  }
+
+  test("a small micro-batch reads its source once: an ingest's and a serve's numInputRows equal its rows") {
+    val s = spark
+    import s.implicits._
+    val root = tmp("once")
+    val (dir, ingested, _, _, _) = annIngestOnce(root, vecs(1000, 100))
+    assert(ingested.numInputRows === 100)
+    assert(storeRecord(dir).applied.keySet === Set("r-0"))
+    implicit val sqlCtx = s.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Array[Float])]
+    val q = StreamJobs.ivfLookupStream(in.toDS().toDF("vec_id", "embedding"),
+        dir, s"$root/out", "vec_id", "embedding", k = 3)
+      .option("checkpointLocation", s"$root/ckpt_s").start()
+    try { in.addData(vecs(5000, 50)); q.processAllAvailable() }
+    finally q.stop()
+    assert(q.recentProgress.find(_.batchId == 0).get.numInputRows === 50)
+    assert(s.read.parquet(s"$root/out").select("q_id").distinct().count()
+      === 50)
+    ModelCache.invalidate(dir)
+  }
+
+  test("ann ingest: a 100-row batch from a one-partition source lands one assigned file") {
+    val (_, _, _, _, added) = annIngestOnce(tmp("files"), vecs(1000, 100))
+    assert(added === 1)
+  }
+
+  test("ingest: a 5000-row batch from a one-partition source is shuffled once, by its widening") {
+    // a first batch loads the stream's codebook handle (one shuffle of
+    // its own), so the measured batch runs only its preparation and
+    // its append
+    val (dir, _, jobs, shuffles, _) = annIngestOnce(tmp("shuffle"),
+      vecs(1000, 5000), warm = vecs(900, 10))
+    // the round-robin widening is the batch's one exchange; before, the
+    // append's emptiness check shuffled the widened batch once more
+    assert(shuffles === 1, jobs)
+    assert(spark.read.parquet(s"$dir/assigned.parquet").count() === 5210)
   }
 }

@@ -204,12 +204,13 @@ class ModelCacheSpec extends SparkSpec {
     val modelDir = s"$root/model"
     graft.operators.LmScore.writeModel(docs.filter($"doc_id" % 2 === 0),
       "text", modelDir)
-    // a 40-doc batch is collected to the driver, a 300-doc batch goes
-    // through widen
-    val rows = docs.orderBy("doc_id").select("doc_id", "text")
-      .as[(Long, String)].collect().toSeq
-    val (small, large) = (rows.take(40), rows.slice(40, 340))
-    assert(large.size === 300)
+    // the docs' texts under fresh ids, cycling: a 40-doc batch is
+    // copied to the driver, one past StreamJobs.BatchRows is widened
+    val texts = docs.orderBy("doc_id").select("text").as[String].collect()
+    val rows = (0 until graft.streaming.StreamJobs.BatchRows + 140).map(i =>
+      (i.toLong, texts(i % texts.length)))
+    val (small, large) = rows.splitAt(40)
+    assert(large.size > graft.streaming.StreamJobs.BatchRows)
     val out = serveWithReplay(root, ("doc_id", "text"), small, large) {
       (in, o) => graft.streaming.StreamJobs.lmLookupStream(in, modelDir, o,
         "doc_id", "text")
@@ -225,6 +226,41 @@ class ModelCacheSpec extends SparkSpec {
       assert(sorted(got) === sorted(want), s"batch $id")
     }
     graft.operators.LmScore.releaseBackoffCache(model)
+    ModelCache.invalidate(modelDir)
+  }
+
+  test("serve batch preparation: a 300-row batch runs one job before its probe") {
+    ModelCache.clear()
+    val s = spark
+    import s.implicits._
+    val docs = graft.sources.Tables.load(s, sf0001, "documents")
+    val root = tmp("lmprep")
+    val modelDir = s"$root/model"
+    graft.operators.LmScore.writeModel(docs.filter($"doc_id" % 2 === 0),
+      "text", modelDir)
+    val rows = docs.orderBy("doc_id").select("doc_id", "text")
+      .as[(Long, String)].collect().toSeq
+    implicit val sqlCtx = s.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val q = graft.streaming.StreamJobs.lmLookupStream(
+        in.toDS().toDF("doc_id", "text"), modelDir, s"$root/out", "doc_id",
+        "text")
+      .option("checkpointLocation", s"$root/ckpt").start()
+    val jobs =
+      try {
+        // a first batch loads the model, so the measured batch runs only
+        // its preparation and its result write
+        in.addData(rows.take(10)); q.processAllAvailable()
+        sparkWork { in.addData(rows.slice(10, 310)); q.processAllAvailable() }
+          ._2
+      } finally q.stop()
+    // the write is the batch's last SQL execution; every job outside it
+    // prepared the batch
+    val write = jobs.flatMap(_.execution).max
+    val prep = jobs.filterNot(_.execution.contains(write))
+    assert(prep.size === 1, jobs)
+    assert(s.read.parquet(s"$root/out").count() === 310)
     ModelCache.invalidate(modelDir)
   }
 }

@@ -230,11 +230,14 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     def local(df: DataFrame) =
       df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
-    val src = s.range(0, 10).toDF("id")
+    import graft.streaming.StreamJobs
+    val src = s.range(0, 10, 1, 1).toDF("id")
     assert(!local(src))
-    val small = LocalRows.collectSmall(src, 10)
+    val (small, jobs, _) = sparkWork(StreamJobs.prepare(src, keepWidth = false))
+    assert(jobs.size == 1)
     assert(local(small) && small.as[Long].collect().sorted.toSeq == (0L until 10L))
-    assert(LocalRows.collectSmall(src, 9) eq src)
+    assert(!local(StreamJobs.prepare(
+      s.range(0, StreamJobs.BatchRows + 1L, 1, 1).toDF("id"), keepWidth = false)))
     val arrays = Seq(Seq(1, 2, 3), Seq(3, 4)).toDF("a")
     assert(LocalRows.distinctElems(arrays, 4).map(_.toSet) == Some(Set(1, 2, 3, 4)))
     assert(LocalRows.distinctElems(arrays, 3).isEmpty)

@@ -67,15 +67,50 @@ trait SparkSpec extends AnyFunSuite {
       new java.io.File(s"$ckpt/commits/$f").delete())
     val replay = start()
     try replay.processAllAvailable() finally replay.stop()
-    // numInputRows sums every pass over the source in the batch
+    // numInputRows sums every pass over the source in the batch: a
+    // batch past StreamJobs.BatchRows is read once by the bounded read
+    // and again by the probe
     assert(replay.recentProgress.exists(p =>
       p.batchId == 1 && p.numInputRows >= large.size),
       "batch 1 was not replayed")
     outDir
   }
+
+  /** Runs `body` and returns what it ran on the cluster: each job, in
+    * start order, and the number of completed stages that wrote
+    * shuffle rows. */
+  def sparkWork[T](body: => T): (T, Seq[SparkSpec.Job], Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkSpec.Job]()
+    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(SparkSpec.Job(e.stageInfos.maxBy(_.stageId).name,
+          Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffleStages.incrementAndGet()
+    }
+    val bridge = org.apache.spark.sql.graftbridge.PlanBridge
+    bridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      bridge.drainListeners(sc)
+      import scala.jdk.CollectionConverters._
+      (r, jobs.asScala.toSeq, shuffleStages.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
+  /** A job `sparkWork` saw: its call site (its result stage's name, e.g.
+    * "collect at Foo.scala:12"; a stream's jobs carry the site of its
+    * `start`) and the SQL execution it ran for, if any. */
+  final case class Job(site: String, execution: Option[Long])
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

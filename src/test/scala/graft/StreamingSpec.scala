@@ -182,35 +182,73 @@ class StreamingSpec extends SparkSpec {
     assert(joined.count() == 0)
   }
 
-  test("widen: small narrow batches keep their partitioning; only a large narrow batch pays the exchange") {
+  test("batch rule: one bounded read decides a micro-batch; only a large narrow batch is widened; an empty one never reaches the append") {
     val s = spark
     import s.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+      Repartition}
+    import graft.plans.LocalRows
     val p = s.sparkContext.defaultParallelism
-    // small + narrow: under the row floor → no repartition even
-    // though partitions < parallelism (the near-empty-micro-batch
-    // case that would otherwise land O(parallelism) files per append)
-    val small = s.range(0, 100, 1, 1).toDF("id")
-    assert(StreamJobs.widen(small).rdd.getNumPartitions === 1)
-    // large + narrow: at/over the floor → widened to parallelism
-    val large = s.range(0, StreamJobs.WidenRowFloor + 1, 1, 1).toDF("id")
-    assert(StreamJobs.widen(large).rdd.getNumPartitions === p)
-    // already wide: untouched regardless of size
-    val wide = s.range(0, 100, 1, p).toDF("id")
-    assert(StreamJobs.widen(wide).rdd.getNumPartitions === p)
+    val n = StreamJobs.BatchRows
+    def exchanges(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case r: Repartition if r.shuffle => r }
+    // small + narrow: one job copies it to the driver, no exchange; the
+    // copy answers isEmpty with no job
+    val narrow = s.range(0, 100, 1, 1).toDF("id")
+    val (small, jobs, _) =
+      sparkWork(StreamJobs.prepare(narrow, keepWidth = false))
+    assert(jobs.size === 1)
+    assert(small.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(small.as[Long].collect().sorted.toSeq === (0L until 100L))
+    // a batch of many small partitions (an open-loop stream's, one per
+    // addData) is read in one job too
+    assert(sparkWork(StreamJobs.prepare(s.range(0, 100, 1, 25).toDF("id"),
+      keepWidth = true))._2.size === 1)
+    // the ingest form keeps the source's width, so an append lands no
+    // more files than the source has partitions
+    val kept = StreamJobs.prepare(narrow, keepWidth = true)
+    assert(exchanges(kept).isEmpty && kept.rdd.getNumPartitions === 1)
+    // large + narrow: widened to the parallelism; its emptiness is
+    // already known, so checking it runs no job (and no shuffle)
+    val large = StreamJobs.prepare(s.range(0, n + 1, 1, 1).toDF("id"),
+      keepWidth = true)
+    assert(large.rdd.getNumPartitions === p)
+    val (empty, probes, _) = sparkWork(LocalRows.isEmpty(large))
+    assert(!empty && probes.isEmpty)
+    // already wide: untouched
+    val wide = StreamJobs.prepare(s.range(0, n + 1, 1, p).toDF("id"),
+      keepWidth = false)
+    assert(exchanges(wide).isEmpty && wide.rdd.getNumPartitions === p)
     // plan-UNKNOWN partitioning (FileSourceScanExec reports
-    // UnknownPartitioning(0)): the wide-source skip must still fire
-    // via the RDD fallback — an already-wide parquet batch pays no
-    // exchange (round-17 ADVICE: gating on the plan's 0 alone made
-    // this branch never fire for real sources)
-    val dir = java.nio.file.Files.createTempDirectory("widen_pq")
+    // UnknownPartitioning(0)): the RDD fallback still sees the parquet
+    // batch is wide, so it pays no exchange
+    val dir = java.nio.file.Files.createTempDirectory("batch_rule_pq")
       .toString + "/t.parquet"
-    s.range(0, StreamJobs.WidenRowFloor * 4, 1, p).toDF("id")
-      .write.mode("overwrite").parquet(dir)
+    s.range(0, n * 4L, 1, p).toDF("id").write.mode("overwrite").parquet(dir)
     val pq = s.read.parquet(dir)
     assert(pq.queryExecution.executedPlan
-      .outputPartitioning.numPartitions === 0) // the premise: plan says unknown
-    assert(StreamJobs.widen(pq).queryExecution.optimizedPlan
-      .collect { case r: org.apache.spark.sql.catalyst.plans.logical
-        .Repartition => r }.isEmpty) // no exchange injected
+      .outputPartitioning.numPartitions === 0) // the premise
+    assert(exchanges(StreamJobs.prepare(pq, keepWidth = false)).isEmpty)
+    // an empty micro-batch never reaches the append; its preparation
+    // is the one bounded read
+    implicit val sqlCtx = s.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Long]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
+    val ckpt = java.nio.file.Files.createTempDirectory("batch_rule_ckpt")
+    val q = StreamJobs.ingest(in.toDF(), "r") { (b, tag) =>
+      seen.add(b.count() -> tag); ()
+    }.option("checkpointLocation", ckpt.toString).start()
+    try {
+      val (_, emptyJobs, _) = sparkWork {
+        in.addData(Seq.empty[Long]); q.processAllAvailable()
+      }
+      assert(q.recentProgress.exists(_.batchId == 0))
+      assert(emptyJobs.size === 1, emptyJobs)
+      in.addData(1L, 2L, 3L); q.processAllAvailable()
+    } finally q.stop()
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSeq === Seq(3L -> "r-1"))
   }
 }
