@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory with the engine's standard configuration.
@@ -9,9 +10,25 @@ import org.apache.spark.sql.SparkSession
   * runtime wiring), re-expressed as Spark session conf. Tuned for
   * local[N] testing but with settings that carry to a real cluster:
   * AQE on (runtime re-planning, skew-join handling), shuffle
-  * partitions sized to the env, UTC session time.
+  * partitions sized to the env, UTC session time, and the `file:`
+  * scheme bound to [[LocalFs]] for both Hadoop APIs
+  * ([[fileSystemConf]]).
   */
 object GraftSession {
+  /** The `spark.hadoop.*` entries that bind the `file:` scheme to
+    * [[LocalFs]] — `fs.file.impl` for the FileSystem API and
+    * `fs.AbstractFileSystem.file.impl` for FileContext, which Spark's
+    * offset/commit logs and state-store checkpoint use — less any key
+    * `preset` already sets: an explicit binding stays in place.
+    * latbench's traced runs set `-Dspark.hadoop.fs.file.impl` to their
+    * counting `LocalFileSystem`, so their serve and ingest file writes
+    * keep the stock file system's `chmod` forks, while their
+    * FileContext logs and state use this binding. */
+  def fileSystemConf(preset: SparkConf): Seq[(String, String)] =
+    Seq("spark.hadoop.fs.file.impl" -> classOf[LocalFs.Fs],
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Afs])
+      .collect { case (k, c) if !preset.contains(k) => k -> c.getName }
+
   def apply(appName: String = "graft",
             master: Option[String] = None,
             shufflePartitions: Option[Int] = None): SparkSession = {
@@ -37,6 +54,9 @@ object GraftSession {
       // (StreamJobs' lookup streams) overwrite their batch_id=<id> dir
       // when the checkpoint replays the batch.
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+    // builder options override the -Dspark.* properties the SparkConf
+    // below reads, so only the keys the caller left unset are bound
+    fileSystemConf(new SparkConf()).foreach { case (k, v) => b.config(k, v) }
     master.orElse(sys.env.get("SPARK_GRAFT_MASTER")).foreach(b.master)
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -687,6 +687,14 @@ class IngestSpec extends SparkSpec {
     (from until from + n).map(i => i -> Array.fill(8)(r.nextFloat()))
   }
 
+  /** The progress of batch `batchId`'s run. A trigger that finds no
+    * data before the batch's rows arrive reports an idle progress under
+    * the same batch id, with no addBatch phase. */
+  private def ran(q: org.apache.spark.sql.streaming.StreamingQuery,
+      batchId: Long) =
+    q.recentProgress.find(p =>
+      p.batchId == batchId && p.durationMs.containsKey("addBatch")).get
+
   /** An IVF store of 200 vectors under `root`, and ingest batches of
     * `warm` (when non-empty) and then `rows` into it through
     * `annIngestStream` from a one-partition MemoryStream. Returns the
@@ -715,7 +723,7 @@ class IngestSpec extends SparkSpec {
           sparkWork { in.addData(rows); q.processAllAvailable() })
       } finally q.stop()
     val batchId = if (warm.isEmpty) 0 else 1
-    (dir, q.recentProgress.find(_.batchId == batchId).get, jobs, shuffles,
+    (dir, ran(q, batchId), jobs, shuffles,
       storeRecord(dir).files("assigned.parquet").size - filesBefore)
   }
 
@@ -734,7 +742,7 @@ class IngestSpec extends SparkSpec {
       .option("checkpointLocation", s"$root/ckpt_s").start()
     try { in.addData(vecs(5000, 50)); q.processAllAvailable() }
     finally q.stop()
-    assert(q.recentProgress.find(_.batchId == 0).get.numInputRows === 50)
+    assert(ran(q, 0).numInputRows === 50)
     assert(s.read.parquet(s"$root/out").select("q_id").distinct().count()
       === 50)
     ModelCache.invalidate(dir)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for the suite: one local JVM session, UTC, small
-  * shuffle partitioning (matches Verify's environment). */
+  * shuffle partitioning and the engine's `file:` binding (matches
+  * Verify's environment). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
@@ -112,13 +113,15 @@ object SparkSpec {
   final case class Job(site: String, execution: Option[Long])
 
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val b = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    graft.core.GraftSession.fileSystemConf(new org.apache.spark.SparkConf())
+      .foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
