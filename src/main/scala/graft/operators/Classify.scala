@@ -347,7 +347,7 @@ object Classify {
         targetFileBytes)
       // vocab derives from the STAGED table, not the input plan:
       // re-evaluating the lazy plan would re-scan the training set
-      st.param("vocab", st.staged("vocabulary.parquet").count())
+      st.param("vocab", st.staged(spark, "vocabulary.parquet").count())
     }
 
   /** The stored model, from one record snapshot. On a COMPACTED store

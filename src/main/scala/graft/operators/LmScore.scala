@@ -470,14 +470,14 @@ object LmScore {
       // reference scan + explode + aggregation a second time — at
       // 100 TB that doubles the dominant model-build cost for a
       // vocab-bounded result the staged parquet already holds
-      st.sized("firsts.parquet", st.staged("bigrams.parquet")
+      st.sized("firsts.parquet", st.staged(spark, "bigrams.parquet")
           .groupBy(col("w1")).agg(sum(col("c12")).as("c1")),
         Seq("w1"), targetFileBytes)
       st.sized("unigrams.parquet", unigrams, Seq("token"),
         targetFileBytes)
       // vocab derives from the STAGED table, not the input plan
       // (re-evaluating the lazy plan would re-scan the reference)
-      st.param("vocab", st.staged("unigrams.parquet").count())
+      st.param("vocab", st.staged(spark, "unigrams.parquet").count())
     }
   }
 

@@ -165,10 +165,7 @@ object ClassifyQueries extends QueryPack {
     "q_text_nb_model" -> Q(
       (s, d) => {
         val docs = t(s, d, "documents")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_nb_model_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("nb_model", d)
         val train = trainSplit(docs)
         Classify.writeNbModel(
           train.filter(col("doc_id") % 4 === 0), "source", "text", dir)
@@ -193,10 +190,7 @@ object ClassifyQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val docs = t(s, d, "documents")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_stream_nb_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("stream_nb", d)
         val run = s"$dir/run_${System.nanoTime()}"
         val modelDir = s"$dir/model"
         Classify.writeNbModel(trainSplit(docs), "source", "text",
@@ -234,10 +228,7 @@ object ClassifyQueries extends QueryPack {
         import s.implicits._
         val docs = t(s, d, "documents")
         val train = trainSplit(docs)
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_nb_ingest_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("nb_ingest", d)
         val run = s"$dir/run_${System.nanoTime()}"
         val mDir = s"$run/model"
         Classify.writeNbModel(

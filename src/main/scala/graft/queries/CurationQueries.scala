@@ -60,10 +60,7 @@ object CurationQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val docs = t(s, d, "documents")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_stream_decon_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("stream_decon", d)
         val run = s"$dir/run_${System.nanoTime()}"
         val setDir = s"$dir/set"
         Curation.writeDeconSet(docs.filter(col("source") === "src0"),
@@ -579,10 +576,7 @@ object CurationQueries extends QueryPack {
       (s, d) => {
         import graft.operators.LmScore
         val docs = t(s, d, "documents")
-        val root = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_ccnet_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val root = scratchDir("ccnet", d)
         val deconDir = s"$root/decon"
         val modelDir = s"$root/model"
         Curation.writeDeconSet(docs.filter(col("source") === "src0"),
@@ -787,10 +781,7 @@ object CurationQueries extends QueryPack {
       (s, d) => {
         import graft.operators.{Classify, Maintenance}
         val docs = t(s, d, "documents")
-        val root = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_classified_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val root = scratchDir("classified", d)
         val modelDir = s"$root/model"
         val deconDir = s"$root/decon"
         Classify.writeNbModel(docs.filter(col("doc_id") % 2 === 0),

@@ -195,10 +195,7 @@ object DedupQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val docs = t(s, d, "documents")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_minhash_ingest_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("minhash_ingest", d)
         // run-scoped index dir: ingest APPENDS (see q_stream_bm25_ingest)
         val run = s"$dir/run_${System.nanoTime()}"
         val idxDir = s"$run/idx"

@@ -24,10 +24,7 @@ object LayoutQueries extends QueryPack {
     // pruning), l_returnflag the hash rank (equality pruning).
     "q_layout_zorder" -> Q(
       (s, d) => {
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_zorder_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("zorder", d)
         val li = t(s, d, "lineitem").select(
           col("l_orderkey"), col("l_partkey"), col("l_returnflag"),
           col("l_quantity"))
@@ -48,10 +45,7 @@ object LayoutQueries extends QueryPack {
     // file boundaries are inspectable.
     "q_layout_compact" -> Q(
       (s, d) => {
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_compact_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("compact", d)
         val li = t(s, d, "lineitem").select(
           col("l_orderkey"), col("l_partkey"), col("l_quantity"))
         li.repartition(48).write
@@ -71,10 +65,7 @@ object LayoutQueries extends QueryPack {
     // primary HDFS output format, not just its schema bridge.
     "q_avro_roundtrip" -> Q(
       (s, d) => {
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_avro_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("avro", d)
         val ev = t(s, d, "events")
         graft.sources.AvroFiles.write(ev.repartition(8), dir)
         // ts surfaces as NTZ: the result parquet then holds naive

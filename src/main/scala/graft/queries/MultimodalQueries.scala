@@ -160,10 +160,7 @@ object MultimodalQueries extends QueryPack {
         val curated = resized.join(feats, Seq("asset_id"))
           .select("asset_id", "width", "height", "out_w", "out_h",
             "n_bytes", "content_hash")
-        val outDir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_pmm_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode)) + "/curated"
+        val outDir = scratchDir("pmm", d) + "/curated"
         graft.sources.Sinks.writeSizedParquet(curated, outDir,
           sortCols = Seq("asset_id"),
           minFiles = s.sparkContext.defaultParallelism)

@@ -28,6 +28,15 @@ object QHelp {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
+  /** Query `name`'s scratch dir for scale dir `dir`, one per JVM and
+    * scale dir (`<java.io.tmpdir>/graft_<name>_p<pid>_<hex hash>`),
+    * deleted at JVM exit (`FsUtil.deleteOnExit`). */
+  def scratchDir(name: String, dir: String): String =
+    graft.core.FsUtil.deleteOnExit(
+      s"${System.getProperty("java.io.tmpdir")}/" +
+        s"graft_${name}_p${ProcessHandle.current().pid()}_" +
+        java.lang.Integer.toHexString(dir.hashCode))
+
   /** Scan-width fan-out guard for CPU-heavy narrow passes (round-19,
     * guide §2.6): a shingle/sign/codec pass over a table whose scan is
     * ONE split (gate scale, and sf10 too — a 58 MB file is one split

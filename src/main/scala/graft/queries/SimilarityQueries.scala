@@ -291,10 +291,7 @@ object SimilarityQueries extends QueryPack {
         // reaps the dir when THIS JVM ends — a pid-scoped name is
         // unique per run, so without it every Verify/Bench JVM left a
         // corpus-sized parquet tree in /tmp forever.
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_ivf_index_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("ivf_index", d)
         Similarity.ivfIndex(emb, "vec_id", "embedding", nlist = 16)
           .write(dir)
         val idx = Similarity.readIvfIndex(s, dir, "vec_id", "embedding")
@@ -349,10 +346,7 @@ object SimilarityQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val emb = t(s, d, "embeddings")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_knn_stored_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("knn_stored", d)
         Similarity.ivfIndex(emb, "vec_id", "embedding", nlist = 16)
           .write(dir)
         val idx = Similarity.readIvfIndex(s, dir, "vec_id", "embedding")
@@ -515,10 +509,7 @@ object SimilarityQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val emb = t(s, d, "embeddings")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_ann_ingest_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("ann_ingest", d)
         // run-scoped index dir: ingest APPENDS (see q_stream_bm25_ingest)
         val run = s"$dir/run_${System.nanoTime()}"
         val idxDir = s"$run/idx"
@@ -563,10 +554,7 @@ object SimilarityQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val emb = t(s, d, "embeddings")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_ivfpq_ingest_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("ivfpq_ingest", d)
         val run = s"$dir/run_${System.nanoTime()}"
         val idxDir = s"$run/idx"
         val full = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
@@ -612,10 +600,7 @@ object SimilarityQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val emb = t(s, d, "embeddings")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_live_ann_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("live_ann", d)
         val run = s"$dir/run_${System.nanoTime()}"
         val idxDir = s"$run/idx"
         val full = Similarity.ivfIndex(emb, "vec_id", "embedding",
@@ -793,10 +778,7 @@ object SimilarityQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val emb = t(s, d, "embeddings")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_edecon_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("edecon", d)
         Similarity.writeSemanticDeconSet(
           emb.filter($"vec_id" % 50 === 0), "embedding", dir,
           dim = 64, planes = 4)
@@ -818,10 +800,7 @@ object SimilarityQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val emb = t(s, d, "embeddings")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_sedecon_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("sedecon", d)
         val run = s"$dir/run_${System.nanoTime()}"
         Similarity.writeSemanticDeconSet(
           emb.filter($"vec_id" % 50 === 0), "embedding", s"$dir/set",
@@ -860,10 +839,7 @@ object SimilarityQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val emb = t(s, d, "embeddings")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_sbdecon_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("sbdecon", d)
         val run = s"$dir/run_${System.nanoTime()}"
         Similarity.writeSemanticDeconSetBanded(
           emb.filter($"vec_id" % 50 === 0), "embedding", s"$dir/set",
@@ -901,10 +877,7 @@ object SimilarityQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val emb = t(s, d, "embeddings")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_sddecon_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("sddecon", d)
         val run = s"$dir/run_${System.nanoTime()}"
         Similarity.writeSemanticDeconSetBanded(
           emb.filter($"vec_id" % 50 === 0), "embedding", s"$dir/set",
@@ -1007,10 +980,7 @@ object SimilarityQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val emb = t(s, d, "embeddings")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_bdecon_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("bdecon", d)
         Similarity.writeSemanticDeconSetBanded(
           emb.filter($"vec_id" % 50 === 0), "embedding", dir,
           dim = 64, bands = 6, rowsPerBand = 2)
@@ -1081,10 +1051,7 @@ object SimilarityQueries extends QueryPack {
         val emb = t(s, d, "embeddings")
         val corpus = emb.filter($"vec_id" % 50 =!= 0)
         val bench = emb.filter($"vec_id" % 50 === 0)
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_rdecon_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("rdecon", d)
         Similarity.writeSemanticDeconSetBanded(
           bench, "embedding", s"$dir/set",
           dim = 64, bands = 4, rowsPerBand = 3)
@@ -1138,10 +1105,7 @@ object SimilarityQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val emb = t(s, d, "embeddings")
-        val root = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_pembed_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val root = scratchDir("pembed", d)
         Similarity.writeSemanticDeconSetBanded(
           emb.filter($"vec_id" % 50 === 0), "embedding",
           s"$root/decon", dim = 64, bands = 6, rowsPerBand = 2)
@@ -1329,10 +1293,7 @@ object SimilarityQueries extends QueryPack {
         val emb = t(s, d, "embeddings")
         // pid- and sfDir-scoped dir: same concurrent-JVM and
         // /tmp-leak reasoning as q_ann_ivf_index
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_ivfpq_index_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("ivfpq_index", d)
         Similarity.ivfPqIndex(emb, "vec_id", "embedding", dim = 64,
           nlist = 16, m = 4, ksub = 16, residual = true).write(dir)
         val idx = Similarity.readIvfPqIndex(s, dir, "vec_id",
@@ -1362,10 +1323,7 @@ object SimilarityQueries extends QueryPack {
         // OUTPUT and CHECKPOINT are additionally invocation-scoped
         // (nanoTime) — a reused checkpoint would resume offsets and
         // skip the fresh MemoryStream's batches entirely
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_stream_ann_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("stream_ann", d)
         val run = s"$dir/run_${System.nanoTime()}"
         val idxDir = s"$dir/idx"
         // rebuilt every invocation (same as q_ann_ivfpq_index): the
@@ -1443,10 +1401,7 @@ object SimilarityQueries extends QueryPack {
         import s.implicits._
         val docs = t(s, d, "documents")
         val emb = t(s, d, "embeddings")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_stream_hybrid_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("stream_hybrid", d)
         val run = s"$dir/run_${System.nanoTime()}"
         graft.operators.TextProfile.bm25Index(docs, "doc_id", "text")
           .write(s"$dir/bm25")

@@ -434,10 +434,7 @@ object TextQueries extends QueryPack {
         val queries = docs.filter($"doc_id" % 100 === 0)
           .select($"doc_id".as("q_id"),
             concat_ws(" ", slice(tokens($"text"), 1, 6)).as("qtext"))
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_bm25idx_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("bm25idx", d)
         graft.operators.TextProfile.bm25Index(docs, "doc_id", "text")
           .write(dir)
         val idx = graft.operators.TextProfile.readBm25Index(s, dir,
@@ -463,10 +460,7 @@ object TextQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val docs = t(s, d, "documents")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_stream_bm25_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("stream_bm25", d)
         // output + checkpoint invocation-scoped (a reused checkpoint
         // would resume offsets and skip the fresh MemoryStream's
         // batches); the index rebuilt per invocation so the row
@@ -516,10 +510,7 @@ object TextQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val docs = t(s, d, "documents")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_bm25_ingest_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("bm25_ingest", d)
         // the INDEX is run-scoped here (unlike the serve rows' shared
         // idx): ingest APPENDS, so a reused dir would double-ingest
         // across invocations
@@ -571,10 +562,7 @@ object TextQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val docs = t(s, d, "documents")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_live_retr_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("live_retr", d)
         val run = s"$dir/run_${System.nanoTime()}"
         val idxDir = s"$run/idx"
         graft.operators.TextProfile.bm25Index(
@@ -786,10 +774,7 @@ object TextQueries extends QueryPack {
         val docs = t(s, d, "documents")
         // pid- and sfDir-scoped for the same concurrent-JVM and
         // /tmp-leak reasons as the IVF index query
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_profile_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("profile", d)
         CorpusProfile.write(CorpusProfile.build(
           docs.filter(col("doc_id") % 2 === 0), "doc_id", "lang",
           "text"), dir)
@@ -813,10 +798,7 @@ object TextQueries extends QueryPack {
         import s.implicits._
         import graft.operators.CorpusProfile
         val docs = t(s, d, "documents")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_profile_ingest_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("profile_ingest", d)
         val run = s"$dir/run_${System.nanoTime()}"
         val pDir = s"$run/profile"
         CorpusProfile.write(CorpusProfile.build(
@@ -934,10 +916,7 @@ object TextQueries extends QueryPack {
     "q_text_lm_model" -> Q(
       (s, d) => {
         val docs = t(s, d, "documents")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_lm_model_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("lm_model", d)
         graft.operators.LmScore.writeModel(
           docs.filter(col("lang") === "en"), "text", dir)
         graft.operators.LmScore.score(
@@ -1166,10 +1145,7 @@ object TextQueries extends QueryPack {
     "q_text_dsir_stored" -> Q(
       (s, d) => {
         val docs = t(s, d, "documents")
-        val root = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_dsir_stored_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val root = scratchDir("dsir_stored", d)
         val targetDir = s"$root/target"
         val sourceDir = s"$root/source"
         graft.operators.LmScore.writeModel(
@@ -1200,10 +1176,7 @@ object TextQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val docs = t(s, d, "documents")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_stream_dsir_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("stream_dsir", d)
         val run = s"$dir/run_${System.nanoTime()}"
         graft.operators.LmScore.writeModel(
           docs.filter(col("lang") === "en"), "text", s"$dir/target")
@@ -1239,10 +1212,7 @@ object TextQueries extends QueryPack {
       (s, d) => {
         import s.implicits._
         val docs = t(s, d, "documents")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_stream_lm_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("stream_lm", d)
         val run = s"$dir/run_${System.nanoTime()}"
         val modelDir = s"$dir/model"
         graft.operators.LmScore.writeModel(
@@ -1280,10 +1250,7 @@ object TextQueries extends QueryPack {
         import graft.operators.LmScore
         val docs = t(s, d, "documents")
         val en = docs.filter(col("lang") === "en")
-        val dir = graft.core.FsUtil.deleteOnExit(
-          s"${System.getProperty("java.io.tmpdir")}/" +
-            s"graft_lm_ingest_p${ProcessHandle.current().pid()}_" +
-            java.lang.Integer.toHexString(d.hashCode))
+        val dir = scratchDir("lm_ingest", d)
         val run = s"$dir/run_${System.nanoTime()}"
         val mDir = s"$run/model"
         LmScore.writeModel(en.filter($"doc_id" % 3 === 0), "text", mDir)

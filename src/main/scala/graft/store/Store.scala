@@ -34,6 +34,12 @@ import graft.core.FsUtil
   * the record does not list are a crashed attempt's orphans — invisible
   * to every reader, purged by the replay. Committed files are deleted
   * only by a compaction, which must run quiesced (no writer beside it).
+  *
+  * The protocol runs on a `FileSystem` and a [[TableWriter]] per table
+  * (`Path => Unit`, one table's data files into a fresh directory): the
+  * Spark entry points pass a parquet write, and `StoreProtocolSpec`
+  * passes a writer of tiny text files and kills the file system at
+  * every call of generated append / replay / compact / read sequences.
   * Reference analog: the changelog-backed store that is never
   * observable half-written
   * (samza-kv/src/main/scala/org/apache/samza/storage/kv/LoggedStore.scala:1). */
@@ -133,8 +139,8 @@ object Store {
 
   /** The record at `dir`; fails fast when `dir` holds no store, or a
     * store of another kind than one of `kinds` (when given). */
-  def require(spark: SparkSession, dir: String, kinds: String*): Record = {
-    val r = read(spark, dir).getOrElse(throw new java.io.IOException(
+  def require(fs: FileSystem, dir: Path, kinds: String*): Record = {
+    val r = read(fs, dir).getOrElse(throw new java.io.IOException(
       s"$dir holds no store record ($RecordFile) — not a " +
         (if (kinds.isEmpty) "store" else kinds.mkString(" / ")) + " dir"))
     if (kinds.nonEmpty && !kinds.contains(r.kind))
@@ -142,6 +148,9 @@ object Store {
         s"$dir holds a ${r.kind} store, not a ${kinds.mkString(" / ")}")
     r
   }
+
+  def require(spark: SparkSession, dir: String, kinds: String*): Record =
+    require(fsOf(spark, dir), new Path(dir), kinds: _*)
 
   /** The store's generation, -1 when `dir` holds no store — one small
     * read, the whole staleness probe of a cached model. */
@@ -160,10 +169,18 @@ object Store {
     else spark.read.parquet(s"$dir/$name").where(lit(false))
   }
 
+  /** Writes one table's data files into the fresh directory it is
+    * given — the seam between the commit protocol and the data path.
+    * The Spark entry points pass a parquet write ([[parquet]],
+    * `Sinks.writeSizedParquet`). */
+  type TableWriter = Path => Unit
+
+  private def parquet(df: DataFrame): TableWriter =
+    p => df.write.mode(SaveMode.Overwrite).parquet(p.toString)
+
   /** A full write's staging directory: each table written through it
     * is registered in the record being staged. */
-  final class Staging private[store] (spark: SparkSession,
-      fs: FileSystem, val root: Path) {
+  final class Staging private[store] (fs: FileSystem, val root: Path) {
     private[store] val tables =
       scala.collection.mutable.LinkedHashMap.empty[String, Table]
     private[store] val params =
@@ -173,32 +190,36 @@ object Store {
       * vocab), recorded beside the write's own params. */
     def param(key: String, value: Any): Unit = params(key) = value
 
-    /** A sized table, range-partitioned and sorted on `sortCols`
-      * (`Sinks.writeSizedParquet`); the sort columns are declared in
-      * the record, so compaction restores the same layout. */
-    def sized(name: String, df: DataFrame, sortCols: Seq[String] = Nil,
-        targetFileBytes: Long = 128L << 20,
-        minFiles: Int = spark.sparkContext.defaultParallelism,
-        scaleFloor: Boolean = true): Unit = {
-      graft.sources.Sinks.writeSizedParquet(df, path(name),
-        targetFileBytes, sortCols, minFiles, scaleFloor)
-      register(name, sortCols)
-    }
-
-    /** A driver-small table written as Spark partitions it. */
-    def plain(name: String, df: DataFrame): Unit = {
-      df.write.mode(SaveMode.Overwrite).parquet(path(name))
-      register(name, Nil)
-    }
-
-    /** Re-read a table already staged here. */
-    def staged(name: String): DataFrame = spark.read.parquet(path(name))
-
-    private def path(name: String): String = new Path(root, name).toString
-
-    private def register(name: String, sortCols: Seq[String]): Unit =
+    /** Table `name` as `writer` lays it down, its files declared
+      * sorted on `sortCols` in the record. */
+    def table(name: String, sortCols: Seq[String])(writer: TableWriter): Unit = {
+      writer(new Path(root, name))
       tables(name) = Table(sortCols, sorted = true,
         dataFiles(fs, new Path(root, name)))
+    }
+
+    /** A sized table, range-partitioned and sorted on `sortCols`
+      * (`Sinks.writeSizedParquet`); the sort columns are declared in
+      * the record, so compaction restores the same layout. `minFiles`
+      * -1 is the session's default parallelism. */
+    def sized(name: String, df: DataFrame, sortCols: Seq[String] = Nil,
+        targetFileBytes: Long = 128L << 20, minFiles: Int = -1,
+        scaleFloor: Boolean = true): Unit =
+      table(name, sortCols) { p =>
+        graft.sources.Sinks.writeSizedParquet(df, p.toString,
+          targetFileBytes, sortCols,
+          if (minFiles >= 0) minFiles
+          else df.sparkSession.sparkContext.defaultParallelism,
+          scaleFloor)
+      }
+
+    /** A driver-small table written as Spark partitions it. */
+    def plain(name: String, df: DataFrame): Unit =
+      table(name, Nil)(parquet(df))
+
+    /** Re-read a table already staged here. */
+    def staged(spark: SparkSession, name: String): DataFrame =
+      spark.read.parquet(new Path(root, name).toString)
   }
 
   /** Replace the store at `dir` wholesale: `stage` writes the tables,
@@ -209,11 +230,15 @@ object Store {
   def write(spark: SparkSession, dir: String, kind: String,
       params: Map[String, Any],
       applied: Map[String, Map[String, Long]] = Map.empty)(
+      stage: Staging => Unit): Unit =
+    write(fsOf(spark, dir), new Path(dir), kind, params, applied)(stage)
+
+  def write(fs: FileSystem, dir: Path, kind: String,
+      params: Map[String, Any], applied: Map[String, Map[String, Long]])(
       stage: Staging => Unit): Unit = {
-    val fs = fsOf(spark, dir)
-    val old = read(fs, new Path(dir))
-    FsUtil.swapInto(fs, new Path(dir)) { staging =>
-      val st = new Staging(spark, fs, staging)
+    val old = read(fs, dir)
+    FsUtil.swapInto(fs, dir) { staging =>
+      val st = new Staging(fs, staging)
       stage(st)
       val rec = Record(kind, old.map(_.generation).getOrElse(0L) + 1,
         st.tables.toMap, params ++ st.params,
@@ -238,20 +263,23 @@ object Store {
     * writer per store: `rec` must be the store's current record. */
   def append(spark: SparkSession, dir: String, rec: Record, tag: String,
       tables: Seq[(String, DataFrame)],
-      contrib: Map[String, Long] = Map.empty): Int = {
+      contrib: Map[String, Long] = Map.empty): Int =
+    append(fsOf(spark, dir), new Path(dir), rec, tag,
+      tables.map { case (name, df) => name -> parquet(df) }, contrib)
+
+  def append(fs: FileSystem, root: Path, rec: Record, tag: String,
+      tables: Seq[(String, TableWriter)], contrib: Map[String, Long]): Int = {
     Predef.require(tag.nonEmpty && tag.forall(c =>
       (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
         (c >= '0' && c <= '9') || c == '_' || c == '.' || c == '-'),
       s"append tag must be [A-Za-z0-9_.-]+, got '$tag'")
     if (rec.applied.contains(tag)) return 0
-    val fs = fsOf(spark, dir)
-    val root = new Path(dir)
     // \d{5,}: Spark zero-pads task indices to five digits but keeps
     // counting past part-99999
     val mine = java.util.regex.Pattern.compile(
       "ingest-" + java.util.regex.Pattern.quote(tag) +
         "-part-\\d{5,}-.*")
-    val added = tables.map { case (name, df) =>
+    val added = tables.map { case (name, writer) =>
       val t = new Path(root, name)
       fs.mkdirs(t)
       fs.listStatus(t).map(_.getPath)
@@ -259,7 +287,7 @@ object Store {
         .foreach(p => fs.delete(p, false))
       val staging = new Path(root, s".$name-ingest-$tag-staging")
       fs.delete(staging, true)
-      df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      writer(staging)
       val names = dataFiles(fs, staging).map { p =>
         val n = s"ingest-$tag-$p"
         if (!fs.rename(new Path(staging, p), new Path(t, n)))
@@ -297,17 +325,26 @@ object Store {
     * (`Layout.compact`'s floor). Stores whose partial rows collapse
     * compact through their own full write instead. */
   def compact(spark: SparkSession, dir: String,
-      targetFileBytes: Long): Unit = {
-    val rec = require(spark, dir)
-    val frames = rec.tables.map { case (name, _) =>
-      name -> table(spark, dir, rec, name)
+      targetFileBytes: Long): Unit =
+    compact(fsOf(spark, dir), new Path(dir)) { (rec, name) =>
+      val df = table(spark, dir, rec, name)
+      p => graft.sources.Sinks.writeSizedParquet(df, p.toString,
+        targetFileBytes, rec.tables(name).sortCols,
+        minFiles = math.min(rec.files(name).size,
+          spark.sparkContext.defaultParallelism),
+        scaleFloor = false)
     }
-    write(spark, dir, rec.kind, rec.params) { st =>
+
+  /** The protocol half of [[compact]]: `rewrite` gives, for snapshot
+    * `rec` and one of its tables, the writer that re-lays that table's
+    * committed rows; every table is rewritten through [[write]]. */
+  def compact(fs: FileSystem, dir: Path)(
+      rewrite: (Record, String) => TableWriter): Unit = {
+    val rec = require(fs, dir)
+    val writers = rec.tables.map { case (name, _) => name -> rewrite(rec, name) }
+    write(fs, dir, rec.kind, rec.params, Map.empty) { st =>
       rec.tables.foreach { case (name, t) =>
-        st.sized(name, frames(name), t.sortCols, targetFileBytes,
-          minFiles = math.min(t.files.size,
-            spark.sparkContext.defaultParallelism),
-          scaleFloor = false)
+        st.table(name, t.sortCols)(writers(name))
       }
     }
   }

@@ -146,15 +146,12 @@ object StreamHarness {
     * driver-fed volumes that fit in a handful — the fixed overhead
     * that dominates the parity queries' bench cost. The partition
     * count pins into the checkpoint at the first batch, so setting it
-    * for the query's lifetime (and restoring after) is safe.
-    * Overridable via the `graft.harness.partitions` system property
-    * so the A/B tool can flip it inside ONE JVM (box drift makes
-    * cross-JVM pairs unreliable); the default is the round-19
-    * interleaved-A/B winner (2 vs 1 measured within noise of each
-    * other — 2 kept: it exercises cross-partition state commits,
-    * which a 1-partition harness would silently stop covering). */
-  private def harnessPartitions: String =
-    sys.props.getOrElse("graft.harness.partitions", "2")
+    * for the query's lifetime (and restoring after) is safe. 2, not
+    * 1: the round-19 interleaved A/B measured them within noise of
+    * each other (OPTIMIZATION_r19.md), and 2 exercises
+    * cross-partition state commits, which a 1-partition harness would
+    * silently stop covering. */
+  private val harnessPartitions = "2"
 
   private def withHarnessPartitions[R](spark: SparkSession)(body: => R): R = {
     val key = "spark.sql.shuffle.partitions"

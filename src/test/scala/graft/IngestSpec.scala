@@ -89,92 +89,6 @@ class IngestSpec extends SparkSpec {
       .subsetOf(dataFiles(dir).toSet))
   }
 
-  test("manifest protocol property: readTagged ≡ union of committed batches, exactly once, under 100+ generated crash interleavings") {
-    val s = spark
-    import s.implicits._
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-
-    // Abstract op stream interpreted against BOTH the real store and
-    // a trivially-correct model (the committed-batch map).
-    // Crash(keep) lands a torn attempt: keep ∈ {0,1,2} data files
-    // renamed in, record never committed — exactly the states a kill
-    // between the append's rename loop and its commit produces.
-    // Replay picks from live tags; Compact re-packs the store (applied
-    // tags survive it, so a committed tag still replays as a no-op
-    // afterwards, and a crashed one still redoes). The invariant at
-    // every Read and at sequence end: the table holds every committed
-    // batch EXACTLY once and nothing else.
-    sealed trait Op
-    case object Append extends Op
-    final case class Crash(keep: Int) extends Op
-    final case class Replay(pick: Int) extends Op
-    case object Read extends Op
-    case object Compact extends Op
-
-    val opGen: Gen[Op] = Gen.frequency(
-      4 -> Gen.const(Append),
-      3 -> Gen.choose(0, 2).map(Crash(_)),
-      3 -> Gen.choose(0, 99).map(Replay(_)),
-      2 -> Gen.const(Read),
-      1 -> Gen.const(Compact))
-    val seqGen = Gen.listOfN(7, opGen)
-
-    def valuesOf(tag: Int): Seq[Long] = (0 until 3).map(i => tag * 100L + i)
-
-    var interleavings = 0
-    (0 until 110).foreach { caseIdx =>
-      val ops = seqGen(Gen.Parameters.default, Seed(4242L + caseIdx))
-        .getOrElse(fail(s"case $caseIdx: generator produced nothing"))
-      val root = tmp(s"prop$caseIdx")
-      val dir = s"$root/table"
-      emptyStore(root)
-      var nextTag = 0
-      val committed = scala.collection.mutable.LinkedHashMap.empty[Int, Seq[Long]]
-      val crashed = scala.collection.mutable.LinkedHashMap.empty[Int, Seq[Long]]
-      def expect: Seq[Long] = committed.values.flatten.toSeq.sorted
-      def check(where: String): Unit =
-        // a table with no committed file has no rows (and, when every
-        // attempt crashed at keep=0, no schema to read)
-        if (storeRecord(root).files("table").isEmpty)
-          assert(expect.isEmpty,
-            s"case $caseIdx ($where): model expects rows, store has none")
-        else
-          assert(Sinks.readTagged(s, dir).as[Long].collect().sorted.toSeq
-            === expect, s"case $caseIdx ($where): store diverged from model")
-      ops.foreach {
-        case Append =>
-          val tag = nextTag; nextTag += 1
-          appendT(root, valuesOf(tag).toDF("v").coalesce(1), s"t$tag")
-          committed(tag) = valuesOf(tag)
-        case Crash(keep) =>
-          val tag = nextTag; nextTag += 1
-          val before = recordJson(root)
-          appendT(root, valuesOf(tag).toDF("v").repartition(2), s"t$tag")
-          uncommit(root, before, s"t$tag", keep)
-          crashed(tag) = valuesOf(tag)
-        case Replay(p) =>
-          val pool = (crashed.keys ++ committed.keys).toVector.sorted
-          if (pool.nonEmpty) {
-            val tag = pool(p % pool.size)
-            val ret = appendT(root, valuesOf(tag).toDF("v").coalesce(1),
-              s"t$tag")
-            if (committed.contains(tag))
-              assert(ret === 0,
-                s"case $caseIdx: committed replay of t$tag not a no-op")
-            else { committed(tag) = valuesOf(tag); crashed.remove(tag) }
-          }
-        case Read => check("mid-sequence")
-        case Compact =>
-          if (storeRecord(root).files("table").nonEmpty)
-            Store.compact(s, root, 128L << 20)
-      }
-      check("final")
-      interleavings += 1
-    }
-    assert(interleavings >= 100)
-  }
-
   test("readTagged on a store whose only files are uncommitted orphans returns zero rows, never the orphans") {
     val s = spark
     import s.implicits._

@@ -1,34 +1,24 @@
 package graft
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 
 import graft.operators.{Classify, CorpusProfile, LmScore, Maintenance,
   Similarity, TextProfile}
 
-/** Crash-interleaving property over the store protocol
-  * (`graft.store.Store`) for five stores: the NB classifier model, the
-  * bigram LM model, the corpus profile, the BM25 index and the IVF
-  * index. Each append lands one or more tables and commits them with
-  * ONE record write; the property generates
-  * {append, crash-before-commit(k files kept), replay, read, compact}
-  * sequences and asserts the store-level claim: once every crashed tag
-  * has replayed (foreachBatch's at-least-once convergence), the store
-  * reads EXACTLY as the fresh build over the union of applied batches
-  * — partials collapse once, orphans never leak, compaction changes
-  * nothing. A crashed attempt is invisible, so mid-crash the store
-  * must read as its last committed state.
-  */
+/** One fixed crash case per store kind over the store protocol
+  * (`graft.store.Store`): the NB classifier model, the bigram LM
+  * model, the corpus profile, the BM25 index and the IVF index. The
+  * protocol itself (every kill point of generated append / replay /
+  * compact sequences) is `StoreProtocolSpec`'s, without Spark; this
+  * spec checks that each kind's tables and contributions fold like its
+  * batch build once a torn append replays: partials collapse once,
+  * orphans never leak, a committed replay is a no-op, compaction
+  * changes nothing. */
 class ModelStoreCrashSpec extends SparkSpec {
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-msc-$name")
       .toString + "/store"
-
-  private def fsOf(dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Deterministic tiny labeled batches. Vocab overlaps across
     * batches on purpose — colliding (label, token) / (w1, w2) /
@@ -175,118 +165,46 @@ class ModelStoreCrashSpec extends SparkSpec {
         .map(r => s"a|${r.get(0)}|${r.get(1)}|${r.get(2)}").sorted.toSeq
   }
 
-  private def runProperty(store: StoreOps, cases: Int): Unit = {
-    // fresh ground truth memoized by tag set: many generated cases
-    // converge to the same applied set, and the fresh train is the
-    // expensive half of every check
-    val truthMemo =
-      scala.collection.mutable.Map.empty[Vector[Int], Seq[String]]
-    def truth(tags: Vector[Int]): Seq[String] = {
-      val k = tags.sorted
-      truthMemo.getOrElseUpdate(k, store.fresh(k))
-    }
-
-    sealed trait Op
-    case object Append extends Op
-    final case class Crash(keep: Int) extends Op
-    final case class Replay(pick: Int) extends Op
-    case object Read extends Op
-    case object Compact extends Op
-
-    val opGen: Gen[Op] = Gen.frequency(
-      4 -> Gen.const(Append),
-      4 -> Gen.choose(0, 2).map(Crash(_)),
-      3 -> Gen.choose(0, 99).map(Replay(_)),
-      2 -> Gen.const(Read),
-      1 -> Gen.const(Compact))
-    val seqGen = Gen.listOfN(5, opGen)
-
-    var interleavings = 0
-    (0 until cases).foreach { caseIdx =>
-      val ops = seqGen(Gen.Parameters.default, Seed(1717L + caseIdx))
-        .getOrElse(fail(s"case $caseIdx: generator produced nothing"))
-      val dir = tmp(s"${store.name}$caseIdx")
-      var nextTag = 0
-      var applied = Vector.empty[Int]
-      var crashed = Vector.empty[Int]
-      store.create(dir, Seq(nextTag))
-      applied :+= nextTag; nextTag += 1
-
-      def replayAll(): Unit = {
-        crashed.foreach { t => store.append(dir, t); applied :+= t }
-        crashed = Vector.empty
-      }
-      def check(where: String): Unit =
-        assert(store.canonical(dir) === truth(applied),
-          s"case $caseIdx ($where): ${store.name} store diverged " +
-            "from the fresh-train ground truth")
-
-      ops.foreach {
-        case Append =>
-          val t = nextTag; nextTag += 1
-          store.append(dir, t); applied :+= t
-        case Crash(keep) =>
-          // the one store-generic crash: the tag's files renamed in,
-          // `keep` of them left, the record never committed
-          val t = nextTag; nextTag += 1
-          val before = recordJson(dir)
-          store.append(dir, t)
-          uncommit(dir, before, s"t$t", keep)
-          crashed :+= t
-          // mid-crash: the torn attempt is invisible — the store reads
-          // as its last committed state. Sampled (every 4th case): the
-          // read is a full collect and would otherwise dominate the
-          // property's wall-clock
-          if (caseIdx % 4 == 0) check("mid-crash")
-        case Replay(p) =>
-          if (crashed.nonEmpty) {
-            val t = crashed(p % crashed.size)
-            store.append(dir, t)
-            crashed = crashed.filterNot(_ == t); applied :+= t
-          }
-        case Read =>
-          // the exactly-once claim is about the CONVERGED store:
-          // every crashed tag eventually replays (foreachBatch
-          // restart semantics), so converge before comparing
-          replayAll(); check("mid-sequence")
-        case Compact =>
-          // applied tags survive compaction and orphans are dropped by
-          // it, so crashed tags may still replay afterwards
-          store.compact(dir)
-          check("post-compact")
-      }
-      replayAll(); check("final")
-      interleavings += 1
-    }
-    assert(interleavings >= cases)
+  /** One fixed crash case: build tag 0 and append t1; leave t2 torn
+    * (its files renamed in, one kept, the record never committed), so
+    * the store reads as {0,1}; replay t2; replay t1, a no-op that keeps
+    * the generation; compact; the store reads as {0,1,2}. */
+  private def crashCase(store: StoreOps): Unit = {
+    val dir = tmp(store.name)
+    store.create(dir, Seq(0))
+    store.append(dir, 1)
+    val before = recordJson(dir)
+    store.append(dir, 2)
+    uncommit(dir, before, "t2", keep = 1)
+    assert(store.canonical(dir) === store.fresh(Seq(0, 1)),
+      s"${store.name}: the torn t2 is visible")
+    store.append(dir, 2)
+    val gen = storeRecord(dir).generation
+    store.append(dir, 1)
+    assert(storeRecord(dir).generation === gen,
+      s"${store.name}: the committed t1 re-applied")
+    store.compact(dir)
+    assert(store.canonical(dir) === store.fresh(Seq(0, 1, 2)),
+      s"${store.name}: the store diverged from the fresh build over {0,1,2}")
   }
 
-  /** Per-store interleaving budget. The FULL property (110 cases per
-    * store) is too long for the default suite, so the default is a
-    * deterministic PREFIX sample: cases are seeded `1717L + caseIdx`,
-    * so the first N are byte-identical to the first N of the full set,
-    * and `scripts/crash_full.sh` runs the full set
-    * (GRAFT_CRASH_CASES=110). */
-  private val cases: Int =
-    sys.env.getOrElse("GRAFT_CRASH_CASES", "30").toInt
-
-  test("NB model store: generated crash interleavings — converged read ≡ fresh train, exactly once") {
-    runProperty(NbStore, cases)
+  test("NB model store: a torn append is invisible, its replay applies once, a committed replay is a no-op, compaction folds like a fresh train") {
+    crashCase(NbStore)
   }
 
-  test("LM model store: generated crash interleavings — converged read ≡ fresh train, exactly once") {
-    runProperty(LmStore, cases)
+  test("LM model store: a torn append is invisible, its replay applies once, a committed replay is a no-op, compaction folds like a fresh train") {
+    crashCase(LmStore)
   }
 
-  test("corpus profile store: generated crash interleavings — converged read ≡ fresh build, exactly once") {
-    runProperty(ProfileStore, cases)
+  test("corpus profile store: a torn append is invisible, its replay applies once, a committed replay is a no-op, compaction folds like a fresh build") {
+    crashCase(ProfileStore)
   }
 
-  test("BM25 index store: generated crash interleavings — converged read ≡ fresh build, exactly once") {
-    runProperty(Bm25Store, cases)
+  test("BM25 index store: a torn append is invisible, its replay applies once, a committed replay is a no-op, compaction folds like a fresh build") {
+    crashCase(Bm25Store)
   }
 
-  test("IVF index store: generated crash interleavings — converged read ≡ in-memory append, exactly once") {
-    runProperty(IvfStore, cases)
+  test("IVF index store: a torn append is invisible, its replay applies once, a committed replay is a no-op, compaction folds like the in-memory append") {
+    crashCase(IvfStore)
   }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.plans.ScaleLint
-import graft.queries.Registry
 
 class ScaleLintSpec extends SparkSpec {
 
@@ -260,50 +259,5 @@ class ScaleLintSpec extends SparkSpec {
     val evt = runCase("lint_unb_evt", GroupStateTimeout.EventTimeTimeout,
       ds => ds.withWatermark("_2", "0 milliseconds"))
     assert(flagOf(evt).isEmpty, evt.map(_.code))
-  }
-
-  test("every registry query lints clean of error-severity findings") {
-    // the automated form of the per-query PlanSpec audits: no benched
-    // query may plan a cartesian or a global window. Three documented
-    // exceptions, all ANN scoring stages whose corpus×queries cross
-    // join IS the operator's definition: the brute-force baseline
-    // (the recall oracle IVF is measured against), the PQ ADC
-    // ranker, which scores RECONSTRUCTIONS through the same
-    // broadcast-queries stage — its scale lever is code-size
-    // compression (and composing with IVF probe pruning), not join
-    // shape (Similarity.scala) — and q_ann_recall / q_ann_rank_metrics,
-    // whose REFERENCE arm is that same brute-force baseline by
-    // definition (exact ground truth over the sampled query set; the
-    // candidate arm under evaluation is the probe-pruned IVF).
-    // Round 18 adds the bounded-bench decon pair: exact semantic
-    // decon IS a corpus×bench cross join by definition (corpus-linear
-    // with a bench-bounded broadcast inner loop — the recall-1.0 arm),
-    // and the recall row composes that arm as its reference.
-    val annCross =
-      Set("CARTESIAN", "CARTESIAN_PHYSICAL", "NESTED_LOOP_JOIN")
-    val allowed = Map(
-      "q_ann_bruteforce_topk" -> annCross,
-      "q_ann_pq_topk" -> annCross,
-      "q_ann_recall" -> annCross,
-      "q_ann_rank_metrics" -> annCross,
-      "q_embed_decon_exact" -> annCross,
-      "q_embed_decon_recall" -> annCross,
-      // round 19: the stored-set recall canary composes the same
-      // exact reference arm as q_embed_decon_recall, and the
-      // dispatch canary IS the exact arm whenever the dispatch works
-      "q_embed_decon_recall_stored" -> annCross,
-      "q_embed_decon_auto" -> annCross)
-    val bad = Registry.all.toSeq.sortBy(_._1).flatMap { case (name, q) =>
-      val errs = ScaleLint.errors(q.run(spark, sf0001))
-        .filterNot(f => allowed.getOrElse(name, Set.empty).contains(f.code))
-      // per-query cache hygiene (LintReport's rule): a persisted
-      // intermediate from one query must not substitute
-      // InMemoryRelations into a later query's linted plan — an
-      // error-severity finding under a cached subtree would be
-      // invisible to this very assertion
-      spark.catalog.clearCache()
-      if (errs.isEmpty) None else Some(name -> errs.map(_.code))
-    }
-    assert(bad.isEmpty, s"queries with scale errors: $bad")
   }
 }
