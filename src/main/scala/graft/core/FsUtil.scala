@@ -2,8 +2,11 @@ package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Filesystem helpers behind the store protocol (`graft.store.Store`):
-  * the crash-safe directory swap and the atomic record write.
+/** Filesystem helpers: the atomic record write behind the store
+  * protocol (`graft.store.Store`, which commits every write through
+  * it), and the crash-safe directory swap behind the writers that
+  * replace a plain parquet dir wholesale (`MessageStream.sendTo`,
+  * `Layout.compact`).
   * Reference analog for the durability discipline: the
   * changelog-backed store that must never be observable half-written
   * (samza-kv/src/main/scala/org/apache/samza/storage/kv/LoggedStore.scala:1). */

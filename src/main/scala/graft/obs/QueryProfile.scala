@@ -28,7 +28,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * every task shares the driver JVM, so the per-task `jvmGCTime`
   * would count one pause once per concurrent task.
   *
-  * Mains install it (Bench, RunOne, BarPair, AbInterleaved); no engine
+  * Mains install it (Bench, RunOne, BarPair); no engine
   * code path does. Reference analog: the per-trigger progress
   * reporting of Structured Streaming (SIGMOD'18, §7.1). */
 final class QueryProfile private (spark: SparkSession) {

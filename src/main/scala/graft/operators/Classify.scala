@@ -313,8 +313,8 @@ object Classify {
 
   val NbKind = "nb-model"
 
-  /** Train on `docs` and persist the model at `dir` (staged +
-    * atomically swapped). The compacted layout materializes the exact
+  /** Train on `docs` and persist the model at `dir` (one store
+    * write, committed by its record). The compacted layout materializes the exact
     * vocab in the record, so [[readNbModel]] on a compacted store is
     * plain reads with ZERO re-aggregation — the fast path
     * `StreamJobs.nbLookupStream` takes on a reload. */
@@ -334,7 +334,7 @@ object Classify {
   /** Shared by [[writeNbModel]] and [[nbCompact]]: stage the three
     * tables (counts already one-row-per-group, class doc counts,
     * distinct vocabulary) with the exact vocab as a record param,
-    * swap. */
+    * commit. */
   private def writeCompacted(spark: org.apache.spark.sql.SparkSession,
       dir: String, counts: DataFrame, classes: DataFrame,
       vocabulary: DataFrame, targetFileBytes: Long): Unit =

@@ -75,8 +75,8 @@ object CorpusProfile {
         "corrupt every count")
   }
 
-  /** Replace the stored profile at `dir` wholesale (stage-then-swap,
-    * crash-safe). For ingest batches use [[ingestBatch]]. Applied tags
+  /** Replace the stored profile at `dir` wholesale (one store write,
+    * committed by its record). For ingest batches use [[ingestBatch]]. Applied tags
     * carry over (`graft.store.Store.write`), so a [[compact]] of a
     * streaming-maintained store keeps a replay of an already-applied
     * batch a no-op. */
@@ -130,7 +130,7 @@ object CorpusProfile {
   }
 
   /** Collapse accumulated per-batch partials to one row per group and
-    * swap the compacted frames in — run periodically so read-time
+    * write the compacted frames back — run periodically so read-time
     * aggregation cost stays bounded by |vocab|, not by batches since
     * the last compaction. */
   def compact(spark: SparkSession, dir: String, strataCol: String,

@@ -43,21 +43,21 @@ object Curation {
     * releases are versioned artifacts, so a 100 TB batch job or a
     * streaming ingest (`StreamJobs.decontaminateStream`) loads the
     * bloom at job start instead of rebuilding it from the benchmark
-    * corpus every run. Same durability discipline as the dedup/ANN
-    * indexes: crash-safe stage-then-swap, store record validated on
-    * read (a bloom built over a different gram width would silently
-    * probe disjoint hashes — that must fail fast, not filter
-    * nothing). */
+    * corpus every run. The bloom is a one-file store table, `bloom`,
+    * landed and committed through the store record like every other
+    * store's tables; the record is validated on read (a bloom built
+    * over a different gram width would silently probe disjoint hashes
+    * — that must fail fast, not filter nothing). */
   def writeBenchBloom(spark: org.apache.spark.sql.SparkSession,
       dir: String, bloomBytes: Array[Byte], n: Int,
       fpp: Double): Unit =
     graft.store.Store.write(spark, dir, BenchBloomKind,
         Map("n" -> n, "fpp" -> fpp)) { st =>
-      val fs = st.root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(st.root)
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(st.root, "bloom.bin"), true)
-      try out.write(bloomBytes) finally out.close()
+      st.table("bloom", Nil) { p =>
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val out = fs.create(new org.apache.hadoop.fs.Path(p, "bloom.bin"), true)
+        try out.write(bloomBytes) finally out.close()
+      }
     }
 
   val BenchBloomKind = "bench-bloom"
@@ -66,15 +66,16 @@ object Curation {
     * match the stored one — validated against the store record. */
   def readBenchBloom(spark: org.apache.spark.sql.SparkSession,
       dir: String, n: Int): Array[Byte] = {
-    val stored = graft.store.Store.require(spark, dir, BenchBloomKind)
-      .int("n")
+    val rec = graft.store.Store.require(spark, dir, BenchBloomKind)
+    val stored = rec.int("n")
     require(stored == n,
       s"bench bloom $dir was built over $stored-grams but the " +
         s"caller supplied n=$n — probing with a different gram " +
         "width would silently match nothing")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(dir, "bloom.bin"))
+    val in = fs.open(
+      new org.apache.hadoop.fs.Path(s"$dir/bloom/${rec.files("bloom").head}"))
     try in.readAllBytes() finally in.close()
   }
 
@@ -227,7 +228,8 @@ object Curation {
   val DeconSetKind = "decon-set"
 
   /** Write a benchmark's distinct word n-grams as a persisted
-    * decontamination set at `dir` (staged + atomically swapped). */
+    * decontamination set at `dir` (one store write, committed by its
+    * record). */
   def writeDeconSet(bench: DataFrame, idCol: String, textCol: String,
       n: Int, dir: String, targetFileBytes: Long = 128L << 20): Unit = {
     require(n >= 1, "writeDeconSet: n must be >= 1")

@@ -353,7 +353,7 @@ object Dedup {
     * cross-session form of the persist-`signed` discipline (and the
     * text-side mirror of `Similarity.IvfIndex.write`): the signature
     * pass runs once per corpus LIFETIME, not once per session.
-    * Stage-then-swap like the IVF side, so writing an index whose
+    * One store write like the IVF side, so writing an index whose
     * `signed` lazily reads `dir` back to the same `dir` is safe. To
     * append an ingest batch use [[minhashIngestBatch]] (O(batch)
     * tagged append, no corpus rewrite) — THIS function always

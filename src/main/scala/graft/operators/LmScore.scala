@@ -439,8 +439,8 @@ object LmScore {
 
   val Kind = "lm-model"
 
-  /** Train on `reference` and persist the model at `dir` (staged +
-    * atomically swapped). The compacted layout also materializes what
+  /** Train on `reference` and persist the model at `dir` (one store
+    * write, committed by its record). The compacted layout also materializes what
     * a serve would otherwise recompute per probe: the derived firsts
     * table lands as `firsts.parquet` and the exact vocab count rides
     * the record — so [[readModel]] on a compacted store is two plain
@@ -458,7 +458,7 @@ object LmScore {
 
   /** Shared by [[writeModel]] and [[modelCompact]]: stage the three
     * tables (bigram counts already one-row-per-group, derived firsts,
-    * distinct unigrams) with the exact vocab as a record param, swap. */
+    * distinct unigrams) with the exact vocab as a record param, commit. */
   private def writeCompacted(spark: org.apache.spark.sql.SparkSession,
       dir: String, bigrams: DataFrame, unigrams: DataFrame,
       targetFileBytes: Long): Unit = {

@@ -15,8 +15,10 @@ import org.apache.spark.sql.SparkSession
   * rows re-distinct (decon set) run their own pass; every other kind
   * takes the generic `Store.compact`. Directories without a record
   * keep the generic-flat and generic-partitioned passes. Crash safety
-  * comes from the staged swap under `FsUtil.swapInto`'s lock;
-  * compaction must run quiesced — no writer beside it, as everywhere.
+  * comes from the store record: a compaction lands its files in place
+  * and commits with one record rewrite, and the generic passes swap in
+  * under `FsUtil.swapInto`. Compaction must run quiesced — no writer
+  * beside it, as everywhere.
   *
   * At 100 TB this is the nightly housekeeping job: point it at the
   * index/profile roots, and only the stores that drifted pay a

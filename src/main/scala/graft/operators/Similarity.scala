@@ -239,14 +239,15 @@ object Similarity {
   final case class IvfIndex(codebook: DataFrame, assigned: DataFrame,
       idCol: String, vecCol: String) {
     /** Persist both frames as parquet under `dir` (the reload side is
-      * [[readIvfIndex]]) through the store protocol's staged swap
-      * (`graft.store.Store.write`): writing an index back to the dir
-      * its own frames lazily read from (the natural [[ivfIndexAppend]]
-      * round-trip) is safe, and a crash mid-swap restores the OLD
-      * index instead of leaving none. Concurrent READERS of `dir`
-      * still race the final swap; cross-process sharing should write
-      * to a fresh dir and repoint, or append via
-      * [[ivfIngestBatch]]. */
+      * [[readIvfIndex]]) through the store protocol's full write
+      * (`graft.store.Store.write`): the new files land beside the old
+      * ones and commit with the record, so writing an index back to
+      * the dir its own frames lazily read from (the natural
+      * [[ivfIndexAppend]] round-trip) is safe, and a crash before the
+      * commit leaves the OLD index readable. The write then deletes
+      * the old generation's files, so a concurrent READER of the old
+      * snapshot still races it; cross-process sharing should write to
+      * a fresh dir and repoint, or append via [[ivfIngestBatch]]. */
     def write(dir: String): Unit =
       graft.store.Store.write(codebook.sparkSession, dir, IvfKind,
           Map.empty) { st =>
@@ -421,9 +422,9 @@ object Similarity {
     * One narrow argmax pass over the batch — the corpus is never
     * touched. To persist the ingest prefer [[ivfIngestBatch]]
     * (appends only the batch rows, no corpus rewrite); writing THIS
-    * result back with [[IvfIndex.write]] also works — its
-    * stage-then-swap materializes the union before touching the
-    * source dir — but re-writes the whole corpus-sized table. */
+    * result back with [[IvfIndex.write]] also works — its files land
+    * before the source files are swept — but re-writes the whole
+    * corpus-sized table. */
   def ivfIndexAppend(index: IvfIndex, newCorpus: DataFrame): IvfIndex = {
     val cents = collectCents(index.codebook)
     val c = ivfPrep(newCorpus, index.idCol, index.vecCol)
@@ -821,7 +822,7 @@ object Similarity {
     * [[graft.operators.Curation.writeDeconSet]]'s embedding-space
     * twin: the bucketed benchmark frame (bucket, bv, bnrm) lands as
     * bucket-sorted sized parquet, with dim/planes as store record
-    * params, staged and atomically swapped. Benchmarks are tiny and change rarely, so the SRP pack
+    * params, in one store write. Benchmarks are tiny and change rarely, so the SRP pack
     * is paid once at write time and every ingest batch probes the
     * stored state. `planes` is FIXED here because the probe must pack
     * the identical bits — size it for the CORPUS the deployment will
@@ -1146,7 +1147,7 @@ object Similarity {
     * [[writeSemanticDeconSet]]'s banded twin: the exploded
     * (band, bkey, bv, bnrm) frame lands as (band, bkey)-sorted sized
     * parquet, with dim/bands/rowsPerBand as store record params,
-    * staged and atomically swapped. The SRP pack is paid once at write time;
+    * in one store write. The SRP pack is paid once at write time;
     * every probe reads the stored state with the shape pinned. */
   def writeSemanticDeconSetBanded(bench: DataFrame, vecCol: String,
       dir: String, dim: Int, bands: Int, rowsPerBand: Int,
@@ -1343,7 +1344,7 @@ object Similarity {
   final case class PqIndex(codebooks: DataFrame, codes: DataFrame,
       idCol: String, dim: Int, m: Int, ksub: Int) {
     /** Persist both frames under `dir`, params in the store record,
-      * with the same crash-safe staged swap as the other stores. */
+      * committed by the store record like the other stores. */
     def write(dir: String): Unit =
       graft.store.Store.write(codebooks.sparkSession, dir, PqKind,
           Map("dim" -> dim, "m" -> m, "ksub" -> ksub)) { st =>
@@ -1520,7 +1521,7 @@ object Similarity {
     * builds once, stores, and every query batch pays only nlist
     * centroid scores + a probe-capped scan of stored codes. Same
     * durability discipline as the other four index families
-    * (crash-safe swap, store record validated on read). */
+    * (committed by the store record, validated on read). */
   final case class IvfPqIndex(codebook: DataFrame,
       pqCodebooks: DataFrame, codes: DataFrame, idCol: String,
       vecCol: String, dim: Int, m: Int, ksub: Int, residual: Boolean,

@@ -11,8 +11,9 @@ import graft.core.FsUtil
 
 /** The one persisted-store protocol. Every store this library writes
   * (BM25, corpus profile, MinHash, IVF, PQ, IVF-PQ, the decon sets,
-  * the bench bloom, the LM and NB models) is a directory of parquet
-  * tables plus ONE record, `<dir>/_store.json`:
+  * the bench bloom, the LM and NB models) is a directory of tables
+  * (parquet parts, or the bench bloom's one file) plus ONE record,
+  * `<dir>/_store.json`:
   *
   *  - `kind` — which store this is (what [[graft.operators.Maintenance]]
   *    dispatches on);
@@ -24,16 +25,28 @@ import graft.core.FsUtil
   *  - `params` — the store's scalars (BM25 docs/tokens/idCol, LM vocab…);
   *  - `applied` — every appended tag with its per-tag contributions.
   *
-  * The record IS the commit point. A reader takes one record snapshot
-  * and reads only the files it lists, so every table and param it sees
-  * comes from one generation. A full write stages the tables and the
-  * record together and swaps the directory in ([[FsUtil.swapInto]]).
-  * An append renames its tag-named files into the table directories
-  * and then commits by rewriting the record ([[FsUtil.writeSidecar]],
-  * atomic): a tag already in `applied` is a no-op, and a tag's files
-  * the record does not list are a crashed attempt's orphans — invisible
-  * to every reader, purged by the replay. Committed files are deleted
-  * only by a compaction, which must run quiesced (no writer beside it).
+  * The record IS the commit point, and every write commits the same
+  * way: land the files, rewrite the record, clean up. Landing writes
+  * each table into a hidden `.<table>-<prefix>staging` dir at the
+  * store root and renames its data files into the live table dir
+  * under a prefix unique to the write: `ingest-<tag>-` for an append,
+  * `g<generation>-` for a full write or a compaction. Files the
+  * record does not list are invisible to every reader. The record
+  * rewrite ([[FsUtil.writeSidecar]], atomic) then commits: a reader
+  * sees the old snapshot or the new one, never none. An append's tag
+  * already in `applied` is a no-op, and a landed file the record does
+  * not list is a killed attempt's orphan, purged when the same prefix
+  * lands again. A full write then sweeps the store dir before it
+  * returns: every entry the new record does not name goes (old
+  * generations' files, tables the write dropped, staging dirs,
+  * crashed attempts' orphans, stray files of a dir first written as a
+  * store), so the dir holds only the record, its tables and their
+  * listed files.
+  *
+  * Single writer per store: appends, full writes and compactions of
+  * one store never run beside each other (store dirs are per query or
+  * per job), and a full write deletes the previous generation's files,
+  * so it must not run beside a reader of the old snapshot either.
   *
   * The protocol runs on a `FileSystem` and a [[TableWriter]] per table
   * (`Path => Unit`, one table's data files into a fresh directory): the
@@ -178,9 +191,11 @@ object Store {
   private def parquet(df: DataFrame): TableWriter =
     p => df.write.mode(SaveMode.Overwrite).parquet(p.toString)
 
-  /** A full write's staging directory: each table written through it
-    * is registered in the record being staged. */
-  final class Staging private[store] (fs: FileSystem, val root: Path) {
+  /** A full write in progress: each table written through it lands in
+    * the store's live table dir under the write's prefix and is
+    * registered in the record being staged. */
+  final class Staging private[store] (fs: FileSystem, dir: Path,
+      prefix: String) {
     private[store] val tables =
       scala.collection.mutable.LinkedHashMap.empty[String, Table]
     private[store] val params =
@@ -192,11 +207,9 @@ object Store {
 
     /** Table `name` as `writer` lays it down, its files declared
       * sorted on `sortCols` in the record. */
-    def table(name: String, sortCols: Seq[String])(writer: TableWriter): Unit = {
-      writer(new Path(root, name))
+    def table(name: String, sortCols: Seq[String])(writer: TableWriter): Unit =
       tables(name) = Table(sortCols, sorted = true,
-        dataFiles(fs, new Path(root, name)))
-    }
+        land(fs, dir, name, prefix, Nil, writer))
 
     /** A sized table, range-partitioned and sorted on `sortCols`
       * (`Sinks.writeSizedParquet`); the sort columns are declared in
@@ -217,16 +230,17 @@ object Store {
     def plain(name: String, df: DataFrame): Unit =
       table(name, Nil)(parquet(df))
 
-    /** Re-read a table already staged here. */
+    /** Re-read a table already staged here: the files it landed. */
     def staged(spark: SparkSession, name: String): DataFrame =
-      spark.read.parquet(new Path(root, name).toString)
+      spark.read.parquet(tables(name).files.map(f => s"$dir/$name/$f"): _*)
   }
 
-  /** Replace the store at `dir` wholesale: `stage` writes the tables,
+  /** Replace the store at `dir` wholesale: `stage` lands the tables,
     * the record (generation = old + 1, `applied` carried over plus
-    * `applied`) is staged beside them, and the directory swaps in under
-    * [[FsUtil.swapInto]]. Frames that lazily read the old store are
-    * safe to write back: staging fully materializes before the swap. */
+    * `applied`) commits them, and the sweep deletes what the record
+    * does not name. Frames that lazily read the old store are safe to
+    * write back: every table lands before the old files are swept. A
+    * dir that holds no record is taken over: whatever it held goes. */
   def write(spark: SparkSession, dir: String, kind: String,
       params: Map[String, Any],
       applied: Map[String, Map[String, Long]] = Map.empty)(
@@ -237,14 +251,55 @@ object Store {
       params: Map[String, Any], applied: Map[String, Map[String, Long]])(
       stage: Staging => Unit): Unit = {
     val old = read(fs, dir)
-    FsUtil.swapInto(fs, dir) { staging =>
-      val st = new Staging(fs, staging)
-      stage(st)
-      val rec = Record(kind, old.map(_.generation).getOrElse(0L) + 1,
-        st.tables.toMap, params ++ st.params,
-        old.map(_.applied).getOrElse(Map.empty) ++ applied)
-      FsUtil.writeSidecar(fs, new Path(staging, RecordFile), toJson(rec))
+    val generation = old.map(_.generation).getOrElse(0L) + 1
+    // no committed file carries this generation's prefix
+    val st = new Staging(fs, dir, s"g$generation-")
+    stage(st)
+    val rec = Record(kind, generation, st.tables.toMap, params ++ st.params,
+      old.map(_.applied).getOrElse(Map.empty) ++ applied)
+    FsUtil.writeSidecar(fs, new Path(dir, RecordFile), toJson(rec))
+    sweep(fs, dir, rec)
+  }
+
+  /** Delete every entry under the store root that `rec` does not name:
+    * only the record, its tables and their listed files stay. */
+  private def sweep(fs: FileSystem, dir: Path, rec: Record): Unit =
+    fs.listStatus(dir).foreach { s =>
+      val name = s.getPath.getName
+      rec.tables.get(name) match {
+        case Some(t) if s.isDirectory =>
+          fs.listStatus(s.getPath)
+            .filterNot(f => t.files.contains(f.getPath.getName))
+            .foreach(f => fs.delete(f.getPath, true))
+        case _ => if (name != RecordFile) fs.delete(s.getPath, true)
+      }
     }
+
+  /** The one landing step of appends and full writes: `writer` lays
+    * table `name`'s data files down in a hidden staging dir at the
+    * store root, and each is renamed into the live table dir as
+    * `<prefix><file>`. Files there that carry `prefix` and are not in
+    * `listed` (the table's committed files) are a killed attempt's
+    * orphans and go first, so a retry never collides with them.
+    * Returns the landed names. */
+  private def land(fs: FileSystem, root: Path, name: String, prefix: String,
+      listed: Seq[String], writer: TableWriter): Seq[String] = {
+    val t = new Path(root, name)
+    fs.mkdirs(t)
+    fs.listStatus(t).map(_.getPath)
+      .filter(p => p.getName.startsWith(prefix) && !listed.contains(p.getName))
+      .foreach(p => fs.delete(p, false))
+    val staging = new Path(root, s".$name-${prefix}staging")
+    fs.delete(staging, true)
+    writer(staging)
+    val names = dataFiles(fs, staging).map { p =>
+      val n = prefix + p
+      if (!fs.rename(new Path(staging, p), new Path(t, n)))
+        throw new java.io.IOException(s"rename of $p into $t failed")
+      n
+    }
+    fs.delete(staging, true)
+    names
   }
 
   /** Append `tables` to snapshot `rec` of the store at `dir` under
@@ -252,9 +307,9 @@ object Store {
     * their tables' file lists (which stop being sorted), each
     * `contrib` entry is added to the param of that name, and the tag
     * enters `applied` with `contrib` as its contributions. A tag
-    * already applied is a no-op (returns 0); otherwise the tag's
-    * orphans from a crashed attempt are purged first. Returns the
-    * number of data files committed.
+    * already applied is a no-op (returns 0); otherwise the files land
+    * as `ingest-<tag>-*` (see [[land]]), purging the tag's orphans from
+    * a crashed attempt. Returns the number of data files committed.
     *
     * The tag must be unique per logical batch across stream runs —
     * pass runId+batchId, never batchId alone: a later run's fresh
@@ -274,29 +329,8 @@ object Store {
         (c >= '0' && c <= '9') || c == '_' || c == '.' || c == '-'),
       s"append tag must be [A-Za-z0-9_.-]+, got '$tag'")
     if (rec.applied.contains(tag)) return 0
-    // \d{5,}: Spark zero-pads task indices to five digits but keeps
-    // counting past part-99999
-    val mine = java.util.regex.Pattern.compile(
-      "ingest-" + java.util.regex.Pattern.quote(tag) +
-        "-part-\\d{5,}-.*")
     val added = tables.map { case (name, writer) =>
-      val t = new Path(root, name)
-      fs.mkdirs(t)
-      fs.listStatus(t).map(_.getPath)
-        .filter(p => mine.matcher(p.getName).matches())
-        .foreach(p => fs.delete(p, false))
-      val staging = new Path(root, s".$name-ingest-$tag-staging")
-      fs.delete(staging, true)
-      writer(staging)
-      val names = dataFiles(fs, staging).map { p =>
-        val n = s"ingest-$tag-$p"
-        if (!fs.rename(new Path(staging, p), new Path(t, n)))
-          throw new java.io.IOException(
-            s"append: rename of $p into $t failed")
-        n
-      }
-      fs.delete(staging, true)
-      name -> names
+      name -> land(fs, root, name, s"ingest-$tag-", rec.files(name), writer)
     }
     val next = rec.copy(
       generation = rec.generation + 1,
@@ -317,8 +351,9 @@ object Store {
     * the streaming paths pass runId+batchId instead). */
   def freshTag(): String = s"append-${java.util.UUID.randomUUID}"
 
-  /** Quiesced re-pack: rewrite every table of the current snapshot as
-    * sized files sorted on its declared columns, keeping kind, params
+  /** Quiesced re-pack through [[write]]: rewrite every table of the
+    * current snapshot in place as sized files sorted on its declared
+    * columns, committed by the record, keeping kind, params
     * and applied tags — so a tag committed before the compaction still
     * replays as a no-op after it. A table never drops below its file
     * count or the scan parallelism, whichever is less
@@ -349,11 +384,11 @@ object Store {
     }
   }
 
-  /** Data-file names directly under `dir`, sorted. */
+  /** Data-file names directly under `dir` (every visible file: Spark's
+    * parquet parts, the bench bloom's one file), sorted. */
   private def dataFiles(fs: FileSystem, dir: Path): Seq[String] =
     if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith(".") &&
-        !n.startsWith("_"))
+    else fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath.getName)
+      .filter(n => !n.startsWith(".") && !n.startsWith("_"))
       .sorted
 }

@@ -70,11 +70,13 @@ object TableOps {
     *
     * The table is a [[graft.store.Store]] whose one table,
     * `rows.parquet`, is replaced by every batch: the merge of the
-    * committed rows and the batch is staged and swapped in with the
-    * record, so a crash leaves the previous table whole, and a
-    * committed file that cannot be read fails the batch rather than
-    * passing for "no table yet". No record means the first batch; a
-    * non-empty `path` without one is refused. The batch's tag (the
+    * committed rows and the batch lands beside the old files and
+    * commits with the record, so a crash leaves the previous table
+    * whole, and a committed file that cannot be read fails the batch
+    * rather than passing for "no table yet". No record means the first
+    * batch; `path` may then hold only what a killed first batch left
+    * (the `rows.parquet` dir and hidden staging entries), anything else
+    * is refused rather than swept away by the write. The batch's tag (the
     * streaming query id, which the checkpoint keeps across restarts,
     * plus the batch id) enters the record's applied tags, so a
     * replayed batch is a no-op. */
@@ -87,7 +89,8 @@ object TableOps {
     if (rec.isEmpty) {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p) && fs.listStatus(p).nonEmpty)
+      if (fs.exists(p) && fs.listStatus(p).map(_.getPath.getName)
+          .exists(n => n != "rows.parquet" && !n.startsWith(".")))
         throw new java.io.IOException(
           s"$path is not empty but holds no upsert table record")
     }

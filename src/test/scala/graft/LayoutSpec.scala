@@ -114,7 +114,6 @@ class LayoutSpec extends SparkSpec {
     // no staging/backup litter from the swap
     val hidden = Option(new java.io.File(out).getParentFile.listFiles())
       .getOrElse(Array.empty).filter(_.getName.startsWith("."))
-      .filterNot(_.getName.endsWith(".swap-lock"))
     assert(hidden.isEmpty, hidden.map(_.getName).toSeq)
   }
 

@@ -10,10 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.store.Store
 
 /** The store commit protocol (`graft.store.Store`: append, the full
-  * write under `FsUtil.swapInto`, compaction through that write) with
-  * no Spark: tables are written by a fake writer that lays down tiny
-  * text files named the way Spark names its parts
-  * (`part-NNNNN-<uuid>.parquet`), over a [[FaultFs]].
+  * write, compaction through that write) with no Spark: tables are
+  * written by a fake writer that lays down tiny text files named the
+  * way Spark names its parts (`part-NNNNN-<uuid>.parquet`), over a
+  * [[FaultFs]].
   *
   * Each generated sequence (a full write, then appends of 1–3 tables
   * of 1–2 files, replays of a committed or a killed tag, compactions
@@ -26,15 +26,15 @@ import graft.store.Store
   * replays the killed operation and finishes the sequence, and every
   * batch must be read exactly once, with no orphan left in a table.
   *
-  * Commit points: an append commits with the record's atomic move,
-  * after its last file system call, so every kill inside an append
-  * leaves it uncommitted; a full write commits with the rename of its
-  * staging dir onto the store. A kill between `swapInto`'s rename-out
-  * and rename-in leaves no store and ends its case once the
-  * documented state is checked: one backup sibling holding the whole
-  * previous store, and the lock file. A kill anywhere else in the
-  * swap section also leaves the lock file, which the restart removes,
-  * as `FsUtil.swapInto` directs an operator to. */
+  * Commit point: every operation commits with the record's atomic
+  * move, after its files have landed. The move is not a file system
+  * call; it follows the create of the record's temp file and precedes
+  * a full write's first listing of the store dir. A kill before it
+  * leaves the operation uncommitted; a kill after it, in a full
+  * write's or a compaction's sweep, leaves the operation committed
+  * with litter that its restart sweeps. After every
+  * restarted sequence the store dir holds only the record, its tables
+  * and the files they list, and its parent holds only the store dir. */
 class StoreProtocolSpec extends AnyFunSuite {
   import StoreProtocolSpec._
 
@@ -190,23 +190,19 @@ class StoreProtocolSpec extends AnyFunSuite {
     }
   }
 
-  /** After the sequence: every table holds exactly its committed files
-    * (no orphan), and no append staging dir is left in the store. */
+  /** After the sequence: the store's parent holds only the store, the
+    * store dir only the record and its tables, and every table exactly
+    * its committed files (no orphan, no staging dir). */
   private def assertClean(fs: FileSystem, dir: Path, where: String): Unit = {
     val rec = Store.require(fs, dir)
-    val entries = fs.listStatus(dir).map(_.getPath.getName).toSet
-    assert(!entries.exists(_.contains("-ingest-")),
-      s"$where: append staging left in the store: $entries")
+    def names(p: Path) = fs.listStatus(p).map(_.getPath.getName).toSet
+    assert(names(dir.getParent) === Set(dir.getName),
+      s"$where: litter beside the store")
+    assert(names(dir) === rec.tables.keySet + Store.RecordFile,
+      s"$where: the store holds more than its record and tables")
     rec.tables.foreach { case (name, t) =>
-      val onDisk = fs.listStatus(new Path(dir, name)).map(_.getPath.getName)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSet
-      assert(onDisk === t.files.toSet, s"$where: table $name holds orphans")
-    }
-    Tables.filterNot(rec.tables.contains).foreach { name =>
-      val t = new Path(dir, name)
-      if (fs.exists(t))
-        assert(fs.listStatus(t).forall(_.getPath.getName.startsWith(".")),
-          s"$where: uncommitted table $name holds orphans")
+      assert(names(new Path(dir, name)) === t.files.toSet,
+        s"$where: table $name holds orphans")
     }
   }
 
@@ -223,8 +219,9 @@ class StoreProtocolSpec extends AnyFunSuite {
       deleteTree(d); d.mkdirs()
       new Path(d.getAbsolutePath, "store")
     }
-    // the fault-free run: its trace, and the call that commits the
-    // first write (the rename of its staging dir onto the store)
+    // the fault-free run: its trace, and the first call after the first
+    // write's commit (the listing of the store dir that starts its
+    // sweep)
     val clean = FaultFs()
     val dir0 = fresh("clean")
     val m0 = new Model
@@ -233,15 +230,14 @@ class StoreProtocolSpec extends AnyFunSuite {
     assert(readBy(clean, dir0, s"sequence $i") === m0.state,
       s"sequence $i, no kill: final read")
     assertClean(clean, dir0, s"sequence $i, no kill")
-    val createCommit = trace.indexWhere { case (name, ps) =>
-      name == "rename" && ps(1) == dir0 }
-    assert(createCommit >= 0, s"sequence $i: no commit rename in $trace")
+    val createCommitted = trace.indexWhere { case (name, ps) =>
+      name == "listStatus" && ps.head == dir0 }
+    assert(createCommitted >= 0, s"sequence $i: no sweep in $trace")
 
     trace.indices.foreach { k =>
       val where = s"sequence $i ${seq.map(show).mkString("[", ", ", "]")}, kill at call $k " +
         s"(${trace(k)._1} ${trace(k)._2.map(_.getName).mkString(" ")})"
       val dir = fresh("kill")
-      val parent = dir.getParent
       val fs = FaultFs().killAt(k)
       val m = new Model
       var killed = -1
@@ -252,33 +248,18 @@ class StoreProtocolSpec extends AnyFunSuite {
       assert(killed >= 0, s"$where: the sequence ran out before call $k")
       assert(fs.calls.map(_._1).take(k) === trace.map(_._1).take(k),
         s"$where: the killed run's calls differ from the trace")
-      if (seq(killed).isInstanceOf[Create] && k > createCommit) {
+      if (seq(killed).isInstanceOf[Create] && k >= createCommitted) {
         m.created = true; m.committed("t0") = m.attempted("t0")
       }
 
       val reader = FaultFs()
-      val lock = new Path(parent, s".${dir.getName}.swap-lock")
-      val backups = reader.listStatus(parent).map(_.getPath)
-        .filter(_.getName.startsWith(s".${dir.getName}-backup-"))
-      if (m.created && !reader.exists(dir)) {
-        // killed between swapInto's rename-out and rename-in
-        assert(fs.calls(k - 1)._1 == "rename" && fs.calls(k - 1)._2.head == dir,
-          s"$where: the store is gone")
-        assert(backups.length === 1, s"$where: backups ${backups.toSeq}")
-        assert(readBy(reader, backups.head, where) === m.state,
-          s"$where: the backup is not the previous store")
-        assert(reader.exists(lock), s"$where: no lock left behind")
-      } else {
-        assert(readBy(reader, dir, where) === m.state, s"$where: read after the kill")
-        // the restart: the lock a kill inside the swap section leaves is
-        // removed by hand; then the killed operation runs again and the
-        // sequence finishes
-        if (reader.exists(lock)) reader.delete(lock, false)
-        seq.drop(killed).foreach(op => run(op, reader, dir, m, where + ", restarted"))
-        assert(readBy(reader, dir, where) === m.state, s"$where: final read")
-        assert(m.committed.keySet === m.attempted.keySet, s"$where: unconverged")
-        assertClean(reader, dir, where)
-      }
+      assert(readBy(reader, dir, where) === m.state, s"$where: read after the kill")
+      // the restart: the killed operation runs again and the sequence
+      // finishes
+      seq.drop(killed).foreach(op => run(op, reader, dir, m, where + ", restarted"))
+      assert(readBy(reader, dir, where) === m.state, s"$where: final read")
+      assert(m.committed.keySet === m.attempted.keySet, s"$where: unconverged")
+      assertClean(reader, dir, where)
     }
     trace.size
   }
@@ -300,6 +281,38 @@ class StoreProtocolSpec extends AnyFunSuite {
       pool.shutdownNow()
       deleteTree(scratch)
     }
+  }
+
+  test("a full write sweeps what its record does not name: a dropped table, the old generation, stray files of a dir first written as a store") {
+    val scratch = java.nio.file.Files.createTempDirectory("graft-sweep").toFile
+    try {
+      val fs = FaultFs()
+      val dir = new Path(scratch.getAbsolutePath, "store")
+      // a first write into a dir that holds stray files and dirs
+      fs.mkdirs(new Path(dir, "stray-dir/nested"))
+      fs.create(new Path(dir, "stray.txt"), false).close()
+      fs.create(new Path(dir, ".hidden"), false).close()
+      fs.create(new Path(dir, "a/stray.parquet"), false).close()
+      def write(tables: Seq[String]): Unit =
+        Store.write(fs, dir, Kind, Map("rows" -> 0L), Map.empty) { st =>
+          tables.foreach(t => st.table(t, Nil)(writer(fs, Seq(Seq(s"$t.row")))))
+        }
+      def names(p: Path) = fs.listStatus(p).map(_.getPath.getName).toSet
+      write(Seq("a", "b", "c"))
+      val first = Store.require(fs, dir)
+      assert(names(dir) === Set(Store.RecordFile, "a", "b", "c"))
+      assert(names(new Path(dir, "a")) === first.files("a").toSet)
+      assert(names(new Path(scratch.getAbsolutePath)) === Set("store"))
+      // a full write whose stage drops table c
+      write(Seq("a", "b"))
+      val second = Store.require(fs, dir)
+      assert(second.generation === first.generation + 1)
+      assert(names(dir) === Set(Store.RecordFile, "a", "b"))
+      Seq("a", "b").foreach { t =>
+        assert(names(new Path(dir, t)) === second.files(t).toSet)
+        assert(second.files(t).forall(_.startsWith(s"g${second.generation}-")))
+      }
+    } finally deleteTree(scratch)
   }
 
   test("FaultFs: the call at killAt and every later call throw, cleanup included") {

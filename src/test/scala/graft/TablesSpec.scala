@@ -55,6 +55,30 @@ class TablesSpec extends SparkSpec {
       ((0L, "v3", 3L)) + ((13L, "w3", 3L)))
   }
 
+  test("upsertSink: a first batch killed mid-write leaves no table; its rerun applies once and batch 1 proceeds") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert")
+      .toString + "/t"
+    // four tasks, the last of which throws after the others can commit
+    val failing = s.range(0, 400, 1, 4).as[Long].map { i =>
+      if (i == 399) throw new IllegalStateException("fail mid-write")
+      (i % 3, s"x$i", 0L)
+    }.toDF("k", "v", "seq")
+    intercept[Exception](
+      TableOps.upsertSink(s, dir, Seq("k"), "seq")(failing, 0L))
+    assert(new java.io.File(dir).list().nonEmpty)
+    intercept[java.io.IOException](TableOps.readUpsertTable(s, dir))
+    upsertBatches(dir, 0, 1)
+    val first = Set((0L, "v0", 0L), (10L, "w0", 0L))
+    assert(upsertRows(dir) == first)
+    assert(storeRecord(dir).generation == 1)
+    upsertBatches(dir, 0, 1)
+    assert(storeRecord(dir).generation == 1)
+    upsertBatches(dir, 1, 2)
+    assert(upsertRows(dir) == first + ((1L, "v1", 1L)) + ((11L, "w1", 1L)))
+  }
+
   test("remote lookup join enriches rows and handles misses") {
     val s = spark
     import s.implicits._
